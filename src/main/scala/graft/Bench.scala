@@ -112,6 +112,18 @@ object Bench {
     if (rs.isEmpty) -1.0 else rs(rs.size / 2)
   }
 
+  /** One timed pass of a gate: wall and own-CPU seconds (-1 when the
+    * platform bean is absent) and the generated classes it compiled. */
+  private[graft] final case class Pass(wall: Double, cpu: Double, compiles: Long)
+
+  /** The pass a gate reports: its fastest. */
+  private[graft] def winner(passes: Seq[Pass]): Option[Pass] =
+    if (passes.isEmpty) None else Some(passes.minBy(_.wall))
+
+  /** A flat JSON object of already-rendered values, in the given order. */
+  private[graft] def jsonObj(kvs: Seq[(String, Any)]): String =
+    kvs.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+
   /** Value of a top-level `"key":"..."` string field (no escapes —
     * exactly what this file writes for `sf`). */
   private[graft] def parseStringField(json: String, key: String): Option[String] = {
@@ -236,16 +248,18 @@ object Bench {
       else
         (parseFlatDoubleMap(txt, "queries"), parseFlatDoubleMap(txt, "cpus"))
     } catch { case _: Throwable => (Map.empty[String, Double], Map.empty[String, Double]) }
-    // one timed pass: (wall, own-cpu-delta) or an error
+    // one timed pass or an error
     def timedPass(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame):
-        Either[String, (Double, Double)] = {
+        Either[String, Pass] = {
       val c0 = procCpuSec()
+      val g0 = SparkInit.codegenStats._1
       val t0 = System.nanoTime()
       try {
         fn(spark, sfDir).queryExecution.toRdd.count()
         val wall = (System.nanoTime() - t0) / 1e9
         val c1 = procCpuSec()
-        Right((wall, if (c0 >= 0 && c1 >= 0) math.max(0.0, c1 - c0) else -1.0))
+        Right(Pass(wall, if (c0 >= 0 && c1 >= 0) math.max(0.0, c1 - c0) else -1.0,
+          SparkInit.codegenStats._1 - g0))
       } catch {
         case t: Throwable =>
           // record the failure explicitly — an elapsed-to-crash time
@@ -297,15 +311,15 @@ object Bench {
     // usually drained, so the re-read either rescues the number
     // (recorded in `deferred` as direct evidence of in-window
     // pollution) or confirms a real regression at the same magnitude.
-    val windowMin = windowResults.map { case (n, err, ps, _) =>
-      n -> (if (ps.nonEmpty) ps.minBy(_._1) else (-1.0, -1.0))
+    val windowMin = windowResults.map { case (n, _, ps, _) =>
+      n -> winner(ps).fold(-1.0)(_.wall)
     }.toMap
     val outliers = windowResults.collect {
       case (n, None, ps, _) if ps.nonEmpty &&
-        canonWall.get(n).exists(cw => cw > 0 && isWallOutlier(ps.map(_._1).min, cw)) => n
+        canonWall.get(n).exists(cw => cw > 0 && isWallOutlier(windowMin(n), cw)) => n
     }
     val fnByName = gateList.toMap
-    val deferredRuns: Map[String, (Double, Double)] =
+    val deferredRuns: Map[String, Pass] =
       if (outliers.isEmpty) Map.empty
       else {
         System.err.println(s"[bench] ${outliers.size} gate(s) read >" +
@@ -316,11 +330,12 @@ object Bench {
         }.toMap
       }
     // final per-gate numbers: min over all passes (window + deferred),
-    // with the CPU sample of whichever pass won
+    // with the CPU and codegen samples of whichever pass won
+    final case class Gate(name: String, best: Pass, err: Option[String],
+                          passes: Seq[Pass], load: Double)
     val results = windowResults.map { case (name, err, ps, qLoad) =>
-      val all = ps ++ deferredRuns.get(name).toSeq
-      val (wall, cpu) = if (all.nonEmpty) all.minBy(_._1) else (-1.0, -1.0)
-      (name, wall, cpu, err, ps, qLoad)
+      Gate(name, winner(ps ++ deferredRuns.get(name)).getOrElse(Pass(-1.0, -1.0, -1L)),
+        err, ps, qLoad)
     }
     def jstr(s: String): String =
       "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"")
@@ -328,18 +343,16 @@ object Bench {
     // 3 decimals (ms precision) keeps the 100+-entry line compact; more
     // digits are noise at these magnitudes anyway
     def r3(v: Double): Double = math.rint(v * 1000) / 1000
-    val qs = results.map { case (k, v, _, _, _, _) => s"\"" + k + "\":" + r3(v) }
-      .mkString("{", ",", "}")
-    val errs = results.collect { case (k, _, _, Some(e), _, _) => s"\"" + k + "\":" + jstr(e) }
-      .mkString("{", ",", "}")
+    def perGate(v: Gate => Any): String = jsonObj(results.map(g => g.name -> v(g)))
+    val qs = perGate(g => r3(g.best.wall))
+    val errs = jsonObj(results.collect { case Gate(k, _, Some(e), _, _) => k -> jstr(e) })
     // BOTH window passes per query: regression vs noise is decidable
     // from the artifact alone — a real regression moves the min, a
     // noisy neighbor widens the [min,max] spread of one pass
-    val passes = results.map { case (k, _, _, _, ts, _) =>
-      s"\"" + k + "\":[" + ts.map(p => r3(p._1)).mkString(",") + "]"
-    }.mkString("{", ",", "}")
-    val total = r3(results.filter(_._4.isEmpty).map(_._2).sum)
-    val nErrors = results.count(_._4.isDefined)
+    val passes = perGate(_.passes.map(p => r3(p.wall)).mkString("[", ",", "]"))
+    val clean = results.filter(_.err.isEmpty)
+    val total = r3(clean.map(_.best.wall).sum)
+    val nErrors = results.size - clean.size
     val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"passes":$passes,"errors":$errs,"sf":"$sfDir"}"""
     println(line)
     val postLoad = r3(loadAvg())
@@ -350,10 +363,9 @@ object Bench {
     // final number is clean; the `deferred` map still records that the
     // window itself was polluted)
     val (loadContaminated, contamQueries) = contamination(preLoad,
-      results.map { case (k, _, _, _, _, ld) => (k, ld) }, postLoad, nprocs)
+      results.map(g => (g.name, g.load)), postLoad, nprocs)
     val cpuFlagged = cpuTheft(
-      results.collect { case (k, w, c, None, _, _) => (k, w, c) },
-      canonWall, canonCpu)
+      clean.map(g => (g.name, g.best.wall, g.best.cpu)), canonWall, canonCpu)
     val contaminated = loadContaminated || cpuFlagged.nonEmpty
     // The harness stdout capture keeps only the output TAIL, which eats
     // the leading ~75 per-query entries of the 180+-query line — so
@@ -365,25 +377,22 @@ object Bench {
     // plus the per-query ambient-load samples, own-CPU seconds of each
     // gate's winning pass, and any deferred reruns), so a
     // partially-poisoned window is attributable to the specific queries
-    // it touched.
-    val loads = results.map { case (k, _, _, _, _, ld) =>
-      s"\"" + k + "\":" + r3(ld)
-    }.mkString("{", ",", "}")
-    val cpusJson = results.map { case (k, _, c, _, _, _) =>
-      s"\"" + k + "\":" + r3(c)
-    }.mkString("{", ",", "}")
-    val deferredJson = deferredRuns.toSeq.sortBy(_._1).map { case (k, (w, _)) =>
-      s"\"" + k + "\":[" + r3(windowMin(k)._1) + "," + r3(w) + "]"
-    }.mkString("{", ",", "}")
+    // it touched — and with the generated classes each gate's winning
+    // pass compiled (the codegen layer; -1 for a gate with no pass).
+    val loads = perGate(g => r3(g.load))
+    val cpusJson = perGate(g => r3(g.best.cpu))
+    val compilesJson = perGate(_.best.compiles)
+    val deferredJson = jsonObj(deferredRuns.toSeq.sortBy(_._1).map { case (k, p) =>
+      k -> s"[${r3(windowMin(k))},${r3(p.wall)}]"
+    })
     val contamQ = contamQueries.map(jstr).mkString("[", ",", "]")
     val contamCpuQ = cpuFlagged.map(jstr).mkString("[", ",", "]")
     // drift self-adjudication: median per-gate ratio vs the committed
     // canonical + the total normalized by it (see [[medianVsCanonical]])
-    val medVsCanon = medianVsCanonical(
-      results.collect { case (k, w, _, None, _, _) => (k, w) }, canonWall)
+    val medVsCanon = medianVsCanonical(clean.map(g => (g.name, g.best.wall)), canonWall)
     val totalNorm = if (medVsCanon > 0) r3(total / medVsCanon) else -1.0
     val detailLine = line.dropRight(1) +
-      s""","loads":$loads,"cpus":$cpusJson,"deferred":$deferredJson,"load_pre":${r3(preLoad)},"load_post":$postLoad,"nproc":$nprocs,"contaminated":$contaminated,"contam_queries":$contamQ,"contam_cpu":$contamCpuQ,"median_vs_canonical":${r3(medVsCanon)},"total_drift_normalized":$totalNorm}"""
+      s""","loads":$loads,"cpus":$cpusJson,"compiles":$compilesJson,"deferred":$deferredJson,"load_pre":${r3(preLoad)},"load_post":$postLoad,"nproc":$nprocs,"contaminated":$contaminated,"contam_queries":$contamQ,"contam_cpu":$contamCpuQ,"median_vs_canonical":${r3(medVsCanon)},"total_drift_normalized":$totalNorm}"""
     val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL",
       "bench_detail.json")
     try {

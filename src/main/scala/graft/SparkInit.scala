@@ -33,8 +33,35 @@ import org.apache.spark.sql.SparkSession
  *    (a loss at ANY scale when the generator child is a computed
  *    expression).
  *  - ui.enabled=false — headless runs.
+ *  - codegen.cache.maxEntries=[[CodegenCacheEntries]] — Spark keeps
+ *    compiled generated classes in one JVM-wide cache, sized once
+ *    when the first class compiles. Its default of 100 entries is
+ *    smaller than graft's working set, so each request kind evicted
+ *    the classes the next one needed and every warm request
+ *    recompiled (a warm Curate increment compiled 267 classes, a
+ *    warm rate-aggregate /get about 50). Distinct classes one
+ *    benchmark run compiles with a cache that never evicts
+ *    (`perfbench/run.py`, seed 1, 15 s window, these settings):
+ *    serve_read 143, curate_incr 219 (157 and 341 with stage ids in
+ *    class names, below). The cache evicts per segment, four segments
+ *    of 250 entries here, so 1000 gives each segment about 4.5x its
+ *    expected share of the larger working set. Retained classes
+ *    raised peak old-gen use by about 50-80 MB on those runs; resident
+ *    memory (VmHWM) held.
+ *  - codegen.useIdInClassName=false — by default a whole-stage class
+ *    is named after its codegen stage id, and AQE renumbers stages by
+ *    the order in which earlier stages finish, so the same warm
+ *    request compiled identical code under a new name and missed the
+ *    cache (32 classes per warm curate_incr increment even with a
+ *    cache that never evicts; 0-2 without the id). Without the id the
+ *    name is fixed. Spark compiles every
+ *    generated class into its own class loader, so equal names cannot
+ *    clash, and plans and results do not change.
  */
 object SparkInit {
+  /** Entries of Spark's generated-class cache (see the scaladoc above). */
+  val CodegenCacheEntries = 1000
+
   def common(b: SparkSession.Builder): SparkSession.Builder =
     b.config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -42,4 +69,18 @@ object SparkInit {
       .config("spark.sql.optimizer.excludedRules",
         "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      .config("spark.sql.codegen.useIdInClassName", "false")
+
+  /** Generated classes compiled in this JVM so far and the total ms
+    * spent compiling them. The compile-time histogram keeps every
+    * sample up to its reservoir size (1028), so the sum is exact
+    * below that and count x mean past it. */
+  def codegenStats: (Long, Double) = {
+    val h = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    val snap = h.getSnapshot
+    val ms = if (h.getCount <= 1028) snap.getValues.map(_.toDouble).sum
+             else h.getCount * snap.getMean
+    (h.getCount, ms)
+  }
 }

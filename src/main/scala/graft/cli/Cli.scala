@@ -330,16 +330,10 @@ object Cli {
       s.stripPrefix("--store=") }
       .orElse(sys.env.get("GRAFT_STORE"))
       .getOrElse(throw new IllegalArgumentException("--store=<path> or GRAFT_STORE required"))
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("GRAFT_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // testdata parquet may flag timestamps isAdjustedToUTC=false; read them
-      // as plain TIMESTAMP (session tz is UTC) so unix_millis & friends resolve
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.SparkInit.common(SparkSession.builder()
+        .master(sys.env.getOrElse("GRAFT_MASTER", "local[4]"))
+        .config("spark.sql.shuffle.partitions",
+          sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     rest.toSeq match {

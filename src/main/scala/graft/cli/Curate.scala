@@ -346,14 +346,10 @@ object Curate {
     val in = opts.getOrElse("in",
       sys.error("--in=<documents parquet> is required"))
     val out = opts.getOrElse("out", sys.error("--out=<dir> is required"))
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.SparkInit.common(SparkSession.builder()
+        .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
+        .config("spark.sql.shuffle.partitions",
+          sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try {

@@ -281,10 +281,10 @@ object Dedup {
     }
     val rows = shingleSets(df, idCol, textCol, n)
       .select(col("id"), size(col("sh")).as("sz"), explode(col("sh")).as("s"))
-      // explicit not-null guards BELOW the exchange: the self-join
-      // infers them on its branches; without matching filters in the
-      // hot-df branch the subtree copies differ and reuse is lost
-      .filter(col("id").isNotNull && col("s").isNotNull)
+      // explicit not-null guards BELOW the exchange: the self-join and
+      // the callers' score filters infer them on some branches only;
+      // unmatched, the subtree copies differ and reuse is lost
+      .filter(col("id").isNotNull && col("s").isNotNull && col("sz").isNotNull)
     val ex =
       if (maxDf == Long.MaxValue) rows.repartition(col("s"))
       else dropHotKeys(rows.repartition(col("id"), col("sz"), col("s")),

@@ -254,9 +254,14 @@ class StoreHttpServer(spark: SparkSession, storeDir: String, port: Int = 0,
     // their hit rates belong on the status page, not just in docs
     val (ifN, ifH, ifM) = graft.model.IndexFormat.memoStats
     val (ccN, ccH, ccM) = graft.similarity.Ann.countMemoStats
+    // Spark's generated-class cache exposes no hit count: each compile
+    // is a miss, so the row reports compilations and their total time
+    val (cgN, cgMs) = graft.SparkInit.codegenStats
     val caches =
       s"<tr><td>index-format markers</td><td>$ifN</td><td>$ifH</td><td>$ifM</td></tr>" +
-      s"<tr><td>corpus counts</td><td>$ccN</td><td>$ccH</td><td>$ccM</td></tr>"
+      s"<tr><td>corpus counts</td><td>$ccN</td><td>$ccH</td><td>$ccM</td></tr>" +
+      s"<tr><td>generated classes (max ${spark.conf.get("spark.sql.codegen.cache.maxEntries")})</td>" +
+      f"<td colspan=\"3\">$cgN compilations, $cgMs%.0f ms compiling</td></tr>"
     val body = ("<html><head><title>Store Status</title></head><body>" +
       s"<h1>Store Status</h1><p>store: $storeDir</p>" +
       "<table><tr><th>partition</th><th>files</th><th>bytes</th></tr>" +
@@ -314,16 +319,10 @@ object StoreHttpServer {
     val retention = opts.get("config")
       .map(p => graft.config.StoreConfig.parseFile(p).retention)
       .getOrElse(graft.retention.Retention.Policy(Nil))
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("GRAFT_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // testdata parquet may flag timestamps isAdjustedToUTC=false; read them
-      // as plain TIMESTAMP (session tz is UTC) so unix_millis & friends resolve
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.SparkInit.common(SparkSession.builder()
+        .master(sys.env.getOrElse("GRAFT_MASTER", "local[4]"))
+        .config("spark.sql.shuffle.partitions",
+          sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val s = new StoreHttpServer(spark, store,

@@ -60,26 +60,37 @@ object Tables {
     * RELATION only — never row data, nothing survives the JVM, and
     * every query still computes from the parquet bytes.
     *
-    * Staleness guard: entries are validated against the path's
-    * modification time (one getFileStatus, ~µs on local fs), so a
-    * store that is overwritten between reads (test fixtures, the
-    * compaction/aging jobs' swap dirs) never serves a stale index —
-    * the rewrite replaces the directory, which bumps its mtime. */
+    * Staleness guard: entries are validated against a fingerprint of
+    * the path's leaf files — file count, total length and newest
+    * mtime (one recursive listing). A directory swap (the
+    * compaction/aging jobs), an added or removed part file, and a
+    * part file rewritten in place under the same name all change it;
+    * the directory's own mtime catches only the first two. */
   private val relCache =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
-      (Long, DataFrame)]()
+      ((Int, Long, Long), DataFrame)]()
 
-  def parquetCached(spark: SparkSession, path: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val mtime =
-      try p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .getFileStatus(p).getModificationTime
-      catch { case _: Throwable => -1L }
-    if (mtime < 0) spark.read.parquet(path) // missing path: let the read throw
-    else relCache.compute((spark, path), (_, prev) =>
-      if (prev != null && prev._1 == mtime) prev
-      else (mtime, spark.read.parquet(path)))._2
-  }
+  /** (leaf file count, total bytes, newest mtime) under `path`, or
+    * None when it cannot be listed. */
+  private def fingerprint(spark: SparkSession, path: String): Option[(Int, Long, Long)] =
+    try {
+      val p = new org.apache.hadoop.fs.Path(path)
+      val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(p, true)
+      var (n, bytes, newest) = (0, 0L, 0L)
+      while (it.hasNext) {
+        val f = it.next()
+        n += 1; bytes += f.getLen; newest = math.max(newest, f.getModificationTime)
+      }
+      Some((n, bytes, newest))
+    } catch { case scala.util.control.NonFatal(_) => None }
+
+  def parquetCached(spark: SparkSession, path: String): DataFrame =
+    fingerprint(spark, path) match {
+      case None => spark.read.parquet(path) // missing path: let the read throw
+      case Some(fp) => relCache.compute((spark, path), (_, prev) =>
+        if (prev != null && prev._1 == fp) prev
+        else (fp, spark.read.parquet(path)))._2
+    }
 
   def documents(spark: SparkSession, sfDir: String): DataFrame =
     parquetCached(spark, s"$sfDir/documents.parquet")

@@ -170,4 +170,17 @@ class BenchSpec extends AnyFunSuite {
     assert(Bench.parseFlatDoubleMap(line, "missing").isEmpty)
     assert(Bench.parseFlatDoubleMap("""{"queries":{}}""", "queries").isEmpty)
   }
+
+  test("compiles: each gate reports its winning pass's codegen compilations") {
+    // the cold pass compiles, the warm one hits the generated-class
+    // cache and wins; the winner carries its own CPU and compile samples
+    val passes = Seq(Bench.Pass(1.2, 8.0, 31L), Bench.Pass(0.9, 7.5, 0L))
+    assert(Bench.winner(passes).contains(Bench.Pass(0.9, 7.5, 0L)))
+    assert(Bench.winner(Nil).isEmpty)
+    val line = "{\"cpus\":" + Bench.jsonObj(Seq("g1" -> 7.5, "g2" -> 3.0)) +
+      ",\"compiles\":" + Bench.jsonObj(Seq("g1" -> 0L, "g2" -> 31L, "g_err" -> -1L)) + "}"
+    assert(line == """{"cpus":{"g1":7.5,"g2":3.0},"compiles":{"g1":0,"g2":31,"g_err":-1}}""")
+    assert(Bench.parseFlatDoubleMap(line, "compiles") ==
+      Map("g1" -> 0.0, "g2" -> 31.0, "g_err" -> -1.0))
+  }
 }

@@ -201,6 +201,10 @@ class HttpSpec extends SparkSpec {
       assert(resp.body().contains("Session caches"))
       assert(resp.body().contains("index-format markers"))
       assert(resp.body().contains("corpus counts"))
+      // Spark's generated-class cache: its size and compile totals
+      assert(resp.body().contains(
+        s"generated classes (max ${SparkInit.CodegenCacheEntries})"))
+      assert(resp.body().matches("(?s).*<td colspan=\"3\">\\d+ compilations, \\d+ ms compiling</td>.*"))
     } finally srv.stop()
   }
 

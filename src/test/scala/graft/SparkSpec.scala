@@ -7,16 +7,12 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local SparkSession for all suites (one JVM, forked by sbt). */
 object SparkSpec {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // testdata parquet may flag timestamps isAdjustedToUTC=false; read them
-      // as plain TIMESTAMP (session tz is UTC) so unix_millis & friends resolve
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
+    // the engine settings every shipped main uses (SparkInit.common),
+    // so the specs exercise the plans and caches that ship
+    val s = SparkInit.common(SparkSession.builder()
+        .master("local[4]")
+        .appName("graft-test")
+        .config("spark.sql.shuffle.partitions", "4"))
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
