@@ -1,5 +1,6 @@
 package graft
 
+import graft.SparkEntry.unkey
 import graft.api.{Engine, Requests}
 import graft.model.Point
 import graft.multimodal.Multimodal
@@ -25,11 +26,6 @@ object ApiEntry {
     * [[PointSource.eventsKeyed]]; Engine.get/list honor it). */
   private def pts(s: SparkSession, dir: String): DataFrame =
     PointSource.eventsKeyed(s, dir)
-
-  private def unkey(df: DataFrame): DataFrame =
-    df.withColumn("name", substring_index(col("skey"), "{", 1))
-      .withColumn("usr", substring_index(
-        substring_index(col("skey"), "{user=", -1), "}", 1))
 
   /** Shared oracle CTE (same as SparkEntry's P). */
   private val P = "WITH pts AS (SELECT '/events/' || event_type AS name, " +

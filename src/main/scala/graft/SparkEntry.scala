@@ -47,17 +47,20 @@ object SparkEntry {
 
   /** skey "/events/click{user=3}" → (name, usr) output columns.
     * substring_index, not regexp_extract: identical output on this
-    * key shape (name = prefix before the first `{`, both return ""
-    * when skey starts with `{` and null on null; usr = text between
-    * `{user=` and the closing `}`, always present in an engine skey),
-    * but ~15% cheaper per row across the ~40 events gates that unkey
-    * their output (MicroProfile unkey-substr 0.276 s vs unkey-regex
-    * 0.322 s over the full keyed frame) — no regex compilation or
-    * backtracking in the hot projection. */
-  private def unkey(df: DataFrame): DataFrame =
+    * key shape (name = prefix before the first `{`, "" when skey
+    * starts with `{`, null on null; usr = text between `{user=` and
+    * the closing `}`), but ~15% cheaper per row across the ~40 events
+    * gates that unkey their output (MicroProfile unkey-substr 0.276 s
+    * vs unkey-regex 0.322 s over the full keyed frame) — no regex
+    * compilation or backtracking in the hot projection. An skey
+    * without `{user=` gets usr "" (as regexp_extract would), not the
+    * junk suffix substring_index returns when the delimiter is absent.
+    * Shared by the API gates. */
+  private[graft] def unkey(df: DataFrame): DataFrame =
     df.withColumn("name", substring_index(col("skey"), "{", 1))
-      .withColumn("usr", substring_index(
-        substring_index(col("skey"), "{user=", -1), "}", 1))
+      .withColumn("usr", when(!col("skey").contains("{user="), lit(""))
+        .otherwise(substring_index(
+          substring_index(col("skey"), "{user=", -1), "}", 1)))
 
   private def seriesW = Window.partitionBy("skey").orderBy("ts")
 

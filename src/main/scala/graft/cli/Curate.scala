@@ -1,5 +1,6 @@
 package graft.cli
 
+import graft.Leaf
 import graft.dedup.Dedup
 import graft.text.TextOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -102,30 +103,28 @@ object Curate {
       new java.net.URI(indexPath + "/sets"),
       spark.sparkContext.hadoopConfiguration)
     val indexExists = fs.exists(new org.apache.hadoop.fs.Path(s"$indexPath/sets"))
-    var cachedDups: Option[DataFrame] = None
-    val (novel, nDup) = if (!indexExists) (docs, 0L) else {
-      // probe under a surrogate id (-id - 1, a bijection on longs):
-      // the lookup excludes SAME-id pairs as self-matches, but a
-      // re-crawl carries its original doc_id — without the remap an
-      // exact re-crawl of an indexed doc would sail through as "self".
-      // (Assumes non-negative document ids, the table contract.)
-      // Cached: the tiny id-only frame rides novel's lineage into
-      // every downstream action of the batch pipeline — uncached, the
-      // index read + LSH probe would re-execute per action.
-      val dupIds = Dedup.minhashLookup(spark, indexPath,
+    // probe under a surrogate id (-id - 1, a bijection on longs):
+    // the lookup excludes SAME-id pairs as self-matches, but a
+    // re-crawl carries its original doc_id — without the remap an
+    // exact re-crawl of an indexed doc would sail through as "self".
+    // (Assumes non-negative document ids, the table contract.)
+    // A persisted leaf (materialization point 1 of 3, see curateFrame):
+    // the tiny id-only frame feeds the dup count and, through `novel`,
+    // the scoring pass; as a leaf the index read + LSH probe run once
+    // and no consumer re-plans the lookup's tree.
+    val dupIds = if (!indexExists) None else Some(Leaf.persist(
+      Dedup.minhashLookup(spark, indexPath,
           docs.filter(!isBench)
             .withColumn("doc_id", -col("doc_id") - 1), threshold = 0.5)
-        .select((-col("probe_id") - 1).as("doc_id")).distinct()
-        .cache()
-      cachedDups = Some(dupIds)
-      val n = dupIds.count() // materializes the cache
-      (docs.join(dupIds, Seq("doc_id"), "left_anti"), n)
-    }
+        .select((-col("probe_id") - 1).as("doc_id")).distinct()))
     val rep =
-      try curateFrame(spark, novel, out, benchSource, qualityMin, lang,
-        ngram, segWidth, segMaxDf, bin, shards, classifierMin)
-        .copy(nDupVsCorpus = nDup)
-      finally cachedDups.foreach(_.unpersist(false))
+      try {
+        val nDup = dupIds.fold(0L)(_.df.count())
+        val novel = dupIds.fold(docs)(d => docs.join(d.df, Seq("doc_id"), "left_anti"))
+        curateFrame(spark, novel, out, benchSource, qualityMin, lang,
+          ngram, segWidth, segMaxDf, bin, shards, classifierMin)
+          .copy(nDupVsCorpus = nDup)
+      } finally dupIds.foreach(_.release())
     // index the RAW text of every doc this increment accepted — probes
     // and index entries must be the same text form or lookups quietly
     // stop matching
@@ -222,108 +221,124 @@ object Curate {
         graft.text.Classifier.probability(col("text"), model) >= minP
     }
 
-    // 1+2. exact-dup collapse + quality/language gates, as FLAGS on
-    // one scored frame. Dedup keeps NON-BENCH rows only: if the
-    // collapse window spanned bench rows, a training duplicate of a
-    // benchmark text with a lower doc_id would DELETE the benchmark
-    // copy, and step 3 would then build its window-hash set without
-    // that text — the verbatim benchmark content would ship uncut.
-    // (The surviving training duplicate is instead fully cut by step 3
-    // and drops out at step 4.) Benchmark rows bypass the gates — they
-    // are not training data, they exist to be cut AGAINST. The
-    // pipeline filters AND the report counters both read these flags,
-    // so the JSON report cannot silently diverge from what shipped
-    // (the former second copy of the keeper/gate predicates is gone).
-    val keeperW = Window.partitionBy(md5(col("text")))
-    val flagged = score(docs.withColumn("__b", isBench)
-        .withColumn("__k", col("__b") ||
-          min(when(!col("__b"), col("doc_id"))).over(keeperW) === col("doc_id")))
-      .withColumn("__g", col("__k") && (col("__b") ||
-        (col("quality") >= qualityMin && col("lang_pred") === lang && clsGate)))
-    val scored = flagged.filter(col("__k"))
-    val gated = flagged.filter(col("__g"))
-    // stage counters in ONE pass over the flags (each .count() would
-    // re-run the whole lineage — the review-flagged multiplier)
-    val statsRow = flagged
-      .agg(count(lit(1)).as("nInput"),
-        count(when(col("__k"), 1)).as("nDeduped"),
-        count(when(col("__g") && !col("__b"), 1)).as("nGated"))
-      .collect()(0)
-    val (nInput, nDeduped, nGated) =
-      (statsRow.getLong(0), statsRow.getLong(1), statsRow.getLong(2))
+    // Three frames feed several later stages each: the scored flags
+    // below, the boilerplate-stripped text, and (runIncremental) the
+    // corpus dup ids. Each is materialized ONCE as a persisted leaf
+    // ([[Leaf]]). Composed lazily instead, an 800-doc increment
+    // ran the scoring pass (quality, language, md5 keeper window) 8
+    // times: filters inferred on the composed input gave the cut's and
+    // strip's shared exchange branches different subtrees, so exchange
+    // reuse failed, and in sampled driver stacks re-analyzing the
+    // ever-growing tree took about a quarter of the wall. Every leaf is
+    // released in the one `finally`, also when the write fails.
+    val leaves = collection.mutable.ArrayBuffer.empty[Leaf]
+    def leaf(df: DataFrame): DataFrame = {
+      val l = Leaf.persist(df); leaves += l; l.df
+    }
+    try {
+      // 1+2. exact-dup collapse + quality/language gates, as FLAGS on
+      // one scored frame. Dedup keeps NON-BENCH rows only: if the
+      // collapse window spanned bench rows, a training duplicate of a
+      // benchmark text with a lower doc_id would DELETE the benchmark
+      // copy, and step 3 would then build its window-hash set without
+      // that text — the verbatim benchmark content would ship uncut.
+      // (The surviving training duplicate is instead fully cut by step 3
+      // and drops out at step 4.) Benchmark rows bypass the gates — they
+      // are not training data, they exist to be cut AGAINST. The
+      // pipeline filters AND the report counters both read these flags,
+      // so the JSON report cannot silently diverge from what shipped
+      // (the former second copy of the keeper/gate predicates is gone).
+      // Materialization point 2: the flags feed the counters, the span
+      // cut and the pack join; only the columns they read are persisted.
+      val keeperW = Window.partitionBy(md5(col("text")))
+      val flagged = leaf(score(docs.withColumn("__b", isBench)
+          .withColumn("__k", col("__b") ||
+            min(when(!col("__b"), col("doc_id"))).over(keeperW) === col("doc_id")))
+        .withColumn("__g", col("__k") && (col("__b") ||
+          (col("quality") >= qualityMin && col("lang_pred") === lang && clsGate)))
+        .select("doc_id", "text", "source", "quality", "lang_pred",
+          "__b", "__k", "__g"))
+      val scored = flagged.filter(col("__k"))
+      val gated = flagged.filter(col("__g"))
+      // stage counters in ONE pass over the flags
+      val statsRow = flagged
+        .agg(count(lit(1)).as("nInput"),
+          count(when(col("__k"), 1)).as("nDeduped"),
+          count(when(col("__g") && !col("__b"), 1)).as("nGated"))
+        .collect()(0)
+      val (nInput, nDeduped, nGated) =
+        (statsRow.getLong(0), statsRow.getLong(1), statsRow.getLong(2))
 
-    // 3. decontamination span cut (returns the gated non-bench docs,
-    // row-for-row — nCut ≡ nGated by construction; text shrinks)
-    val cut = Dedup.cutContaminatedSpans(
-      gated.select(col("doc_id"), col("text"), col("source")),
-      col("source") === benchSource, l = ngram)
-    val nCut = nGated
+      // 3. decontamination span cut (returns the gated non-bench docs,
+      // row-for-row — nCut ≡ nGated by construction; text shrinks)
+      val cut = Dedup.cutContaminatedSpans(
+        gated.select(col("doc_id"), col("text"), col("source")),
+        col("source") === benchSource, l = ngram)
+      val nCut = nGated
 
-    // 4. boilerplate strip on the decontaminated text; fully-cut or
-    // fully-boilerplate docs have no surviving segments and drop out.
-    // Cached (with an unpersist after the write): four consumers — the
-    // drop counter, the near-dup pass, the pack join, and the write —
-    // would otherwise each re-run the tokenize-heavy cut+strip lineage.
-    val strippedAll = Dedup.stripBoilerplateSegments(
-        cut.select(col("doc_id"), col("clean_text").as("text")),
-        width = segWidth, maxDf = segMaxDf)
-      .cache()
-    // counted BEFORE the empty filter: fully-boilerplate docs are
-    // exactly the ones that dropped the most segments
-    val nBoilerDropped = strippedAll
-      .agg(coalesce(sum("n_dropped"), lit(0L))).collect()(0).getLong(0)
-    val stripped = strippedAll.filter(length(col("clean_text")) > 0)
+      // 4. boilerplate strip on the decontaminated text; fully-cut or
+      // fully-boilerplate docs have no surviving segments and drop out.
+      // Materialization point 3: the drop counter, the near-dup pass,
+      // the split join and the write all read the stripped text.
+      val strippedAll = leaf(Dedup.stripBoilerplateSegments(
+          cut.select(col("doc_id"), col("clean_text").as("text")),
+          width = segWidth, maxDf = segMaxDf))
+      // counted BEFORE the empty filter: fully-boilerplate docs are
+      // exactly the ones that dropped the most segments
+      val nBoilerDropped = strippedAll
+        .agg(coalesce(sum("n_dropped"), lit(0L))).collect()(0).getLong(0)
+      val stripped = strippedAll.filter(length(col("clean_text")) > 0)
 
-    // 5. leakage-safe split: near-dup groups (MinHash+LSH over the
-    // FINAL text) share a content-keyed split bucket
-    val grp = Dedup.duplicateGroups(
-      Dedup.minhashLshPairs(
-          stripped.select(col("doc_id"), col("clean_text").as("text")),
-          n = 3, numHashes = 16, bands = 4, threshold = 0.5)
-        .select(col("id_a"), col("id_b")))
-    val split = stripped.join(grp, Seq("doc_id"), "left")
-      .withColumn("gid", coalesce(col("group_id"), col("doc_id")))
-      .withColumn("bucket",
-        conv(substring(md5(concat(lit("g#"), col("gid").cast("string"))),
-          1, 4), 16, 10).cast("long") % 100)
-      .withColumn("split",
-        when(col("bucket") < 90, "train")
-          .when(col("bucket") < 95, "val").otherwise("test"))
+      // 5. leakage-safe split: near-dup groups (MinHash+LSH over the
+      // FINAL text) share a content-keyed split bucket
+      val grp = Dedup.duplicateGroups(
+        Dedup.minhashLshPairs(
+            stripped.select(col("doc_id"), col("clean_text").as("text")),
+            n = 3, numHashes = 16, bands = 4, threshold = 0.5)
+          .select(col("id_a"), col("id_b")))
+      val split = stripped.join(grp, Seq("doc_id"), "left")
+        .withColumn("gid", coalesce(col("group_id"), col("doc_id")))
+        .withColumn("bucket",
+          conv(substring(md5(concat(lit("g#"), col("gid").cast("string"))),
+            1, 4), 16, 10).cast("long") % 100)
+        .withColumn("split",
+          when(col("bucket") < 90, "train")
+            .when(col("bucket") < 95, "val").otherwise("test"))
 
-    // 6. deterministic shard + token packing offsets per (split, shard)
-    val packed = split
-      .join(scored.select(col("doc_id"), col("source"), col("quality"),
-        col("lang_pred")), "doc_id")
-      .withColumn("n_tok",
-        size(TextOps.tokens(col("clean_text"))).cast("long"))
-      .withColumn("shard",
-        conv(substring(md5(concat(lit("s#"), col("doc_id").cast("string"))),
-          1, 4), 16, 10).cast("long") % shards)
-      .withColumn("start_off", coalesce(
-        sum(col("n_tok")).over(Window.partitionBy("split", "shard")
-          .orderBy("doc_id").rowsBetween(Window.unboundedPreceding, -1)),
-        lit(0L)))
-      .withColumn("bin_first", expr(s"start_off div $bin"))
-      .select("doc_id", "clean_text", "source", "quality", "lang_pred",
-        "n_tok", "shard", "start_off", "bin_first", "split")
+      // 6. deterministic shard + token packing offsets per (split, shard)
+      val packed = split
+        .join(scored.select(col("doc_id"), col("source"), col("quality"),
+          col("lang_pred")), "doc_id")
+        .withColumn("n_tok",
+          size(TextOps.tokens(col("clean_text"))).cast("long"))
+        .withColumn("shard",
+          conv(substring(md5(concat(lit("s#"), col("doc_id").cast("string"))),
+            1, 4), 16, 10).cast("long") % shards)
+        .withColumn("start_off", coalesce(
+          sum(col("n_tok")).over(Window.partitionBy("split", "shard")
+            .orderBy("doc_id").rowsBetween(Window.unboundedPreceding, -1)),
+          lit(0L)))
+        .withColumn("bin_first", expr(s"start_off div $bin"))
+        .select("doc_id", "clean_text", "source", "quality", "lang_pred",
+          "n_tok", "shard", "start_off", "bin_first", "split")
 
-    // shard-clustered, offset-ordered files: a trainer reading shard s
-    // gets its documents contiguous and in packing order
-    packed
-      .repartition(col("split"), col("shard"))
-      .sortWithinPartitions(col("split"), col("shard"), col("start_off"))
-      .write.mode("overwrite").partitionBy("split").parquet(out)
-    strippedAll.unpersist(false)
+      // shard-clustered, offset-ordered files: a trainer reading shard s
+      // gets its documents contiguous and in packing order
+      packed
+        .repartition(col("split"), col("shard"))
+        .sortWithinPartitions(col("split"), col("shard"), col("start_off"))
+        .write.mode("overwrite").partitionBy("split").parquet(out)
 
-    // explicit schema: a fully-filtered corpus (tiny / all-boilerplate
-    // / fully-contaminated) writes no part files, and schema INFERENCE
-    // over that empty dir throws — with the schema pinned the re-read
-    // returns an empty frame and the report says nFinal=0 instead
-    val outDf = spark.read.schema(packed.schema).parquet(out)
-    val perSplit = outDf.groupBy("split").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    Report(nInput, nDeduped, nGated, nCut, perSplit.values.sum,
-      nBoilerDropped, perSplit)
+      // explicit schema: a fully-filtered corpus (tiny / all-boilerplate
+      // / fully-contaminated) writes no part files, and schema INFERENCE
+      // over that empty dir throws — with the schema pinned the re-read
+      // returns an empty frame and the report says nFinal=0 instead
+      val outDf = spark.read.schema(packed.schema).parquet(out)
+      val perSplit = outDf.groupBy("split").count().collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      Report(nInput, nDeduped, nGated, nCut, perSplit.values.sum,
+        nBoilerDropped, perSplit)
+    } finally leaves.foreach(_.release())
   }
 
   private val KnownOpts = Set("in", "out", "index", "bench-source",

@@ -802,31 +802,28 @@ object Dedup {
           struct(col("b").as("a"), col("a").as("b")))).as("e"))
       .select(col("e.a").as("a"), col("e.b").as("b"))
       .distinct().cache()
-    // Each round is rebased onto an RDD-backed leaf
-    // (`createDataFrame(rdd, schema)`): the naive `labels = f(labels)`
+    // Each round is rebased onto a persisted RDD leaf
+    // ([[graft.Leaf]]): the naive `labels = f(labels)`
     // loop embeds the previous round's LOGICAL PLAN twice per round
     // (both join sides derive from `labels`), so the plan TREE doubles
     // every iteration — a diameter-40 component OOMs the planner at
     // ~2^40 nodes long before any data moves. RDD lineage dedupes by
     // object identity (a DAG, not a tree), so flattening keeps
     // planning O(1) per round while shuffle outputs still reuse.
-    val spark = pairs.sparkSession
     val labelSchema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("id",
         org.apache.spark.sql.types.LongType, nullable = false),
       org.apache.spark.sql.types.StructField("grp",
         org.apache.spark.sql.types.LongType, nullable = false)))
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    var curRdd = edges.select(col("a").as("id")).distinct()
-      .withColumn("grp", col("id")).rdd.persist(lvl)
-    var cur = spark.createDataFrame(curRdd, labelSchema)
+    var cur = graft.Leaf.persist(edges.select(col("a").as("id")).distinct()
+      .withColumn("grp", col("id")), labelSchema)
     // Convergence check rides the monotonicity: labels only ever
     // DECREASE, so the exact decimal label sum is strictly smaller
     // after any change — an unchanged sum IS convergence, with no
     // extra next⋈previous comparison join per round.
     val sumGrp = (df: DataFrame) =>
       df.agg(sum(col("grp").cast("decimal(38,0)"))).head().getDecimal(0)
-    var curSum = sumGrp(cur)
+    var curSum = sumGrp(cur.df)
     // maxIters is a safety valve only — a silent cap would SPLIT
     // components, so we fail loudly if it's ever hit
     var converged = false
@@ -834,16 +831,16 @@ object Dedup {
     while (!converged) {
       if (i >= maxIters) {
         edges.unpersist(false); raw.unpersist(false)
-        curRdd.unpersist(false) // no cache leak on abort
+        cur.release() // no cache leak on abort
         throw new IllegalStateException(
           s"duplicateGroups did not converge in $maxIters iterations")
       }
       val viaNeighbors = edges
-        .join(cur.withColumnRenamed("id", "b")
+        .join(cur.df.withColumnRenamed("id", "b")
           .withColumnRenamed("grp", "ngrp"), "b")
         .groupBy(col("a").as("id"))
         .agg(min("ngrp").as("ngrp"))
-      val steppedDf = cur.join(viaNeighbors, Seq("id"), "left")
+      val steppedDf = cur.df.join(viaNeighbors, Seq("id"), "left")
         .select(col("id"),
           least(col("grp"), coalesce(col("ngrp"), col("grp"))).as("grp"))
       // Pointer jump (grp ← grp(grp)) on large graphs: neighbor-min
@@ -869,23 +866,21 @@ object Dedup {
       // the sf0.1 d_dup_groups_dist gate), so small graphs keep the
       // plain neighbor-min round — both paths converge to the
       // identical labeling, spec-pinned.
-      val (nextDf, steppedRdd) =
+      val (nextDf, steppedLeaf) =
         if (nEdges > jumpThreshold) {
-          val srdd = steppedDf.rdd.persist(lvl)
-          val stepped = spark.createDataFrame(srdd, labelSchema)
-          (stepped.as("s").join(
-              stepped.select(col("id").as("gid"), col("grp").as("ggrp")).as("t"),
+          val stepped = graft.Leaf.persist(steppedDf, labelSchema)
+          (stepped.df.as("s").join(
+              stepped.df.select(col("id").as("gid"), col("grp").as("ggrp")).as("t"),
               col("s.grp") === col("t.gid"), "left")
             .select(col("s.id").as("id"),
               least(col("s.grp"), coalesce(col("t.ggrp"), col("s.grp"))).as("grp")),
-            Some(srdd))
+            Some(stepped))
         } else (steppedDf, None)
-      val nextRdd = nextDf.rdd.persist(lvl)
-      val next = spark.createDataFrame(nextRdd, labelSchema)
-      val nextSum = sumGrp(next) // materializes nextRdd
-      curRdd.unpersist(false) // previous round no longer referenced
-      steppedRdd.foreach(_.unpersist(false)) // round-local intermediate
-      cur = next; curRdd = nextRdd
+      val next = graft.Leaf.persist(nextDf, labelSchema)
+      val nextSum = sumGrp(next.df) // materializes next's rows
+      cur.release() // previous round no longer referenced
+      steppedLeaf.foreach(_.release()) // round-local intermediate
+      cur = next
       converged = nextSum.compareTo(curSum) == 0
       curSum = nextSum
       i += 1
@@ -897,8 +892,8 @@ object Dedup {
     // loop's still-materialized shuffle outputs (stage reuse), so the
     // uncached handoff costs shuffle-file reads, not a re-run of the
     // propagation.
-    val out = cur.select(col("id").as("doc_id"), col("grp").as("group_id"))
-    curRdd.unpersist(false)
+    val out = cur.df.select(col("id").as("doc_id"), col("grp").as("group_id"))
+    cur.release()
     out
   }
 
@@ -1566,7 +1561,12 @@ object Dedup {
    * a set bounded by corpus boilerplate (≪ corpus) the same way the
    * winnowing hot-fingerprint and CDC hot-chunk guards are. The
    * rebuild is a per-doc sort of its own segments, bounded by
-   * document length.
+   * document length. The df branch and the rebuild share ONE tokenize
+   * pass only when `df` is a leaf (a scan or a persisted frame, see
+   * [[graft.Leaf]]): on a composed input, filters the optimizer
+   * infers from upstream operators can differ between the two
+   * branches, and the shared exchange splits into one tokenize pass
+   * per branch.
    */
   def stripBoilerplateSegments(df: DataFrame, width: Int = 4,
                                maxDf: Long = 5L,
@@ -1630,7 +1630,11 @@ object Dedup {
    * `when`-projected, never a Filter, so predicate pushdown cannot
    * split the exchange; plan-audited). The benchmark window-hash set
    * joins BROADCAST — eval suites are fixed-size and tiny relative to
-   * any training corpus (the `p_decontam` argument).
+   * any training corpus (the `p_decontam` argument). The single scan
+   * + tokenize holds for a leaf `df` (a scan or a persisted frame, see
+   * [[graft.Leaf]]). On a composed input, filters the optimizer infers
+   * from upstream operators can differ between the branches, so they
+   * stop sharing the exchange and each branch tokenizes on its own.
    */
   def cutContaminatedSpans(df: DataFrame, isBench: Column, l: Int = 8,
                            idCol: String = "doc_id",

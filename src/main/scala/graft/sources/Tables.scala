@@ -65,10 +65,32 @@ object Tables {
     * mtime (one recursive listing). A directory swap (the
     * compaction/aging jobs), an added or removed part file, and a
     * part file rewritten in place under the same name all change it;
-    * the directory's own mtime catches only the first two. */
+    * the directory's own mtime catches only the first two.
+    *
+    * Entries of a session are dropped when its SparkContext stops (a
+    * listener registered with the first entry per context), so a JVM
+    * that runs session after session does not keep every stopped
+    * session's analyzed relations. */
   private val relCache =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
       ((Int, Long, Long), DataFrame)]()
+  private val watched =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[org.apache.spark.SparkContext]()
+
+  private def evictOnStop(sc: org.apache.spark.SparkContext): Unit =
+    if (watched.add(sc)) sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+      override def onApplicationEnd(
+          e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
+        relCache.keySet.removeIf(_._1.sparkContext eq sc)
+        watched.remove(sc)
+      }
+    })
+
+  /** Paths cached for `spark` (for specs). */
+  private[graft] def cachedPaths(spark: SparkSession): Set[String] = {
+    import scala.jdk.CollectionConverters._
+    relCache.keySet.asScala.collect { case (s, p) if s eq spark => p }.toSet
+  }
 
   /** (leaf file count, total bytes, newest mtime) under `path`, or
     * None when it cannot be listed. */
@@ -87,9 +109,11 @@ object Tables {
   def parquetCached(spark: SparkSession, path: String): DataFrame =
     fingerprint(spark, path) match {
       case None => spark.read.parquet(path) // missing path: let the read throw
-      case Some(fp) => relCache.compute((spark, path), (_, prev) =>
-        if (prev != null && prev._1 == fp) prev
-        else (fp, spark.read.parquet(path)))._2
+      case Some(fp) =>
+        evictOnStop(spark.sparkContext)
+        relCache.compute((spark, path), (_, prev) =>
+          if (prev != null && prev._1 == fp) prev
+          else (fp, spark.read.parquet(path)))._2
     }
 
   def documents(spark: SparkSession, sfDir: String): DataFrame =

@@ -3,6 +3,8 @@ package graft
 import graft.cli.Curate
 import graft.functions.VectorOps
 import graft.text.TextOps
+import org.apache.spark.scheduler._
+import org.apache.spark.storage.RDDInfo
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
@@ -274,5 +276,116 @@ class CurateSpec extends SparkSpec {
     assert(rHard.nGated < report.nGated)
     assert(rHard.nFinal <= rHard.nGated)
     assert(rHard.nInput == report.nInput)
+  }
+
+  /** A documents table (doc_id, text, source) under `dir`: the curated
+    * fixture's output texts, every 7th document relabelled as the
+    * benchmark slice. */
+  private def curatedDocs(dir: String): String = {
+    assert(report.nFinal > 0) // `result` reads the run's output
+    result.select(col("doc_id"), col("clean_text").as("text"),
+        when(col("doc_id") % 7 === 0, lit("src1")).otherwise(col("source"))
+          .as("source"))
+      .write.parquet(s"$dir/docs")
+    s"$dir/docs"
+  }
+
+  test("a failed write releases every persisted frame") {
+    val dir = Files.createTempDirectory("graft-curate-fail")
+    val blocker = Files.createFile(dir.resolve("not-a-dir"))
+    val cacheManager = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    val (rddsBefore, cacheWasEmpty) =
+      (spark.sparkContext.getPersistentRDDs.keySet, cacheManager.isEmpty)
+    // `out` below a regular file: the pipeline runs up to the write,
+    // then the write cannot create its directory
+    val in = curatedDocs(dir.toString)
+    intercept[Exception](Curate.run(spark, in, s"$blocker/out"))
+    assert(spark.sparkContext.getPersistentRDDs.keySet == rddsBefore,
+      "a failed run left persisted RDDs behind")
+    assert(!cacheWasEmpty || cacheManager.isEmpty,
+      "a failed run left a cached plan behind")
+  }
+
+  test("each Curate call evaluates the scoring keeper window in exactly one stage") {
+    val base = Files.createTempDirectory("graft-curate-once").toString
+    val in = curatedDocs(base)
+    spark.read.parquet(in).filter(col("doc_id") < 100).write.parquet(s"$base/in1")
+    def keeperStages(call: => Unit): Int = {
+      val probe = new KeeperWindowStages
+      spark.sparkContext.addSparkListener(probe)
+      try { call; probe.drain(spark) }
+      finally spark.sparkContext.removeSparkListener(probe)
+      probe.stages
+    }
+    val batch = keeperStages(Curate.run(spark, in, s"$base/run"))
+    Curate.runIncremental(spark, s"$base/in1", s"$base/out1", s"$base/idx")
+    val incremental = keeperStages(
+      Curate.runIncremental(spark, in, s"$base/out2", s"$base/idx"))
+    assert((batch, incremental) == ((1, 1)),
+      s"the scoring pass (md5(text) keeper window) ran in $batch stages " +
+        s"in Curate.run and $incremental in a runIncremental increment")
+  }
+}
+
+/**
+ * Counts the stages that evaluate the keeper window of the scoring
+ * pass: a `Window` operator with no other window upstream (every
+ * other window of the pipeline reads the scored frame). A stage
+ * evaluates the RDDs reachable from its own RDD through narrow
+ * dependencies, stopping at shuffle reads and at persisted RDDs an
+ * earlier stage already computed.
+ */
+private final class KeeperWindowStages extends SparkListener {
+  private val rdds = collection.mutable.Map.empty[Int, RDDInfo]
+  private val computed = collection.mutable.Set.empty[Int]
+  private var count = 0
+  private val marker = "graft.spec.drain"
+  @volatile private var markerJob = -1
+  private val drained = scala.concurrent.Promise[Unit]()
+
+  def stages: Int = synchronized(count)
+
+  /** Waits until every event posted before this call was delivered. */
+  def drain(spark: org.apache.spark.sql.SparkSession): Unit = {
+    val sc = spark.sparkContext
+    sc.setLocalProperty(marker, "1")
+    try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(marker, null)
+    scala.concurrent.Await.result(drained.future,
+      scala.concurrent.duration.Duration(60, "s"))
+  }
+
+  /** `from` and what it reaches through `parents`, among known RDDs. */
+  private def reach(from: Int, parents: RDDInfo => Seq[Int]): Set[Int] = {
+    val seen = collection.mutable.Set.empty[Int]
+    def walk(id: Int): Unit =
+      if (rdds.contains(id) && seen.add(id)) parents(rdds(id)).foreach(walk)
+    walk(from)
+    seen.toSet
+  }
+
+  private def evaluated(stageRdd: Int): Set[Int] =
+    reach(stageRdd, r =>
+      if (r.name == "ShuffledRowRDD" || computed(r.id)) Nil else r.parentIds)
+      .filterNot(computed)
+
+  private def isWindow(id: Int) = rdds(id).scope.exists(_.name == "Window")
+
+  private def isKeeperWindow(id: Int): Boolean =
+    isWindow(id) && !(reach(id, _.parentIds) - id).exists(isWindow)
+
+  override def onJobStart(e: SparkListenerJobStart): Unit =
+    if (e.properties != null && e.properties.getProperty(marker) != null)
+      markerJob = e.jobId
+
+  override def onJobEnd(e: SparkListenerJobEnd): Unit =
+    if (e.jobId == markerJob) drained.trySuccess(())
+
+  override def onStageCompleted(e: SparkListenerStageCompleted): Unit = synchronized {
+    val info = e.stageInfo
+    info.rddInfos.foreach(r => rdds(r.id) = r)
+    val ev = evaluated(info.rddInfos.head.id)
+    if (ev.exists(isKeeperWindow)) count += 1
+    computed ++= ev.filter(rdds(_).storageLevel.isValid)
   }
 }

@@ -80,4 +80,16 @@ class SeriesKeyContractSpec extends SparkSpec {
     assert(generic == "m{}")
     assert(cheap.isNullAt(0)) // the no-null-user envelope pin keeps this out of the data
   }
+
+  test("unkey gives usr \"\" for an skey without {user=, and splits the engine shape") {
+    import spark.implicits._
+    val rows = SparkEntry.unkey(Seq("/events/click{user=3}", "/events/click",
+        "/events/click{host=a}", "{user=7}").toDF("skey"))
+      .select("skey", "name", "usr").as[(String, String, String)]
+      .collect().map(r => r._1 -> (r._2, r._3)).toMap
+    assert(rows("/events/click{user=3}") == (("/events/click", "3")))
+    assert(rows("/events/click") == (("/events/click", "")))
+    assert(rows("/events/click{host=a}") == (("/events/click", "")))
+    assert(rows("{user=7}") == (("", "7")))
+  }
 }
