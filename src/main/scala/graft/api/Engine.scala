@@ -1,7 +1,7 @@
 package graft.api
 
 import graft.model.Point
-import graft.operators.{Aggregations, Mutations, Rle}
+import graft.operators.{Aggregations, Mutations}
 import graft.pattern.VariableMatcher
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -119,7 +119,7 @@ object Requests {
         * When the final mutation is a dense-grid emitter
         * (interpolate/uniform) the run-emitting twin replaces it, so
         * the dense rows never exist ([[Mutations.perSeriesRuns]]);
-        * any other final shape is run-collapsed by [[Rle.encode]].
+        * any other final shape is run-collapsed by [[graft.operators.Rle.encode]].
         * Dense-render clients reconstruct with `Rle.expand`.
         * Incompatible with aggregations (aggregate outputs are not
         * per-series grids), with C++ independent-mutation mode, and
@@ -321,8 +321,4 @@ object Engine {
     (tagged.filter(col("reject_reason").isNull).drop("reject_reason"),
       tagged.filter(col("reject_reason").isNotNull))
   }
-
-  /** RLE-encode a get() result for the wire, as the reference does on
-    * response materialization (go/src/store.go:133-156). */
-  def encodeResponse(df: DataFrame): DataFrame = Rle.encode(df)
 }

@@ -430,43 +430,84 @@ object Dedup {
       shingleSets(probes, idCol, textCol, n).repartition(col("id")),
       numHashes, bands, threshold)
 
-  /**
-   * Materialize the at-rest MinHash/LSH near-dup index under `path`:
-   * `path/sets` = (id, sh) shingle sets, `path/bands` = (id, band) LSH
-   * band keys. Bands derive from the WRITTEN sets (read back, not
-   * recomputed from text), so the two halves cannot disagree and the
-   * corpus tokenizes exactly once. [[minhashLookup]] /
-   * [[minhashLookupStream]] probe it; refreshing after ingest is a
-   * rewrite (or a partition append at fleet scale).
-   */
   /** On-disk layout contract of a [[minhashIndex]]: the shingle size
     * baked into `sets` plus the hash-family/banding scheme baked into
     * `bands`. Probing with different parameters silently returns zero
     * matches (band keys never collide), so every reader/appender
-    * verifies the `path/_format` marker (IndexFormat pattern, proven by
-    * the simhash `_band_format` marker). */
+    * verifies the `path/_format` marker ([[graft.model.IndexFormat]]). */
   def minhashFormat(n: Int, numHashes: Int, bands: Int): String =
     s"minhash-lsh v1 n=$n numHashes=$numHashes bands=$bands"
+  private val MinhashRebuildHint =
+    "Rebuild with Dedup.minhashIndex, or — for a banding-only change " +
+    "(same n) — Dedup.minhashRebuildBands regenerates path/bands from " +
+    "the stored sets without re-tokenizing."
   private def minhashCheck(spark: org.apache.spark.sql.SparkSession,
                            path: String, n: Int, numHashes: Int,
                            bands: Int): Unit =
     graft.model.IndexFormat.check(spark, path,
-      minhashFormat(n, numHashes, bands),
-      "Rebuild with Dedup.minhashIndex, or — for a banding-only change " +
-      "(same n) — Dedup.minhashRebuildBands regenerates path/bands from " +
-      "the stored sets without re-tokenizing.")
+      minhashFormat(n, numHashes, bands), MinhashRebuildHint)
 
+  /**
+   * The appendable two-level sketch layout shared by [[minhashIndex]]
+   * and [[simhashIndex]] (and their appends): `path/<keyDir>` holds the
+   * per-document key rows, `path/bands` the band rows `bandsOf` derives
+   * from the STORED key rows (read back, not recomputed from text), so
+   * the two halves cannot disagree and the corpus tokenizes exactly
+   * once. A build overwrites both halves and stamps `marker`. An
+   * append verifies `marker` first (mixed schemes corrupt recall),
+   * stages the new key rows under `path/staging-<keyDir>`, extends both
+   * halves via parquet append — only new files appear, existing data
+   * is never rewritten — and deletes the staging directory.
+   */
+  private def sketchIndex(keys: DataFrame, path: String, keyDir: String,
+                          bandsOf: DataFrame => DataFrame, marker: String,
+                          rebuildHint: String, append: Boolean): Unit = {
+    val spark = keys.sparkSession
+    if (!append) {
+      keys.write.mode("overwrite").parquet(s"$path/$keyDir")
+      rebandSketch(spark, path, keyDir, bandsOf, marker)
+    } else {
+      graft.model.IndexFormat.check(spark, path, marker, rebuildHint)
+      val staged = s"$path/staging-$keyDir"
+      keys.write.mode("overwrite").parquet(staged)
+      val stored = spark.read.parquet(staged)
+      stored.write.mode("append").parquet(s"$path/$keyDir")
+      bandsOf(stored).write.mode("append").parquet(s"$path/bands")
+      // resolve the filesystem FROM the staging path — FileSystem.get
+      // returns the default FS and would miss an s3a/hdfs-resident index
+      val stagedPath = new org.apache.hadoop.fs.Path(staged)
+      stagedPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .delete(stagedPath, true)
+    }
+  }
+
+  /** (Re)generate `path/bands` from the stored key rows and stamp
+    * `marker`: the tail of a [[sketchIndex]] build and the whole of a
+    * banding migration. Key rows and bands are disjoint directories,
+    * so no staging hop is needed. */
+  private def rebandSketch(spark: org.apache.spark.sql.SparkSession,
+                           path: String, keyDir: String,
+                           bandsOf: DataFrame => DataFrame,
+                           marker: String): Unit = {
+    bandsOf(spark.read.parquet(s"$path/$keyDir"))
+      .write.mode("overwrite").parquet(s"$path/bands")
+    graft.model.IndexFormat.write(spark, path, marker)
+  }
+
+  /**
+   * Materialize the at-rest MinHash/LSH near-dup index under `path`:
+   * `path/sets` = (id, sh) shingle sets, `path/bands` = (id, band) LSH
+   * band keys derived from the written sets ([[sketchIndex]]).
+   * [[minhashLookup]] / [[minhashLookupStream]] probe it;
+   * [[minhashAppend]] extends it.
+   */
   def minhashIndex(df: DataFrame, path: String, n: Int = 3,
                    numHashes: Int = 16, bands: Int = 4,
                    idCol: String = "doc_id", textCol: String = "text"): Unit = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    shingleSets(df, idCol, textCol, n)
-      .write.mode("overwrite").parquet(s"$path/sets")
-    val stored = df.sparkSession.read.parquet(s"$path/sets")
-    bandRows(stored, numHashes, bands)
-      .write.mode("overwrite").parquet(s"$path/bands")
-    graft.model.IndexFormat.write(df.sparkSession, path,
-      minhashFormat(n, numHashes, bands))
+    sketchIndex(shingleSets(df, idCol, textCol, n), path, "sets",
+      bandRows(_, numHashes, bands), minhashFormat(n, numHashes, bands),
+      MinhashRebuildHint, append = false)
   }
 
   /** Migrate a [[minhashIndex]] to a new banding scheme: regenerate
@@ -479,13 +520,7 @@ object Dedup {
                           path: String, n: Int = 3, numHashes: Int = 16,
                           bands: Int = 4): Unit = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    // sets and bands are disjoint directories, so the rebuild reads
-    // one and overwrites the other directly — no staging hop (an
-    // earlier staging dir was deleted via the DEFAULT filesystem,
-    // which targets the wrong store for an s3a/hdfs-resident index)
-    bandRows(spark.read.parquet(s"$path/sets"), numHashes, bands)
-      .write.mode("overwrite").parquet(s"$path/bands")
-    graft.model.IndexFormat.write(spark, path,
+    rebandSketch(spark, path, "sets", bandRows(_, numHashes, bands),
       minhashFormat(n, numHashes, bands))
   }
 
@@ -499,30 +534,16 @@ object Dedup {
    * build and makes refresh a full rewrite) — so appended rows land
    * exactly where a full rebuild would put them and subsequent lookups
    * are bit-identical to a from-scratch index (DedupSpec asserts it).
-   * Parameters must match the build. New sets stage under
-   * `path/staging-sets` so the band half derives from the WRITTEN rows
-   * (the [[minhashIndex]] invariant: the halves cannot disagree, one
-   * tokenize total); both halves then extend via parquet append — only
-   * new files appear, existing data is never rewritten.
+   * Parameters must match the build. Staging and append mechanics:
+   * [[sketchIndex]].
    */
   def minhashAppend(df: DataFrame, path: String, n: Int = 3,
                     numHashes: Int = 16, bands: Int = 4,
                     idCol: String = "doc_id", textCol: String = "text"): Unit = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    val spark = df.sparkSession
-    minhashCheck(spark, path, n, numHashes, bands) // mixed schemes corrupt recall
-    val staged = s"$path/staging-sets"
-    shingleSets(df, idCol, textCol, n)
-      .write.mode("overwrite").parquet(staged)
-    val stored = spark.read.parquet(staged)
-    stored.write.mode("append").parquet(s"$path/sets")
-    bandRows(stored, numHashes, bands)
-      .write.mode("append").parquet(s"$path/bands")
-    // resolve the filesystem FROM the staging path — FileSystem.get
-    // returns the default FS and would miss an s3a/hdfs-resident index
-    val stagedPath = new org.apache.hadoop.fs.Path(staged)
-    stagedPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(stagedPath, true)
+    sketchIndex(shingleSets(df, idCol, textCol, n), path, "sets",
+      bandRows(_, numHashes, bands), minhashFormat(n, numHashes, bands),
+      MinhashRebuildHint, append = true)
   }
 
   /**
@@ -739,6 +760,18 @@ object Dedup {
    * on the edge list; rounds needed = graph diameter (tiny for dup
    * clusters), with a convergence check so dense components don't
    * over-iterate. Only documents that appear in `pairs` are returned.
+   *
+   * @param driverLimit graphs with at most this many RAW `pairs` rows
+   *                    (as given: duplicate and mirrored pairs count
+   *                    each time) are labeled by a driver-side
+   *                    union-find; larger ones take the distributed loop.
+   * @param jumpThreshold the distributed loop adds a pointer-jump join
+   *                    per round once `nEdges = 2·nRaw` exceeds this.
+   *                    `nEdges` is an UPPER BOUND on the symmetrized
+   *                    distinct edge count (no extra count action runs),
+   *                    so a pair list with repeats switches to jumping
+   *                    earlier than an exact count would. Both knobs pick
+   *                    a path only: every path gives the same labels.
    */
   def duplicateGroups(pairs: DataFrame, maxIters: Int = 1000,
                       driverLimit: Long = 1000000L,
@@ -967,67 +1000,35 @@ object Dedup {
       simhashBandRows(simhashSignatures(corpus, idCol, textCol)),
       simhashSignatures(probes, idCol, textCol), maxDist)
 
-  /** Persisted band-layout version of [[simhashIndex]], written as the
-    * single-line marker file `path/_band_format`. The band-key scheme
-    * is part of the ON-DISK contract: probing an index whose bands
-    * were exploded under a different scheme silently returns ZERO
-    * matches (the keys never collide), and appending mixed-scheme band
-    * rows corrupts recall for both generations — so every reader and
-    * appender verifies the marker and fails loudly instead.
+  /** Persisted band-layout version of [[simhashIndex]], stamped in the
+    * index's `path/_format` marker ([[graft.model.IndexFormat]]). The
+    * band-key scheme is part of the ON-DISK contract: probing an index
+    * whose bands were exploded under a different scheme silently
+    * returns ZERO matches (the keys never collide), and appending
+    * mixed-scheme band rows corrupts recall for both generations — so
+    * every reader and appender verifies the marker and fails loudly
+    * instead. A missing marker (an index that predates the marker, or
+    * one that carries only the older `_band_format` file) is refused
+    * the same way; [[simhashRebuildBands]] migrates it.
     * History: v1 = 4 exploded 15-bit single bands (pre-r13);
     * v2 = 20 compound 3-of-6 10-bit-block keys ([[SimhashBlockCombos]]). */
   val SimhashBandFormat = "simhash-bands v2 3of6-blocks"
 
-  private def hadoopFs(spark: org.apache.spark.sql.SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private val SimhashRebuildHint =
+    "Run Dedup.simhashRebuildBands(spark, path) to regenerate path/bands " +
+    "from path/sigs (signatures are format-independent)."
 
-  private def writeBandFormatMarker(spark: org.apache.spark.sql.SparkSession,
-                                    path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/_band_format")
-    val out = hadoopFs(spark, path).create(p, true)
-    try out.write((SimhashBandFormat + "\n").getBytes("UTF-8"))
-    finally out.close()
-  }
-
-  /** Fail-loud guard on every simhash-index read/append path: the
-    * marker must exist and match [[SimhashBandFormat]] exactly. A
-    * missing marker means the index predates the marker (v1 bands) —
-    * treated as a mismatch, not trusted. */
-  private def requireBandFormat(spark: org.apache.spark.sql.SparkSession,
-                                path: String): Unit = {
-    val fs = hadoopFs(spark, path)
-    val p = new org.apache.hadoop.fs.Path(s"$path/_band_format")
-    val actual =
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        try Some(new String(
-          org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8").trim)
-        finally in.close()
-      }
-    if (!actual.contains(SimhashBandFormat)) throw new IllegalStateException(
-      s"simhash index at $path has band layout ${actual.getOrElse("<no marker — pre-v2 index>")} " +
-      s"but this build probes/writes '$SimhashBandFormat'; old-format bands never " +
-      s"collide with new-format probe keys (lookups silently return 0 matches) " +
-      s"and mixed appends corrupt recall. Run Dedup.simhashRebuildBands(spark, path) " +
-      s"to regenerate path/bands from path/sigs (signatures are format-independent).")
-  }
+  private def simhashCheck(spark: org.apache.spark.sql.SparkSession,
+                           path: String): Unit =
+    graft.model.IndexFormat.check(spark, path, SimhashBandFormat,
+      SimhashRebuildHint)
 
   /** Migrate / repair an at-rest simhash index: regenerate `path/bands`
     * from the stored (format-independent) `path/sigs` under the current
     * [[SimhashBandFormat]] and stamp the marker. One linear pass. */
   def simhashRebuildBands(spark: org.apache.spark.sql.SparkSession,
-                          path: String): Unit = {
-    val staged = s"$path/staging-bands"
-    simhashBandRows(spark.read.parquet(s"$path/sigs"))
-      .write.mode("overwrite").parquet(staged)
-    spark.read.parquet(staged)
-      .write.mode("overwrite").parquet(s"$path/bands")
-    hadoopFs(spark, path)
-      .delete(new org.apache.hadoop.fs.Path(staged), true)
-    writeBandFormatMarker(spark, path)
-  }
+                          path: String): Unit =
+    rebandSketch(spark, path, "sigs", simhashBandRows(_), SimhashBandFormat)
 
   /**
    * Materialize the at-rest SimHash near-dup index under `path`:
@@ -1035,46 +1036,30 @@ object Dedup {
    * of signature per doc plus 20 compound band rows (the 3-of-6-block
    * scheme of [[simhashBandRows]]); at any corpus scale this is the
    * cheapest near-dup index that exists. Bands derive from the WRITTEN
-   * sigs so the halves cannot disagree, and the band layout is stamped
-   * in `path/_band_format` ([[SimhashBandFormat]]) so a future scheme
+   * sigs so the halves cannot disagree ([[sketchIndex]]), and the band
+   * layout is stamped as [[SimhashBandFormat]] so a future scheme
    * change cannot silently probe stale bands.
    */
   def simhashIndex(df: DataFrame, path: String, idCol: String = "doc_id",
-                   textCol: String = "text"): Unit = {
-    simhashSignatures(df, idCol, textCol)
-      .write.mode("overwrite").parquet(s"$path/sigs")
-    simhashBandRows(df.sparkSession.read.parquet(s"$path/sigs"))
-      .write.mode("overwrite").parquet(s"$path/bands")
-    writeBandFormatMarker(df.sparkSession, path)
-  }
+                   textCol: String = "text"): Unit =
+    sketchIndex(simhashSignatures(df, idCol, textCol), path, "sigs",
+      simhashBandRows(_), SimhashBandFormat, SimhashRebuildHint, append = false)
 
   /** Append new documents to a materialized [[simhashIndex]] — same
     * contract and staging shape as [[minhashAppend]]: signatures are
     * corpus-independent, so append ≡ full rebuild for every lookup. */
   def simhashAppend(df: DataFrame, path: String,
                     idCol: String = "doc_id",
-                    textCol: String = "text"): Unit = {
-    val spark = df.sparkSession
-    requireBandFormat(spark, path) // appending v2 bands into v1 bands mixes schemes
-    val staged = s"$path/staging-sigs"
-    simhashSignatures(df, idCol, textCol)
-      .write.mode("overwrite").parquet(staged)
-    val stored = spark.read.parquet(staged)
-    stored.write.mode("append").parquet(s"$path/sigs")
-    simhashBandRows(stored)
-      .write.mode("append").parquet(s"$path/bands")
-    // path-resolved FS, not the default FS (s3a/hdfs-resident indexes)
-    val stagedPath = new org.apache.hadoop.fs.Path(staged)
-    stagedPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(stagedPath, true)
-  }
+                    textCol: String = "text"): Unit =
+    sketchIndex(simhashSignatures(df, idCol, textCol), path, "sigs",
+      simhashBandRows(_), SimhashBandFormat, SimhashRebuildHint, append = true)
 
   /** Probe a [[simhashIndex]] with a batch of new documents:
     * (probe_id, corpus_id, dist) per near-dup already held. */
   def simhashLookup(spark: org.apache.spark.sql.SparkSession, path: String,
                     probes: DataFrame, maxDist: Int = 3,
                     idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    requireBandFormat(spark, path)
+    simhashCheck(spark, path)
     simhashLookupFromSigs(
       spark.read.parquet(s"$path/bands"),
       simhashSignatures(probes, idCol, textCol), maxDist)
@@ -1093,7 +1078,7 @@ object Dedup {
                           watermark: String = "1 hour",
                           idCol: String = "doc_id",
                           textCol: String = "text"): DataFrame = {
-    requireBandFormat(spark, path)
+    simhashCheck(spark, path)
     // shares simhashSignatures with the index build — bit-identical
     // signatures or lookups silently stop matching
     val sigs = simhashSignatures(
@@ -1156,14 +1141,8 @@ object Dedup {
     // anti-join probe, and both sides of the self-join. As in
     // [[ngramJaccardPairs]], a repartition — not a `.cache()` — makes
     // the chunk+md5 subtree evaluate once: every consumer shares the
-    // one exchange byte-identically. With a hot guard the key set
-    // includes `id` so a boilerplate chunk's stratum spreads across
-    // tasks and is dropped before the join's c-clustered exchange;
-    // without one, the blocking key is the join's own clustering.
-    val rows = chunkRows(df, idCol, textCol, window, divisor)
-    val ex =
-      if (maxDf == Long.MaxValue) rows.repartition(col("c"))
-      else dropHotKeys(rows.repartition(col("id"), col("c")), "c", maxDf)
+    // one exchange ([[keyExchange]]) byte-identically.
+    val ex = keyExchange(chunkRows(df, idCol, textCol, window, divisor), maxDf)
     ex.as("a").join(ex.as("b"),
         col("a.c") === col("b.c") && col("a.id") < col("b.id"))
       .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"))
@@ -1183,6 +1162,15 @@ object Dedup {
           cdcChunks(col(textCol), window, divisor), md5(_)))).as("c"))
       .filter(col("id").isNotNull && col("c").isNotNull)
 
+  /** The one exchange over (id, c) key rows that every consumer of a
+    * cdc/winnow corpus side reads. Without a hot guard the blocking key
+    * is the join's own clustering; with one the key set includes `id`
+    * so a boilerplate key's stratum spreads across tasks and is
+    * dropped ([[dropHotKeys]]) before the join's c-clustered exchange. */
+  private def keyExchange(rows: DataFrame, maxDf: Long): DataFrame =
+    if (maxDf == Long.MaxValue) rows.repartition(col("c"))
+    else dropHotKeys(rows.repartition(col("id"), col("c")), "c", maxDf)
+
   /**
    * Chunk-level near-dup pairs of `probes` AGAINST `corpus` — the
    * sub-document sibling of [[minhashCrossPairs]]: a probe that copies
@@ -1198,12 +1186,9 @@ object Dedup {
                     divisor: Int = 32, minShared: Int = 2,
                     maxDf: Long = Long.MaxValue, idCol: String = "doc_id",
                     textCol: String = "text"): DataFrame = {
-    val cc0 = chunkRows(corpus, idCol, textCol, window, divisor)
-    val cc =
-      if (maxDf == Long.MaxValue) cc0.repartition(col("c"))
-      else dropHotKeys(cc0.repartition(col("id"), col("c")), "c", maxDf)
-    sharedChunkTail(cc, chunkRows(probes, idCol, textCol, window, divisor),
-      minShared)
+    sharedChunkTail(
+      keyExchange(chunkRows(corpus, idCol, textCol, window, divisor), maxDf),
+      chunkRows(probes, idCol, textCol, window, divisor), minShared)
   }
 
   /**
@@ -1230,17 +1215,9 @@ object Dedup {
    */
   def cdcIndex(df: DataFrame, path: String, window: Int = 4,
                divisor: Int = 32, maxDf: Long = Long.MaxValue,
-               idCol: String = "doc_id", textCol: String = "text"): Unit = {
-    val rows = chunkRows(df, idCol, textCol, window, divisor)
-    val ex =
-      if (maxDf == Long.MaxValue) rows.repartition(col("c"))
-      else dropHotKeys(rows.repartition(col("id"), col("c")), "c", maxDf)
-    val dfc = ex.groupBy("c").agg(count(lit(1)).as("df"))
-    ex.join(dfc, "c").select("id", "c", "df")
-      .write.mode("overwrite").parquet(s"$path/chunks")
-    graft.model.IndexFormat.write(df.sparkSession, path,
-      cdcFormat(window, divisor))
-  }
+               idCol: String = "doc_id", textCol: String = "text"): Unit =
+    keyIndex(chunkRows(df, idCol, textCol, window, divisor), path, "chunks",
+      maxDf, cdcFormat(window, divisor))
 
   /** On-disk chunking contract of a [[cdcIndex]]: the Rabin window and
     * cut-point divisor baked into the stored chunk hashes. Probing with
@@ -1267,12 +1244,33 @@ object Dedup {
   def cdcLookup(spark: org.apache.spark.sql.SparkSession, path: String,
                 probes: DataFrame, window: Int = 4, divisor: Int = 32,
                 minShared: Int = 2, maxDf: Long = Long.MaxValue,
-                idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    graft.model.IndexFormat.check(spark, path, cdcFormat(window, divisor),
-      "Rebuild with Dedup.cdcIndex under the chunking parameters you probe with.")
-    sharedChunkTail(
-      spark.read.parquet(s"$path/chunks").filter(col("df") <= maxDf),
-      chunkRows(probes, idCol, textCol, window, divisor), minShared)
+                idCol: String = "doc_id", textCol: String = "text"): DataFrame =
+    keyLookup(spark, path, "chunks", cdcFormat(window, divisor),
+      "Rebuild with Dedup.cdcIndex under the chunking parameters you probe with.",
+      chunkRows(probes, idCol, textCol, window, divisor), minShared, maxDf)
+
+  /** The df-denormalized key index shared by [[cdcIndex]] and
+    * [[winnowIndex]]: `path/<dir>` = (id, c, df), then the `marker`
+    * stamp. The df aggregation and the re-attach join share the one
+    * [[keyExchange]]. */
+  private def keyIndex(rows: DataFrame, path: String, dir: String,
+                       maxDf: Long, marker: String): Unit = {
+    val ex = keyExchange(rows, maxDf)
+    val dfc = ex.groupBy("c").agg(count(lit(1)).as("df"))
+    ex.join(dfc, "c").select("id", "c", "df")
+      .write.mode("overwrite").parquet(s"$path/$dir")
+    graft.model.IndexFormat.write(rows.sparkSession, path, marker)
+  }
+
+  /** Probe a [[keyIndex]] with (id, c) key rows; `maxDf` is a pushed
+    * parquet filter on the stored df. */
+  private def keyLookup(spark: org.apache.spark.sql.SparkSession,
+                        path: String, dir: String, marker: String,
+                        rebuildHint: String, probeRows: DataFrame,
+                        minShared: Int, maxDf: Long): DataFrame = {
+    graft.model.IndexFormat.check(spark, path, marker, rebuildHint)
+    sharedChunkTail(spark.read.parquet(s"$path/$dir").filter(col("df") <= maxDf),
+      probeRows, minShared)
   }
 
   /** Probe chunks × corpus chunks on the hash, per-pair shared count. */
@@ -1315,11 +1313,8 @@ object Dedup {
                        w: Int = 4, minShared: Int = 2,
                        maxDf: Long = Long.MaxValue, idCol: String = "doc_id",
                        textCol: String = "text"): DataFrame = {
-    val cc0 = fpRows(corpus, idCol, textCol, k, w)
-    val cc =
-      if (maxDf == Long.MaxValue) cc0.repartition(col("c"))
-      else dropHotKeys(cc0.repartition(col("id"), col("c")), "c", maxDf)
-    sharedChunkTail(cc, fpRows(probes, idCol, textCol, k, w), minShared)
+    sharedChunkTail(keyExchange(fpRows(corpus, idCol, textCol, k, w), maxDf),
+      fpRows(probes, idCol, textCol, k, w), minShared)
   }
 
   /**
@@ -1331,16 +1326,9 @@ object Dedup {
    */
   def winnowIndex(df: DataFrame, path: String, k: Int = 3, w: Int = 4,
                   maxDf: Long = Long.MaxValue, idCol: String = "doc_id",
-                  textCol: String = "text"): Unit = {
-    val rows = fpRows(df, idCol, textCol, k, w)
-    val ex =
-      if (maxDf == Long.MaxValue) rows.repartition(col("c"))
-      else dropHotKeys(rows.repartition(col("id"), col("c")), "c", maxDf)
-    val dfc = ex.groupBy("c").agg(count(lit(1)).as("df"))
-    ex.join(dfc, "c").select("id", "c", "df")
-      .write.mode("overwrite").parquet(s"$path/fps")
-    graft.model.IndexFormat.write(df.sparkSession, path, winnowFormat(k, w))
-  }
+                  textCol: String = "text"): Unit =
+    keyIndex(fpRows(df, idCol, textCol, k, w), path, "fps", maxDf,
+      winnowFormat(k, w))
 
   /** On-disk fingerprint contract of a [[winnowIndex]]: shingle size
     * and winnowing window baked into the stored fingerprints — the cdc
@@ -1357,13 +1345,10 @@ object Dedup {
   def winnowLookup(spark: org.apache.spark.sql.SparkSession, path: String,
                    probes: DataFrame, k: Int = 3, w: Int = 4,
                    minShared: Int = 2, maxDf: Long = Long.MaxValue,
-                   idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    graft.model.IndexFormat.check(spark, path, winnowFormat(k, w),
-      "Rebuild with Dedup.winnowIndex under the fingerprint parameters you probe with.")
-    sharedChunkTail(
-      spark.read.parquet(s"$path/fps").filter(col("df") <= maxDf),
-      fpRows(probes, idCol, textCol, k, w), minShared)
-  }
+                   idCol: String = "doc_id", textCol: String = "text"): DataFrame =
+    keyLookup(spark, path, "fps", winnowFormat(k, w),
+      "Rebuild with Dedup.winnowIndex under the fingerprint parameters you probe with.",
+      fpRows(probes, idCol, textCol, k, w), minShared, maxDf)
 
   /**
    * Exact duplicate-substring spans: maximal runs of ≥ `l` consecutive

@@ -3,9 +3,9 @@ package graft.model
 import org.apache.spark.sql.SparkSession
 
 /**
- * At-rest index layout markers — the generalization of the SimHash
- * band-format marker ([[graft.dedup.Dedup.SimhashBandFormat]]) to every
- * materialized index family.
+ * At-rest index layout markers, one `path/_format` file per
+ * materialized index, shared by every index family (minhash, simhash,
+ * cdc, winnow, IVF, IVF-PQ, IVF-SQ8, PQ).
  *
  * Rationale: each index's on-disk layout bakes in parameters (LSH band
  * scheme, CDC chunking window/divisor, IVF quantizer, PQ codebooks)
@@ -53,6 +53,13 @@ object IndexFormat {
     verified.put(path, marker)
   }
 
+  /** Drop the session's verified-marker memo for `path` — required
+    * after an OUT-OF-BAND change to an index (rewritten by another
+    * session/process) so the next [[check]] re-reads the marker from
+    * storage. In-session rewrites via [[write]]/[[adopt]] update the
+    * memo themselves and don't need this. */
+  def forget(path: String): Unit = verified.remove(path)
+
   /**
    * Migration escape hatch for PRE-MARKER indexes: stamps `marker`
    * onto an existing index directory that has no `_format` yet, on the
@@ -65,13 +72,6 @@ object IndexFormat {
    * on upgrade. See COVERAGE.md "index format markers" for the
    * migration recipe per index family.
    */
-  /** Drop the session's verified-marker memo for `path` — required
-    * after an OUT-OF-BAND change to an index (rewritten by another
-    * session/process) so the next [[check]] re-reads the marker from
-    * storage. In-session rewrites via [[write]]/[[adopt]] update the
-    * memo themselves and don't need this. */
-  def forget(path: String): Unit = verified.remove(path)
-
   def adopt(spark: SparkSession, path: String, marker: String): Unit = {
     read(spark, path) match {
       case Some(existing) => throw new IllegalStateException(

@@ -918,21 +918,12 @@ object Ann {
   def ivfListStats(centroids: Array[Array[Double]],
                    corpus: DataFrame,
                    vecCol: String = "embedding"): DataFrame = {
-    import graft.functions.VectorOps.topCentroids
     corpus
-      .select(topCentroids(col(vecCol), centroids, 1).getItem(0).as("list_id"))
+      .select(listOf(centroids, col(vecCol)).as("list_id"))
       .groupBy("list_id")
       .agg(count(lit(1)).as("n_vectors"))
   }
 
-  /**
-   * Materialize the IVF index: the corpus written partitioned by
-   * inverted list (`list_id=<n>/` directories). This is the scale
-   * counterpart of [[ivfListStats]]'s balance check — after this,
-   * probes are PARTITION FILTERS: a query touching `nprobe` of `nlist`
-   * lists reads nprobe/nlist of the data from disk, before any task
-   * is scheduled.
-   */
   /** On-disk quantizer contracts of the materialized vector indexes.
     * The stored layouts bake in the EXACT quantizer arrays used at
     * build time: list assignments derive from the centroids, ADC
@@ -966,18 +957,62 @@ object Ann {
         "with, or load the quantizer this index was built with (persist " +
         "centroids/codebooks alongside the index).")
 
+  /** Nearest-centroid inverted-list id of a vector column — the list
+    * assignment every IVF layout and in-memory search shares. */
+  private def listOf(centroids: Array[Array[Double]], vec: Column): Column =
+    graft.functions.VectorOps.topCentroids(vec, centroids, 1).getItem(0)
+
+  /** A query's `nprobe` nearest lists as `list_id`, one row per probe —
+    * the probing every IVF search shares. */
+  private def probedLists(centroids: Array[Array[Double]], vec: Column,
+                          nprobe: Int): Column =
+    explode(graft.functions.VectorOps.topCentroids(vec, centroids, nprobe))
+      .as("list_id")
+
+  /** The list-partitioned at-rest write shared by every IVF layout:
+    * rows carrying `list_id`, clustered by list so each `list_id=<n>/`
+    * directory gets one file set. A build overwrites and stamps
+    * `marker`; an append verifies `marker` first and only adds files to
+    * the touched list directories. */
+  private def writeLists(rows: DataFrame, path: String, marker: String,
+                         builder: String, append: Boolean = false): Unit = {
+    val spark = rows.sparkSession
+    if (append) checkFormat(spark, path, marker, builder)
+    rows.repartition(col("list_id"))
+      .write.partitionBy("list_id").mode(if (append) "append" else "overwrite")
+      .parquet(path)
+    if (!append) graft.model.IndexFormat.write(spark, path, marker)
+  }
+
+  /** The probed lists of a list-partitioned index: verifies `marker`,
+    * collects the distinct `list_id`s of `probeLists` (bounded by
+    * queries × nprobe — the same small-query contract as the
+    * [[bruteTopK]] broadcast) and reads only those `list_id=`
+    * directories, as literal partition filters. */
+  private def readLists(spark: org.apache.spark.sql.SparkSession, path: String,
+                        marker: String, builder: String,
+                        probeLists: DataFrame): DataFrame = {
+    checkFormat(spark, path, marker, builder)
+    val probed = probeLists.select("list_id").distinct()
+      .collect().map(_.getInt(0)).toSeq
+    spark.read.parquet(path).filter(col("list_id").isin(probed: _*))
+  }
+
+  /**
+   * Materialize the IVF index: the corpus written partitioned by
+   * inverted list (`list_id=<n>/` directories). This is the scale
+   * counterpart of [[ivfListStats]]'s balance check — after this,
+   * probes are PARTITION FILTERS: a query touching `nprobe` of `nlist`
+   * lists reads nprobe/nlist of the data from disk, before any task
+   * is scheduled.
+   */
   def ivfMaterialize(centroids: Array[Array[Double]], corpus: DataFrame,
                      path: String,
                      idCol: String = "vec_id",
-                     vecCol: String = "embedding"): Unit = {
-    import graft.functions.VectorOps.topCentroids
-    corpus.select(col(idCol), col(vecCol),
-        topCentroids(col(vecCol), centroids, 1).getItem(0).as("list_id"))
-      .repartition(col("list_id"))
-      .write.partitionBy("list_id").mode("overwrite").parquet(path)
-    graft.model.IndexFormat.write(corpus.sparkSession, path,
-      ivfFormat(centroids))
-  }
+                     vecCol: String = "embedding"): Unit =
+    writeLists(corpus.select(col(idCol), col(vecCol),
+        listOf(centroids, col(vecCol)).as("list_id")),
+      path, ivfFormat(centroids), "ivfMaterialize")
 
   /**
    * Append new vectors to a materialized IVF index — the incremental
@@ -999,49 +1034,37 @@ object Ann {
   def ivfAppend(centroids: Array[Array[Double]], newVectors: DataFrame,
                 path: String,
                 idCol: String = "vec_id",
-                vecCol: String = "embedding"): Unit = {
-    import graft.functions.VectorOps.topCentroids
-    checkFormat(newVectors.sparkSession, path, ivfFormat(centroids),
-      "ivfMaterialize") // mixing quantizers silently splits lists
-    newVectors.select(col(idCol), col(vecCol),
-        topCentroids(col(vecCol), centroids, 1).getItem(0).as("list_id"))
-      .repartition(col("list_id"))
-      .write.partitionBy("list_id").mode("append").parquet(path)
-  }
+                vecCol: String = "embedding"): Unit =
+    // the marker check refuses a different quantizer, which would
+    // silently split lists
+    writeLists(newVectors.select(col(idCol), col(vecCol),
+        listOf(centroids, col(vecCol)).as("list_id")),
+      path, ivfFormat(centroids), "ivfMaterialize", append = true)
 
   /**
-   * Search a materialized IVF index ([[ivfMaterialize]] layout). The
-   * query set's probe lists are collected to literal partition filters
-   * (bounded by queries × nprobe — the same small-query contract as the
-   * [[bruteTopK]] broadcast), so only the probed `list_id=` directories
-   * are ever read; candidates then join on list_id exactly like
-   * [[ivfTopKWith]], producing identical results for the same
-   * quantizer.
+   * Search a materialized IVF index ([[ivfMaterialize]] layout). Only
+   * the probed `list_id=` directories are ever read ([[readLists]]);
+   * the query side ([[ivfQueries]]) and the scoring tail are those of
+   * [[ivfTopKWith]], so results are identical for the same quantizer.
    */
   def ivfSearchIndexed(spark: org.apache.spark.sql.SparkSession, path: String,
                        centroids: Array[Array[Double]],
                        queries: DataFrame, k: Int, nprobe: Int = 4,
                        idCol: String = "vec_id",
                        vecCol: String = "embedding"): DataFrame = {
-    import graft.functions.VectorOps.topCentroids
-    checkFormat(spark, path, ivfFormat(centroids), "ivfMaterialize")
-    val q = queries.select(col(idCol).as("qid"), col(vecCol).as("qvec"),
-        norm(col(vecCol)).as("qn"),
-        explode(topCentroids(col(vecCol), centroids, nprobe)).as("list_id"))
-    val probed = q.select("list_id").distinct()
-      .collect().map(_.getInt(0)).toSeq
-    val c = spark.read.parquet(path)
-      .filter(col("list_id").isin(probed: _*))
+    val q = ivfQueries(centroids, queries, nprobe, idCol, vecCol)
+    val c = readLists(spark, path, ivfFormat(centroids), "ivfMaterialize", q)
       .select(col(idCol).as("nid"), col(vecCol).as("nvec"),
         norm(col(vecCol)).as("nn"), col("list_id"))
-    c.join(q, "list_id")
-      .filter(col("qid") =!= col("nid"))
-      .withColumn("sim", dot(col("qvec"), col("nvec")) / (col("qn") * col("nn")))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("qid").orderBy(col("sim").desc, col("nid"))))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("nid"), round(col("sim"), 4).as("sim"), col("rank"))
+    cosScoreTail(c.join(q, "list_id"), k)
   }
+
+  /** IVF query side shared by [[ivfTopKWith]] and [[ivfSearchIndexed]]:
+    * (qid, qvec, qn, list_id), one row per probed list. */
+  private def ivfQueries(centroids: Array[Array[Double]], queries: DataFrame,
+                         nprobe: Int, idCol: String, vecCol: String): DataFrame =
+    queries.select(col(idCol).as("qid"), col(vecCol).as("qvec"),
+      norm(col(vecCol)).as("qn"), probedLists(centroids, col(vecCol), nprobe))
 
   /**
    * Materialize the IVF-PQ index: (id, m codes) partitioned by
@@ -1054,13 +1077,9 @@ object Ann {
                        codebooks: Array[Array[Array[Double]]],
                        corpus: DataFrame, path: String,
                        idCol: String = "vec_id",
-                       vecCol: String = "embedding"): Unit = {
-    ivfPqEncode(centroids, codebooks, corpus, idCol, vecCol)
-      .repartition(col("list_id"))
-      .write.partitionBy("list_id").mode("overwrite").parquet(path)
-    graft.model.IndexFormat.write(corpus.sparkSession, path,
-      ivfPqFormat(centroids, codebooks))
-  }
+                       vecCol: String = "embedding"): Unit =
+    writeLists(ivfPqEncode(centroids, codebooks, corpus, idCol, vecCol),
+      path, ivfPqFormat(centroids, codebooks), "ivfPqMaterialize")
 
   /** The IVF-PQ index rows — (nid, m codes, list_id) — shared by the
     * in-memory search and the materialized layout so both score the
@@ -1068,12 +1087,10 @@ object Ann {
   private def ivfPqEncode(centroids: Array[Array[Double]],
                           codebooks: Array[Array[Array[Double]]],
                           df: DataFrame,
-                          idCol: String, vecCol: String): DataFrame = {
-    import graft.functions.VectorOps.topCentroids
+                          idCol: String, vecCol: String): DataFrame =
     df.select(col(idCol).as("nid"),
       pqCodeExpr(codebooks, col(vecCol)).as("code"),
-      topCentroids(col(vecCol), centroids, 1).getItem(0).as("list_id"))
-  }
+      listOf(centroids, col(vecCol)).as("list_id"))
 
   /** Shared IVF-PQ scoring tail: candidates = encoded rows × each
     * query's probe lists (a (qid, list_id) broadcast — one row per
@@ -1118,11 +1135,8 @@ object Ann {
     * probe. */
   private def probeListsOf(centroids: Array[Array[Double]],
                            queries: DataFrame, nprobe: Int,
-                           idCol: String, vecCol: String): DataFrame = {
-    import graft.functions.VectorOps.topCentroids
-    queries.select(col(idCol).as("qid"),
-      explode(topCentroids(col(vecCol), centroids, nprobe)).as("list_id"))
-  }
+                           idCol: String, vecCol: String): DataFrame =
+    queries.select(col(idCol).as("qid"), probedLists(centroids, col(vecCol), nprobe))
 
   /**
    * Residual PQ codebooks (the faiss-IVFPQ convention): codewords are
@@ -1138,7 +1152,6 @@ object Ann {
                               idCol: String = "vec_id",
                               vecCol: String = "embedding"): Array[Array[Array[Double]]] = {
     require(dim % m == 0, s"dim=$dim not divisible by m=$m")
-    import graft.functions.VectorOps.topCentroids
     val dsub = dim / m
     // `skip` exists because a vector that is ITSELF a pinned coarse
     // centroid self-assigns (2v·c − |c|² is uniquely maximized at
@@ -1147,7 +1160,7 @@ object Ann {
     // skip = nlist so the codebook base is a DISJOINT id range with
     // meaningful residuals.
     val base = corpus.select(col(idCol), col(vecCol),
-        topCentroids(col(vecCol), centroids, 1).getItem(0).as("l"))
+        listOf(centroids, col(vecCol)).as("l"))
       .orderBy(col(idCol)).limit(skip + ksub)
       .collect().drop(skip)
       .map { r =>
@@ -1177,7 +1190,6 @@ object Ann {
                         nprobe: Int = 4,
                         idCol: String = "vec_id",
                         vecCol: String = "embedding"): DataFrame = {
-    import graft.functions.VectorOps.topCentroids
     val spark = corpus.sparkSession
     // Centroids ride a broadcast (list_id, cv) join, not a plan
     // literal: TopCentroids exists precisely because an inlined
@@ -1196,7 +1208,7 @@ object Ann {
     // times (the winnowFromHashes re-inlining trap).
     val withRes = corpus
       .select(col(idCol).as("nid"), col(vecCol).as("v"),
-        topCentroids(col(vecCol), centroids, 1).getItem(0).as("list_id"))
+        listOf(centroids, col(vecCol)).as("list_id"))
       .join(broadcast(centDf), "list_id")
       .select(col("nid"), col("list_id"),
         zip_with(col("v").cast("array<double>"), col("__cv"),
@@ -1261,15 +1273,11 @@ object Ann {
                          queries: DataFrame, k: Int, nprobe: Int = 4,
                          idCol: String = "vec_id",
                          vecCol: String = "embedding"): DataFrame = {
-    checkFormat(spark, path, ivfPqFormat(centroids, codebooks),
-      "ivfPqMaterialize")
     val probeLists = probeListsOf(centroids, queries, nprobe, idCol, vecCol)
-    // list discovery collects the slim pre-join probe projection (the
-    // ivfSearchIndexed idiom) — no ADC tables involved yet
-    val probedIds = probeLists.select("list_id").distinct()
-      .collect().map(_.getInt(0)).toSeq
-    val enc = spark.read.parquet(path)
-      .filter(col("list_id").isin(probedIds: _*))
+    // list discovery collects the slim pre-join probe projection — no
+    // ADC tables involved yet
+    val enc = readLists(spark, path, ivfPqFormat(centroids, codebooks),
+        "ivfPqMaterialize", probeLists)
       .select(col("nid"), col("code"), col("list_id"))
     adcRankByList(enc, probeLists,
       adcTables(spark, codebooks, queries, idCol, vecCol), k)
@@ -1281,20 +1289,10 @@ object Ann {
                   corpus: DataFrame, queries: DataFrame, k: Int,
                   nprobe: Int = 4,
                   idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    import graft.functions.VectorOps.topCentroids
     val c = corpus.select(col(idCol).as("nid"), col(vecCol).as("nvec"),
-      norm(col(vecCol)).as("nn"),
-      topCentroids(col(vecCol), centroids, 1).getItem(0).as("list_id"))
-    val q = queries.select(col(idCol).as("qid"), col(vecCol).as("qvec"),
-        norm(col(vecCol)).as("qn"),
-        explode(topCentroids(col(vecCol), centroids, nprobe)).as("list_id"))
-    c.join(q, "list_id")
-      .filter(col("qid") =!= col("nid"))
-      .withColumn("sim", dot(col("qvec"), col("nvec")) / (col("qn") * col("nn")))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("qid").orderBy(col("sim").desc, col("nid"))))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("nid"), round(col("sim"), 4).as("sim"), col("rank"))
+      norm(col(vecCol)).as("nn"), listOf(centroids, col(vecCol)).as("list_id"))
+    cosScoreTail(c.join(ivfQueries(centroids, queries, nprobe, idCol, vecCol),
+      "list_id"), k)
   }
 
   /**
@@ -1312,16 +1310,26 @@ object Ann {
                  corpus: DataFrame, queries: DataFrame, k: Int,
                  nprobe: Int = 4,
                  idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    import graft.functions.VectorOps.topCentroids
-    def codesD(vec: Column) = transform(sq8CodeExpr(vec), x => x.cast("double"))
-    val c = corpus.select(col(idCol).as("nid"), codesD(col(vecCol)).as("nvec"),
-        topCentroids(col(vecCol), centroids, 1).getItem(0).as("list_id"))
+    val c = corpus.select(col(idCol).as("nid"),
+        codesD(sq8CodeExpr(col(vecCol))).as("nvec"),
+        listOf(centroids, col(vecCol)).as("list_id"))
       .withColumn("nn", norm(col("nvec")))
-    val q = queries.select(col(idCol).as("qid"), codesD(col(vecCol)).as("qvec"),
-        explode(topCentroids(col(vecCol), centroids, nprobe)).as("list_id"))
-      .withColumn("qn", norm(col("qvec")))
-    cosScoreTail(c.join(q, "list_id"), k)
+    cosScoreTail(c.join(ivfSq8Queries(centroids, queries, nprobe, idCol, vecCol),
+      "list_id"), k)
   }
+
+  /** SQ8 codes widened to doubles for the scale-free quantized cosine. */
+  private def codesD(codes: Column): Column = transform(codes, x => x.cast("double"))
+
+  /** IVF-SQ8 query side shared by [[ivfSq8TopK]] and
+    * [[ivfSq8SearchIndexed]]: (qid, qvec = SQ8 codes as doubles,
+    * list_id, qn), one row per probed list. */
+  private def ivfSq8Queries(centroids: Array[Array[Double]], queries: DataFrame,
+                            nprobe: Int, idCol: String, vecCol: String): DataFrame =
+    queries.select(col(idCol).as("qid"),
+        codesD(sq8CodeExpr(col(vecCol))).as("qvec"),
+        probedLists(centroids, col(vecCol), nprobe))
+      .withColumn("qn", norm(col("qvec")))
 
   /**
    * Materialize the IVF-SQ8 index: (nid, int8 codes) partitioned by
@@ -1332,22 +1340,18 @@ object Ann {
    */
   def ivfSq8Materialize(centroids: Array[Array[Double]], corpus: DataFrame,
                         path: String, idCol: String = "vec_id",
-                        vecCol: String = "embedding"): Unit = {
-    import graft.functions.VectorOps.topCentroids
-    corpus.select(col(idCol).as("nid"), sq8CodeExpr(col(vecCol)).as("codes"),
-        topCentroids(col(vecCol), centroids, 1).getItem(0).as("list_id"))
-      .repartition(col("list_id"))
-      .write.partitionBy("list_id").mode("overwrite").parquet(path)
-    graft.model.IndexFormat.write(corpus.sparkSession, path,
-      ivfSq8Format(centroids))
-  }
+                        vecCol: String = "embedding"): Unit =
+    writeLists(corpus.select(col(idCol).as("nid"),
+        sq8CodeExpr(col(vecCol)).as("codes"),
+        listOf(centroids, col(vecCol)).as("list_id")),
+      path, ivfSq8Format(centroids), "ivfSq8Materialize")
 
   /**
    * Search a materialized IVF-SQ8 index ([[ivfSq8Materialize]]
-   * layout): probe lists collect to literal partition filters (bounded
-   * by queries × nprobe, the small-query contract), candidates join on
-   * list_id and score exactly like [[ivfSq8TopK]] — bit-identical
-   * results for the same quantizer (PipelineSpec).
+   * layout): only the probed `list_id=` directories are read
+   * ([[readLists]]); the query side ([[ivfSq8Queries]]) and scoring
+   * are those of [[ivfSq8TopK]] — bit-identical results for the same
+   * quantizer (PipelineSpec).
    */
   def ivfSq8SearchIndexed(spark: org.apache.spark.sql.SparkSession,
                           path: String,
@@ -1355,16 +1359,8 @@ object Ann {
                           queries: DataFrame, k: Int, nprobe: Int = 4,
                           idCol: String = "vec_id",
                           vecCol: String = "embedding"): DataFrame = {
-    import graft.functions.VectorOps.topCentroids
-    checkFormat(spark, path, ivfSq8Format(centroids), "ivfSq8Materialize")
-    def codesD(c: Column) = transform(c, x => x.cast("double"))
-    val q = queries.select(col(idCol).as("qid"),
-        codesD(sq8CodeExpr(col(vecCol))).as("qvec"),
-        explode(topCentroids(col(vecCol), centroids, nprobe)).as("list_id"))
-      .withColumn("qn", norm(col("qvec")))
-    val probed = q.select("list_id").distinct().collect().map(_.getInt(0)).toSeq
-    val c = spark.read.parquet(path)
-      .filter(col("list_id").isin(probed: _*))
+    val q = ivfSq8Queries(centroids, queries, nprobe, idCol, vecCol)
+    val c = readLists(spark, path, ivfSq8Format(centroids), "ivfSq8Materialize", q)
       .select(col("nid"), codesD(col("codes")).as("nvec"), col("list_id"))
       .withColumn("nn", norm(col("nvec")))
     cosScoreTail(c.join(q, "list_id"), k)

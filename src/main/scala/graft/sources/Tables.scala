@@ -37,16 +37,20 @@ object Tables {
     * per-group first() picks are functionally determined), and
     * round-robin repartition is deterministic under retries
     * (sort-before-repartition is on by default). */
-  def fanOut(df: DataFrame): DataFrame = df.queryExecution.analyzed match {
-    // already an explicit shuffle repartition (e.g. a caller that
-    // fanned out before handing the frame to a trainer that fans its
-    // own input): the probe below forces physical planning + an RDD
-    // conversion per call — skip it, the fan-out is already there
-    case r: org.apache.spark.sql.catalyst.plans.logical.Repartition
-      if r.shuffle => df
-    case _ =>
-      val cores = df.sparkSession.sparkContext.defaultParallelism
-      if (df.rdd.getNumPartitions * 2 < cores) df.repartition(cores) else df
+  def fanOut(df: DataFrame): DataFrame = {
+    val cores = df.sparkSession.sparkContext.defaultParallelism
+    df.queryExecution.analyzed match {
+      // already an explicit shuffle repartition to enough partitions
+      // (e.g. a caller that fanned out before handing the frame to a
+      // trainer that fans its own input): the probe below forces
+      // physical planning + an RDD conversion per call — skip it, the
+      // fan-out is already there. A narrow one (`repartition(1)`) is
+      // probed and widened like any other input.
+      case r: org.apache.spark.sql.catalyst.plans.logical.Repartition
+        if r.shuffle && r.numPartitions * 2 >= cores => df
+      case _ =>
+        if (df.rdd.getNumPartitions * 2 < cores) df.repartition(cores) else df
+    }
   }
   /** Session-scoped RELATION (metadata) cache for repeated reads of
     * the same parquet path. `spark.read.parquet` re-lists the

@@ -414,19 +414,22 @@ class PipelineSpec extends SparkSpec {
     // stamp a v1-era marker (through hadoop FS so the checksum shadow
     // file stays consistent) -> every reader/appender must refuse:
     // old-format bands never collide with new-format probe keys, so
-    // proceeding would silently return zero matches
+    // proceeding would silently return zero matches. The stamp is an
+    // OUT-OF-BAND change, so the session's verified-marker memo is
+    // dropped after it.
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new org.apache.hadoop.fs.Path(s"$path/_band_format")
+    val marker = new org.apache.hadoop.fs.Path(s"$path/_format")
     def stamp(s: String): Unit = {
       val out = fs.create(marker, true)
       out.write(s.getBytes("UTF-8")); out.close()
+      graft.model.IndexFormat.forget(path)
     }
     stamp("simhash-bands v1 4x15-bit\n")
     val e = intercept[IllegalStateException] {
       Dedup.simhashLookup(spark, path, probes)
     }
-    assert(e.getMessage.contains("band layout"), e.getMessage)
+    assert(e.getMessage.contains("simhash-bands v1"), e.getMessage)
     intercept[IllegalStateException] {
       Dedup.simhashAppend(docs((9L, "more words here entirely")), path)
     }
@@ -436,6 +439,7 @@ class PipelineSpec extends SparkSpec {
     }
     // a pre-marker index (marker absent) is treated as v1, not trusted
     fs.delete(marker, false)
+    graft.model.IndexFormat.forget(path)
     intercept[IllegalStateException] {
       Dedup.simhashLookup(spark, path, probes)
     }
@@ -450,7 +454,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("index format markers: every at-rest family fails loudly on parameter drift") {
-    // The simhash _band_format pattern generalized (r13 verdict #5):
+    // One path/_format marker per at-rest family (r13 verdict #5):
     // each family's layout bakes in parameters its probes must
     // reproduce exactly; a mismatch silently returns zero matches
     // (LSH/CDC/winnow band keys never collide) or wrong neighbors

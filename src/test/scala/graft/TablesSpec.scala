@@ -5,7 +5,8 @@ import java.nio.file.{Files, Path}
 import graft.sources.Tables
 
 /** [[Tables.parquetCached]] serves a cached relation only while the
-  * files under its path are unchanged. */
+  * files under its path are unchanged; [[Tables.fanOut]] widens narrow
+  * inputs. */
 class TablesSpec extends SparkSpec {
 
   private def onlyFile(dir: Path, p: String => Boolean): Path = {
@@ -41,6 +42,18 @@ class TablesSpec extends SparkSpec {
     val second = Tables.parquetCached(spark, dir.toString)
     assert(!(second eq first), "a changed part file must not hit the cache")
     assert(second.collect().map(_.getLong(0)).sorted.toSeq == (100L until 125L))
+  }
+
+  test("fanOut widens a narrow shuffle repartition and keeps a wide one as is") {
+    val cores = spark.sparkContext.defaultParallelism
+    assert(cores >= 2, s"needs a multi-core session, got $cores")
+    val narrow = spark.range(100).toDF().repartition(1)
+    val fanned = Tables.fanOut(narrow)
+    assert(!(fanned eq narrow), "repartition(1) must be fanned out")
+    assert(fanned.rdd.getNumPartitions == cores)
+    assert(fanned.collect().map(_.getLong(0)).sorted.toSeq == (0L until 100L))
+    val wide = spark.range(100).toDF().repartition(cores)
+    assert(Tables.fanOut(wide) eq wide, "repartition(cores) is returned as is")
   }
 
   test("parquetCached drops a session's relations when the session stops") {
