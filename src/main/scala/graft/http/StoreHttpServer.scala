@@ -194,6 +194,13 @@ class StoreHttpServer(spark: SparkSession, storeDir: String, port: Int = 0,
     // pathological write amplification — appends belong to the hot
     // Parquet store that later ages into blocks
     require(tier != "gorilla", "/add is not served by the gorilla tier")
+    // a streaming sink's store is read through its sink log, which
+    // lists only the files the sink committed: a plain append would be
+    // acknowledged and never read back
+    val sinkLog = new org.apache.hadoop.fs.Path(storeDir, "_spark_metadata")
+    require(!sinkLog.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(sinkLog),
+      s"/add is not served by a store written by a streaming sink: reads " +
+        s"list only the files in its sink log $sinkLog, and an /add is not in it")
     val streams = Rpc.decodeAddRequest(bytes)
     val rows = streams.flatMap { s =>
       s.values.map { case (ts, dv, sv, ets) =>
@@ -249,17 +256,14 @@ class StoreHttpServer(spark: SparkSession, storeDir: String, port: Int = 0,
               s"<td>${fs.map(_.length()).sum}</td></tr>"
           }.mkString
       } catch { case _: Throwable => "" }
-    // session-cache observability (r16): the two driver-side memos
-    // whose whole point is skipping per-call filesystem/Spark work —
-    // their hit rates belong on the status page, not just in docs
-    val (ifN, ifH, ifM) = graft.model.IndexFormat.memoStats
-    val (ccN, ccH, ccM) = graft.similarity.Ann.countMemoStats
+    // session-cache observability: each cache kind exists to skip
+    // per-call filesystem/Spark work, so its hit rate belongs here
     // Spark's generated-class cache exposes no hit count: each compile
     // is a miss, so the row reports compilations and their total time
     val (cgN, cgMs) = graft.SparkInit.codegenStats
-    val caches =
-      s"<tr><td>index-format markers</td><td>$ifN</td><td>$ifH</td><td>$ifM</td></tr>" +
-      s"<tr><td>corpus counts</td><td>$ccN</td><td>$ccH</td><td>$ccM</td></tr>" +
+    val caches = graft.SessionCache.stats.map { case (kind, n, hits, misses) =>
+        s"<tr><td>$kind</td><td>$n</td><td>$hits</td><td>$misses</td></tr>"
+      }.mkString +
       s"<tr><td>generated classes (max ${spark.conf.get("spark.sql.codegen.cache.maxEntries")})</td>" +
       f"<td colspan=\"3\">$cgN compilations, $cgMs%.0f ms compiling</td></tr>"
     val body = ("<html><head><title>Store Status</title></head><body>" +

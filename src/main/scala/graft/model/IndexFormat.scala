@@ -22,25 +22,6 @@ object IndexFormat {
 
   val MarkerFile = "_format"
 
-  /** Session-lifetime memo of markers already verified (or just
-    * written) per index path. Streaming probe paths
-    * (`minhashFlagStream`, `scoreFollow`) call [[check]] per
-    * micro-batch; without the memo every batch pays a driver-side
-    * filesystem read against the index store. An index rewritten
-    * OUT-OF-BAND mid-session won't be re-read — the same
-    * trust-the-session assumption Spark's own file-index caching
-    * makes; in-session rewrites go through [[write]]/[[adopt]], which
-    * update the memo. Bounded: cleared wholesale past 1024 paths. */
-  private val verified =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val memoHits = new java.util.concurrent.atomic.AtomicLong()
-  private val memoMisses = new java.util.concurrent.atomic.AtomicLong()
-
-  /** (entries, hits, misses) of the verified-marker memo — surfaced on
-    * the HTTP façade's /status page so the per-micro-batch no-read
-    * claim is observable, not just documented. */
-  def memoStats: (Int, Long, Long) = (verified.size, memoHits.get, memoMisses.get)
-
   private def fs(spark: SparkSession, path: String) =
     new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -49,16 +30,7 @@ object IndexFormat {
     val p = new org.apache.hadoop.fs.Path(s"$path/$MarkerFile")
     val out = fs(spark, path).create(p, true)
     try out.write((marker + "\n").getBytes("UTF-8")) finally out.close()
-    if (verified.size > 1024) verified.clear()
-    verified.put(path, marker)
   }
-
-  /** Drop the session's verified-marker memo for `path` — required
-    * after an OUT-OF-BAND change to an index (rewritten by another
-    * session/process) so the next [[check]] re-reads the marker from
-    * storage. In-session rewrites via [[write]]/[[adopt]] update the
-    * memo themselves and don't need this. */
-  def forget(path: String): Unit = verified.remove(path)
 
   /**
    * Migration escape hatch for PRE-MARKER indexes: stamps `marker`
@@ -95,14 +67,15 @@ object IndexFormat {
   }
 
   /** Fail-loud guard for every reader/appender of a marked index.
-    * A (path, expected) pair that already verified this session is a
-    * pure memo hit — zero filesystem reads (repeated streaming probes
-    * pay the marker read once, not per micro-batch). */
+    * The marker is read through [[graft.SessionCache]], keyed on the
+    * `_format` file alone: while that file is unchanged a check costs
+    * one file status and no open (streaming probes check per
+    * micro-batch), and a marker rewritten or deleted by anyone — this
+    * session or another process — is read again on the next check. */
   def check(spark: SparkSession, path: String, expected: String,
             rebuildHint: String): Unit = {
-    if (verified.get(path) == expected) { memoHits.incrementAndGet(); return }
-    memoMisses.incrementAndGet()
-    val actual = read(spark, path)
+    val actual = graft.SessionCache.get(spark, graft.SessionCache.Marker, path,
+      Seq(s"$path/$MarkerFile"))(read(spark, path))
     if (!actual.contains(expected)) throw new IllegalStateException(
       s"index at $path has layout " +
       s"'${actual.getOrElse("<no marker — pre-marker index; see " +
@@ -110,8 +83,6 @@ object IndexFormat {
       s"call expects '$expected'. A layout/parameter mismatch does not " +
       s"error at query time — lookups silently return zero matches or " +
       s"wrong distances — so it is refused here instead. $rebuildHint")
-    if (verified.size > 1024) verified.clear()
-    verified.put(path, expected)
   }
 
   /**

@@ -1719,19 +1719,6 @@ object Ann {
     (minPlanes to maxPlanes).find(p => targetLoad * (1L << p) >= n)
       .getOrElse(maxPlanes)
 
-  /** Session-lifetime memo for the exact corpus row counts the `*Auto`
-    * sizers need (bounded; evicted wholesale if it ever grows past 256
-    * corpora). Key = canonicalized logical plan + a driver-side
-    * listing signature (per source root: file count, total bytes, max
-    * mtime), so a re-read of the SAME stored corpus is a pure memo hit
-    * with ZERO Spark jobs — not even the analysis/listing job an
-    * `.inputFiles` probe would cost — while an append (new part files)
-    * or a different filter misses and recounts. Plans not rooted
-    * entirely in file sources (views, in-memory frames) are never
-    * cached. */
-  private val countMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
   /** Source-root paths of `corpus`, extracted from the UNANALYZED plan
     * (no analysis, no jobs); None when any leaf is not a file source. */
   private def sourceRoots(
@@ -1752,56 +1739,23 @@ object Ann {
     else None
   }
 
-  /** Exact row count of `corpus`, memoized per (plan, source files)
-    * for the session — at 100 TB the plane-sizing count is a full
-    * scan, so repeated `*Auto` calls over the same stored corpus (the
-    * dedup + pairs + topK gate triple, streaming lookups per
-    * micro-batch) must pay it once, not per call. */
+  /** Exact row count of `corpus`, cached per (session, plan) while
+    * its source files are unchanged ([[graft.SessionCache]]) — at
+    * 100 TB the plane-sizing count is a full scan, so repeated `*Auto`
+    * calls over the same stored corpus (the dedup + pairs + topK gate
+    * triple, streaming lookups per micro-batch) must pay it once, not
+    * per call. A re-read of the same files is a hit with zero Spark
+    * jobs; an append (new part files) replaces the entry; a different
+    * filter is another key. Plans not rooted entirely in file sources
+    * (views, in-memory frames) are counted every call. */
   private[graft] def corpusCount(corpus: DataFrame): Long = {
     val lp = corpus.queryExecution.logical
-    sourceRoots(lp).filter(_.nonEmpty) match {
-      case Some(roots) =>
-        val conf = corpus.sparkSession.sparkContext.hadoopConfiguration
-        val sig = roots.sorted.map { p =>
-          val hp = new org.apache.hadoop.fs.Path(p)
-          var n = 0L; var bytes = 0L; var mtime = 0L
-          val it = hp.getFileSystem(conf).listFiles(hp, true)
-          while (it.hasNext) {
-            val st = it.next()
-            n += 1; bytes += st.getLen
-            mtime = math.max(mtime, st.getModificationTime)
-          }
-          s"$p#$n#$bytes#$mtime"
-        }.mkString("\n")
-        val key = lp.canonicalized.toString + "\n" + sig
-        if (countMemo.size > 256) countMemo.clear()
-        // hit/miss attribution rides the compute lambda itself (not a
-        // separate containsKey probe), so a concurrent first call or a
-        // clear racing the lookup can never record a hit for a call
-        // that actually paid the scan
-        var computed = false
-        val n = countMemo.computeIfAbsent(key, { _ =>
-          computed = true
-          java.lang.Long.valueOf(corpus.count())
-        }).longValue()
-        if (computed) countMemoMisses.incrementAndGet()
-        else countMemoHits.incrementAndGet()
-        n
-      case None =>
-        countMemoMisses.incrementAndGet()
-        corpus.count()
-    }
+    // the roots join the key: a relation's plan string omits its paths
+    sourceRoots(lp).fold(corpus.count())(roots =>
+      graft.SessionCache.get(corpus.sparkSession, graft.SessionCache.Count,
+        (roots.sorted :+ lp.canonicalized.toString).mkString("\n"), roots)(
+        corpus.count()))
   }
-
-  private val countMemoHits = new java.util.concurrent.atomic.AtomicLong()
-  private val countMemoMisses = new java.util.concurrent.atomic.AtomicLong()
-
-  /** (entries, hits, misses) of the corpus-count memo — surfaced on
-    * the HTTP façade's /status page (the zero-jobs repeat-call claim,
-    * observable; un-memoizable counts — non-file-backed plans — count
-    * as misses). */
-  def countMemoStats: (Int, Long, Long) =
-    (countMemo.size, countMemoHits.get, countMemoMisses.get)
 
   /** First `planes` planes of each table from the fixed `maxPlanes`
     * [[masterDraw]]: the adaptive plane count never changes WHICH

@@ -62,63 +62,12 @@ object Tables {
     * format (guide §6) persists the file index and schema. This cache
     * is the session-local equivalent: it holds the ANALYZED BASE
     * RELATION only — never row data, nothing survives the JVM, and
-    * every query still computes from the parquet bytes.
-    *
-    * Staleness guard: entries are validated against a fingerprint of
-    * the path's leaf files — file count, total length and newest
-    * mtime (one recursive listing). A directory swap (the
-    * compaction/aging jobs), an added or removed part file, and a
-    * part file rewritten in place under the same name all change it;
-    * the directory's own mtime catches only the first two.
-    *
-    * Entries of a session are dropped when its SparkContext stops (a
-    * listener registered with the first entry per context), so a JVM
-    * that runs session after session does not keep every stopped
-    * session's analyzed relations. */
-  private val relCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
-      ((Int, Long, Long), DataFrame)]()
-  private val watched =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[org.apache.spark.SparkContext]()
-
-  private def evictOnStop(sc: org.apache.spark.SparkContext): Unit =
-    if (watched.add(sc)) sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onApplicationEnd(
-          e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
-        relCache.keySet.removeIf(_._1.sparkContext eq sc)
-        watched.remove(sc)
-      }
-    })
-
-  /** Paths cached for `spark` (for specs). */
-  private[graft] def cachedPaths(spark: SparkSession): Set[String] = {
-    import scala.jdk.CollectionConverters._
-    relCache.keySet.asScala.collect { case (s, p) if s eq spark => p }.toSet
-  }
-
-  /** (leaf file count, total bytes, newest mtime) under `path`, or
-    * None when it cannot be listed. */
-  private def fingerprint(spark: SparkSession, path: String): Option[(Int, Long, Long)] =
-    try {
-      val p = new org.apache.hadoop.fs.Path(path)
-      val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(p, true)
-      var (n, bytes, newest) = (0, 0L, 0L)
-      while (it.hasNext) {
-        val f = it.next()
-        n += 1; bytes += f.getLen; newest = math.max(newest, f.getModificationTime)
-      }
-      Some((n, bytes, newest))
-    } catch { case scala.util.control.NonFatal(_) => None }
-
+    * every query still computes from the parquet bytes. Staleness,
+    * bound and eviction are [[graft.SessionCache]]'s: an entry lives
+    * while the files under `path` are unchanged. */
   def parquetCached(spark: SparkSession, path: String): DataFrame =
-    fingerprint(spark, path) match {
-      case None => spark.read.parquet(path) // missing path: let the read throw
-      case Some(fp) =>
-        evictOnStop(spark.sparkContext)
-        relCache.compute((spark, path), (_, prev) =>
-          if (prev != null && prev._1 == fp) prev
-          else (fp, spark.read.parquet(path)))._2
-    }
+    graft.SessionCache.get(spark, graft.SessionCache.Relation, path, Seq(path))(
+      spark.read.parquet(path)) // missing path: not cached, the read throws
 
   def documents(spark: SparkSession, sfDir: String): DataFrame =
     parquetCached(spark, s"$sfDir/documents.parquet")

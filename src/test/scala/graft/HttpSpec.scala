@@ -126,6 +126,34 @@ class HttpSpec extends SparkSpec {
     } finally srv.stop()
   }
 
+  test("/add refuses a store written by the streaming sink, whose reads list only the sink log") {
+    import org.apache.spark.sql.functions._
+    val tmp = java.nio.file.Files.createTempDirectory("graft_http_sink").toString
+    val (src, store) = (s"$tmp/src", s"$tmp/store")
+    spark.range(1).select(lit("/http/sunk").as("name"),
+        map(lit("host"), lit("a")).as("labels"), lit(Variable.Gauge).as("value_type"),
+        lit(1000L).as("ts"), lit(1.0).as("dval"),
+        lit(null).cast("string").as("sval"), lit(null).cast("long").as("end_ts"))
+      .write.parquet(src)
+    val q = graft.streaming.StreamIngest.ingest(spark, src, store, s"$tmp/ckpt")
+    q.awaitTermination()
+    assert(q.exception.isEmpty, q.exception)
+    val srv = new StoreHttpServer(spark, store, nowMs = () => 100000L).start()
+    try {
+      val addBody = Rpc.encodeAddRequest(Seq(Rpc.Stream(
+        Variable("/http/added", Map("host" -> "a"), Variable.Gauge),
+        Seq((2000L, Some(2.0), None, None)))))
+      val (code, body) = postRaw(srv.boundPort, "/add", addBody)
+      assert(code == 500, s"/add into a sink-written store must be refused, got $code")
+      val (_, err, _) = Rpc.decodeGetResponse(body)
+      assert(err.exists(_.contains("_spark_metadata")), err)
+      // the sink's own point is still served
+      val getBody = Rpc.encodeGetRequest(Requests.GetRequest("/http/sunk{host=a}"))
+      val (gok, _, streams) = Rpc.decodeGetResponse(post(srv.boundPort, "/get", getBody))
+      assert(gok && streams.map(_.values.length).sum == 1)
+    } finally srv.stop()
+  }
+
   test("tiered serving: /get spans hot parquet and cold gorilla; /add lands hot") {
     import org.apache.spark.sql.functions._
     val base = java.nio.file.Files.createTempDirectory("graft_tiered").toString
@@ -196,11 +224,10 @@ class HttpSpec extends SparkSpec {
         HttpResponse.BodyHandlers.ofString())
       assert(resp.statusCode() == 200)
       assert(resp.body().contains("Store Status"))
-      // r16: the session-cache memo stats render too (observability
-      // for the index-format marker memo and the corpus-count memo)
+      // one row per SessionCache kind: entries, hits, misses
       assert(resp.body().contains("Session caches"))
-      assert(resp.body().contains("index-format markers"))
-      assert(resp.body().contains("corpus counts"))
+      for (kind <- Seq("parquet relations", "index-format markers", "corpus counts"))
+        assert(resp.body().matches(s"(?s).*<tr><td>$kind</td>(<td>\\d+</td>){3}</tr>.*"), kind)
       // Spark's generated-class cache: its size and compile totals
       assert(resp.body().contains(
         s"generated classes (max ${SparkInit.CodegenCacheEntries})"))

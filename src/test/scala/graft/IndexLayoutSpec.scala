@@ -85,7 +85,6 @@ class IndexLayoutSpec extends SparkSpec {
     fsys.delete(new org.apache.hadoop.fs.Path(s"$old/${IndexFormat.MarkerFile}"), false)
     val legacy = fsys.create(new org.apache.hadoop.fs.Path(s"$old/_band_format"), true)
     legacy.write((Dedup.SimhashBandFormat + "\n").getBytes("UTF-8")); legacy.close()
-    IndexFormat.forget(old) // out-of-band change
     def refused(body: => Any): String =
       intercept[IllegalStateException](body).getMessage
     for (msg <- Seq(

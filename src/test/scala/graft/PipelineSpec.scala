@@ -415,15 +415,13 @@ class PipelineSpec extends SparkSpec {
     // file stays consistent) -> every reader/appender must refuse:
     // old-format bands never collide with new-format probe keys, so
     // proceeding would silently return zero matches. The stamp is an
-    // OUT-OF-BAND change, so the session's verified-marker memo is
-    // dropped after it.
+    // OUT-OF-BAND change; the next check sees the changed file.
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val marker = new org.apache.hadoop.fs.Path(s"$path/_format")
     def stamp(s: String): Unit = {
       val out = fs.create(marker, true)
       out.write(s.getBytes("UTF-8")); out.close()
-      graft.model.IndexFormat.forget(path)
     }
     stamp("simhash-bands v1 4x15-bit\n")
     val e = intercept[IllegalStateException] {
@@ -439,7 +437,6 @@ class PipelineSpec extends SparkSpec {
     }
     // a pre-marker index (marker absent) is treated as v1, not trusted
     fs.delete(marker, false)
-    graft.model.IndexFormat.forget(path)
     intercept[IllegalStateException] {
       Dedup.simhashLookup(spark, path, probes)
     }
@@ -479,14 +476,11 @@ class PipelineSpec extends SparkSpec {
       n = 3, numHashes = 16, bands = 4)).contains("minhash-lsh"))
     assert(refused(Dedup.minhashAppend(probes, s"$base/mh",
       n = 3, numHashes = 16, bands = 4)).contains("minhash-lsh"))
-    // marker-absent = pre-marker index: not trusted. The delete is an
-    // OUT-OF-BAND change, so drop the session's verified-marker memo
-    // first (in-session rewrites go through write/adopt and don't
-    // need this).
+    // marker-absent = pre-marker index: not trusted, also when the
+    // marker is deleted OUT-OF-BAND after a verified check
     val fs = new org.apache.hadoop.fs.Path(base)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(s"$base/mh/_format"), false)
-    graft.model.IndexFormat.forget(s"$base/mh")
     refused(Dedup.minhashLookup(spark, s"$base/mh", probes,
       n = 3, numHashes = 16, bands = 16))
     // migration: re-band from the stored sets without re-tokenizing
@@ -555,21 +549,22 @@ class PipelineSpec extends SparkSpec {
     def refused(body: => Any): String =
       intercept[IllegalStateException](body).getMessage
 
-    // memoization: streaming probes check per micro-batch — after one
-    // verified check, later checks must be pure memo hits with ZERO
-    // marker reads. Proof: delete the marker file out-of-band; the
-    // memoized check still passes (it never touched storage), and
-    // only forget() makes it re-read and refuse.
+    // streaming probes check per micro-batch: while the marker file
+    // is unchanged a check is a cache hit that never re-reads it, and
+    // an OUT-OF-BAND delete is refused on the very next check
+    def markerHits = SessionCache.stats.collectFirst {
+      case (SessionCache.Marker, _, hits, _) => hits }.get
     val p1 = s"$base/idx1"
     fs.mkdirs(new org.apache.hadoop.fs.Path(p1))
     IndexFormat.write(spark, p1, "fam v1 a=1")
     IndexFormat.check(spark, p1, "fam v1 a=1", "rebuild")
+    val hits = markerHits
+    IndexFormat.check(spark, p1, "fam v1 a=1", "rebuild")
+    assert(markerHits == hits + 1, "an unchanged marker must be a cache hit")
     fs.delete(new org.apache.hadoop.fs.Path(s"$p1/${IndexFormat.MarkerFile}"), false)
-    IndexFormat.check(spark, p1, "fam v1 a=1", "rebuild") // memo hit
-    IndexFormat.forget(p1)
     assert(refused(IndexFormat.check(spark, p1, "fam v1 a=1", "rebuild"))
       .contains("pre-marker"))
-    // a mismatched expectation is never served from the memo
+    // a mismatched expectation is never served from the cache
     fs.mkdirs(new org.apache.hadoop.fs.Path(s"$base/idx2"))
     IndexFormat.write(spark, s"$base/idx2", "fam v1 a=1")
     IndexFormat.check(spark, s"$base/idx2", "fam v1 a=1", "rebuild")
@@ -580,7 +575,6 @@ class PipelineSpec extends SparkSpec {
     // stamps on explicit operator assertion, but refuses to re-stamp
     // an already-marked index (that would launder a real mismatch)
     IndexFormat.adopt(spark, p1, "fam v1 a=1")
-    IndexFormat.forget(p1) // prove the pass below comes from storage
     IndexFormat.check(spark, p1, "fam v1 a=1", "rebuild")
     assert(refused(IndexFormat.adopt(spark, p1, "fam v2 a=9"))
       .contains("already carries marker"))
@@ -592,8 +586,8 @@ class PipelineSpec extends SparkSpec {
       (3L, "completely different words here entirely my friend"))
     val probes = docs((2L, "the quick brown fox jumps over the lazy dog tonight"))
     Dedup.minhashIndex(corpus, s"$base/mh", n = 3, numHashes = 16, bands = 16)
+    // out-of-band delete: simulate pre-marker
     fs.delete(new org.apache.hadoop.fs.Path(s"$base/mh/${IndexFormat.MarkerFile}"), false)
-    IndexFormat.forget(s"$base/mh") // out-of-band delete: simulate pre-marker
     refused(Dedup.minhashLookup(spark, s"$base/mh", probes,
       n = 3, numHashes = 16, bands = 16))
     IndexFormat.adopt(spark, s"$base/mh",

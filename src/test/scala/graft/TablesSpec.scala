@@ -5,7 +5,8 @@ import java.nio.file.{Files, Path}
 import graft.sources.Tables
 
 /** [[Tables.parquetCached]] serves a cached relation only while the
-  * files under its path are unchanged; [[Tables.fanOut]] widens narrow
+  * files under its path are unchanged; a stopped session leaves no
+  * [[SessionCache]] entry of any kind; [[Tables.fanOut]] widens narrow
   * inputs. */
 class TablesSpec extends SparkSpec {
 
@@ -73,13 +74,16 @@ class TablesSpec extends SparkSpec {
     if (!exited) proc.destroyForcibly()
     val log = new String(Files.readAllBytes(logFile.toPath))
     assert(exited && proc.exitValue() == 0, log)
-    assert(log.contains("entries after stop: first=0 second=0"), log)
+    val empty = SessionCache.Kinds.map(k => s"$k=0").mkString(", ")
+    for (s <- Seq("first", "second"))
+      assert(log.contains(s"$s stopped: $empty"), log)
   }
 }
 
-/** Caches a relation in a first and then a second session, stopping
-  * each, and prints how many cached paths each still holds. Run by
-  * [[TablesSpec]] in a JVM of its own. */
+/** Fills every [[SessionCache]] kind — a relation, a marker check and
+  * a corpus count — in a first and then a second session, stopping
+  * each, and prints the entries each kind holds after each stop. Run
+  * by [[TablesSpec]] in a JVM of its own. */
 object TablesSessionStop {
   def main(args: Array[String]): Unit =
     try { run(args(0)); sys.exit(0) }
@@ -91,17 +95,22 @@ object TablesSessionStop {
     def session() = SparkSession.builder().master("local[1]")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.shuffle.partitions", "1").getOrCreate()
-    val first = session()
-    first.range(3).write.parquet(path)
-    assert(Tables.parquetCached(first, path).count() == 3)
-    assert(Tables.cachedPaths(first).size == 1)
-    first.stop()
-    val second = session()
-    assert(!(second eq first))
-    assert(Tables.parquetCached(second, path).count() == 3)
-    assert(Tables.cachedPaths(second).size == 1)
-    second.stop()
-    println(s"entries after stop: first=${Tables.cachedPaths(first).size} " +
-      s"second=${Tables.cachedPaths(second).size}")
+    def entries = SessionCache.stats.map { case (k, n, _, _) => s"$k=$n" }.mkString(", ")
+    var prev: SparkSession = null
+    for (name <- Seq("first", "second")) {
+      val s = session()
+      assert(!(s eq prev))
+      if (prev == null) {
+        s.range(3).write.parquet(path)
+        graft.model.IndexFormat.write(s, dir, "fam v1")
+      }
+      assert(Tables.parquetCached(s, path).count() == 3)
+      graft.model.IndexFormat.check(s, dir, "fam v1", "rebuild")
+      assert(graft.similarity.Ann.corpusCount(s.read.parquet(path)) == 3)
+      assert(SessionCache.stats.forall(_._2 == 1), entries)
+      s.stop()
+      println(s"$name stopped: $entries")
+      prev = s
+    }
   }
 }
