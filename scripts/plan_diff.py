@@ -11,6 +11,7 @@ either is compared by name. Before diffing, each line is normalized:
   - plan ids                  plan_id=7, [id=#12] -> plan_id=N, [id=#N]
   - RDD ids                   MapPartitionsRDD[42] -> MapPartitionsRDD[N]
   - lambda variable counters  lambda x_17      -> lambda x_N
+  - JVM lambda classes        Foo$$$Lambda$6092/0x00007f6015… -> Foo$$$Lambda$N/0xH
   - object hashes             Foo@1a2b3c       -> Foo@H
   - call sites                Dedup.scala:884  -> Dedup.scala:N
   - UUIDs                     3c22f49c-fb03-…  -> <uuid>  (streaming run ids)
@@ -30,6 +31,7 @@ RULES = [
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
     (re.compile(r"\b(\w*RDD)\[\d+\]"), r"\1[N]"),
     (re.compile(r"\b(lambda \w+?)_\d+\b"), r"\1_N"),
+    (re.compile(r"\$Lambda(?:\$\d+)?/0x[0-9a-f]+"), "$Lambda$N/0xH"),
     (re.compile(r"@[0-9a-f]{4,}\b"), "@H"),
     (re.compile(r"\b(\w+\.(?:scala|java)):\d+"), r"\1:N"),
 ]

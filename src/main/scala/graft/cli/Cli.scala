@@ -229,18 +229,19 @@ object Cli {
           nowMs: Long = System.currentTimeMillis()): DataFrame =
     argv match {
       case Seq("get", variable, rest @ _*) =>
-        Engine.get(PointSource.read(spark, store), parseGet(variable, rest))
+        val req = parseGet(variable, rest)
+        Engine.get(PointSource.read(spark, store, req.minTimestamp, req.maxTimestamp), req)
       case Seq("alerts", rest @ _*) =>
         graft.operators.Alerts.evaluateAll(
           PointSource.read(spark, store), parseAlerts(rest))
       case Seq("list", prefix, rest @ _*) =>
         val opts = rest.flatMap(kv).toMap
-        Engine.list(PointSource.read(spark, store),
-          Requests.ListRequest(prefix,
-            maxVariables = opts.get("max_variables").map(_.toInt),
-            maxAgeMs = opts.get("max_age").map(parseDuration)
-              .getOrElse(86400000L)),
-          nowMs = nowMs)
+        val req = Requests.ListRequest(prefix,
+          maxVariables = opts.get("max_variables").map(_.toInt),
+          maxAgeMs = opts.get("max_age").map(parseDuration)
+            .getOrElse(86400000L))
+        Engine.list(PointSource.read(spark, store, Some(nowMs - req.maxAgeMs)),
+          req, nowMs = nowMs)
       case other =>
         throw new IllegalArgumentException(
           s"""usage (got: $other):
@@ -262,6 +263,7 @@ object Cli {
              nowMs: Long = System.currentTimeMillis()): Long = {
     import spark.implicits._
     import org.apache.spark.sql.functions._
+    PointSource.requireAppendable(spark, store, "CLI add")
     val pat = "^(.*):([-0-9.eE]+)@(\\d+)$".r
     val rows = specs.map {
       case pat(v, value, ts) =>
@@ -286,6 +288,7 @@ object Cli {
   def runCollect(spark: SparkSession, store: String,
                  nowMs: Long = System.currentTimeMillis()): Long = {
     import org.apache.spark.sql.functions._
+    PointSource.requireAppendable(spark, store, "CLI collect")
     val pts = graft.client.SystemStats.collect(nowMs = nowMs)
     val df = graft.client.SystemStats.toDataFrame(spark, pts)
     val (ok, _) = Engine.add(df,

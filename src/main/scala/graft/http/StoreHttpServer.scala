@@ -7,7 +7,9 @@ import graft.sources.PointSource
 import graft.wire.Rpc
 import java.net.InetSocketAddress
 import java.util.Base64
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 
 /**
@@ -50,10 +52,12 @@ class StoreHttpServer(spark: SparkSession, storeDir: String, port: Int = 0,
   // /add rejects on it (see the handler) — the cold tier is read-only.
   // --tier=tiered spans hot + cold in one frame (readTiered's
   // crash-consistent union); /add stays open there (writes land hot).
-  private def points(): DataFrame =
+  // `minTs`/`maxTs` prune date partitions; the Engine keeps the exact
+  // `ts` bounds.
+  private def points(minTs: Option[Long], maxTs: Option[Long]): DataFrame =
     if (tier == "gorilla") PointSource.readGorillaPoints(spark, storeDir)
     else if (tier == "tiered") PointSource.readTiered(spark, storeDir, coldDir.get)
-    else PointSource.read(spark, storeDir)
+    else PointSource.read(spark, storeDir, minTs, maxTs)
 
   private def respond(ex: HttpExchange, code: Int, body: Array[Byte]): Unit = {
     val b64 = Base64.getEncoder.encode(body)
@@ -107,7 +111,7 @@ class StoreHttpServer(spark: SparkSession, storeDir: String, port: Int = 0,
     // impersonates (default: Go, matching the authoritative store).
     val req = Rpc.decodeGetRequest(bytes)
       .copy(chainMutations = !cppMutationSemantics)
-    val df = Engine.get(points(), req)
+    val df = Engine.get(points(req.minTimestamp, req.maxTimestamp), req)
     // materialize grouped by output series, values time-ordered (the
     // response shape of go/src/store.go:133-156). One stream per
     // series: skey when present, else (name, labels) — a label
@@ -120,15 +124,16 @@ class StoreHttpServer(spark: SparkSession, storeDir: String, port: Int = 0,
     // bound (request limits alone don't bound the total: max_values
     // is a per-series tail and max_variables caps series, so either
     // one alone still leaves the product unbounded); crossing it
-    // rejects with 413 instead of OOMing the driver. A bare
-    // CollectLimit keeps the probe cheap: no global Sort — the scan
-    // short-circuits once limit+1 rows surface, so an over-cap
-    // request fails fast instead of paying a full top-K over every
-    // match. Per-stream time order (the actual wire contract,
-    // go/src/store.go:133-156 sorts within each stream) is restored
-    // driver-side below on the ≤cap in-memory rows.
+    // rejects with 413 instead of OOMing the driver. The bound is one
+    // Spark job with no global Sort and no CollectLimit (whose
+    // scale-up runs one task, then more, as separate jobs): each task
+    // stops after cap+1 rows, so an over-cap request fails fast
+    // instead of paying a full top-K over every match. Per-stream time
+    // order (the actual wire contract, go/src/store.go:133-156 sorts
+    // within each stream) is restored driver-side below on the ≤cap
+    // in-memory rows.
     val (rows, retrieveMs) = timed {
-      val r = df.limit(maxResponseValues + 1).collect()
+      val r = StoreHttpServer.collectAtMost(df, maxResponseValues + 1)
       if (r.length > maxResponseValues)
         throw new StoreHttpServer.ResponseTooLarge(
           s"/get matched more than $maxResponseValues values; narrow the " +
@@ -177,7 +182,9 @@ class StoreHttpServer(spark: SparkSession, storeDir: String, port: Int = 0,
 
   server.createContext("/list", handler { bytes =>
     val req = Rpc.decodeListRequest(bytes)
-    val (rows, retrieveMs) = timed(Engine.list(points(), req, nowMs()).collect())
+    val now = nowMs()
+    val (rows, retrieveMs) = timed(
+      Engine.list(points(Some(now - req.maxAgeMs), None), req, now).collect())
     val (vars, constructMs) = timed {
       rows.map { r =>
         Variable(r.getAs[String]("name"),
@@ -194,13 +201,7 @@ class StoreHttpServer(spark: SparkSession, storeDir: String, port: Int = 0,
     // pathological write amplification — appends belong to the hot
     // Parquet store that later ages into blocks
     require(tier != "gorilla", "/add is not served by the gorilla tier")
-    // a streaming sink's store is read through its sink log, which
-    // lists only the files the sink committed: a plain append would be
-    // acknowledged and never read back
-    val sinkLog = new org.apache.hadoop.fs.Path(storeDir, "_spark_metadata")
-    require(!sinkLog.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(sinkLog),
-      s"/add is not served by a store written by a streaming sink: reads " +
-        s"list only the files in its sink log $sinkLog, and an /add is not in it")
+    PointSource.requireAppendable(spark, storeDir, "/add")
     val streams = Rpc.decodeAddRequest(bytes)
     val rows = streams.flatMap { s =>
       s.values.map { case (ts, dv, sv, ets) =>
@@ -312,6 +313,22 @@ object StoreHttpServer {
   /** Thrown when an unbounded /get would exceed the response cap;
     * mapped to HTTP 413 with the reason in the wire error field. */
   final class ResponseTooLarge(msg: String) extends RuntimeException(msg)
+
+  /** At most `n` rows of `df`, in one Spark job over the plan of
+    * `df.queryExecution`: each task returns at most `n` rows, and the
+    * driver keeps rows only until it holds `n`. Which `n` rows is
+    * unspecified, as with `limit(n)`. */
+  def collectAtMost(df: DataFrame, n: Int): Array[Row] = {
+    val qe = df.queryExecution
+    val kept = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
+    SQLExecution.withNewExecutionId(qe, Some("collect")) {
+      df.sparkSession.sparkContext.runJob(qe.toRdd,
+        (it: Iterator[InternalRow]) => it.take(n).map(_.copy()).toArray,
+        (_: Int, part: Array[InternalRow]) => kept ++= part.take(n - kept.length))
+    }
+    val toRow = CatalystTypeConverters.createToScalaConverter(df.schema)
+    kept.map(toRow(_).asInstanceOf[Row]).toArray
+  }
 
   def main(args: Array[String]): Unit = {
     val opts = args.filter(_.startsWith("--"))

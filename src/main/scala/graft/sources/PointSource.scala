@@ -3,6 +3,7 @@ package graft.sources
 import graft.model.Point
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DateType
 
 /**
  * Readers producing the canonical point schema ([[graft.model.Point]]).
@@ -66,9 +67,57 @@ object PointSource {
       concat(col("name"), lit("{user="),
         element_at(col("labels"), "user"), lit("}")))
 
-  /** Reads a point store written by [[write]]. */
-  def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path).select(Point.columns.map(col): _*)
+  /** The at-rest schema of a point store: [[Point.schema]] plus its
+    * `date` partition column. */
+  private val storeSchema = Point.schema.add("date", DateType)
+
+  /**
+   * Reads a point store written by [[write]] or by the streaming sink.
+   * The relation (the store's file listing) is held in
+   * [[graft.SessionCache]] while no file under `path` changes, and the
+   * schema is fixed, so a warm read runs no Spark job and no listing
+   * beyond the cache's fingerprint walk. The sink log
+   * (`path/_spark_metadata`) lies under `path`, so every sink commit
+   * and every append invalidates the entry.
+   *
+   * `minTs`/`maxTs` (ms, inclusive) prune `date` partitions outside
+   * their days before the projection to [[Point.columns]] drops
+   * `date` — the same shape as [[readGorilla]]'s bounds. The caller
+   * keeps its exact `ts` filters. A bound whose day falls outside
+   * `DateType`'s range prunes nothing.
+   */
+  def read(spark: SparkSession, path: String,
+           minTs: Option[Long] = None, maxTs: Option[Long] = None): DataFrame = {
+    // a path never holds a NUL, so this key is never an
+    // inferred-schema Tables.parquetCached(path) entry
+    val rel = graft.SessionCache.get(spark, graft.SessionCache.Relation,
+        s"$path\u0000points", Seq(path))(
+      spark.read.schema(storeSchema).parquet(path)) // missing path: the read throws
+    val lo = minTs.flatMap(day(spark, _)).fold(rel)(d => rel.filter(col("date") >= d))
+    maxTs.flatMap(day(spark, _)).fold(lo)(d => lo.filter(col("date") <= d))
+      .select(Point.columns.map(col): _*)
+  }
+
+  /** The `date` partition holding ms timestamp `t` (the writers'
+    * `to_date(timestamp_millis(ts))` in the session time zone), or
+    * None when that day is outside `DateType`'s years 1-9999. */
+  private def day(spark: SparkSession, t: Long): Option[java.time.LocalDate] =
+    Some(java.time.Instant.ofEpochMilli(t)
+        .atZone(java.time.ZoneId.of(spark.conf.get("spark.sql.session.timeZone"),
+          java.time.ZoneId.SHORT_IDS))
+        .toLocalDate)
+      .filter(d => d.getYear >= 1 && d.getYear <= 9999)
+
+  /** Refuses a plain batch append (`who` names the writer) to a store
+    * the streaming sink wrote: its reads list only the files in the
+    * sink log, so an appended point would be acknowledged and never
+    * read back. */
+  def requireAppendable(spark: SparkSession, path: String, who: String): Unit = {
+    val sinkLog = new org.apache.hadoop.fs.Path(path, "_spark_metadata")
+    require(!sinkLog.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(sinkLog),
+      s"$who is not served by a store written by a streaming sink: reads " +
+        s"list only the files in its sink log $sinkLog, and $who is not in it")
+  }
 
   /**
    * Writes a point DataFrame as the at-rest layout: partitioned by UTC

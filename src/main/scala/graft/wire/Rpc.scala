@@ -141,6 +141,12 @@ object Rpc {
     case _ => Aggregations.Average
   }
 
+  /** A uint64 ms timestamp (lib/openinstrument.proto) past
+    * Long.MaxValue reads back negative; it saturates, so uint64-max
+    * stays "after every point", as in the reference's unsigned
+    * compare (go/src/store.go:137-148). */
+  private def uint64Ms(t: Long): Long = if (t < 0) Long.MaxValue else t
+
   def decodeGetRequest(bytes: Array[Byte]): Requests.GetRequest = {
     var variable: Option[Variable] = None
     var minTs: Option[Long] = None
@@ -154,8 +160,8 @@ object Rpc {
       case (9, 2) =>
         val (o, n) = r.lenDelim()
         variable = Some(decodeStreamVariable(bytes, o, n))
-      case (2, 0) => minTs = Some(r.varint())
-      case (3, 0) => maxTs = Some(r.varint())
+      case (2, 0) => minTs = Some(uint64Ms(r.varint()))
+      case (3, 0) => maxTs = Some(uint64Ms(r.varint()))
       case (6, 2) =>
         val (o, n) = r.lenDelim()
         muts ++= decodeMutation(bytes, o, n)

@@ -224,6 +224,23 @@ class CliSpec extends SparkSpec {
     assert(listed.count() == 2)
   }
 
+  test("add and collect refuse a store written by the streaming sink, naming its sink log") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_cli_sink").toString
+    val (src, store) = (s"$tmp/src", s"$tmp/store")
+    series(Seq(1000L -> 1.0), name = "/cli/sunk").write.parquet(src)
+    val q = graft.streaming.StreamIngest.ingest(spark, src, store, s"$tmp/ckpt")
+    q.awaitTermination()
+    assert(q.exception.isEmpty, q.exception)
+    for ((verb, write) <- Seq[(String, () => Long)](
+        "CLI add" -> (() => Cli.runAdd(spark, store, Seq("/cli/added:2@2000"), nowMs = 10000L)),
+        "CLI collect" -> (() => Cli.runCollect(spark, store)))) {
+      val err = intercept[IllegalArgumentException](write()).getMessage
+      assert(err.contains(verb) && err.contains(s"$store/_spark_metadata"), err)
+    }
+    // nothing was appended behind the sink log: the sink's point alone
+    assert(PointSource.read(spark, store).count() == 1)
+  }
+
   test("export verb: store -> record files round-trips, pattern-scoped") {
     val dir = java.nio.file.Files.createTempDirectory("graft_cli_exp").toString
     val store = s"$dir/store"

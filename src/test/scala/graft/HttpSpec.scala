@@ -8,6 +8,10 @@ import graft.wire.Rpc
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.util.Base64
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
+import scala.jdk.CollectionConverters._
 
 /** Wire-compatibility: a "reference client" (our codec doubling as one)
   * drives add/get/list over HTTP+base64-protobuf. */
@@ -27,6 +31,134 @@ class HttpSpec extends SparkSpec {
     val (code, bytes) = postRaw(port, path, body)
     assert(code == 200, s"$path -> $code")
     bytes
+  }
+
+  /** Runs `body`, then returns the Spark jobs it started and the
+    * executed plans of the `collect` actions it ran. A marker job
+    * before and after drains the listener bus, so the count holds
+    * exactly the jobs started in between. */
+  private def observe(body: => Unit): (Int, Seq[String]) = {
+    val sc = spark.sparkContext
+    val marker = "graft.spec.drain"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val drained = new java.util.concurrent.LinkedBlockingQueue[Integer]
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val jobListener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(marker) != null)) drained.put(jobs.get)
+        else jobs.incrementAndGet()
+    }
+    val planListener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (f == "collect") plans.add(qe.executedPlan.toString)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    def drain(): Int = {
+      sc.setLocalProperty(marker, "1")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(marker, null)
+      drained.poll(60, java.util.concurrent.TimeUnit.SECONDS).intValue
+    }
+    sc.addSparkListener(jobListener)
+    spark.listenerManager.register(planListener)
+    try {
+      val before = drain()
+      plans.clear()
+      body
+      (drain() - before, plans.asScala.toSeq)
+    } finally {
+      sc.removeSparkListener(jobListener)
+      spark.listenerManager.unregister(planListener)
+    }
+  }
+
+  /** A store of one point on each of three UTC days, 01:00 each day. */
+  private def threeDayStore(name: String): String = {
+    val store = java.nio.file.Files.createTempDirectory("graft_http_days").toString + "/s"
+    graft.sources.PointSource.write(series(
+      Seq(0L, 1L, 2L).map(d => (d * Day + Hour) -> d.toDouble),
+      name = name, labels = Map("host" -> "a")), store)
+    store
+  }
+  private val Hour = 3600000L
+  private val Day = 24 * Hour
+
+  private def values(port: Int, req: Requests.GetRequest): Seq[(Long, Option[Double])] = {
+    val (ok, err, streams) = Rpc.decodeGetResponse(post(port, "/get", Rpc.encodeGetRequest(req)))
+    assert(ok, err.toString)
+    streams.flatMap(_.values.map(v => (v._1, v._2)))
+  }
+
+  /** The `parquet relations` row of /status: (entries, hits, misses). */
+  private def relationRow(port: Int): (Int, Long, Long) = {
+    val body = HttpClient.newHttpClient().send(
+      HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$port/status")).GET().build(),
+      HttpResponse.BodyHandlers.ofString()).body()
+    val row = "(?s).*<tr><td>parquet relations</td><td>(\\d+)</td><td>(\\d+)</td><td>(\\d+)</td></tr>.*".r
+    body match { case row(n, h, m) => (n.toInt, h.toLong, m.toLong) }
+  }
+
+  test("a ranged /get prunes date partitions; uint64-max and Long.MaxValue bounds serve every row") {
+    val store = threeDayStore("/http/days")
+    val srv = new StoreHttpServer(spark, store, nowMs = () => 3 * Day).start()
+    try {
+      val all = Requests.GetRequest("/http/days{host=a}")
+      val (_, plans) = observe {
+        assert(values(srv.boundPort, all.copy(minTimestamp = Some(Day),
+          maxTimestamp = Some(Day + 2 * Hour))) == Seq((Day + Hour, Some(1.0))))
+      }
+      val plan = plans.find(_.contains(store)).getOrElse(fail(plans.mkString("\n")))
+      assert("PartitionFilters: \\[[^\\]]*date[^\\]]*\\]".r.findFirstIn(plan).nonEmpty,
+        s"a ranged /get must prune date partitions:\n$plan")
+      val unbounded = values(srv.boundPort, all)
+      assert(unbounded.length == 3)
+      // -1 encodes as the 10-byte varint of uint64-max
+      for (hi <- Seq(-1L, Long.MaxValue))
+        assert(values(srv.boundPort, all.copy(maxTimestamp = Some(hi))) == unbounded,
+          s"max_timestamp $hi")
+    } finally srv.stop()
+  }
+
+  test("a warm one-series /get runs one Spark job, a warm /list at most two, both off the held relation") {
+    val store = threeDayStore("/http/warm")
+    val srv = new StoreHttpServer(spark, store, nowMs = () => 3 * Day).start()
+    try {
+      val get = Requests.GetRequest("/http/warm{host=a}", minTimestamp = Some(Day))
+      val list = Requests.ListRequest("/http/*", maxAgeMs = 2 * Day)
+      def listed() = Rpc.decodeListResponse(
+        post(srv.boundPort, "/list", Rpc.encodeListRequest(list)))._2.map(_.name)
+      assert(values(srv.boundPort, get).length == 2) // cold: builds the relation
+      assert(listed() == Seq("/http/warm"))
+      val (_, hits, _) = relationRow(srv.boundPort)
+      val (getJobs, _) = observe(assert(values(srv.boundPort, get).length == 2))
+      assert(getJobs == 1, "a warm one-series /get")
+      val (listJobs, _) = observe(assert(listed() == Seq("/http/warm")))
+      assert(listJobs <= 2, "a warm /list")
+      values(srv.boundPort, get)
+      assert(relationRow(srv.boundPort)._2 >= hits + 3,
+        "every warm request must hit the held store relation")
+    } finally srv.stop()
+  }
+
+  test("one running server's /get sees the points of every new StreamIngest commit") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_http_follow").toString
+    val (src, store) = (s"$tmp/src", s"$tmp/store")
+    def ingest(ts: Long): Unit = {
+      series(Seq(ts -> ts.toDouble), name = "/http/sunk", labels = Map("host" -> "a"))
+        .write.mode("append").parquet(src)
+      val q = graft.streaming.StreamIngest.ingest(spark, src, store, s"$tmp/ckpt")
+      q.awaitTermination()
+      assert(q.exception.isEmpty, q.exception)
+    }
+    ingest(1000L)
+    val srv = new StoreHttpServer(spark, store, nowMs = () => Day).start()
+    try {
+      val get = Requests.GetRequest("/http/sunk")
+      assert(values(srv.boundPort, get).map(_._1) == Seq(1000L))
+      assert(values(srv.boundPort, get).map(_._1) == Seq(1000L)) // warm
+      ingest(2000L)
+      assert(values(srv.boundPort, get).map(_._1).sorted == Seq(1000L, 2000L),
+        "a sink commit must invalidate the held relation")
+    } finally srv.stop()
   }
 
   test("add -> get(rate) -> list round-trip over HTTP+base64-protobuf") {
@@ -339,19 +471,21 @@ class HttpSpec extends SparkSpec {
         Variable("/http/ord", Map("host" -> "a"), Variable.Gauge),
         Seq((3000L, Some(3.0), None, None), (1000L, Some(1.0), None, None),
           (2000L, Some(2.0), None, None))))))
-      // the server's probe shape: Engine.get(...).limit(cap+1) — must
-      // plan as CollectLimit with no Sort anywhere (an over-cap
-      // request then fails fast instead of paying a global top-K)
-      val df = graft.api.Engine.get(
-        graft.sources.PointSource.read(spark, store),
-        Requests.GetRequest("/http/ord"))
-      val plan = df.limit(11).queryExecution.executedPlan.toString
-      assert(plan.contains("CollectLimit"), plan.take(1500))
+      // the server's response bound runs the plan of Engine.get itself:
+      // no CollectLimit (its scale-up runs several jobs) and no Sort
+      // anywhere (an over-cap request then fails fast instead of
+      // paying a global top-K)
+      var gs = Seq.empty[Rpc.Stream]
+      val (_, plans) = observe {
+        val (gok, gerr, streams) = Rpc.decodeGetResponse(post(srv.boundPort, "/get",
+          Rpc.encodeGetRequest(Requests.GetRequest("/http/ord"))))
+        assert(gok, gerr.toString)
+        gs = streams
+      }
+      val plan = plans.find(_.contains(store)).getOrElse(fail(plans.mkString("\n")))
+      assert(!plan.contains("Limit"), plan.take(1500))
       assert(!plan.contains("Sort"),
         s"over-cap probe must not plan a Sort:\n${plan.take(1500)}")
-      val (gok, gerr, gs) = Rpc.decodeGetResponse(post(srv.boundPort, "/get",
-        Rpc.encodeGetRequest(Requests.GetRequest("/http/ord"))))
-      assert(gok, gerr.toString)
       assert(gs.head.values.map(_._1) == Seq(1000L, 2000L, 3000L),
         "per-stream values must be time-ordered on the wire")
     } finally srv.stop()

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import graft.model.IndexFormat
 import graft.similarity.Ann
 
@@ -45,6 +47,48 @@ class SessionCacheSpec extends SparkSpec {
     // same schema and plan, other files: a key of its own
     assert(Ann.corpusCount(spark.read.parquet(b)) == 3)
     assert(stat(SessionCache.Count)._1 == entries + 1)
+  }
+
+  test("the fingerprint walk: nested directories as a recursive listFiles sees them, .crc skipped") {
+    val dir = Files.createTempDirectory("graft_cache_walk").toString
+    val store = s"$dir/store"
+    // nested date= directories plus a streaming sink's log
+    graft.sources.PointSource.write(
+      series(Seq(1000L -> 1.0, 90000000L -> 2.0, 180000000L -> 3.0)), store)
+    Files.createDirectories(java.nio.file.Paths.get(store, "_spark_metadata"))
+    Files.write(java.nio.file.Paths.get(store, "_spark_metadata", "0"), "v1\n".getBytes("UTF-8"))
+    val p = new org.apache.hadoop.fs.Path(store)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    var (n, bytes, newest) = (0, 0L, 0L)
+    val it = fs.listFiles(p, true)
+    while (it.hasNext) {
+      val st = it.next()
+      n += 1; bytes += st.getLen; newest = math.max(newest, st.getModificationTime)
+    }
+    assert(SessionCache.fingerprint(spark, Seq(store)).contains((n, bytes, newest)))
+    // the local file system keeps a .crc beside each file it wrote; neither listing counts them
+    val all = Files.walk(java.nio.file.Paths.get(store)).iterator.asScala
+      .filter(f => Files.isRegularFile(f)).toList
+    val crc = all.count(_.toString.endsWith(".crc"))
+    assert(crc > 0 && n == all.length - crc, s"$n of ${all.length} files, $crc checksums")
+    assert(n > 3, "three date directories, _SUCCESS and the sink log entry")
+  }
+
+  test("a single file counts as one; a missing path is loaded and not cached") {
+    val path = Files.createTempDirectory("graft_cache_single").toString
+    IndexFormat.write(spark, path, "fam v1 a=1")
+    val marker = s"$path/${IndexFormat.MarkerFile}"
+    val len = Files.size(java.nio.file.Paths.get(marker))
+    assert(SessionCache.fingerprint(spark, Seq(marker)).map(f => (f._1, f._2)).contains((1, len)))
+
+    val missing = s"$path/not-there"
+    assert(SessionCache.fingerprint(spark, Seq(missing)).isEmpty)
+    val loads = new java.util.concurrent.atomic.AtomicInteger
+    val (entries, hits, misses) = stat(SessionCache.Marker)
+    for (_ <- 1 to 2)
+      assert(SessionCache.get(spark, SessionCache.Marker, missing, Seq(missing))(loads.incrementAndGet()) > 0)
+    assert(loads.get == 2, "each get of a missing path must load")
+    assert(stat(SessionCache.Marker) == ((entries, hits, misses + 2)))
   }
 
   test("an unchanged _format is a hit; an out-of-band rewrite or delete is refused on the next check") {
