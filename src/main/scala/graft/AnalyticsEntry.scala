@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.Sessions
-import graft.sources.Tables
+import graft.sources.{PointSource, Tables}
 import graft.text.{Pii, TextOps}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -740,7 +740,7 @@ object AnalyticsEntry {
     // stays out of the hashed projection.
     "ev_hll_daily" -> ((s, dir) => {
       val e = Tables.events(s, dir)
-        .withColumn("day", to_date(timestamp_millis(col("ts"))))
+        .withColumn("day", PointSource.dayOf(col("ts")))
       val daily = e.groupBy("event_type", "day")
         .agg(expr("hll_sketch_agg(user_id)").as("sk"))
       val merged = daily.groupBy("event_type")

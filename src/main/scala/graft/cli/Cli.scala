@@ -263,7 +263,6 @@ object Cli {
              nowMs: Long = System.currentTimeMillis()): Long = {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    PointSource.requireAppendable(spark, store, "CLI add")
     val pat = "^(.*):([-0-9.eE]+)@(\\d+)$".r
     val rows = specs.map {
       case pat(v, value, ts) =>
@@ -276,8 +275,7 @@ object Cli {
         col("ts"), col("dval"), lit(null).cast("string").as("sval"),
         lit(null).cast("long").as("end_ts"))
     val (ok, _) = Engine.add(df, java.net.InetAddress.getLocalHost.getHostName, nowMs)
-    ok.withColumn("date", to_date(timestamp_millis(col("ts"))))
-      .write.partitionBy("date").mode("append").parquet(store)
+    PointSource.append(spark, ok, store, "CLI add")
     ok.count()
   }
 
@@ -287,14 +285,11 @@ object Cli {
     * [[graft.client.SystemStats.collect]]). Returns the point count. */
   def runCollect(spark: SparkSession, store: String,
                  nowMs: Long = System.currentTimeMillis()): Long = {
-    import org.apache.spark.sql.functions._
-    PointSource.requireAppendable(spark, store, "CLI collect")
     val pts = graft.client.SystemStats.collect(nowMs = nowMs)
     val df = graft.client.SystemStats.toDataFrame(spark, pts)
     val (ok, _) = Engine.add(df,
       java.net.InetAddress.getLocalHost.getHostName, nowMs)
-    ok.withColumn("date", to_date(timestamp_millis(col("ts"))))
-      .write.partitionBy("date").mode("append").parquet(store)
+    PointSource.append(spark, ok, store, "CLI collect")
     ok.count()
   }
 

@@ -201,7 +201,6 @@ class StoreHttpServer(spark: SparkSession, storeDir: String, port: Int = 0,
     // pathological write amplification — appends belong to the hot
     // Parquet store that later ages into blocks
     require(tier != "gorilla", "/add is not served by the gorilla tier")
-    PointSource.requireAppendable(spark, storeDir, "/add")
     val streams = Rpc.decodeAddRequest(bytes)
     val rows = streams.flatMap { s =>
       s.values.map { case (ts, dv, sv, ets) =>
@@ -218,10 +217,7 @@ class StoreHttpServer(spark: SparkSession, storeDir: String, port: Int = 0,
       // One append at a time: with the handler pool, two concurrent
       // Spark appends to the same path race on the shared _temporary
       // staging dir (the first commitJob deletes the second's files).
-      writeLock.synchronized {
-        ok.withColumn("date", to_date(timestamp_millis(col("ts"))))
-          .write.partitionBy("date").mode("append").parquet(storeDir)
-      }
+      writeLock.synchronized(PointSource.append(spark, ok, storeDir, "/add"))
       bad.count()
     }
     Rpc.encodeAddResponse(nBad == 0,

@@ -1,18 +1,27 @@
 package graft.sources
 
 import graft.model.Point
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.types.DateType
 
 /**
- * Readers producing the canonical point schema ([[graft.model.Point]]).
+ * Readers producing the canonical point schema ([[graft.model.Point]]),
+ * and the one owner of the at-rest point layout.
  *
- * The at-rest format is Parquet partitioned by date with a bloom filter
- * on `name` — the Spark-native replacement for the reference's indexed
- * store files (header index → Parquet footer stats; bloom filter →
- * parquet.bloom.filter.*; per-file time pruning → row-group min/max;
- * see reference go/.../store_manager/indexed_store_file.go:110-146).
+ * The hot layout is Parquet partitioned by `date` (the day of `ts` in
+ * the session time zone, [[dayOf]]), sorted by (date, name, ts) within
+ * each file, with the bloom option on `name` — the Spark-native
+ * replacement for the reference's indexed store files (header index →
+ * footer stats; per-file time pruning → row-group min/max; see
+ * reference go/.../store_manager/indexed_store_file.go:110-146). `date`
+ * leads the sort because a partitioned write needs its input ordered by
+ * `date`: the planner replaces any sort not starting with it, and the
+ * files come out unsorted. Parquet writes no bloom filter for a
+ * dictionary-encoded chunk, which `name` usually is, so series lookups
+ * prune on the sorted row groups' min/max.
  */
 object PointSource {
 
@@ -71,71 +80,99 @@ object PointSource {
     * `date` partition column. */
   private val storeSchema = Point.schema.add("date", DateType)
 
-  /**
-   * Reads a point store written by [[write]] or by the streaming sink.
-   * The relation (the store's file listing) is held in
-   * [[graft.SessionCache]] while no file under `path` changes, and the
-   * schema is fixed, so a warm read runs no Spark job and no listing
-   * beyond the cache's fingerprint walk. The sink log
-   * (`path/_spark_metadata`) lies under `path`, so every sink commit
-   * and every append invalidates the entry.
-   *
-   * `minTs`/`maxTs` (ms, inclusive) prune `date` partitions outside
-   * their days before the projection to [[Point.columns]] drops
-   * `date` — the same shape as [[readGorilla]]'s bounds. The caller
-   * keeps its exact `ts` filters. A bound whose day falls outside
-   * `DateType`'s range prunes nothing.
-   */
-  def read(spark: SparkSession, path: String,
-           minTs: Option[Long] = None, maxTs: Option[Long] = None): DataFrame = {
+  /** A point store's relation, with `date`: its file listing is held in
+    * [[graft.SessionCache]] while no file under `path` changes and the
+    * schema is fixed, so a warm call runs no Spark job and no listing
+    * beyond the cache's fingerprint walk. Every sink commit (its log
+    * lies under `path`) and every append invalidates the entry. */
+  private def relation(spark: SparkSession, path: String): DataFrame =
     // a path never holds a NUL, so this key is never an
     // inferred-schema Tables.parquetCached(path) entry
-    val rel = graft.SessionCache.get(spark, graft.SessionCache.Relation,
+    graft.SessionCache.get(spark, graft.SessionCache.Relation,
         s"$path\u0000points", Seq(path))(
       spark.read.schema(storeSchema).parquet(path)) // missing path: the read throws
-    val lo = minTs.flatMap(day(spark, _)).fold(rel)(d => rel.filter(col("date") >= d))
-    maxTs.flatMap(day(spark, _)).fold(lo)(d => lo.filter(col("date") <= d))
+
+  /** Reads a point store written by [[write]], [[append]] or [[sink]].
+    * `minTs`/`maxTs` (ms, inclusive) prune `date` partitions outside
+    * their days; the caller keeps its exact `ts` filters. */
+  def read(spark: SparkSession, path: String,
+           minTs: Option[Long] = None, maxTs: Option[Long] = None): DataFrame =
+    pruneDays(spark, relation(spark, path), minTs, maxTs)
       .select(Point.columns.map(col): _*)
+
+  /** The day rule of both tiers: the `date` partition of ms timestamp
+    * column `ts` is its calendar day in the session time zone. */
+  def dayOf(ts: Column): Column = to_date(timestamp_millis(ts))
+
+  /** [[dayOf]] of one ms timestamp, worked out on the driver. */
+  private def day(spark: SparkSession, t: Long): java.time.LocalDate =
+    java.time.Instant.ofEpochMilli(t)
+      .atZone(java.time.ZoneId.of(spark.conf.get("spark.sql.session.timeZone"),
+        java.time.ZoneId.SHORT_IDS))
+      .toLocalDate
+
+  /** Keeps the `date` partitions holding ms bounds `minTs`/`maxTs`
+    * (inclusive days). A bound whose day is outside `DateType`'s years
+    * 1-9999 prunes nothing. */
+  private def pruneDays(spark: SparkSession, df: DataFrame,
+                        minTs: Option[Long], maxTs: Option[Long]): DataFrame = {
+    def bound(t: Option[Long]) =
+      t.map(day(spark, _)).filter(d => d.getYear >= 1 && d.getYear <= 9999)
+    val lo = bound(minTs).fold(df)(d => df.filter(col("date") >= d))
+    bound(maxTs).fold(lo)(d => lo.filter(col("date") <= d))
   }
 
-  /** The `date` partition holding ms timestamp `t` (the writers'
-    * `to_date(timestamp_millis(ts))` in the session time zone), or
-    * None when that day is outside `DateType`'s years 1-9999. */
-  private def day(spark: SparkSession, t: Long): Option[java.time.LocalDate] =
-    Some(java.time.Instant.ofEpochMilli(t)
-        .atZone(java.time.ZoneId.of(spark.conf.get("spark.sql.session.timeZone"),
-          java.time.ZoneId.SHORT_IDS))
-        .toLocalDate)
-      .filter(d => d.getYear >= 1 && d.getYear <= 9999)
+  /** The distinct `date` partitions of `df`, as `yyyy-MM-dd` strings —
+    * O(#days) driver rows. */
+  private def days(df: DataFrame): Seq[String] =
+    df.select(col("date").cast("string")).distinct()
+      .collect().map(_.getString(0)).sorted.toSeq
 
-  /** Refuses a plain batch append (`who` names the writer) to a store
-    * the streaming sink wrote: its reads list only the files in the
-    * sink log, so an appended point would be acknowledged and never
-    * read back. */
-  def requireAppendable(spark: SparkSession, path: String, who: String): Unit = {
-    val sinkLog = new org.apache.hadoop.fs.Path(path, "_spark_metadata")
+  /** Refuses a batch write (`who` names the writer) to a store the
+    * streaming sink wrote: its reads list only the files in the sink
+    * log, so an appended point would be acknowledged and never read
+    * back, and a rewrite would leave the log naming files it moved. */
+  private def refuseSinkStore(spark: SparkSession, path: String, who: String): Unit = {
+    val sinkLog = new Path(path, "_spark_metadata")
     require(!sinkLog.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(sinkLog),
-      s"$who is not served by a store written by a streaming sink: reads " +
-        s"list only the files in its sink log $sinkLog, and $who is not in it")
+      s"$who refuses a store written by a streaming sink: its reads list " +
+        s"only the files in its sink log $sinkLog, and $who would write behind that log")
   }
 
-  /**
-   * Writes a point DataFrame as the at-rest layout: partitioned by UTC
-   * date (partition pruning for time-range queries), bloom filter on
-   * `name` (exact-series lookup skips files, like the reference's
-   * per-file bloom filter), sorted by (name, ts) within partitions so
-   * row-group stats prune tightly.
-   */
-  def write(df: DataFrame, path: String): Unit = {
-    df.withColumn("date", to_date(timestamp_millis(col("ts"))))
+  /** The one writer of the hot layout: exactly [[Point.columns]] (a
+    * caller's helper column such as `skey` never reaches the at-rest
+    * schema), the `date` column by [[dayOf]], one write task per
+    * (date, name) hash range, rows sorted by (date, name, ts) in each,
+    * and `date=` partition directories. */
+  private def writeLayout(df: DataFrame, path: String, mode: String): Unit =
+    df.select(Point.columns.map(col): _*)
+      .withColumn("date", dayOf(col("ts")))
       .repartition(col("date"), col("name"))
-      .sortWithinPartitions("name", "ts")
+      .sortWithinPartitions("date", "name", "ts")
       .write
       .option("parquet.bloom.filter.enabled#name", "true")
       .partitionBy("date")
-      .mode("overwrite")
+      .mode(mode)
       .parquet(path)
+
+  /** Writes `df` as the store at `path`, replacing whatever is there. */
+  def write(df: DataFrame, path: String): Unit = writeLayout(df, path, "overwrite")
+
+  /** Appends `df` to the store at `path` (created when missing); `who`
+    * names the writer in the refusal of a sink-written store. */
+  def append(spark: SparkSession, df: DataFrame, path: String, who: String): Unit = {
+    refuseSinkStore(spark, path, who)
+    writeLayout(df, path, "append")
   }
+
+  /** The streaming sink's cut of the layout: `date` partitions only (a
+    * streaming plan cannot sort). The batch rewrites refuse the store
+    * it writes, whose reads list only the sink log's files. */
+  def sink(stream: DataFrame): DataStreamWriter[Row] =
+    stream.withColumn("date", dayOf(col("ts")))
+      .writeStream
+      .format("parquet")
+      .partitionBy("date")
 
   /**
    * Bucketed at-rest layout — the shuffle-paid-once story for 100 TB.
@@ -193,9 +230,18 @@ object PointSource {
    */
   def writeGorilla(df: DataFrame, path: String,
                    blockMs: Long = 86400000L): Unit =
-    graft.codec.Gorilla.encode(df, blockMs)
-      .withColumn("date", to_date(timestamp_millis(col("block_ts"))))
+    writeBlocks(df, path, blockMs, "static")
+
+  /** The one writer of the cold block layout: `points` encoded into
+    * blocks, `date` partitions by [[dayOf]] `block_ts`, bloom on
+    * `skey`. `overwriteMode` "static" replaces the tier, "dynamic" only
+    * the dates the blocks land on. */
+  private def writeBlocks(points: DataFrame, path: String, blockMs: Long,
+                          overwriteMode: String): Unit =
+    graft.codec.Gorilla.encode(points, blockMs)
+      .withColumn("date", dayOf(col("block_ts")))
       .write
+      .option("partitionOverwriteMode", overwriteMode)
       .option("parquet.bloom.filter.enabled#skey", "true")
       .partitionBy("date")
       .mode("overwrite")
@@ -211,11 +257,7 @@ object PointSource {
   def readGorilla(spark: SparkSession, path: String,
                   minTs: Option[Long] = None,
                   maxTs: Option[Long] = None): DataFrame = {
-    val blocks0 = spark.read.parquet(path)
-    val blocks1 = minTs.fold(blocks0)(t => blocks0.filter(
-      col("date") >= to_date(timestamp_millis(lit(t)))))
-    val blocks = maxTs.fold(blocks1)(t => blocks1.filter(
-      col("date") <= to_date(timestamp_millis(lit(t)))))
+    val blocks = pruneDays(spark, spark.read.parquet(path), minTs, maxTs)
     val pts0 = graft.codec.Gorilla.decode(blocks)
     val pts1 = minTs.fold(pts0)(t => pts0.filter(col("ts") >= t))
     maxTs.fold(pts1)(t => pts1.filter(col("ts") < t))
@@ -250,27 +292,22 @@ object PointSource {
    * 519-557 compactBlock, 354-479 split/join, triggers at 687-705):
    * rewrites the store re-sorted and re-clustered so many small ingest
    * files (e.g. streaming micro-batch output) become few large ones,
-   * restoring tight row-group stats and bloom filters. Runs per date
-   * partition at scale; `targetFilesPerDate` bounds output file count
-   * (the reference's split threshold analog).
+   * restoring tight row-group stats: the store re-lands through
+   * [[write]] into a staged directory that then swaps in. AQE coalesces
+   * the write's shuffle to its advisory partition size, which sets the
+   * output file size (the reference's split threshold analog). A store
+   * the streaming sink wrote is refused before anything moves.
    */
-  def compact(spark: SparkSession, path: String,
-              targetFilesPerDate: Int = 1): Unit = {
+  def compact(spark: SparkSession, path: String): Unit = {
+    refuseSinkStore(spark, path, "compact")
     val staged = path.stripSuffix("/") + ".compact"
-    val df = spark.read.parquet(path)
-    df.repartition(targetFilesPerDate, col("date"), col("name"))
-      .sortWithinPartitions("name", "ts")
-      .write
-      .option("parquet.bloom.filter.enabled#name", "true")
-      .partitionBy("date")
-      .mode("overwrite")
-      .parquet(staged)
+    write(relation(spark, path), staged)
     // atomic-ish swap (single filesystem rename pair); FS resolved
     // from the store path, not the default FS (s3a/hdfs stores)
-    val p = new org.apache.hadoop.fs.Path(path)
+    val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val s = new org.apache.hadoop.fs.Path(staged)
-    val old = new org.apache.hadoop.fs.Path(path + ".old")
+    val s = new Path(staged)
+    val old = new Path(path + ".old")
     fs.rename(p, old)
     fs.rename(s, p)
     fs.delete(old, true)
@@ -295,18 +332,19 @@ object PointSource {
    * Survivors whose mutated timestamps land on a day the sweep did not
    * touch (an Interpolate grid can emit into an empty day) are
    * merge-moved file-by-file into that day rather than replacing it.
+   * A store the streaming sink wrote is refused before anything moves.
    */
   def retentionSweep(spark: SparkSession, path: String,
                      policy: graft.retention.Retention.Policy,
                      nowMs: Long): Seq[String] = {
-    val trash = new org.apache.hadoop.fs.Path(
-      path.stripSuffix("/") + ".rettrash")
+    refuseSinkStore(spark, path, "retention sweep")
+    val trash = new Path(path.stripSuffix("/") + ".rettrash")
     val fs = trash.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // crash recovery: a prior run that died between trash-move and
     // rename left the day's only copy in trash — restore it first
     if (fs.exists(trash)) {
       fs.listStatus(trash).foreach { st =>
-        val target = new org.apache.hadoop.fs.Path(path, st.getPath.getName)
+        val target = new Path(path, st.getPath.getName)
         if (!fs.exists(target)) fs.rename(st.getPath, target)
       }
       fs.delete(trash, true)
@@ -330,55 +368,41 @@ object PointSource {
         it.maxAgeMs > 0L => it.maxAgeMs
     }
     if (changing.isEmpty) return Nil
-    val cutoffDay = java.time.Instant.ofEpochMilli(nowMs - changing.min)
-      .atZone(java.time.ZoneOffset.UTC).toLocalDate.toString
-    val hot = spark.read.parquet(path)
-    val dates = hot.filter(col("date") <= cutoffDay)
-      .select(col("date").cast("string")).distinct()
-      .collect().map(_.getString(0)).sorted.toSeq // O(#days) driver rows
+    val aged = relation(spark, path)
+      .filter(col("date") <= day(spark, nowMs - changing.min))
+    val dates = days(aged)
     if (dates.isEmpty) return Nil
-    val survivors = graft.retention.Retention.apply(
-        hot.filter(col("date") <= cutoffDay).drop("date"), policy, nowMs)
-      // the canonical columns ONLY: Retention.apply's internal skey
-      // must not leak into the at-rest schema (a mixed-schema store
-      // would read skey = null for old partitions and collapse every
-      // series into one group on the next sweep)
-      .select(graft.model.Point.columns.map(col): _*)
+    // write keeps the canonical columns ONLY: Retention.apply's internal
+    // skey must not leak into the at-rest schema (a mixed-schema store
+    // would read skey = null for old partitions and collapse every
+    // series into one group on the next sweep)
     val staged = path.stripSuffix("/") + ".retstage"
-    survivors
-      .withColumn("date", to_date(timestamp_millis(col("ts"))))
-      .repartition(col("date"))
-      .sortWithinPartitions("name", "ts")
-      .write
-      .option("parquet.bloom.filter.enabled#name", "true")
-      .partitionBy("date")
-      .mode("overwrite")
-      .parquet(staged)
+    write(graft.retention.Retention.apply(aged.drop("date"), policy, nowMs), staged)
     // swap: trash-move the swept source day, then rename its staged
     // replacement in (crash between the two is recovered at next start)
     dates.foreach { d =>
-      val src = new org.apache.hadoop.fs.Path(s"$path/date=$d")
+      val src = new Path(s"$path/date=$d")
       if (fs.exists(src)) {
         fs.mkdirs(trash)
-        fs.rename(src, new org.apache.hadoop.fs.Path(trash, s"date=$d"))
+        fs.rename(src, new Path(trash, s"date=$d"))
       }
-      val s = new org.apache.hadoop.fs.Path(s"$staged/date=$d")
+      val s = new Path(s"$staged/date=$d")
       if (fs.exists(s))
-        fs.rename(s, new org.apache.hadoop.fs.Path(s"$path/date=$d"))
+        fs.rename(s, new Path(s"$path/date=$d"))
     }
     // staged days OUTSIDE the swept set (mutations emitted timestamps
     // into a day the sweep didn't rewrite): merge file-by-file —
     // replacing such a partition would clobber young data
-    val stagedRoot = new org.apache.hadoop.fs.Path(staged)
+    val stagedRoot = new Path(staged)
     if (fs.exists(stagedRoot)) {
       fs.listStatus(stagedRoot)
         .filter(_.getPath.getName.startsWith("date="))
         .foreach { st =>
-          val target = new org.apache.hadoop.fs.Path(path, st.getPath.getName)
+          val target = new Path(path, st.getPath.getName)
           if (!fs.exists(target)) fs.rename(st.getPath, target)
           else fs.listStatus(st.getPath).foreach { f =>
             fs.rename(f.getPath,
-              new org.apache.hadoop.fs.Path(target, f.getPath.getName))
+              new Path(target, f.getPath.getName))
           }
         }
       fs.delete(stagedRoot, true)
@@ -387,27 +411,6 @@ object PointSource {
     dates
   }
 
-  /**
-   * Tier-aging job: moves every hot date partition strictly older than
-   * `olderThanMs` into the Gorilla cold tier, then drops those
-   * partitions from the hot store — the background companion of
-   * [[compact]] that completes the hot→cold lifecycle
-   * ([[writeGorilla]]'s "ages into" contract; reference analog: the
-   * datastore's background compact cycle, go/.../datastore.go:519-557,
-   * except the output is the compressed value tier, not a rewrite).
-   *
-   * The cutoff is a whole-day boundary (a block never straddles
-   * tiers); numeric points move, string-valued points (null dval, not
-   * representable in value blocks) STAY in the hot store — dropping a
-   * date partition therefore requires it to carry no svals, else that
-   * date is rewritten in place with only its sval rows. Cold append
-   * uses dynamic partition overwrite on the moved dates: re-running
-   * after a crash between the cold write and the hot delete is
-   * idempotent, never duplicating blocks — and a moved date that
-   * already holds cold blocks (crash residue OR a late write to an
-   * aged date) is re-encoded from the union of both tiers, so the
-   * overwrite never discards previously aged points.
-   */
   /**
    * Hybrid tier read: one canonical point frame spanning the hot
    * Parquet store and the Gorilla cold tier — queries cross the aging
@@ -435,26 +438,20 @@ object PointSource {
    */
   def readTiered(spark: SparkSession, hotPath: String,
                  coldPath: String): DataFrame = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(coldPath), spark.sparkContext.hadoopConfiguration)
-    val hasCold = fs.exists(new org.apache.hadoop.fs.Path(coldPath))
-    if (!hasCold) return read(spark, hotPath)
+    val cold = new Path(coldPath)
+    if (!cold.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(cold))
+      return read(spark, hotPath)
     val coldBlocks = spark.read.parquet(coldPath)
-    val coldDates = coldBlocks
-      .select(col("date").cast("string")).distinct()
-      .collect().map(_.getString(0)).toSeq
-    val hot0 = spark.read.parquet(hotPath)
+    val coldDates = days(coldBlocks)
+    val hot0 = relation(spark, hotPath)
     val safeHot = hot0
       .filter(col("dval").isNull ||
         !col("date").cast("string").isin(coldDates: _*))
       .select(Point.columns.map(col): _*)
     // hot numerics landing on cold-held dates: crash residue or late
     // writes — decide per point, not per date
-    val overlapDates = hot0
-      .filter(col("dval").isNotNull &&
-        col("date").cast("string").isin(coldDates: _*))
-      .select(col("date").cast("string")).distinct()
-      .collect().map(_.getString(0)).toSeq
+    val overlapDates = days(hot0.filter(col("dval").isNotNull &&
+      col("date").cast("string").isin(coldDates: _*)))
     val hotAll =
       if (overlapDates.isEmpty) safeHot
       else {
@@ -473,39 +470,55 @@ object PointSource {
     hotAll.unionByName(readGorillaPoints(spark, coldPath))
   }
 
+  /**
+   * Tier-aging job: moves every hot date partition strictly older than
+   * `olderThanMs` into the Gorilla cold tier, then drops those
+   * partitions from the hot store — the background companion of
+   * [[compact]] that completes the hot→cold lifecycle
+   * ([[writeGorilla]]'s "ages into" contract; reference analog: the
+   * datastore's background compact cycle, go/.../datastore.go:519-557,
+   * except the output is the compressed value tier, not a rewrite).
+   *
+   * The cutoff is a whole-day boundary (a block never straddles
+   * tiers); numeric points move, string-valued points (null dval, not
+   * representable in value blocks) STAY in the hot store — dropping a
+   * date partition therefore requires it to carry no svals, else that
+   * date is rewritten in place with only its sval rows. Cold append
+   * uses dynamic partition overwrite on the moved dates: re-running
+   * after a crash between the cold write and the hot delete is
+   * idempotent, never duplicating blocks — and a moved date that
+   * already holds cold blocks (crash residue OR a late write to an
+   * aged date) is re-encoded from the union of both tiers, so the
+   * overwrite never discards previously aged points. A hot store the
+   * streaming sink wrote is refused before anything moves.
+   */
   def ageIntoGorilla(spark: SparkSession, hotPath: String, coldPath: String,
                      olderThanMs: Long, nowMs: Long,
                      blockMs: Long = 86400000L): Seq[String] = {
-    val cutoffDay = java.time.Instant
-      .ofEpochMilli(nowMs - olderThanMs)
-      .atZone(java.time.ZoneOffset.UTC).toLocalDate.toString
+    refuseSinkStore(spark, hotPath, "ageIntoGorilla")
     // Replay an interrupted sval-residue swap before reading anything:
     // a crash between the hot-partition delete and the stage rename
     // leaves that date's string-valued rows ONLY in the stage dir —
     // rename them home (or drop a stale stage if the partition still
     // exists, i.e. the crash happened before the delete).
-    val fs0 = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(hotPath), spark.sparkContext.hadoopConfiguration)
-    val stageRoot = new org.apache.hadoop.fs.Path(
-      s"${hotPath.stripSuffix("/")}.svalstage")
-    if (fs0.exists(stageRoot)) {
-      fs0.listStatus(stageRoot)
+    val fs = new Path(hotPath).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val stageRoot = new Path(s"${hotPath.stripSuffix("/")}.svalstage")
+    if (fs.exists(stageRoot)) {
+      fs.listStatus(stageRoot)
         .filter(_.getPath.getName.startsWith("date=")).foreach { st =>
-          val dest = new org.apache.hadoop.fs.Path(
-            s"$hotPath/${st.getPath.getName}")
-          if (!fs0.exists(dest)) fs0.rename(st.getPath, dest)
-          else fs0.delete(st.getPath, true)
+          val dest = new Path(hotPath, st.getPath.getName)
+          if (!fs.exists(dest)) fs.rename(st.getPath, dest)
+          else fs.delete(st.getPath, true)
         }
-      fs0.delete(stageRoot, true)
+      fs.delete(stageRoot, true)
     }
-    val hot = spark.read.parquet(hotPath)
+    val hot = relation(spark, hotPath)
     // dates are drawn from the NUMERIC doomed rows: a date already
     // reduced to its sval residue has nothing left to move and must
     // not re-select on the next run (idempotence)
-    val numericDoomed = hot.filter(col("date") < cutoffDay &&
+    val numericDoomed = hot.filter(col("date") < day(spark, nowMs - olderThanMs) &&
       col("dval").isNotNull)
-    val dates = numericDoomed.select(col("date").cast("string")).distinct()
-      .collect().map(_.getString(0)).sorted.toSeq // O(#days) driver rows
+    val dates = days(numericDoomed)
     if (dates.isEmpty) return Nil
     val numericHot = graft.model.Point.withSeriesKey(numericDoomed)
       .select(col("skey"), col("ts"), col("dval"))
@@ -518,16 +531,10 @@ object PointSource {
     // deduping on (skey, ts) with cold preferred (matches
     // [[readTiered]]'s anti-join). Crash replay is a no-op merge (hot
     // rows ⊆ cold); a late write adds its fresh points to the block.
-    val fsCold = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(coldPath), spark.sparkContext.hadoopConfiguration)
+    val cold = new Path(coldPath)
     val overlapDates =
-      if (!fsCold.exists(new org.apache.hadoop.fs.Path(coldPath))) Nil
-      else {
-        val coldDates = spark.read.parquet(coldPath)
-          .select(col("date").cast("string")).distinct()
-          .collect().map(_.getString(0)).toSet
-        dates.filter(coldDates)
-      }
+      if (!cold.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(cold)) Nil
+      else dates.filter(days(spark.read.parquet(coldPath)).toSet)
     val numeric =
       if (overlapDates.isEmpty) numericHot
       else {
@@ -540,31 +547,20 @@ object PointSource {
           .unionByName(coldPts)
       }
     // per-date idempotent append: overwrite ONLY the moved dates
-    graft.codec.Gorilla.encode(numeric, blockMs)
-      .withColumn("date", to_date(timestamp_millis(col("block_ts"))))
-      .write
-      .option("partitionOverwriteMode", "dynamic")
-      .option("parquet.bloom.filter.enabled#skey", "true")
-      .partitionBy("date")
-      .mode("overwrite")
-      .parquet(coldPath)
-    val fs = new org.apache.hadoop.fs.Path(hotPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    writeBlocks(numeric, coldPath, blockMs, "dynamic")
+    // the moved dates' string-valued rows stay hot: they re-land through
+    // write in a stage OUTSIDE the store dir (a crash must not leave a
+    // stray dir the partition discovery would misparse), then each
+    // date's partition is replaced by its staged residue, if any
+    write(hot.filter(col("date").cast("string").isin(dates: _*) &&
+      col("dval").isNull), stageRoot.toString)
     dates.foreach { d =>
-      val part = new org.apache.hadoop.fs.Path(s"$hotPath/date=$d")
-      val svals = hot.filter(col("date") === d && col("dval").isNull)
-      if (svals.isEmpty) fs.delete(part, true)
-      else {
-        // keep the date's string-valued rows hot: rewrite in place
-        // (stage OUTSIDE the store dir — a crash must not leave a
-        // stray dir the partition discovery would misparse)
-        val staged = new org.apache.hadoop.fs.Path(
-          s"${hotPath.stripSuffix("/")}.svalstage/date=$d")
-        svals.drop("date").write.mode("overwrite").parquet(staged.toString)
-        fs.delete(part, true)
-        fs.rename(staged, part)
-      }
+      val part = new Path(hotPath, s"date=$d")
+      val staged = new Path(stageRoot, s"date=$d")
+      fs.delete(part, true)
+      if (fs.exists(staged)) fs.rename(staged, part)
     }
+    fs.delete(stageRoot, true)
     dates
   }
 }

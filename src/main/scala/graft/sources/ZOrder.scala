@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
  * pruning — the layout answer when a table serves MORE THAN ONE
  * selective filter shape and no single sort key can serve both.
  *
- * The point-store layout ([[PointSource.write]]) sorts (name, ts):
+ * The point-store layout ([[PointSource.write]]) sorts (date, name, ts):
  * series-scoped time scans prune tightly, but an entity-centric scan —
  * one user's events across months, the sessionize/funnel/as-of input
  * shape — overlaps every file. Sorting by user instead just flips who

@@ -11,15 +11,17 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
  * replacement for the reference's record-log WAL, replay, and
  * background reindex (server/record_log.cc:98-271,
  * go/.../store_manager/store_manager.go:400-469): checkpointed
- * micro-batches subsume WAL+replay; the Parquet sink with date
- * partitioning subsumes indexed-file rewrite.
+ * micro-batches subsume WAL+replay. The Parquet sink writes `date`
+ * partitions only ([[graft.sources.PointSource.sink]]): a streaming
+ * plan cannot sort, so its files stay unsorted, and the batch rewrites
+ * refuse a sink store because its reads list only the sink log's files.
  */
 object StreamIngest {
 
   /**
    * File-source ingest stream: watches `sourceDir` for new point
-   * parquet drops, validates/enriches like Engine.add, sinks to the
-   * at-rest layout with exactly-once checkpointing.
+   * parquet drops, validates/enriches like Engine.add, and sinks them
+   * into `date` partitions with exactly-once checkpointing.
    */
   def ingest(spark: SparkSession, sourceDir: String, storeDir: String,
              checkpointDir: String, hostname: String = "ingest",
@@ -45,12 +47,9 @@ object StreamIngest {
         when(map_contains_key(col("labels"), lit("hostname")), col("labels"))
           .otherwise(map_concat(coalesce(col("labels"), map()),
             map(lit("hostname"), lit(hostname)))))
-      .withColumn("date", to_date(timestamp_millis(col("ts"))))
-    stream.writeStream
-      .format("parquet")
+    graft.sources.PointSource.sink(stream)
       .option("path", storeDir)
       .option("checkpointLocation", checkpointDir)
-      .partitionBy("date")
       .trigger(Trigger.AvailableNow())
       .start()
   }

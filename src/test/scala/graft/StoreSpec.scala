@@ -392,7 +392,7 @@ class StoreSpec extends SparkSpec {
     val before = parquetFiles().size
     val checksum = spark.read.parquet(dir)
       .select(sum(hash(col("name"), col("ts"), col("dval")))).head().getLong(0)
-    PointSource.compact(spark, dir, targetFilesPerDate = 1)
+    PointSource.compact(spark, dir)
     val after = parquetFiles().size
     assert(after < before, s"$before -> $after")
     val out = spark.read.parquet(dir)
