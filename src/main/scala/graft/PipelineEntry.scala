@@ -1043,7 +1043,7 @@ object PipelineEntry {
       // from parquet, so nothing persisted outlives the gate. Training
       // arithmetic is unchanged (decimal sums are order-exact).
       // (Fanning the persisted frame out was measured NET-NEGATIVE here
-      // — MicroProfile action-lloyd-fanned > action-lloyd-pass: the
+      // — OPTIMIZATION_r18.md action-lloyd-fanned > action-lloyd-pass: the
       // extra exchange costs more than the 2000-row partial agg saves.
       // The real per-pass cost was topCentroids re-evaluating through
       // the Generate, fixed in Ann.lloydRefine itself.)

@@ -18,217 +18,6 @@ import org.apache.spark.sql.SparkSession
  *
  * Diagnostic only — not a driver surface, no JSON contract.
  */
-/** Micro-benchmarks for shared per-row input expressions (the events
-  * scan is a single parquet row group at bench SFs, so everything
-  * below the first exchange runs in ONE task — per-row input cost is
-  * serial wall for every events gate). Diagnostic only. */
-object MicroProfile {
-  def main(args: Array[String]): Unit = {
-    import org.apache.spark.sql.functions._
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkInit.common(SparkSession.builder()
-        .master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    try spark.range(1000000L).selectExpr("sum(id)").collect()
-    catch { case _: Throwable => }
-    def bench(name: String)(df: => org.apache.spark.sql.DataFrame): Unit = {
-      val walls = (1 to 5).map { _ =>
-        val t0 = System.nanoTime()
-        df.queryExecution.toRdd.count()
-        (System.nanoTime() - t0) / 1e9
-      }
-      println(f"[micro] $name%-28s min=${walls.min}%6.3f walls=" +
-        walls.map(w => f"$w%.3f").mkString(","))
-    }
-    val ev = graft.sources.PointSource.events(spark, sfDir)
-    bench("events-decode")(ev)
-    bench("events+genericSkey")(graft.model.Point.withSeriesKey(ev))
-    bench("events+cheapSkey")(ev.withColumn("skey",
-      concat(col("name"), lit("{user="),
-        element_at(col("labels"), "user"), lit("}"))))
-    val keyed = graft.model.Point.withSeriesKey(ev)
-    bench("unkey-regex")(keyed
-      .withColumn("name", regexp_extract(col("skey"), "^([^{]+)", 1))
-      .withColumn("usr", regexp_extract(col("skey"), "\\{user=([^}]*)\\}", 1)))
-    bench("unkey-substr")(keyed
-      .withColumn("name", substring_index(col("skey"), "{", 1))
-      .withColumn("usr", substring_index(
-        substring_index(col("skey"), "{user=", -1), "}", 1)))
-    // ---- shingle-pair family decomposition (d_ngram_jaccard core) ----
-    // NOTE: every stage is a def — a val-captured DataFrame re-executed
-    // by bench() would reuse its own shuffle stages across repetitions
-    // and massively under-report (observed 0.11s vs 1.5s honest).
-    val docs = graft.sources.Tables.documents(spark, sfDir)
-    def shingleRows = docs
-      .withColumn("__toks", graft.text.TextOps.tokens(col("text")))
-      .filter(size(col("__toks")) >= 3)
-      .select(col("doc_id").as("id"),
-        graft.functions.VectorOps.shingleHash60(col("__toks"), 3).as("sh"))
-      .select(col("id"), size(col("sh")).as("sz"), explode(col("sh")).as("s"))
-      .filter(col("id").isNotNull && col("s").isNotNull)
-    def ex = shingleRows.repartition(col("id"), col("sz"), col("s"))
-    def hot = ex.groupBy("s").agg(count(lit(1)).as("__df"))
-      .filter(col("__df") > 300L).select(col("s"), lit(1).as("__hot"))
-    def cold = {
-      val e = ex
-      e.join(e.groupBy("s").agg(count(lit(1)).as("__df"))
-          .filter(col("__df") > 300L).select(col("s"), lit(1).as("__hot")),
-        Seq("s"), "left")
-        .filter(col("__hot").isNull).drop("__hot")
-    }
-    def joined = {
-      val c = cold
-      c.as("a").join(c.as("b"),
-        col("a.s") === col("b.s") && col("a.id") < col("b.id"))
-    }
-    def aggKeys = joined
-      .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"),
-        col("a.sz").as("sza"), col("b.sz").as("szb"))
-      .agg(count(lit(1)).as("inter"))
-    def aggFirst = joined
-      .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .agg(count(lit(1)).as("inter"),
-        first(col("a.sz")).as("sza"), first(col("b.sz")).as("szb"))
-    bench("ngram-1-shingleRows")(shingleRows)
-    bench("ngram-2-repart")(ex)
-    bench("ngram-3-dropHot")(cold)
-    bench("ngram-4-selfjoin")(joined)
-    bench("ngram-5-aggKeys")(aggKeys)
-    bench("ngram-5-aggFirst")(aggFirst)
-    bench("ngram-gate")(graft.dedup.Dedup.ngramJaccardPairs(docs, n = 3,
-      threshold = 0.5))
-    // ---- fixed-cost decomposition: read/plan/action overheads ----
-    locally {
-      def tms[A](n: String, reps: Int = 5)(f: => A): Unit = {
-        val walls = (1 to reps).map { _ =>
-          val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-        }
-        println(f"[micro] $n%-28s min=${walls.min}%6.3f walls=" +
-          walls.map(w => f"$w%.3f").mkString(","))
-      }
-      // driver-only: file listing + footer/schema read per spark.read
-      tms("read-parquet-events")(spark.read.parquet(s"$sfDir/events.parquet"))
-      tms("read-parquet-docs")(spark.read.parquet(s"$sfDir/documents.parquet"))
-      // one tiny aggregate action, identical plan each rep (codegen/plan
-      // caches warm after rep 1): the floor of ANY driver action
-      val docsDf = spark.read.parquet(s"$sfDir/documents.parquet")
-      tms("action-floor-count")(docsDf.groupBy().count().queryExecution.toRdd.count())
-      // same but re-reading the table each rep (adds listing+analysis)
-      tms("action-floor-reread")(
-        spark.read.parquet(s"$sfDir/documents.parquet")
-          .groupBy().count().queryExecution.toRdd.count())
-      // lloyd-pass-shaped action over a persisted 1-partition frame
-      val emb = graft.sources.Tables.embeddings(spark, sfDir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      emb.count()
-      val cents0 = graft.similarity.Ann.pinnedCentroids(emb, nlist = 16)
-      def lloydPass(df: org.apache.spark.sql.DataFrame) =
-        df.select(
-            element_at(graft.functions.VectorOps.topCentroids(
-              col("embedding").cast("array<double>"), cents0, 1), 1).as("list"),
-            posexplode(col("embedding").cast("array<double>")).as(Seq("pos", "x")))
-          .groupBy("list", "pos")
-          .agg(sum(col("x").cast("decimal(38,12)")).cast("double").as("s"),
-            count(lit(1)).as("n"))
-          .collect()
-      tms("action-lloyd-pass")(lloydPass(emb))
-      val embF = graft.sources.Tables.fanOut(
-        graft.sources.Tables.embeddings(spark, sfDir))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      embF.count()
-      tms("action-lloyd-fanned")(lloydPass(embF))
-      // decomposition of the 0.37 s lloyd action: which piece costs?
-      tms("lloyd-a-explodeonly")(
-        emb.select(posexplode(col("embedding").cast("array<double>"))
-            .as(Seq("pos", "x")))
-          .queryExecution.toRdd.count())
-      tms("lloyd-b-topc-explode")(
-        emb.select(
-            element_at(graft.functions.VectorOps.topCentroids(
-              col("embedding").cast("array<double>"), cents0, 1), 1).as("list"),
-            posexplode(col("embedding").cast("array<double>")).as(Seq("pos", "x")))
-          .queryExecution.toRdd.count())
-      tms("lloyd-c-agg-double")(
-        emb.select(
-            element_at(graft.functions.VectorOps.topCentroids(
-              col("embedding").cast("array<double>"), cents0, 1), 1).as("list"),
-            posexplode(col("embedding").cast("array<double>")).as(Seq("pos", "x")))
-          .groupBy("list", "pos")
-          .agg(sum(col("x")).as("s"), count(lit(1)).as("n"))
-          .collect())
-      tms("lloyd-d-agg-decimal-norm")(
-        emb.select(
-            element_at(graft.functions.VectorOps.topCentroids(
-              col("embedding").cast("array<double>"), cents0, 1), 1).as("list"),
-            posexplode(col("embedding").cast("array<double>")).as(Seq("pos", "x")))
-          .groupBy("list", "pos")
-          .agg(sum(col("x").cast("decimal(38,12)")).cast("double").as("s"),
-            count(lit(1)).as("n"))
-          .queryExecution.toRdd.count())
-      embF.unpersist(false)
-      emb.unpersist(false)
-    }
-    // ---- lloyd-pass plan evidence (plans/r18): inline argmax rides
-    // the Generate's output projection (re-evaluated per exploded
-    // element) vs the two-step select that pins it below ----
-    locally {
-      val emb = graft.sources.Tables.embeddings(spark, sfDir)
-      val cents0 = graft.similarity.Ann.pinnedCentroids(emb, nlist = 16)
-      val e = emb.select(col("embedding").cast("array<double>").as("v"))
-      val inline = e.select(
-          element_at(graft.functions.VectorOps.topCentroids(col("v"), cents0, 1), 1)
-            .as("list"),
-          posexplode(col("v")).as(Seq("pos", "x")))
-        .groupBy("list", "pos")
-        .agg(sum(col("x").cast("decimal(38,12)")).cast("double").as("s"),
-          count(lit(1)).as("n"))
-      val twoStep = e.select(
-          element_at(graft.functions.VectorOps.topCentroids(col("v"), cents0, 1), 1)
-            .as("list"),
-          col("v"))
-        .select(col("list"), posexplode(col("v")).as(Seq("pos", "x")))
-        .groupBy("list", "pos")
-        .agg(sum(col("x").cast("decimal(38,12)")).cast("double").as("s"),
-          count(lit(1)).as("n"))
-      println("[lloyd-plan-inline-BEFORE]")
-      println(inline.queryExecution.executedPlan.toString)
-      println("[lloyd-plan-twostep-AFTER]")
-      println(twoStep.queryExecution.executedPlan.toString)
-    }
-    // ---- e_knn_ivf_kmpar phase timing ----
-    locally {
-      import graft.similarity.Ann
-      import graft.sources.Tables
-      def tm[A](n: String)(f: => A): A = {
-        val t0 = System.nanoTime(); val r = f
-        println(f"[micro] kmpar/$n%-20s ${(System.nanoTime() - t0) / 1e9}%6.3f")
-        r
-      }
-      (1 to 2).foreach { rep =>
-        val emb = Tables.embeddings(spark, sfDir)
-        emb.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val queries = emb.filter(col("vec_id") < 10)
-        val init = tm(s"init$rep")(Ann.kmeansParallelCentroids(emb, nlist = 16, dim = 64))
-        val cents = tm(s"lloyd$rep")(Ann.lloydRefine(emb, init, iters = 5))
-        val pinned = tm(s"pinned$rep")(Ann.pinnedCentroids(emb, nlist = 16))
-        val phis = tm(s"phi$rep")(Ann.kmeansObjectives(emb, Seq(cents, pinned)))
-        emb.unpersist(false)
-        val ivf = Ann.ivfTopKWith(cents, emb, queries, k = 5, nprobe = 6)
-          .select(col("qid"), col("nid"))
-        val brute = Ann.bruteTopK(emb, queries, k = 5).select(col("qid"), col("nid"))
-        val overlap = ivf.intersect(brute).groupBy("qid").agg(count(lit(1)).as("overlap"))
-        val fin = queries.select(col("vec_id").as("qid"))
-          .join(overlap, Seq("qid"), "left")
-          .select(col("qid"), (coalesce(col("overlap"), lit(0L)) >= 2L).cast("long"))
-        tm(s"final$rep")(fin.queryExecution.toRdd.count())
-      }
-    }
-    spark.stop()
-  }
-}
-
 object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

@@ -50,7 +50,7 @@ object SparkEntry {
     * key shape (name = prefix before the first `{`, "" when skey
     * starts with `{`, null on null; usr = text between `{user=` and
     * the closing `}`), but ~15% cheaper per row across the ~40 events
-    * gates that unkey their output (MicroProfile unkey-substr 0.276 s
+    * gates that unkey their output (OPTIMIZATION_r18.md: unkey-substr 0.276 s
     * vs unkey-regex 0.322 s over the full keyed frame) — no regex
     * compilation or backtracking in the hot projection. An skey
     * without `{user=` gets usr "" (as regexp_extract would), not the

@@ -6,10 +6,12 @@ package graft.operators
  * [[Mutations.EwmaOp]]), emitting the z-score of each point against
  * the state *before* the point updates it — the EWMA control chart.
  *
- * The single [[step]] function is shared verbatim by the batch path
+ * The single [[step]] function runs inside one state machine,
+ * [[Mutations.EwmZscoreOp]], which both the batch path
  * ([[Mutations.ewmZscore]]) and the streaming path
- * ([[graft.streaming.StreamIngest.anomalyStream]]), so the two are
- * bit-identical by construction (locked in by StreamingSpec).
+ * ([[graft.streaming.StreamIngest.anomalyStream]], resuming the op from
+ * its [[S]] record) feed, so the two are bit-identical by construction
+ * (locked in by StreamingSpec).
  *
  * Beyond-reference op: the reference stores and resamples metrics but
  * leaves alerting to clients; at 100 TB the scoring must ride the

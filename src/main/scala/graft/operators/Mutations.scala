@@ -166,6 +166,22 @@ object Mutations {
     def flush(): Seq[(Long, Double)]
   }
 
+  /**
+   * A [[StreamOp]] that a stream resumes across micro-batches: its whole
+   * state is one record `S`, so the streaming step
+   * ([[graft.streaming.StreamIngest.resumeStep]]) runs the LITERAL batch
+   * state machine and the two paths agree by construction. `lastFed` is
+   * the timestamp of the last point fed (`Long.MinValue` before the
+   * first); the step drops points strictly behind it, which keeps the
+   * op's input sorted. A record's field names, types and order are the
+   * state schema of existing checkpoints: keep them.
+   */
+  trait ResumableOp[S] extends StreamOp {
+    def snapshot: S
+    def restore(s: S): this.type
+    def lastFed: Long
+  }
+
   /** Shared secondary-sort input shape for the exact streaming ops:
     * one shuffle on `skey`, sort within partitions. String-valued
     * points (null dval) are skipped, as in the reference
@@ -487,7 +503,7 @@ object Mutations {
    * resampler onto a floor-aligned grid; between-sample values projected
    * by the local rate. Golden-tested against lib/counter_test.cc:28-58.
    */
-  final class UniformOp(interval: Long) extends StreamOp {
+  final class UniformOp(interval: Long) extends ResumableOp[UniformState] {
     private var base = 0L; private var pointsOut = 1L
     private var lastTs = 0L; private var lastVal = 0.0; private var n = 0L
     def feed(ts: Long, v: Double): Seq[(Long, Double)] = {
@@ -517,7 +533,48 @@ object Mutations {
       out.result()
     }
     def flush(): Seq[(Long, Double)] = Nil
+    def snapshot: UniformState = UniformState(base, pointsOut, lastTs, lastVal, n)
+    def restore(s: UniformState): this.type = {
+      base = s.base; pointsOut = s.pointsOut
+      lastTs = s.lastTs; lastVal = s.lastVal; n = s.n
+      this
+    }
+    def lastFed: Long = if (n == 0) Long.MinValue else lastTs
   }
+
+  /** [[UniformOp]]'s state — the same state the reference's
+    * UniformTimeSeries keeps between samples (lib/counter.cc:18-64 is
+    * already written as streaming state). */
+  final case class UniformState(
+      base: Long, pointsOut: Long, lastTs: Long, lastVal: Double, n: Long)
+
+  /**
+   * Per-series counter rate as a state machine: [[rateSigned]]'s
+   * `(v − v_prev) / Δt` (per second by convention) between consecutive
+   * points, negatives dropped unless `signed` (counter-reset protection,
+   * as in [[rate]]). A point at or behind the last one has no defined
+   * rate (Δt ≤ 0 gives ±Infinity) and is dropped without moving the
+   * state. Serves the stream; the batch [[rate]] keeps its lag window.
+   */
+  final class RateOp(perSecond: Boolean, signed: Boolean) extends ResumableOp[RateState] {
+    private var last = RateState(Long.MinValue, 0.0) // nothing fed yet
+    def feed(ts: Long, v: Double): Seq[(Long, Double)] = {
+      if (ts <= last.ts) return Nil
+      val prev = last
+      last = RateState(ts, v)
+      if (prev.ts == Long.MinValue) return Nil
+      val dt0 = ts - prev.ts
+      val r = (v - prev.dval) / (if (perSecond) dt0 / 1000.0 else dt0.toDouble)
+      if (signed || r >= 0) List((ts, r)) else Nil
+    }
+    def flush(): Seq[(Long, Double)] = Nil
+    def snapshot: RateState = last
+    def restore(s: RateState): this.type = { last = s; this }
+    def lastFed: Long = last.ts
+  }
+
+  /** Last point of a series — all the state a rate needs. */
+  final case class RateState(ts: Long, dval: Double)
 
   /**
    * Irregular-interval EWMA smoothing: `v += α·(x − v)` with
@@ -563,7 +620,7 @@ object Mutations {
    * the following bucket is complete (one-bucket lookahead for the
    * centroid), which is exactly the `perSeries` sorted-stream shape.
    */
-  final class LttbOp(bucketMs: Long) extends StreamOp {
+  final class LttbOp(bucketMs: Long) extends ResumableOp[LttbSnap] {
     require(bucketMs > 0, "bucketMs must be positive")
     private var first = true
     private var px = 0.0; private var py = 0.0 // previously selected point
@@ -610,10 +667,8 @@ object Mutations {
       else if (nxtB == NoBucket) List(cur.last) // single trailing bucket
       else List(finalizeCur(), nxt.last)
     }
-    /** Serializable state snapshot — lets the streaming step
-      * ([[graft.streaming.StreamIngest.lttbStep]]) run the LITERAL
-      * batch state machine across micro-batches (bit-identical by
-      * construction, like Anomaly.step). */
+    /** The [[ResumableOp]] record: lets [[graft.streaming.StreamIngest
+      * .lttbStream]] run this state machine across micro-batches. */
     def snapshot: LttbSnap = LttbSnap(first, px, py,
       curB, cur.map(_._1).toSeq, cur.map(_._2).toSeq,
       nxtB, nxt.map(_._1).toSeq, nxt.map(_._2).toSeq)
@@ -625,6 +680,11 @@ object Mutations {
       nxt = scala.collection.mutable.ArrayBuffer(s.nxtTs.zip(s.nxtVs): _*)
       this
     }
+    // the buffers hold the latest points; with both empty only the
+    // anchor has been fed
+    def lastFed: Long =
+      if (first) Long.MinValue
+      else nxt.lastOption.orElse(cur.lastOption).fold(px.toLong)(_._1)
   }
 
   /** Per-series LTTB state between micro-batches: the anchor/previous
@@ -745,9 +805,9 @@ object Mutations {
   def holt(df: DataFrame, tauLevelMs: Double, tauTrendMs: Double): DataFrame =
     perSeries(df)(() => new HoltOp(tauLevelMs, tauTrendMs))
 
-  /** Batch adapter over [[Anomaly.step]]: emits each point's z-score
+  /** [[Anomaly.step]] as a state machine: emits each point's z-score
     * (as `dval`) against the EWM mean/variance before it. */
-  final class EwmZscoreOp(tauMs: Double) extends StreamOp {
+  final class EwmZscoreOp(tauMs: Double) extends ResumableOp[Anomaly.S] {
     private var s = Anomaly.init
     def feed(ts: Long, x: Double): Seq[(Long, Double)] = {
       val (next, z) = Anomaly.step(s, ts, x, tauMs)
@@ -755,6 +815,9 @@ object Mutations {
       z.map(ts -> _).toList
     }
     def flush(): Seq[(Long, Double)] = Nil
+    def snapshot: Anomaly.S = s
+    def restore(x: Anomaly.S): this.type = { s = x; this }
+    def lastFed: Long = if (s.n == 0L) Long.MinValue else s.prevTs
   }
 
   def ewmZscore(df: DataFrame, tauMs: Double): DataFrame =

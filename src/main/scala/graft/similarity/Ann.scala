@@ -700,7 +700,7 @@ object Ann {
       // projection): written inline with the posexplode, the argmax
       // rides ABOVE the Generate and re-evaluates per EXPLODED row —
       // dim× the matrix scans (measured 0.17 s vs 0.03 s on the bench
-      // corpus, MicroProfile lloyd-b vs lloyd-a/e) — the same
+      // corpus, OPTIMIZATION_r18.md lloyd-b vs lloyd-a/e) — the same
       // nested-argument re-evaluation trap as TextOps.winnowFromHashes.
       val rows = e.select(
           element_at(graft.functions.VectorOps.topCentroids(col("v"), cent, 1), 1)

@@ -56,7 +56,7 @@ object Tables {
     * the same parquet path. `spark.read.parquet` re-lists the
     * directory and re-reads footers for schema inference on EVERY
     * call — ~65 ms of pure driver wall per call (measured,
-    * MicroProfile `read-parquet-*`), paid by every gate build twice
+    * OPTIMIZATION_r18.md `read-parquet-*`), paid by every gate build twice
     * per bench pass and once per verify dump. Production engines
     * never pay this per query: a catalog table / manifest-backed
     * format (guide §6) persists the file index and schema. This cache

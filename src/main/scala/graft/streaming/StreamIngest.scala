@@ -5,6 +5,7 @@ import graft.operators.Mutations
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import scala.reflect.runtime.universe.TypeTag
 
 /**
  * Structured Streaming ingest + streaming operators — the Spark-native
@@ -400,80 +401,73 @@ object StreamIngest {
     }.reduce(_ unionByName _)
   }
 
-  // ------------------------------------------------- stateful resample
-
-  /** Per-series incremental state of the uniform resampler — the same
-    * state the reference's UniformTimeSeries keeps between samples
-    * (lib/counter.cc:18-64 is already written as streaming state). */
-  final case class UniformState(
-      base: Long, pointsOut: Long, lastTs: Long, lastVal: Double, n: Long)
+  // ---------------------------------------- stateful per-series operators
 
   final case class InPoint(skey: String, ts: Long, dval: Double)
   final case class OutPoint(skey: String, ts: Long, dval: Double)
 
   /**
-   * One flatMapGroupsWithState step: feed sorted in-batch points of one
-   * series through the resampler state machine; emit grid points.
-   * Identical math to Mutations.UniformOp (golden-tested) — kept in
-   * sync by StreamingSpec comparing both paths.
+   * One flatMapGroupsWithState step of a per-series stream: the batch
+   * state machine `mk()` ([[graft.operators.Mutations.ResumableOp]]),
+   * restored from the series' state record, is fed this batch's points
+   * in ts order, so stream and batch share one implementation and
+   * disorder confined to a batch is exact. Points strictly behind the
+   * op's last fed ts (stragglers from a later batch) are dropped: they
+   * would break the op's sorted-input contract, and the batch path over
+   * the full sorted data is where they belong.
    *
-   * With `idleTimeoutMs > 0` the step arms a processing-time timeout on
-   * every batch that touches the series; a series idle past the timeout
-   * has its state REMOVED (bounded state under series churn — without
-   * this, one state record per ever-seen series lives forever). A
-   * revived series re-anchors from its first new point, exactly like a
-   * brand-new series.
+   * With `idleTimeoutMs > 0` every batch that touches a series arms a
+   * processing-time timeout; when it fires, the op's `flush()` emits
+   * (LTTB's trailing buckets, nothing for the others) and the state is
+   * REMOVED — bounded state under series churn, where otherwise one
+   * record per ever-seen series lives forever. A revived series
+   * re-anchors from its first new point, exactly like a new series.
    */
-  def uniformStep(intervalMs: Long, idleTimeoutMs: Long = 0L)(
+  def resumeStep[S](mk: () => Mutations.ResumableOp[S], idleTimeoutMs: Long)(
       key: String, rows: Iterator[InPoint],
-      state: GroupState[UniformState]): Iterator[OutPoint] = {
-    if (state.hasTimedOut) {
-      state.remove()
-      return Iterator.empty
-    }
-    var s = state.getOption.getOrElse(UniformState(0L, 1L, 0L, 0.0, 0L))
-    val out = List.newBuilder[OutPoint]
-    rows.toSeq.sortBy(_.ts).foreach { p =>
-      s =
-        if (s.n == 0) UniformState(p.ts - p.ts % intervalMs, 1L, p.ts, p.dval, 1L)
-        else {
-          // mirror UniformOp's outer loop exactly: after gap catch-up
-          // the on-grid equality case must be re-checked, or a point
-          // landing exactly on the grid after a gap is never emitted
-          // when the stream ends there
-          var pointsOut = s.pointsOut
-          var done = false
-          while (!done) {
-            var next = s.base + intervalMs * pointsOut
-            if (p.ts == next) {
-              pointsOut += 1
-              out += OutPoint(key, p.ts, p.dval)
-              done = true
-            } else if (p.ts < next) {
-              done = true
-            } else {
-              while (p.ts > next) {
-                val nv = (p.dval - s.lastVal) / (p.ts - s.lastTs) * (next - s.lastTs) + s.lastVal
-                out += OutPoint(key, next, nv)
-                pointsOut += 1
-                next = s.base + intervalMs * pointsOut
-              }
-            }
-          }
-          UniformState(s.base, pointsOut, p.ts, p.dval, s.n + 1)
-        }
-    }
-    state.update(s)
-    if (idleTimeoutMs > 0) state.setTimeoutDuration(idleTimeoutMs)
-    out.result().iterator
+      state: GroupState[S]): Iterator[OutPoint] = {
+    val op = mk()
+    state.getOption.foreach(op.restore)
+    val out =
+      if (state.hasTimedOut) { state.remove(); op.flush() }
+      else {
+        val from = op.lastFed
+        val fed = rows.toSeq.sortBy(_.ts).filter(_.ts >= from)
+          .flatMap(p => op.feed(p.ts, p.dval))
+        state.update(op.snapshot)
+        if (idleTimeoutMs > 0) state.setTimeoutDuration(idleTimeoutMs)
+        fed
+      }
+    out.iterator.map { case (t, v) => OutPoint(key, t, v) }
   }
 
   /**
-   * Streaming uniform resample: groupByKey(series) +
-   * flatMapGroupsWithState. Append-mode compatible; state is one fixed
-   * record per LIVE series: `idleTimeoutMs` (default 1 h) evicts state
-   * for series that stop reporting, so total state tracks current
-   * fan-in, not the historical series universe.
+   * The one per-series stream: [[resumeStep]] over each series of
+   * `points`, append mode. String-valued points (null `dval`) are
+   * skipped, as in the batch [[graft.operators.Mutations.perSeries]].
+   */
+  private def resumeStream[S <: Product : TypeTag](points: DataFrame, idleTimeoutMs: Long)(
+      mk: () => Mutations.ResumableOp[S]): Dataset[OutPoint] = {
+    val spark = points.sparkSession
+    import spark.implicits._
+    val timeoutConf =
+      if (idleTimeoutMs > 0) GroupStateTimeout.ProcessingTimeTimeout()
+      else GroupStateTimeout.NoTimeout()
+    Point.withSeriesKey(points)
+      .select(col("skey"), col("ts"), col("dval"))
+      .filter(col("dval").isNotNull)
+      .as[InPoint]
+      .groupByKey(_.skey)
+      .flatMapGroupsWithState(OutputMode.Append(), timeoutConf)(
+        resumeStep(mk, idleTimeoutMs))
+  }
+
+  /**
+   * Streaming uniform resample ([[graft.operators.Mutations.UniformOp]],
+   * the incremental resampler). State is one fixed record per LIVE
+   * series: `idleTimeoutMs` (default 1 h) evicts state for series that
+   * stop reporting, so total state tracks current fan-in, not the
+   * historical series universe.
    *
    * DOCUMENTED DIVERGENCE from the batch resampler under eviction: a
    * series idle past the timeout that later revives re-anchors at its
@@ -481,6 +475,10 @@ object StreamIngest {
    * same data would bridge the gap from the original anchor. Bounded
    * state is the right default at stream scale; pass `idleTimeoutMs =
    * 0` for strict batch bit-equality on arbitrarily idle series.
+   * A straggler strictly behind the series' last point (from a later
+   * batch) is dropped, like [[rateStream]]'s monotonicity guard: it
+   * would move the interpolation anchor back, so the stream equals the
+   * batch resampler over the points without it.
    *
    * DEPLOYMENT NOTE: with ProcessingTimeTimeout, Spark runs a
    * timer-check batch on every trigger even without new data — set a
@@ -488,211 +486,50 @@ object StreamIngest {
    * on the query; the default 0 ms trigger would busy-loop empty
    * batches. With eviction disabled there is no such constraint.
    */
-  // ---------------------------------------------------- stateful rate
-
-  /** Last point of a series — all the state a rate needs. */
-  final case class RateState(ts: Long, dval: Double)
-
-  /**
-   * One flatMapGroupsWithState step of the streaming counter rate:
-   * identical math to [[graft.operators.Mutations.rateSigned]]
-   * (`(v−v_prev) / Δt`, per-second by convention), with negatives
-   * dropped unless `signed` (counter-reset protection, as in batch
-   * [[graft.operators.Mutations.rate]]).
-   */
-  def rateStep(perSecond: Boolean, signed: Boolean, idleTimeoutMs: Long = 0L)(
-      key: String, rows: Iterator[InPoint],
-      state: GroupState[RateState]): Iterator[OutPoint] = {
-    if (state.hasTimedOut) {
-      state.remove()
-      return Iterator.empty
-    }
-    var last = state.getOption.orNull
-    val out = List.newBuilder[OutPoint]
-    rows.toSeq.sortBy(_.ts).foreach { p =>
-      // monotonicity guard: a point at or behind the stored last ts
-      // (out-of-order arrival from a later batch, or a duplicate) has
-      // no defined rate (Δt ≤ 0 → ±Infinity) and must not rewind the
-      // state — drop it; the batch path over the full sorted data is
-      // where such stragglers belong
-      if (last == null) last = RateState(p.ts, p.dval)
-      else if (p.ts > last.ts) {
-        val dt0 = p.ts - last.ts
-        val r = (p.dval - last.dval) / (if (perSecond) dt0 / 1000.0 else dt0.toDouble)
-        if (signed || r >= 0) out += OutPoint(key, p.ts, r)
-        last = RateState(p.ts, p.dval)
-      }
-    }
-    if (last != null) state.update(last)
-    if (idleTimeoutMs > 0) state.setTimeoutDuration(idleTimeoutMs)
-    out.result().iterator
-  }
+  def uniformResampleStream(points: DataFrame, intervalMs: Long,
+                            idleTimeoutMs: Long = 3600000L): Dataset[OutPoint] =
+    resumeStream(points, idleTimeoutMs)(() => new Mutations.UniformOp(intervalMs))
 
   /**
-   * Streaming per-series rate — the live-dashboard primitive. O(1)
-   * state (the previous point) per live series, idle eviction as in
-   * the resampler; bit-equal to the batch lag-window rate
-   * (StreamingSpec) on strictly-increasing timestamps. DOCUMENTED
-   * DIVERGENCE: duplicate-ts and out-of-order points are DROPPED by
-   * the monotonicity guard (the batch lag window instead emits the
-   * undefined ±Infinity a zero Δt produces — garbage either way; the
-   * stream declines to emit it).
+   * Streaming per-series rate ([[graft.operators.Mutations.RateOp]]) —
+   * the live-dashboard primitive. O(1) state (the previous point) per
+   * live series, idle eviction as in the resampler; bit-equal to the
+   * batch lag-window rate (StreamingSpec) on strictly-increasing
+   * timestamps. DOCUMENTED DIVERGENCE: duplicate-ts and out-of-order
+   * points are DROPPED by the monotonicity guard (the batch lag window
+   * instead emits the undefined ±Infinity a zero Δt produces — garbage
+   * either way; the stream declines to emit it).
    */
   def rateStream(points: DataFrame, perSecond: Boolean = true,
                  signed: Boolean = false,
-                 idleTimeoutMs: Long = 3600000L): Dataset[OutPoint] = {
-    val spark = points.sparkSession
-    import spark.implicits._
-    val timeoutConf =
-      if (idleTimeoutMs > 0) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    Point.withSeriesKey(points)
-      .select(col("skey"), col("ts"), col("dval"))
-      .as[InPoint]
-      .groupByKey(_.skey)
-      .flatMapGroupsWithState(OutputMode.Append(), timeoutConf)(
-        rateStep(perSecond, signed, idleTimeoutMs))
-  }
-
-  // ------------------------------------------------- stateful anomaly
-
-  /**
-   * One flatMapGroupsWithState step of online anomaly scoring: feed
-   * sorted in-batch points of one series through [[graft.operators
-   * .Anomaly.step]] (the literal function the batch path runs, so the
-   * two are bit-identical); emit each point's z-score against the
-   * prior EWM mean/variance. State is one fixed record per live
-   * series; `idleTimeoutMs` evicts idle series exactly like
-   * [[uniformStep]] (same revive-re-anchors divergence note).
-   */
-  def anomalyStep(tauMs: Double, idleTimeoutMs: Long = 0L)(
-      key: String, rows: Iterator[InPoint],
-      state: GroupState[graft.operators.Anomaly.S]): Iterator[OutPoint] = {
-    if (state.hasTimedOut) {
-      state.remove()
-      return Iterator.empty
-    }
-    var s = state.getOption.getOrElse(graft.operators.Anomaly.init)
-    val out = List.newBuilder[OutPoint]
-    rows.toSeq.sortBy(_.ts).foreach { p =>
-      // monotonicity guard: a STRICTLY negative Δt would give α < 0,
-      // driving the EWM variance negative and silently corrupting
-      // every later z-score — drop those. Δt == 0 stays: α = 0 leaves
-      // (m, s2) untouched and the z-score is well-defined, exactly
-      // what the batch recurrence does with a duplicate timestamp.
-      if (s.n == 0L || p.ts >= s.prevTs) {
-        val (next, z) = graft.operators.Anomaly.step(s, p.ts, p.dval, tauMs)
-        s = next
-        z.foreach(v => out += OutPoint(key, p.ts, v))
-      }
-    }
-    state.update(s)
-    if (idleTimeoutMs > 0) state.setTimeoutDuration(idleTimeoutMs)
-    out.result().iterator
-  }
+                 idleTimeoutMs: Long = 3600000L): Dataset[OutPoint] =
+    resumeStream(points, idleTimeoutMs)(() => new Mutations.RateOp(perSecond, signed))
 
   /**
    * Streaming EWMA-control-chart z-scores per series — the streaming
-   * half of [[graft.operators.Mutations.ewmZscore]], bit-equal on
-   * non-decreasing timestamps (duplicate ts is the well-defined α = 0
-   * case and is processed like batch; STRICTLY out-of-order points
-   * are dropped by the monotonicity guard — α < 0 would corrupt the
-   * EWM variance — see [[rateStream]]'s divergence note). Append-mode;
+   * half of [[graft.operators.Mutations.ewmZscore]] (the same
+   * `EwmZscoreOp`), bit-equal on non-decreasing timestamps (duplicate
+   * ts is the well-defined α = 0 case and is processed like batch;
+   * STRICTLY out-of-order points are dropped by the monotonicity guard —
+   * α < 0 would corrupt the EWM variance — see [[rateStream]]'s
+   * divergence note). Idle eviction as in the resampler. Append-mode;
    * downstream alerting is a `filter(abs(dval) > k)` on the output.
    */
   def anomalyStream(points: DataFrame, tauMs: Double,
-                    idleTimeoutMs: Long = 3600000L): Dataset[OutPoint] = {
-    val spark = points.sparkSession
-    import spark.implicits._
-    val timeoutConf =
-      if (idleTimeoutMs > 0) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    Point.withSeriesKey(points)
-      .select(col("skey"), col("ts"), col("dval"))
-      .as[InPoint]
-      .groupByKey(_.skey)
-      .flatMapGroupsWithState(OutputMode.Append(), timeoutConf)(
-        anomalyStep(tauMs, idleTimeoutMs))
-  }
-
-  // ------------------------------------------------- stateful LTTB
+                    idleTimeoutMs: Long = 3600000L): Dataset[OutPoint] =
+    resumeStream(points, idleTimeoutMs)(() => new Mutations.EwmZscoreOp(tauMs))
 
   /**
-   * One flatMapGroupsWithState step of streaming LTTB downsampling:
-   * in-batch points of one series feed the LITERAL batch state machine
-   * ([[graft.operators.Mutations.LttbOp]], restored from its snapshot),
-   * so disorder confined to a batch and every selection rule are
-   * bit-identical to batch by construction. A bucket emits once the
-   * NEXT bucket completes — the op's own lookahead — and the trailing
-   * buckets emit when the idle timeout fires (the streaming stand-in
-   * for end-of-series flush; state is removed with them). Out-of-order
-   * points ACROSS batches that land behind the current bucket would
-   * violate the op's sorted-input contract and are dropped, like
-   * [[rateStream]]'s monotonicity guard.
+   * Streaming LTTB downsample ([[graft.operators.Mutations.LttbOp]]):
+   * every selection rule is bit-identical to batch by construction. A
+   * bucket emits once the NEXT bucket completes — the op's own
+   * lookahead — and the trailing buckets emit when the idle timeout
+   * fires (the streaming stand-in for end-of-series flush; state is
+   * removed with them). Points across batches that land behind the
+   * in-flight buckets are dropped, like [[rateStream]]'s monotonicity
+   * guard; a revived series re-anchors like a new one.
    */
-  def lttbStep(bucketMs: Long, idleTimeoutMs: Long = 0L)(
-      key: String, rows: Iterator[InPoint],
-      state: GroupState[Mutations.LttbSnap]): Iterator[OutPoint] = {
-    if (state.hasTimedOut) {
-      val op = new Mutations.LttbOp(bucketMs).restore(state.get)
-      state.remove()
-      return op.flush().iterator.map { case (t, v) => OutPoint(key, t, v) }
-    }
-    val op = new Mutations.LttbOp(bucketMs)
-    state.getOption.foreach(op.restore)
-    // sorted-input contract within the batch; cross-batch stragglers
-    // behind the in-flight buckets are dropped (guard below)
-    var minOk = state.getOption.map { s =>
-      // buffers dominate; the anchor/selection ts covers the
-      // just-anchored case where both buffers are still empty
-      Seq(if (s.first) Long.MinValue else s.px.toLong,
-        s.curTs.lastOption.getOrElse(Long.MinValue),
-        s.nxtTs.lastOption.getOrElse(Long.MinValue)).max
-    }.getOrElse(Long.MinValue)
-    val out = List.newBuilder[OutPoint]
-    rows.toSeq.sortBy(_.ts).foreach { p =>
-      if (p.ts >= minOk) {
-        minOk = p.ts
-        op.feed(p.ts, p.dval).foreach { case (t, v) =>
-          out += OutPoint(key, t, v)
-        }
-      }
-    }
-    state.update(op.snapshot)
-    if (idleTimeoutMs > 0) state.setTimeoutDuration(idleTimeoutMs)
-    out.result().iterator
-  }
-
-  /** Streaming LTTB downsample; same wrapper/eviction contract as
-    * [[uniformResampleStream]] (idle series flush + evict via timeout;
-    * a revived series re-anchors like a new one). */
   def lttbStream(points: DataFrame, bucketMs: Long,
-                 idleTimeoutMs: Long = 3600000L): Dataset[OutPoint] = {
-    val spark = points.sparkSession
-    import spark.implicits._
-    val timeoutConf =
-      if (idleTimeoutMs > 0) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    Point.withSeriesKey(points)
-      .select(col("skey"), col("ts"), col("dval"))
-      .as[InPoint]
-      .groupByKey(_.skey)
-      .flatMapGroupsWithState(OutputMode.Append(), timeoutConf)(
-        lttbStep(bucketMs, idleTimeoutMs))
-  }
-
-  def uniformResampleStream(points: DataFrame, intervalMs: Long,
-                            idleTimeoutMs: Long = 3600000L): Dataset[OutPoint] = {
-    val spark = points.sparkSession
-    import spark.implicits._
-    val timeoutConf =
-      if (idleTimeoutMs > 0) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    Point.withSeriesKey(points)
-      .select(col("skey"), col("ts"), col("dval"))
-      .as[InPoint]
-      .groupByKey(_.skey)
-      .flatMapGroupsWithState(OutputMode.Append(), timeoutConf)(
-        uniformStep(intervalMs, idleTimeoutMs))
-  }
+                 idleTimeoutMs: Long = 3600000L): Dataset[OutPoint] =
+    resumeStream(points, idleTimeoutMs)(() => new Mutations.LttbOp(bucketMs))
 }

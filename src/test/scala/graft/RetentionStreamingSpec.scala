@@ -179,7 +179,7 @@ class StreamingSpec extends SparkSpec {
     val st = TestGroupState.create[Mutations.LttbSnap](
       Optional.of(op2.snapshot), GroupStateTimeout.ProcessingTimeTimeout(),
       1L, Optional.of(java.lang.Long.valueOf(0L)), hasTimedOut = true)
-    val out = StreamIngest.lttbStep(10000L, idleTimeoutMs = 1000L)(
+    val out = StreamIngest.resumeStep(() => new Mutations.LttbOp(10000L), 1000L)(
       "/s{h=1}", Iterator.empty, st).toList
     assert(out.map(o => (o.ts, o.dval)) == flushed.toList)
     assert(st.isRemoved)
@@ -197,7 +197,7 @@ class StreamingSpec extends SparkSpec {
     // 5000 is behind the buffered 25000: dropped, state's buffers keep
     // their shape (no emission either — bucket 1 still awaits bucket 2's
     // completion)
-    val out = StreamIngest.lttbStep(10000L)(
+    val out = StreamIngest.resumeStep(() => new Mutations.LttbOp(10000L), 0L)(
       "/s", Iterator(StreamIngest.InPoint("/s", 5000L, 99.0)), st).toList
     assert(out.isEmpty)
     assert(st.get.curTs == Seq(12000L) && st.get.nxtTs == Seq(25000L))
@@ -541,6 +541,74 @@ class StreamingSpec extends SparkSpec {
     assert(streamed == Set((20000L, 1.0), (30000L, 1.0)))
   }
 
+  test("a string-valued point does not change the rate or uniform stream") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    // (ts, dval, sval): the string point carries no dval, like the
+    // reference's string-valued samples, which the batch path skips
+    val pts = Seq((0L, Some(10.0), None), (30000L, Some(40.0), None),
+      (45000L, None, Some("down")), (60000L, Some(70.0), None),
+      (150000L, Some(160.0), None))
+    def stream(f: org.apache.spark.sql.DataFrame =>
+                 org.apache.spark.sql.Dataset[StreamIngest.OutPoint],
+               rows: Seq[(Long, Option[Double], Option[String])],
+               table: String): Set[(Long, Double)] = {
+      val mem = MemoryStream[(Long, Option[Double], Option[String])]
+      val q = f(mem.toDF().toDF("ts", "dval", "sval")
+          .select(lit("/n").as("name"), map().cast("map<string,string>").as("labels"),
+            lit("GAUGE").as("value_type"), col("ts"), col("dval"), col("sval"),
+            lit(null).cast("long").as("end_ts")))
+        .writeStream.format("memory").queryName(table)
+        .outputMode("append").start()
+      rows.grouped(2).foreach { b => mem.addData(b); q.processAllAvailable() }
+      val out = spark.table(table)
+        .collect().map(r => (r.getLong(1), r.getDouble(2))).toSet
+      q.stop()
+      out
+    }
+    val clean = pts.filter(_._2.isDefined)
+    val rate = (df: org.apache.spark.sql.DataFrame) =>
+      StreamIngest.rateStream(df, idleTimeoutMs = 0L)
+    val uniform = (df: org.apache.spark.sql.DataFrame) =>
+      StreamIngest.uniformResampleStream(df, 60000L, idleTimeoutMs = 0L)
+    val rateClean = stream(rate, clean, "rate_clean_out")
+    assert(rateClean.nonEmpty)
+    assert(stream(rate, pts, "rate_sval_out") == rateClean)
+    val uniformClean = stream(uniform, clean, "uni_clean_out")
+    assert(uniformClean.nonEmpty)
+    assert(stream(uniform, pts, "uni_sval_out") == uniformClean)
+  }
+
+  test("uniform stream drops a straggler from a later batch, like batch without it") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val batch = Mutations.resampleUniform(
+        graft.model.Point.withSeriesKey(series(
+          Seq(0L -> 100.0, 60000L -> 160.0, 180000L -> 280.0), name = "/u")),
+        60000L)
+      .collect().map(r => (r.getLong(1), r.getDouble(2))).sortBy(_._1).toSeq
+    assert(batch.contains((120000L, 220.0)))
+    val mem = MemoryStream[StreamIngest.InPoint]
+    val q = StreamIngest.uniformResampleStream(mem.toDF()
+        .select(col("skey").as("name"), map().cast("map<string,string>").as("labels"),
+          lit("GAUGE").as("value_type"), col("ts"), col("dval"),
+          lit(null).cast("string").as("sval"), lit(null).cast("long").as("end_ts")),
+        60000L, idleTimeoutMs = 0L)
+      .writeStream.format("memory").queryName("uni_straggler_out")
+      .outputMode("append").start()
+    // the straggler at 30000 arrives after 60000 was fed: followed, it
+    // would anchor the next interpolation (120000 reads 567.6)
+    Seq(Seq(0L -> 100.0, 60000L -> 160.0), Seq(30000L -> 999.0),
+        Seq(180000L -> 280.0)).foreach { b =>
+      mem.addData(b.map { case (t, v) => StreamIngest.InPoint("/u", t, v) })
+      q.processAllAvailable()
+    }
+    val streamed = spark.table("uni_straggler_out")
+      .collect().map(r => (r.getLong(1), r.getDouble(2))).sortBy(_._1).toSeq
+    q.stop()
+    assert(streamed == batch)
+  }
+
   test("anomaly stream skips out-of-order points without corrupting state") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -789,13 +857,13 @@ class StreamingSpec extends SparkSpec {
     val st = TestGroupState.create[graft.operators.Anomaly.S](
       Optional.of(s0), GroupStateTimeout.NoTimeout(), 0L,
       Optional.empty(), hasTimedOut = false)
-    val out = StreamIngest.anomalyStep(60000.0)(
+    val out = StreamIngest.resumeStep(() => new Mutations.EwmZscoreOp(60000.0), 0L)(
       "/a", Iterator(StreamIngest.InPoint("/a", 2000L, 16.0)), st).toList
     // duplicate ts: α = 0 leaves (m, s2) untouched, z = (16-10)/2 = 3
     assert(out == List(StreamIngest.OutPoint("/a", 2000L, 3.0)))
     assert(st.get.m == 10.0 && st.get.s2 == 4.0 && st.get.n == 4L)
     // strictly older: dropped, state untouched
-    val out2 = StreamIngest.anomalyStep(60000.0)(
+    val out2 = StreamIngest.resumeStep(() => new Mutations.EwmZscoreOp(60000.0), 0L)(
       "/a", Iterator(StreamIngest.InPoint("/a", 1999L, 999.0)), st).toList
     assert(out2.isEmpty && st.get.prevTs == 2000L && st.get.n == 4L)
   }
@@ -849,9 +917,9 @@ class StreamingSpec extends SparkSpec {
   test("idle series state is evicted on timeout; a revived series re-anchors") {
     import org.apache.spark.api.java.Optional
     import org.apache.spark.sql.streaming.{GroupStateTimeout, TestGroupState}
-    val step = StreamIngest.uniformStep(60000L, idleTimeoutMs = 3600000L) _
+    val step = StreamIngest.resumeStep(() => new Mutations.UniformOp(60000L), 3600000L) _
     // batch 1: two points arm the state and a processing-time timeout
-    val live = TestGroupState.create[StreamIngest.UniformState](
+    val live = TestGroupState.create[Mutations.UniformState](
       Optional.empty(), GroupStateTimeout.ProcessingTimeTimeout(),
       1000L, Optional.empty(), hasTimedOut = false)
     step("/s{h=1}", Iterator(
@@ -861,13 +929,13 @@ class StreamingSpec extends SparkSpec {
     assert(live.getTimeoutTimestampMs.isPresent &&
       live.getTimeoutTimestampMs.get == 1000L + 3600000L)
     // timeout fires with no new data: state must be REMOVED
-    val timedOut = TestGroupState.create[StreamIngest.UniformState](
+    val timedOut = TestGroupState.create[Mutations.UniformState](
       Optional.of(live.get), GroupStateTimeout.ProcessingTimeTimeout(),
       1000L + 3600001L, Optional.empty(), hasTimedOut = true)
     assert(step("/s{h=1}", Iterator.empty, timedOut).isEmpty)
     assert(timedOut.isRemoved, "idle state must be evicted")
     // revival: fresh state, resampler re-anchors at the new first point
-    val revived = TestGroupState.create[StreamIngest.UniformState](
+    val revived = TestGroupState.create[Mutations.UniformState](
       Optional.empty(), GroupStateTimeout.ProcessingTimeTimeout(),
       1000L + 7200000L, Optional.empty(), hasTimedOut = false)
     step("/s{h=1}", Iterator(
