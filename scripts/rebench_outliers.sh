@@ -37,7 +37,7 @@ EOF
 echo "[rebench] top-$N gates by wall/canonical ratio: $GATES" >&2
 echo "[rebench] load before rerun: $(cut -d' ' -f1 /proc/loadavg)" >&2
 
-SPARK_GRAFT_SF_DIR="$SF" SPARK_GRAFT_BENCH_ONLY="$GATES" \
+SPARK_GRAFT_SF_DIR="$SF" SPARK_GRAFT_ONLY="$GATES" \
   SPARK_GRAFT_BENCH_DETAIL="$OUT" \
   sbt -batch "runMain graft.Bench" >/dev/null 2>&1 || {
     echo "[rebench] bench run FAILED" >&2; exit 1; }

@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 object Bench {
   /**
@@ -41,15 +41,66 @@ object Bench {
    */
   def contamination(preLoad: Double, qLoads: Seq[(String, Double)],
                     postLoad: Double, nprocs: Int): (Boolean, Seq[String]) = {
-    val loadCap = nprocs / 4.0
-    val maxWindowLoad = (qLoads.map(_._2) :+ postLoad).max
     val sorted = qLoads.map(_._2).sorted
     val median = if (sorted.isEmpty) 0.0 else sorted(sorted.size / 2)
     val spiky = qLoads.filter(_._2 > median + nprocs / 2.0).map(_._1)
-    val contaminated = preLoad > loadCap ||
-      maxWindowLoad > nprocs + loadCap || spiky.nonEmpty
-    (contaminated, spiky)
+    (loadTripped(preLoad, qLoads.map(_._2) :+ postLoad, nprocs) || spiky.nonEmpty, spiky)
   }
+
+  /** [[contamination]]'s entry cap (`preLoad` above `nprocs/4`) and
+    * hard physical trip (any in-window load above `nprocs + nprocs/4`),
+    * the two rules every timed harness applies (StreamBench too). */
+  private[graft] def loadTripped(preLoad: Double, windowLoads: Seq[Double],
+                                 nprocs: Int): Boolean = {
+    val loadCap = nprocs / 4.0
+    preLoad > loadCap || windowLoads.exists(_ > nprocs + loadCap)
+  }
+
+  private val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
+
+  /** The host's 1-minute load average. */
+  private[graft] def loadAvg(): Double = osBean.getSystemLoadAverage
+
+  /** This JVM's cumulative CPU seconds (all threads): the r15 blind
+    * spot's antidote — external slowdown inflates a pass's WALL but
+    * not this process's OWN cpu ([[cpuTheft]]); -1 when the platform
+    * bean doesn't expose it (rule 4 then degrades to wall-only
+    * outlier evidence rather than mis-firing). */
+  private[graft] def procCpuSec(): Double = osBean match {
+    case b: com.sun.management.OperatingSystemMXBean => b.getProcessCpuTime / 1e9
+    case _ => -1.0
+  }
+
+  /** 3 decimals (ms precision) keeps the 100+-entry line compact; more
+    * digits are noise at these magnitudes anyway. */
+  private[graft] def r3(v: Double): Double = math.rint(v * 1000) / 1000
+
+  /** Writes the one-line artifact `line` to `path`; a failure is
+    * reported on stderr under `tag` and does not end the run. */
+  private[graft] def writeArtifact(path: String, line: String, tag: String): Unit =
+    try {
+      val w = new java.io.PrintWriter(path, "UTF-8")
+      try w.println(line) finally w.close()
+    } catch {
+      case t: Throwable => System.err.println(s"[$tag] artifact write failed: $t")
+    }
+
+  /** The gates of [[SparkEntry.queries]] named in `only` (all of them
+    * when `None`), sorted by name: the one gate selector of Bench,
+    * Verify and Explain. A name that is no gate is refused, so a typo
+    * fails loudly instead of running nothing. */
+  def gates(only: Option[Set[String]]): Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val all = SparkEntry.queries
+    val unknown = only.getOrElse(Set.empty).filterNot(all.contains).toSeq.sorted
+    require(unknown.isEmpty, "unknown gate name(s): " +
+      unknown.map("'" + _ + "'").mkString(", "))
+    all.toSeq.filter { case (n, _) => only.forall(_.contains(n)) }.sortBy(_._1)
+  }
+
+  /** The gate names of the comma-separated `SPARK_GRAFT_ONLY`; `None`
+    * (every gate) when it is unset. */
+  private[graft] def onlyFromEnv: Option[Set[String]] =
+    sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
 
   /** A gate is a canonical-wall outlier when its measured min-pass
     * wall exceeds [[WallOutlierFactor]]× its committed canonical wall
@@ -113,8 +164,13 @@ object Bench {
   }
 
   /** One timed pass of a gate: wall and own-CPU seconds (-1 when the
-    * platform bean is absent) and the generated classes it compiled. */
-  private[graft] final case class Pass(wall: Double, cpu: Double, compiles: Long)
+    * platform bean is absent), the generated classes it compiled, and
+    * two parts of the wall: `build`, the gate function's call (with any
+    * driver-side actions an iterative gate runs inside it), and `plan`,
+    * analysis, optimization and physical planning of the frame it
+    * returns (-1 when not split). */
+  private[graft] final case class Pass(wall: Double, cpu: Double, compiles: Long,
+                                       build: Double = -1.0, plan: Double = -1.0)
 
   /** The pass a gate reports: its fastest. */
   private[graft] def winner(passes: Seq[Pass]): Option[Pass] =
@@ -168,17 +224,13 @@ object Bench {
     // cluster scales partitions with input). Opt-in env knob; the
     // driver contract (partitions = threads at sf0.1) is unchanged.
     val shufflePartitions = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
+    // local-iteration filter (unset on the driver → all queries),
+    // checked before the session starts
+    val only = onlyFromEnv
+    val gateList = gates(only)
     // shared engine settings live in SparkInit.common (ONE copy — the
     // config Verify verifies is the config Bench times)
-    val spark = SparkInit.common(SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", shufflePartitions))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // local-iteration filter, like Verify's SPARK_GRAFT_ONLY (unset on
-    // the driver → all queries)
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
+    val spark = SparkInit.session(s"local[$cpus]", shufflePartitions.toInt)
     // warm up session/JIT/codegen + parquet footers so the first timed
     // query isn't charged for one-time init. In full-suite mode, also
     // run one CHEAP representative per gate family (r17): a 196-gate
@@ -205,17 +257,6 @@ object Bench {
     // 143.5s clean). Read the 1-min load BEFORE the first timed pass; if
     // it exceeds nproc/4, wait (bounded) for the box to drain, and carry a
     // machine-visible "contaminated" verdict in the emitted JSON either way.
-    val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
-    def loadAvg(): Double = osBean.getSystemLoadAverage
-    // this JVM's cumulative CPU seconds (all threads): the r15 blind
-    // spot's antidote — external slowdown inflates a pass's WALL but
-    // not this process's OWN cpu ([[cpuTheft]]); -1 when the platform
-    // bean doesn't expose it (rule 4 then degrades to wall-only
-    // outlier evidence rather than mis-firing)
-    def procCpuSec(): Double = osBean match {
-      case b: com.sun.management.OperatingSystemMXBean => b.getProcessCpuTime / 1e9
-      case _ => -1.0
-    }
     val nprocs = Runtime.getRuntime.availableProcessors
     val loadCap = nprocs / 4.0
     var preLoad = loadAvg()
@@ -248,18 +289,22 @@ object Bench {
       else
         (parseFlatDoubleMap(txt, "queries"), parseFlatDoubleMap(txt, "cpus"))
     } catch { case _: Throwable => (Map.empty[String, Double], Map.empty[String, Double]) }
-    // one timed pass or an error
-    def timedPass(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame):
-        Either[String, Pass] = {
+    // one timed pass or an error; the plan is forced before execution
+    // only to time it apart (toRdd would plan it first anyway)
+    def timedPass(fn: (SparkSession, String) => DataFrame): Either[String, Pass] = {
       val c0 = procCpuSec()
       val g0 = SparkInit.codegenStats._1
       val t0 = System.nanoTime()
       try {
-        fn(spark, sfDir).queryExecution.toRdd.count()
+        val df = fn(spark, sfDir)
+        val t1 = System.nanoTime()
+        df.queryExecution.executedPlan
+        val t2 = System.nanoTime()
+        df.queryExecution.toRdd.count()
         val wall = (System.nanoTime() - t0) / 1e9
         val c1 = procCpuSec()
         Right(Pass(wall, if (c0 >= 0 && c1 >= 0) math.max(0.0, c1 - c0) else -1.0,
-          SparkInit.codegenStats._1 - g0))
+          SparkInit.codegenStats._1 - g0, (t1 - t0) / 1e9, (t2 - t1) / 1e9))
       } catch {
         case t: Throwable =>
           // record the failure explicitly — an elapsed-to-crash time
@@ -268,11 +313,8 @@ object Bench {
             Option(t.getMessage).getOrElse("").take(200))
       }
     }
-    // deterministic order: stable attribution of warm-cache effects
+    // gates run in name order: stable attribution of warm-cache effects
     // across rounds
-    val gateList = SparkEntry.queries.toSeq
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-      .sortBy(_._1)
     val windowResults = gateList.map { case (name, fn) =>
       // Two timed passes, report the min: a single pass is hostage to
       // whatever else shares the box (GC, page cache churn, concurrent
@@ -340,9 +382,6 @@ object Bench {
     def jstr(s: String): String =
       "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"")
         .replaceAll("[\\n\\r\\t]", " ") + "\""
-    // 3 decimals (ms precision) keeps the 100+-entry line compact; more
-    // digits are noise at these magnitudes anyway
-    def r3(v: Double): Double = math.rint(v * 1000) / 1000
     def perGate(v: Gate => Any): String = jsonObj(results.map(g => g.name -> v(g)))
     val qs = perGate(g => r3(g.best.wall))
     val errs = jsonObj(results.collect { case Gate(k, _, Some(e), _, _) => k -> jstr(e) })
@@ -378,10 +417,13 @@ object Bench {
     // gate's winning pass, and any deferred reruns), so a
     // partially-poisoned window is attributable to the specific queries
     // it touched — and with the generated classes each gate's winning
-    // pass compiled (the codegen layer; -1 for a gate with no pass).
+    // pass compiled (the codegen layer; -1 for a gate with no pass) and
+    // that pass's build and plan seconds (the driver layers).
     val loads = perGate(g => r3(g.load))
     val cpusJson = perGate(g => r3(g.best.cpu))
     val compilesJson = perGate(_.best.compiles)
+    val buildJson = perGate(g => r3(g.best.build))
+    val planJson = perGate(g => r3(g.best.plan))
     val deferredJson = jsonObj(deferredRuns.toSeq.sortBy(_._1).map { case (k, p) =>
       k -> s"[${r3(windowMin(k))},${r3(p.wall)}]"
     })
@@ -392,16 +434,9 @@ object Bench {
     val medVsCanon = medianVsCanonical(clean.map(g => (g.name, g.best.wall)), canonWall)
     val totalNorm = if (medVsCanon > 0) r3(total / medVsCanon) else -1.0
     val detailLine = line.dropRight(1) +
-      s""","loads":$loads,"cpus":$cpusJson,"compiles":$compilesJson,"deferred":$deferredJson,"load_pre":${r3(preLoad)},"load_post":$postLoad,"nproc":$nprocs,"contaminated":$contaminated,"contam_queries":$contamQ,"contam_cpu":$contamCpuQ,"median_vs_canonical":${r3(medVsCanon)},"total_drift_normalized":$totalNorm}"""
-    val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL",
-      "bench_detail.json")
-    try {
-      val w = new java.io.PrintWriter(detailPath, "UTF-8")
-      try w.println(detailLine) finally w.close()
-    } catch {
-      case t: Throwable =>
-        System.err.println(s"[bench] detail artifact write failed: $t")
-    }
+      s""","loads":$loads,"cpus":$cpusJson,"compiles":$compilesJson,"build":$buildJson,"plan":$planJson,"deferred":$deferredJson,"load_pre":${r3(preLoad)},"load_post":$postLoad,"nproc":$nprocs,"contaminated":$contaminated,"contam_queries":$contamQ,"contam_cpu":$contamCpuQ,"median_vs_canonical":${r3(medVsCanon)},"total_drift_normalized":$totalNorm}"""
+    writeArtifact(sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL", "bench_detail.json"),
+      detailLine, "bench")
     // The harness capturing stdout keeps only the tail of the output; the
     // full line above is ~3 KB and can lose its leading fields to
     // truncation. Repeat the headline numbers on a second, short line so

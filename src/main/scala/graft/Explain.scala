@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps `explain("formatted")` for every query (or the ones named in
   * args) — the plan-review loop for the 100 TB posture.
   *
@@ -14,29 +12,25 @@ import org.apache.spark.sql.SparkSession
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
+    val gateList = Bench.gates(Option.when(args.nonEmpty)(args.toSet))
     // shared engine settings live in SparkInit.common; the AQE toggle
-    // is this main's own knob (plan dumps with/without adaptive)
-    val spark = SparkInit.common(SparkSession.builder()
-        .master("local[4]")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.adaptive.enabled",
-          sys.env.getOrElse("SPARK_GRAFT_AQE", "true")))
-      .getOrCreate()
+    // is this main's own knob (plan dumps with/without adaptive), a
+    // runtime SQL conf read at planning time
+    val spark = SparkInit.session("local[4]", 4)
+    spark.conf.set("spark.sql.adaptive.enabled",
+      sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
     spark.sparkContext.setLogLevel("ERROR")
     val execute = sys.env.get("SPARK_GRAFT_EXECUTE").contains("true")
-    val wanted = if (args.isEmpty) SparkEntry.queries.keySet else args.toSet
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter(q => wanted.contains(q._1))
-      .foreach { case (name, fn) =>
-        println(s"\n===================== $name =====================")
-        try {
-          val df = fn(spark, sfDir)
-          if (execute) {
-            df.collect()
-            println(df.queryExecution.executedPlan.toString)
-          } else df.explain("formatted")
-        } catch { case e: Throwable => println(s"explain failed: $e") }
-      }
+    gateList.foreach { case (name, fn) =>
+      println(s"\n===================== $name =====================")
+      try {
+        val df = fn(spark, sfDir)
+        if (execute) {
+          df.collect()
+          println(df.queryExecution.executedPlan.toString)
+        } else df.explain("formatted")
+      } catch { case e: Throwable => println(s"explain failed: $e") }
+    }
     spark.stop()
   }
 }

@@ -9,9 +9,16 @@ import org.apache.spark.sql.SparkSession
  * setting added to one main but not another would silently unpin the
  * oracle from the timed plans).
  *
- * Masters and shuffle-partition counts stay with each main: they are
- * the per-surface contract (Bench reads $SPARK_GRAFT_CPUS, Explain
- * pins local[4], …), not shared engine semantics.
+ * Every main builds its session through [[session]]. Each main still
+ * owns its master and shuffle-partition count, the per-surface
+ * contract rather than shared engine semantics: Bench, Verify and
+ * StreamBench run `local[$SPARK_GRAFT_CPUS]` (default 32, 4 and 32;
+ * Bench's partitions may differ by $SPARK_GRAFT_SHUFFLE); Explain and
+ * Smoke pin `local[4]` with 4; Curate, Cli and StoreHttpServer run
+ * `$GRAFT_MASTER` (default `local[4]`) with $SPARK_GRAFT_CPUS
+ * (default 4) partitions. Explain alone sets a runtime conf
+ * (`spark.sql.adaptive.enabled`) and the ERROR log level on the
+ * session it gets.
  *
  * Why each shared setting exists:
  *  - session.timeZone=UTC — the oracle (DuckDB) computes in UTC;
@@ -61,6 +68,17 @@ import org.apache.spark.sql.SparkSession
 object SparkInit {
   /** Entries of Spark's generated-class cache (see the scaladoc above). */
   val CodegenCacheEntries = 1000
+
+  /** A session with the [[common]] settings on `master` with
+    * `shufflePartitions` shuffle partitions, logging at WARN. */
+  def session(master: String, shufflePartitions: Int): SparkSession = {
+    val spark = common(SparkSession.builder()
+        .master(master)
+        .config("spark.sql.shuffle.partitions", shufflePartitions.toLong))
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 
   def common(b: SparkSession.Builder): SparkSession.Builder =
     b.config("spark.sql.session.timeZone", "UTC")

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.Bench.{loadAvg, procCpuSec, r3}
 import org.apache.spark.sql.functions._
 
 /**
@@ -24,10 +24,12 @@ import org.apache.spark.sql.functions._
  *
  * Setup work (chunking inputs, building the at-rest index, training
  * the model) is untimed; each timed window is one start→drain of an
- * AvailableNow query. The Bench contamination discipline rides along:
- * 1-min loadavg is sampled before each timed window and the artifact
- * carries an entry-cap verdict (`graft.Bench.contamination` semantics;
- * a busy box taints the artifact machine-visibly).
+ * AvailableNow query. Bench's host sampler rides along: 1-min loadavg
+ * is sampled before each timed window and own-process CPU around it
+ * (external theft inflates a window's wall but not this process's
+ * CPU, `graft.Bench.cpuTheft`'s signal), and the artifact carries
+ * `graft.Bench.loadTripped`'s entry-cap and hard-trip verdict (a busy
+ * box taints the artifact machine-visibly).
  *
  * Emits ONE JSON line (stdout + SPARK_GRAFT_STREAM_DETAIL, default
  * streaming_bench.json). Env: SPARK_GRAFT_SF_DIR (input scale),
@@ -43,23 +45,8 @@ object StreamBench {
     // exclusion the batch shingle paths rely on, which the streaming
     // session previously lacked (curateFollow's minhash stage runs the
     // same shingle chains per micro-batch).
-    val spark = SparkInit.common(SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkInit.session(s"local[$cpus]", cpus.toInt)
     val nprocs = Runtime.getRuntime.availableProcessors
-    val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
-    def loadAvg(): Double = osBean.getSystemLoadAverage
-    // own-process CPU seconds — the batch bench's rule-4 signal
-    // (graft.Bench.cpuTheft): external theft inflates a window's wall
-    // but not this process's CPU, so recording both per timed window
-    // makes a stolen streaming artifact adjudicable from the file alone
-    def procCpuSec(): Double = osBean match {
-      case b: com.sun.management.OperatingSystemMXBean => b.getProcessCpuTime / 1e9
-      case _ => -1.0
-    }
-    def r3(v: Double): Double = math.rint(v * 1000) / 1000
     // ENTRY load must be sampled before ANY work — including this
     // process's own untimed setup (the repartition+write of the source
     // chunks pushes 1-min load past nprocs/4 on an idle box and
@@ -167,15 +154,13 @@ object StreamBench {
     val (scoP50, scoP95) = batchPercentiles(q4)
     val scoredRows = spark.read.parquet(s"$tmp/scored").count()
 
-    val loadCap = nprocs / 4.0
     val loads = Seq(entryLoad, ingestLoad, recoveryLoad, curateLoad, scoreLoad)
     // entry cap applies to the FIRST sample only — taken at process
     // start, before even this bench's own setup writes (which push
     // 1-min load past the cap on an idle box); all later samples carry
     // this process's own steady-state and use the hard physical trip —
     // the graft.Bench rule split
-    val contaminated = loads.head > loadCap ||
-      loads.exists(_ > nprocs + loadCap)
+    val contaminated = Bench.loadTripped(entryLoad, loads.tail, nprocs)
     val line =
       s"""{"metric":"stream","sf":"$sfDir","chunks":$chunks,""" +
       s""""ingest":{"rows_in":$nIn,"rows_stored":$stored,"wall":${r3(ingestWall)},"cpu":${r3(ingestCpu)},"rows_per_sec":${r3(stored / ingestWall)},"batches":$batches1,"batch_ms_p50":${r3(ingP50)},"batch_ms_p95":${r3(ingP95)},"recovery_wall":${r3(recoveryWall)},"recovery_cpu":${r3(recoveryCpu)},"recovery_rows_per_sec":${r3(stored / recoveryWall)},"exactly_once":$exactlyOnce},""" +
@@ -183,15 +168,8 @@ object StreamBench {
       s""""score":{"docs_in":$nDocs,"rows_out":$scoredRows,"wall":${r3(scoreWall)},"cpu":${r3(scoreCpu)},"docs_per_sec":${r3(nDocs / scoreWall)},"batch_ms_p50":${r3(scoP50)},"batch_ms_p95":${r3(scoP95)}},""" +
       s""""loads":[${loads.map(r3).mkString(",")}],"nproc":$nprocs,"contaminated":$contaminated}"""
     println(line)
-    val detailPath = sys.env.getOrElse("SPARK_GRAFT_STREAM_DETAIL",
-      "streaming_bench.json")
-    try {
-      val w = new java.io.PrintWriter(detailPath, "UTF-8")
-      try w.println(line) finally w.close()
-    } catch {
-      case t: Throwable =>
-        System.err.println(s"[stream-bench] artifact write failed: $t")
-    }
+    Bench.writeArtifact(sys.env.getOrElse("SPARK_GRAFT_STREAM_DETAIL",
+      "streaming_bench.json"), line, "stream-bench")
     spark.stop()
   }
 }

@@ -1,25 +1,18 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    // local-iteration filter (unset on the driver → all queries)
+    val gateList = Bench.gates(Bench.onlyFromEnv)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // shared engine settings live in SparkInit.common (ONE copy — the
     // config Verify verifies is the config Bench times)
-    val spark = SparkInit.common(SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkInit.session(s"local[$cpus]", cpus.toInt)
     new java.io.File(outDir).mkdirs()
-    // local-iteration filter (unset on the driver → all queries)
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
-    SparkEntry.queries
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-      .foreach { case (name, fn) =>
+    gateList.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name.parquet")
       catch { case e: Throwable =>

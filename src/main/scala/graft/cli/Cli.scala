@@ -328,12 +328,8 @@ object Cli {
       s.stripPrefix("--store=") }
       .orElse(sys.env.get("GRAFT_STORE"))
       .getOrElse(throw new IllegalArgumentException("--store=<path> or GRAFT_STORE required"))
-    val spark = graft.SparkInit.common(SparkSession.builder()
-        .master(sys.env.getOrElse("GRAFT_MASTER", "local[4]"))
-        .config("spark.sql.shuffle.partitions",
-          sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkInit.session(sys.env.getOrElse("GRAFT_MASTER", "local[4]"),
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     rest.toSeq match {
       case Seq("add", specs @ _*) =>
         println(s"added ${runAdd(spark, store, specs)} points")

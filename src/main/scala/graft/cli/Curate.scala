@@ -361,12 +361,8 @@ object Curate {
     val in = opts.getOrElse("in",
       sys.error("--in=<documents parquet> is required"))
     val out = opts.getOrElse("out", sys.error("--out=<dir> is required"))
-    val spark = graft.SparkInit.common(SparkSession.builder()
-        .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-        .config("spark.sql.shuffle.partitions",
-          sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkInit.session(sys.env.getOrElse("GRAFT_MASTER", "local[4]"),
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     try {
       val benchSource = opts.getOrElse("bench-source", "src1")
       val qualityMin = opts.get("quality-min").map(_.toDouble).getOrElse(0.3)

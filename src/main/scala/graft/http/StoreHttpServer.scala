@@ -336,12 +336,8 @@ object StoreHttpServer {
     val retention = opts.get("config")
       .map(p => graft.config.StoreConfig.parseFile(p).retention)
       .getOrElse(graft.retention.Retention.Policy(Nil))
-    val spark = graft.SparkInit.common(SparkSession.builder()
-        .master(sys.env.getOrElse("GRAFT_MASTER", "local[4]"))
-        .config("spark.sql.shuffle.partitions",
-          sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkInit.session(sys.env.getOrElse("GRAFT_MASTER", "local[4]"),
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     val s = new StoreHttpServer(spark, store,
       opts.get("port").map(_.toInt).getOrElse(8020),
       retention = retention,

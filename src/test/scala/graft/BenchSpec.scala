@@ -183,4 +183,50 @@ class BenchSpec extends AnyFunSuite {
     assert(Bench.parseFlatDoubleMap(line, "compiles") ==
       Map("g1" -> 0.0, "g2" -> 31.0, "g_err" -> -1.0))
   }
+
+  test("build and plan: per-gate maps read back beside queries and cpus") {
+    val p = Bench.Pass(0.9, 7.5, 0L, build = 0.125, plan = 0.25)
+    val line = Bench.jsonObj(Seq(
+      "metric" -> "\"total\"",
+      "queries" -> Bench.jsonObj(Seq("g1" -> 0.9, "g2" -> 2.5)),
+      "cpus" -> Bench.jsonObj(Seq("g1" -> 7.5, "g2" -> 3.0)),
+      "compiles" -> Bench.jsonObj(Seq("g1" -> 0L, "g2" -> 31L)),
+      "build" -> Bench.jsonObj(Seq("g1" -> p.build, "g2" -> 1.0)),
+      "plan" -> Bench.jsonObj(Seq("g1" -> p.plan, "g2" -> -1.0))))
+    assert(Bench.parseFlatDoubleMap(line, "build") == Map("g1" -> 0.125, "g2" -> 1.0))
+    assert(Bench.parseFlatDoubleMap(line, "plan") == Map("g1" -> 0.25, "g2" -> -1.0))
+    assert(Bench.parseFlatDoubleMap(line, "queries") == Map("g1" -> 0.9, "g2" -> 2.5))
+    assert(Bench.parseFlatDoubleMap(line, "cpus") == Map("g1" -> 7.5, "g2" -> 3.0))
+  }
+
+  test("the gate selector sorts by name and refuses a name that is no gate") {
+    val all = Bench.gates(None).map(_._1)
+    assert(all == SparkEntry.queries.keys.toSeq.sorted)
+    val real = all.head
+    assert(Bench.gates(Some(Set(real))).map(_._1) == Seq(real))
+    val err = intercept[IllegalArgumentException](
+      Bench.gates(Some(Set(real, "no_such_gate")))).getMessage
+    assert(err.contains("'no_such_gate'") && !err.contains(s"'$real'"), err)
+  }
+
+  test("sessions are built only in SparkInit, and only the eight mains remain") {
+    val main = new java.io.File("src/main/scala")
+    assert(main.isDirectory, main.getAbsolutePath)
+    def scala(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(scala)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    val sources = scala(main).map { f =>
+      main.toPath.relativize(f.toPath).toString ->
+        new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+    }
+    val builders = sources.collect {
+      case (f, text) if text.contains("SparkSession.builder()") => f }
+    assert(builders == Seq("graft/SparkInit.scala"), builders.mkString("\n"))
+    val mains = sources.flatMap { case (f, text) =>
+      Seq.fill("def main\\(".r.findAllIn(text).size)(f) }.sorted
+    assert(mains == Seq("graft/Bench.scala", "graft/Explain.scala",
+      "graft/Smoke.scala", "graft/StreamBench.scala", "graft/Verify.scala",
+      "graft/cli/Cli.scala", "graft/cli/Curate.scala",
+      "graft/http/StoreHttpServer.scala"), mains.mkString("\n"))
+  }
 }

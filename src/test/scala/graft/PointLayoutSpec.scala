@@ -144,6 +144,39 @@ class PointLayoutSpec extends SparkSpec {
     assert(!fs(tmp).exists(new Path(s"$tmp/cold")))
   }
 
+  test("readTiered over a sink store returns hot and cold points exactly once") {
+    val tmp = tmpDir("graft_sink_tiered")
+    val (src, store, cold) = (s"$tmp/src", s"$tmp/store", s"$tmp/cold")
+    val day = 86400000L
+    val t0 = 1704067200000L // 2024-01-01
+    val host = Map("hostname" -> "h1")
+    // hot, through the streaming sink: two days, the second one shared
+    // with the cold tier
+    series(Seq(t0 + 1000L -> 1.0, t0 + day + 1000L -> 2.0), "/tier/a", host)
+      .unionByName(series(Seq(t0 + day + 2000L -> 3.0), "/tier/b", host))
+      .write.parquet(src)
+    val q = graft.streaming.StreamIngest.ingest(spark, src, store, s"$tmp/ckpt")
+    q.awaitTermination()
+    assert(q.exception.isEmpty, q.exception)
+    assert(fs(tmp).exists(new Path(s"$store/_spark_metadata")))
+    // cold: a day only it holds, plus the shared day with one point the
+    // hot tier also holds (aging residue) and one it does not
+    PointSource.writeGorilla(Point.withSeriesKey(
+      series(Seq(t0 + day + 1000L -> 2.0), "/tier/a", host)
+        .unionByName(series(Seq(t0 - day + 5000L -> 4.0, t0 + day + 3000L -> 5.0),
+          "/tier/c", host))), cold)
+    val rows = PointSource.readTiered(spark, store, cold)
+      .select(col("name"), col("labels")("hostname"), col("ts"), col("dval"))
+      .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getDouble(3)))
+      .sortBy(r => (r._1, r._3)).toSeq
+    assert(rows == Seq(
+      ("/tier/a", "h1", t0 + 1000L, 1.0),
+      ("/tier/a", "h1", t0 + day + 1000L, 2.0),
+      ("/tier/b", "h1", t0 + day + 2000L, 3.0),
+      ("/tier/c", "h1", t0 - day + 5000L, 4.0),
+      ("/tier/c", "h1", t0 + day + 3000L, 5.0)))
+  }
+
   test("the point layout and its day rule are spelled only in PointSource") {
     val main = new java.io.File("src/main/scala")
     assert(main.isDirectory, main.getAbsolutePath)
