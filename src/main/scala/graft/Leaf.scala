@@ -22,6 +22,11 @@ import org.apache.spark.storage.StorageLevel
  * Not `.cache()`: an `InMemoryRelation` keeps the whole cached plan in
  * every consumer's plan, and its scan absorbs the consumers' filters
  * and pruned columns.
+ *
+ * [[graft.cli.Curate]] holds up to four: the probe's shingle sets
+ * (`runIncremental`: the index lookup and the index append both read
+ * them, so an increment shingles its texts once), the corpus dup ids,
+ * the scored flags and the boilerplate-stripped text.
  */
 final class Leaf private (val df: DataFrame, rows: RDD[InternalRow]) {
   def release(): Unit = rows.unpersist(blocking = false)

@@ -3,9 +3,10 @@ package graft.cli
 import graft.Leaf
 import graft.dedup.Dedup
 import graft.text.TextOps
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /**
  * End-to-end training-data curation pipeline — the composition a real
@@ -56,10 +57,28 @@ object Curate {
   /** The map-side scoring stage (quality + language) — shared verbatim
     * by the batch pipeline and any streaming ingest front (it is a
     * pure projection, so it runs unchanged under readStream; spec'd
-    * batch-vs-stream bit-equal in CurateSpec). */
-  def score(df: DataFrame): DataFrame = df
-    .withColumn("quality", round(TextOps.qualityScore(col("text")), 4))
-    .withColumn("lang_pred", TextOps.langId(col("text")))
+    * batch-vs-stream bit-equal in CurateSpec).
+    *
+    * Equal to `round(TextOps.qualityScore(text), 4)` and
+    * `TextOps.langId(text)`, but the text is split once: the tokens
+    * and the per-language stopword ratios are projected as columns, and
+    * both scores are derived from them (the quality's stopword ratio is
+    * the `en` one). Each is read more than once downstream, so
+    * CollapseProject does not inline them back (CurateSpec pins one
+    * `split` in the optimized plan). */
+  def score(df: DataFrame): DataFrame = {
+    val ratios = TextOps.LangStopwords.map { case (l, ws) =>
+      (l, s"__sw_$l", TextOps.wordRatio(col("__toks"), ws))
+    }
+    ratios.foldLeft(df.withColumn("__toks", TextOps.tokens(col("text")))) {
+        case (d, (_, c, ratio)) => d.withColumn(c, ratio)
+      }
+      .withColumn("quality", round(TextOps.qualityOf(col("text"),
+        col("__toks"), col("__sw_en")), 4))
+      .withColumn("lang_pred",
+        TextOps.langOf(ratios.map { case (l, c, _) => l -> col(c) }))
+      .drop("__toks" +: ratios.map(_._2): _*)
+  }
 
   def run(spark: SparkSession, in: String, out: String,
           benchSource: String = "src1", qualityMin: Double = 0.3,
@@ -80,6 +99,29 @@ object Curate {
    * corpus — the probe is a banded index lookup (linear in the new
    * batch) and the index append writes only new files
    * ([[Dedup.minhashAppend]]'s no-rewrite contract).
+   *
+   * Each piece of work runs once. The probe's shingle sets are a
+   * [[Leaf]] that both the lookup and the append read, every parquet
+   * path graft wrote is read with its pinned schema, and no counter
+   * costs a query of its own. The actions of a warm increment, the
+   * budget CurateSpec pins (adaptive execution adds one job per
+   * shuffle stage):
+   *
+   *   1. schema inference over `in`, a caller's table;
+   *   2. the non-negative id guard, a one-job fold over the ids;
+   *   3. the shuffle stages of the dup-id, flags and stripped-text
+   *      leaves, which adaptive execution runs as each leaf is built
+   *      (the probe-sets leaf has none);
+   *   4. the stage counters, a one-job fold over the flags leaf;
+   *   5. the boilerplate drop counter, a one-job fold over the stripped
+   *      text;
+   *   6. the near-dup pairs' count and collect in
+   *      [[Dedup.duplicateGroups]], for the leakage-safe split;
+   *   7. the output write, which also counts rows per split
+   *      (`Dataset.observe`);
+   *   8. the dup count, a one-job fold over the dup-id leaf's rows;
+   *   9. the index append: the staged `sets` write of the accepted
+   *      ids' probe sets, then the `sets` and `bands` appends.
    */
   def runIncremental(spark: SparkSession, in: String, out: String,
                      indexPath: String,
@@ -94,9 +136,10 @@ object Curate {
     // indexed id and silently mis-drop or mis-pass documents — fail
     // loudly instead of corrupting dedup decisions (one column-pruned
     // min scan, cheap next to the probe itself)
-    val minIdRow = docs.agg(min("doc_id")).collect()(0)
-    require(minIdRow.isNullAt(0) || minIdRow.getLong(0) >= 0L,
-      s"runIncremental requires non-negative doc_ids, found ${minIdRow.get(0)}: " +
+    val minId = foldLongs(docs.select(col("doc_id").cast("long")),
+      Long.MaxValue)(math.min).head
+    require(minId >= 0L,
+      s"runIncremental requires non-negative doc_ids, found $minId: " +
         "the -doc_id - 1 surrogate remap would alias onto indexed ids")
     val isBench = coalesce(col("source") === benchSource, lit(false))
     val fs = org.apache.hadoop.fs.FileSystem.get(
@@ -108,33 +151,45 @@ object Curate {
     // re-crawl carries its original doc_id — without the remap an
     // exact re-crawl of an indexed doc would sail through as "self".
     // (Assumes non-negative document ids, the table contract.)
-    // A persisted leaf (materialization point 1 of 3, see curateFrame):
-    // the tiny id-only frame feeds the dup count and, through `novel`,
-    // the scoring pass; as a leaf the index read + LSH probe run once
-    // and no consumer re-plans the lookup's tree.
-    val dupIds = if (!indexExists) None else Some(Leaf.persist(
-      Dedup.minhashLookup(spark, indexPath,
-          docs.filter(!isBench)
-            .withColumn("doc_id", -col("doc_id") - 1), threshold = 0.5)
-        .select((-col("probe_id") - 1).as("doc_id")).distinct()))
-    val rep =
-      try {
-        val nDup = dupIds.fold(0L)(_.df.count())
-        val novel = dupIds.fold(docs)(d => docs.join(d.df, Seq("doc_id"), "left_anti"))
-        curateFrame(spark, novel, out, benchSource, qualityMin, lang,
-          ngram, segWidth, segMaxDf, bin, shards, classifierMin)
-          .copy(nDupVsCorpus = nDup)
-      } finally dupIds.foreach(_.release())
-    // index the RAW text of every doc this increment accepted — probes
-    // and index entries must be the same text form or lookups quietly
-    // stop matching
-    val acceptedRaw = docs
-      .join(spark.read.parquet(out).select("doc_id"), "doc_id")
-      .select("doc_id", "text")
-    if (indexExists) Dedup.minhashAppend(acceptedRaw, indexPath)
-    else Dedup.minhashIndex(acceptedRaw, indexPath)
-    rep
+    // Two persisted leaves besides curateFrame's: the probe's shingle
+    // sets, which the lookup reads now and the append reads after the
+    // write (the texts are shingled once), and the tiny dup-id frame,
+    // which feeds the scoring pass through `novel` and then the dup
+    // count; as a leaf the index read + LSH probe run once and no
+    // consumer re-plans the lookup's tree.
+    val probeSets = Option.when(indexExists)(Leaf.persist(Dedup.minhashSets(
+      docs.filter(!isBench).withColumn("doc_id", -col("doc_id") - 1))))
+    try {
+      val dupIds = probeSets.map(ps => Leaf.persist(
+        Dedup.minhashLookupSets(spark, indexPath, ps.df, threshold = 0.5)
+          .select((-col("probe_id") - 1).as("doc_id")).distinct()))
+      val rep =
+        try {
+          val novel = dupIds.fold(docs)(d => docs.join(d.df, Seq("doc_id"), "left_anti"))
+          curateFrame(spark, novel, out, benchSource, qualityMin, lang,
+            ngram, segWidth, segMaxDf, bin, shards, classifierMin)
+            .copy(nDupVsCorpus = dupIds.fold(0L)(d =>
+              foldLongs(d.df.select(lit(1L)), 0L)(_ + _).head))
+        } finally dupIds.foreach(_.release())
+      // index the RAW text of every doc this increment accepted — probes
+      // and index entries must be the same text form or lookups quietly
+      // stop matching. `out` holds no part file when every document was
+      // filtered out, so it is read with a pinned schema.
+      val accepted = spark.read.schema(AcceptedIds).parquet(out)
+      probeSets match {
+        case Some(ps) => Dedup.minhashAppendSets(
+          ps.df.select((-col("id") - 1).as("id"), col("sh"))
+            .join(accepted.select(col("doc_id").as("id")), "id"), indexPath)
+        case None => Dedup.minhashIndex(
+          docs.join(accepted.select("doc_id"), "doc_id").select("doc_id", "text"),
+          indexPath)
+      }
+      rep
+    } finally probeSets.foreach(_.release())
   }
+
+  /** The one column of the written output the index append reads. */
+  private val AcceptedIds = StructType(Seq(StructField("doc_id", LongType)))
 
   /**
    * Continuous curation — the streaming twin of [[runIncremental]]'s
@@ -221,9 +276,10 @@ object Curate {
         graft.text.Classifier.probability(col("text"), model) >= minP
     }
 
-    // Three frames feed several later stages each: the scored flags
+    // Several frames feed several later stages each: the scored flags
     // below, the boilerplate-stripped text, and (runIncremental) the
-    // corpus dup ids. Each is materialized ONCE as a persisted leaf
+    // probe's shingle sets and the corpus dup ids. Each is
+    // materialized ONCE as a persisted leaf
     // ([[Leaf]]). Composed lazily instead, an 800-doc increment
     // ran the scoring pass (quality, language, md5 keeper window) 8
     // times: filters inferred on the composed input gave the cut's and
@@ -261,13 +317,9 @@ object Curate {
       val scored = flagged.filter(col("__k"))
       val gated = flagged.filter(col("__g"))
       // stage counters in ONE pass over the flags
-      val statsRow = flagged
-        .agg(count(lit(1)).as("nInput"),
-          count(when(col("__k"), 1)).as("nDeduped"),
-          count(when(col("__g") && !col("__b"), 1)).as("nGated"))
-        .collect()(0)
-      val (nInput, nDeduped, nGated) =
-        (statsRow.getLong(0), statsRow.getLong(1), statsRow.getLong(2))
+      def ones(c: Column) = when(c, 1L).otherwise(0L)
+      val Array(nInput, nDeduped, nGated) = foldLongs(flagged.select(lit(1L),
+        ones(col("__k")), ones(col("__g") && !col("__b"))), 0L)(_ + _)
 
       // 3. decontamination span cut (returns the gated non-bench docs,
       // row-for-row — nCut ≡ nGated by construction; text shrinks)
@@ -285,8 +337,8 @@ object Curate {
           width = segWidth, maxDf = segMaxDf))
       // counted BEFORE the empty filter: fully-boilerplate docs are
       // exactly the ones that dropped the most segments
-      val nBoilerDropped = strippedAll
-        .agg(coalesce(sum("n_dropped"), lit(0L))).collect()(0).getLong(0)
+      val nBoilerDropped =
+        foldLongs(strippedAll.select(col("n_dropped").cast("long")), 0L)(_ + _).head
       val stripped = strippedAll.filter(length(col("clean_text")) > 0)
 
       // 5. leakage-safe split: near-dup groups (MinHash+LSH over the
@@ -302,8 +354,8 @@ object Curate {
           conv(substring(md5(concat(lit("g#"), col("gid").cast("string"))),
             1, 4), 16, 10).cast("long") % 100)
         .withColumn("split",
-          when(col("bucket") < 90, "train")
-            .when(col("bucket") < 95, "val").otherwise("test"))
+          when(col("bucket") < 90, Splits(0))
+            .when(col("bucket") < 95, Splits(1)).otherwise(Splits(2)))
 
       // 6. deterministic shard + token packing offsets per (split, shard)
       val packed = split
@@ -323,23 +375,39 @@ object Curate {
           "n_tok", "shard", "start_off", "bin_first", "split")
 
       // shard-clustered, offset-ordered files: a trainer reading shard s
-      // gets its documents contiguous and in packing order
+      // gets its documents contiguous and in packing order. The rows per
+      // split are counted by the write itself; an empty write observes
+      // no rows and returns no metrics, so a missing split is 0 and
+      // a fully-filtered corpus reports nFinal=0
+      val written = Observation()
+      val perSplitCounts = Splits.map(s => count(when(col("split") === s, 1)).as(s))
       packed
+        .observe(written, perSplitCounts.head, perSplitCounts.tail: _*)
         .repartition(col("split"), col("shard"))
         .sortWithinPartitions(col("split"), col("shard"), col("start_off"))
         .write.mode("overwrite").partitionBy("split").parquet(out)
-
-      // explicit schema: a fully-filtered corpus (tiny / all-boilerplate
-      // / fully-contaminated) writes no part files, and schema INFERENCE
-      // over that empty dir throws — with the schema pinned the re-read
-      // returns an empty frame and the report says nFinal=0 instead
-      val outDf = spark.read.schema(packed.schema).parquet(out)
-      val perSplit = outDf.groupBy("split").count().collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      val perSplit = Splits.flatMap(s => written.get.get(s).collect {
+        case n: Long if n > 0 => s -> n
+      }).toMap
       Report(nInput, nDeduped, nGated, nCut, perSplit.values.sum,
         nBoilerDropped, perSplit)
     } finally leaves.foreach(_.release())
   }
+
+  /** Folds each long column of `df` over its rows with `op`, a null
+    * counting as `zero`, in ONE job. `df` must be a per-row projection
+    * of a scan or a [[Leaf]], with no exchange: the SQL form of a
+    * global aggregate plans one, which adaptive execution runs as a
+    * job of its own. */
+  private def foldLongs(df: DataFrame, zero: Long)(op: (Long, Long) => Long): Array[Long] = {
+    val n = df.columns.length
+    df.queryExecution.toRdd
+      .map(r => Array.tabulate(n)(i => if (r.isNullAt(i)) zero else r.getLong(i)))
+      .fold(Array.fill(n)(zero))((a, b) => Array.tabulate(n)(i => op(a(i), b(i))))
+  }
+
+  /** The values of the output's `split` column. */
+  private val Splits = Seq("train", "val", "test")
 
   private val KnownOpts = Set("in", "out", "index", "bench-source",
     "quality-min", "lang", "ngram", "seg-width", "seg-maxdf", "bin", "shards",

@@ -4,6 +4,7 @@ import graft.text.TextOps
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /**
  * Deduplication operators for training-data pipelines (SURVEY.md §7.5):
@@ -457,20 +458,23 @@ object Dedup {
    * append verifies `marker` first (mixed schemes corrupt recall),
    * stages the new key rows under `path/staging-<keyDir>`, extends both
    * halves via parquet append — only new files appear, existing data
-   * is never rewritten — and deletes the staging directory.
+   * is never rewritten — and deletes the staging directory. Key rows
+   * are read back with `keySchema`, the layout's pinned schema, so no
+   * read runs a schema-inference job.
    */
   private def sketchIndex(keys: DataFrame, path: String, keyDir: String,
+                          keySchema: StructType,
                           bandsOf: DataFrame => DataFrame, marker: String,
                           rebuildHint: String, append: Boolean): Unit = {
     val spark = keys.sparkSession
     if (!append) {
       keys.write.mode("overwrite").parquet(s"$path/$keyDir")
-      rebandSketch(spark, path, keyDir, bandsOf, marker)
+      rebandSketch(spark, path, keyDir, keySchema, bandsOf, marker)
     } else {
       graft.model.IndexFormat.check(spark, path, marker, rebuildHint)
       val staged = s"$path/staging-$keyDir"
       keys.write.mode("overwrite").parquet(staged)
-      val stored = spark.read.parquet(staged)
+      val stored = spark.read.schema(keySchema).parquet(staged)
       stored.write.mode("append").parquet(s"$path/$keyDir")
       bandsOf(stored).write.mode("append").parquet(s"$path/bands")
       // resolve the filesystem FROM the staging path — FileSystem.get
@@ -486,10 +490,10 @@ object Dedup {
     * banding migration. Key rows and bands are disjoint directories,
     * so no staging hop is needed. */
   private def rebandSketch(spark: org.apache.spark.sql.SparkSession,
-                           path: String, keyDir: String,
+                           path: String, keyDir: String, keySchema: StructType,
                            bandsOf: DataFrame => DataFrame,
                            marker: String): Unit = {
-    bandsOf(spark.read.parquet(s"$path/$keyDir"))
+    bandsOf(spark.read.schema(keySchema).parquet(s"$path/$keyDir"))
       .write.mode("overwrite").parquet(s"$path/bands")
     graft.model.IndexFormat.write(spark, path, marker)
   }
@@ -506,9 +510,33 @@ object Dedup {
                    idCol: String = "doc_id", textCol: String = "text"): Unit = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     sketchIndex(shingleSets(df, idCol, textCol, n), path, "sets",
-      bandRows(_, numHashes, bands), minhashFormat(n, numHashes, bands),
-      MinhashRebuildHint, append = false)
+      MinhashSetsSchema, bandRows(_, numHashes, bands),
+      minhashFormat(n, numHashes, bands), MinhashRebuildHint, append = false)
   }
+
+  /** Schemas of a [[minhashIndex]]'s `path/sets` (id, sh) and
+    * `path/bands` (id, band) as a parquet read-back reports them (every
+    * field nullable). Readers pass them, so reading an index runs no
+    * schema-inference job; IndexLayoutSpec pins them to what the
+    * writers write. */
+  val MinhashSetsSchema: StructType = StructType(Seq(
+    StructField("id", LongType), StructField("sh", ArrayType(LongType))))
+  val MinhashBandsSchema: StructType = StructType(Seq(
+    StructField("id", LongType), StructField("band", StringType)))
+  private def minhashSetsAt(spark: org.apache.spark.sql.SparkSession,
+                           path: String): DataFrame =
+    spark.read.schema(MinhashSetsSchema).parquet(s"$path/sets")
+  private def minhashBandsAt(spark: org.apache.spark.sql.SparkSession,
+                            path: String): DataFrame =
+    spark.read.schema(MinhashBandsSchema).parquet(s"$path/bands")
+
+  /** The (id, sh) shingle-set rows [[minhashIndex]] stores under
+    * `path/sets`. A caller that probes an index and then appends part
+    * of the same batch computes them once and passes them to
+    * [[minhashLookupSets]] and [[minhashAppendSets]]. */
+  def minhashSets(df: DataFrame, n: Int = 3, idCol: String = "doc_id",
+                  textCol: String = "text"): DataFrame =
+    shingleSets(df, idCol, textCol, n)
 
   /** Migrate a [[minhashIndex]] to a new banding scheme: regenerate
     * `path/bands` from the stored (banding-independent) `path/sets`
@@ -520,8 +548,8 @@ object Dedup {
                           path: String, n: Int = 3, numHashes: Int = 16,
                           bands: Int = 4): Unit = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    rebandSketch(spark, path, "sets", bandRows(_, numHashes, bands),
-      minhashFormat(n, numHashes, bands))
+    rebandSketch(spark, path, "sets", MinhashSetsSchema,
+      bandRows(_, numHashes, bands), minhashFormat(n, numHashes, bands))
   }
 
   /**
@@ -539,9 +567,16 @@ object Dedup {
    */
   def minhashAppend(df: DataFrame, path: String, n: Int = 3,
                     numHashes: Int = 16, bands: Int = 4,
-                    idCol: String = "doc_id", textCol: String = "text"): Unit = {
+                    idCol: String = "doc_id", textCol: String = "text"): Unit =
+    minhashAppendSets(shingleSets(df, idCol, textCol, n), path, n,
+      numHashes, bands)
+
+  /** [[minhashAppend]] of already-computed [[minhashSets]] rows, built
+    * with the same `n`: no tokenizing. */
+  def minhashAppendSets(sets: DataFrame, path: String, n: Int = 3,
+                        numHashes: Int = 16, bands: Int = 4): Unit = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    sketchIndex(shingleSets(df, idCol, textCol, n), path, "sets",
+    sketchIndex(sets, path, "sets", MinhashSetsSchema,
       bandRows(_, numHashes, bands), minhashFormat(n, numHashes, bands),
       MinhashRebuildHint, append = true)
   }
@@ -556,13 +591,19 @@ object Dedup {
   def minhashLookup(spark: org.apache.spark.sql.SparkSession, path: String,
                     probes: DataFrame, n: Int = 3, numHashes: Int = 16,
                     bands: Int = 4, threshold: Double = 0.5,
-                    idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+                    idCol: String = "doc_id", textCol: String = "text"): DataFrame =
+    minhashLookupSets(spark, path, shingleSets(probes, idCol, textCol, n),
+      n, numHashes, bands, threshold)
+
+  /** [[minhashLookup]] of already-computed [[minhashSets]] probe rows,
+    * built with the same `n`: (probe_id, corpus_id, jaccard). */
+  def minhashLookupSets(spark: org.apache.spark.sql.SparkSession, path: String,
+                        probeSets: DataFrame, n: Int = 3, numHashes: Int = 16,
+                        bands: Int = 4, threshold: Double = 0.5): DataFrame = {
     minhashCheck(spark, path, n, numHashes, bands)
-    lookupFromSets(
-      spark.read.parquet(s"$path/sets"),
-      shingleSets(probes, idCol, textCol, n).repartition(col("id")),
-      numHashes, bands, threshold,
-      corpusBands = Some(spark.read.parquet(s"$path/bands")))
+    lookupFromSets(minhashSetsAt(spark, path),
+      probeSets.repartition(col("id")), numHashes, bands, threshold,
+      corpusBands = Some(minhashBandsAt(spark, path)))
   }
 
   /**
@@ -600,9 +641,9 @@ object Dedup {
     // identical micro-batch rows) and the ONE watermarked dedup below
     // emits it once with watermark-bounded state.
     val verified = lookupFromSets(
-      spark.read.parquet(s"$path/sets"), psets,
+      minhashSetsAt(spark, path), psets,
       numHashes, bands, threshold,
-      corpusBands = Some(spark.read.parquet(s"$path/bands")),
+      corpusBands = Some(minhashBandsAt(spark, path)),
       carryCols = Seq("event_time"), probeCarriesSets = true)
     verified
       .withWatermark("event_time", watermark)
@@ -649,8 +690,8 @@ object Dedup {
       carry = "event_time" +: keep)
     val pb = bandRows(psets, numHashes, bands,
       carry = "sh" +: "event_time" +: keep)
-    val cb = spark.read.parquet(s"$path/bands")
-    val cs = spark.read.parquet(s"$path/sets")
+    val cb = minhashBandsAt(spark, path)
+    val cs = minhashSetsAt(spark, path)
     // left joins: a document whose bands hit nothing (or whose id
     // collides with nothing in the sets half) must still emit a row
     val cand = pb.as("p")
@@ -1013,6 +1054,10 @@ object Dedup {
     * History: v1 = 4 exploded 15-bit single bands (pre-r13);
     * v2 = 20 compound 3-of-6 10-bit-block keys ([[SimhashBlockCombos]]). */
   val SimhashBandFormat = "simhash-bands v2 3of6-blocks"
+  /** Schema of a [[simhashIndex]]'s `path/sigs` (id, sig) as a parquet
+    * read-back reports it, the [[MinhashSetsSchema]] counterpart. */
+  val SimhashSigsSchema: StructType = StructType(Seq(
+    StructField("id", LongType), StructField("sig", LongType)))
 
   private val SimhashRebuildHint =
     "Run Dedup.simhashRebuildBands(spark, path) to regenerate path/bands " +
@@ -1028,7 +1073,8 @@ object Dedup {
     * [[SimhashBandFormat]] and stamp the marker. One linear pass. */
   def simhashRebuildBands(spark: org.apache.spark.sql.SparkSession,
                           path: String): Unit =
-    rebandSketch(spark, path, "sigs", simhashBandRows(_), SimhashBandFormat)
+    rebandSketch(spark, path, "sigs", SimhashSigsSchema, simhashBandRows(_),
+      SimhashBandFormat)
 
   /**
    * Materialize the at-rest SimHash near-dup index under `path`:
@@ -1043,7 +1089,8 @@ object Dedup {
   def simhashIndex(df: DataFrame, path: String, idCol: String = "doc_id",
                    textCol: String = "text"): Unit =
     sketchIndex(simhashSignatures(df, idCol, textCol), path, "sigs",
-      simhashBandRows(_), SimhashBandFormat, SimhashRebuildHint, append = false)
+      SimhashSigsSchema, simhashBandRows(_), SimhashBandFormat,
+      SimhashRebuildHint, append = false)
 
   /** Append new documents to a materialized [[simhashIndex]] — same
     * contract and staging shape as [[minhashAppend]]: signatures are
@@ -1052,7 +1099,8 @@ object Dedup {
                     idCol: String = "doc_id",
                     textCol: String = "text"): Unit =
     sketchIndex(simhashSignatures(df, idCol, textCol), path, "sigs",
-      simhashBandRows(_), SimhashBandFormat, SimhashRebuildHint, append = true)
+      SimhashSigsSchema, simhashBandRows(_), SimhashBandFormat,
+      SimhashRebuildHint, append = true)
 
   /** Probe a [[simhashIndex]] with a batch of new documents:
     * (probe_id, corpus_id, dist) per near-dup already held. */

@@ -72,8 +72,14 @@ object TextOps {
    */
   def qualityScore(text: Column): Column = {
     val toks = tokens(text)
+    qualityOf(text, toks, wordRatio(toks, EnStopwords))
+  }
+
+  /** [[qualityScore]] from `text`, its [[tokens]] `toks` and their
+    * [[EnStopwords]] ratio `stop`, for a projection that tokenizes
+    * once ([[graft.cli.Curate.score]]). */
+  def qualityOf(text: Column, toks: Column, stop: Column): Column = {
     val lenSat = least(size(toks) / lit(100.0), lit(1.0))
-    val stop = wordRatio(toks, EnStopwords)
     val punct = when(length(text) === 0, lit(0.0))
       .otherwise(punctCount(text) / length(text).cast("double"))
     greatest(lit(0.0), lenSat * 0.5 + stop * 0.5 - punct)
@@ -83,7 +89,7 @@ object TextOps {
 
   /** Tiny per-language stopword lists for the n-gram/stopword heuristic. */
   val LangStopwords: Seq[(String, Seq[String])] = Seq(
-    "en" -> Seq("the", "a", "of", "and", "to", "in", "is"),
+    "en" -> EnStopwords,
     "de" -> Seq("der", "die", "das", "und", "ist", "von"),
     "es" -> Seq("el", "la", "de", "que", "y", "en"),
     "fr" -> Seq("le", "les", "des", "et", "un", "une"))
@@ -94,9 +100,18 @@ object TextOps {
    * [[LangStopwords]] declaration order (en > de > es > fr), which the
    * SQL oracle mirrors with a chained CASE.
    */
-  def langId(text: Column, minScore: Double = 0.05): Column = {
+  def langId(text: Column, minScore: Double = LangMinScore): Column = {
     val toks = tokens(text)
-    val scores = LangStopwords.map { case (l, ws) => l -> wordRatio(toks, ws) }
+    langOf(LangStopwords.map { case (l, ws) => l -> wordRatio(toks, ws) },
+      minScore)
+  }
+
+  val LangMinScore = 0.05
+
+  /** [[langId]] from each language's stopword ratio, in
+    * [[LangStopwords]] order. */
+  def langOf(scores: Seq[(String, Column)],
+             minScore: Double = LangMinScore): Column = {
     val best = greatest(scores.map(_._2): _*)
     scores.foldRight(lit("unk")) { case ((l, s), el) =>
       when(best >= minScore && s === best, lit(l)).otherwise(el)

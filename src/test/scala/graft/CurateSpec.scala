@@ -151,6 +151,43 @@ class CurateSpec extends SparkSpec {
       s"empty output must short-circuit to nFinal=0, got $r")
   }
 
+  test("a fully-filtered increment reports nFinal=0 and the index still probes") {
+    import spark.implicits._
+    val base = Files.createTempDirectory("graft-curate-empty-inc").toString
+    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    docs.filter(col("doc_id") < 100).write.parquet(s"$base/in1")
+    Curate.runIncremental(spark, s"$base/in1", s"$base/out1", s"$base/idx")
+    val setsRows = spark.read.parquet(s"$base/idx/sets").count()
+    // both documents fail the language gate: the write emits no part file
+    Seq((1000001L, "xq zv qq", "srcA"), (1000002L, "zv qq xq", "srcB"))
+      .toDF("doc_id", "text", "source").write.parquet(s"$base/in2")
+    val r = Curate.runIncremental(spark, s"$base/in2", s"$base/out2", s"$base/idx")
+    assert(r.nInput == 2 && r.nFinal == 0 && r.perSplit.isEmpty, s"got $r")
+    assert(spark.read.parquet(s"$base/idx/sets").count() == setsRows)
+    // every doc the first increment accepted is still found, under a new id
+    val ids1 = spark.read.parquet(s"$base/out1").select("doc_id").as[Long]
+      .collect().toSet
+    val found = graft.dedup.Dedup.minhashLookup(spark, s"$base/idx",
+        docs.filter(col("doc_id").isin(ids1.toSeq: _*))
+          .withColumn("doc_id", -col("doc_id") - 1))
+      .select((-col("probe_id") - 1).as("id")).as[Long].collect().toSet
+    assert(ids1.nonEmpty && found == ids1)
+  }
+
+  test("scoring tokenizes the text once and equals the composed TextOps scores") {
+    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    val scored = Curate.score(docs)
+    val plan = scored.queryExecution.optimizedPlan.toString
+    assert("split\\(".r.findAllMatchIn(plan).size == 1, plan)
+    val composed = docs
+      .withColumn("quality", round(TextOps.qualityScore(col("text")), 4))
+      .withColumn("lang_pred", TextOps.langId(col("text")))
+    assert(scored.schema == composed.schema)
+    val rows = scored.collect()
+    assert(rows.length == docs.count())
+    assert(rows.toSet == composed.collect().toSet)
+  }
+
   test("runIncremental rejects negative doc_ids before the surrogate remap") {
     import spark.implicits._
     val base = Files.createTempDirectory("graft-curate-neg").toString
@@ -326,6 +363,81 @@ class CurateSpec extends SparkSpec {
       s"the scoring pass (md5(text) keeper window) ran in $batch stages " +
         s"in Curate.run and $incremental in a runIncremental increment")
   }
+
+  test("a warm runIncremental stays inside its Spark job budget") {
+    val base = Files.createTempDirectory("graft-curate-jobs").toString
+    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    docs.filter(col("doc_id") < 100).write.parquet(s"$base/in1")
+    docs.write.parquet(s"$base/in2") // full snapshot: re-crawls batch 1
+    Curate.runIncremental(spark, s"$base/in1", s"$base/out1", s"$base/idx")
+    val probe = new JobCount
+    spark.sparkContext.addSparkListener(probe)
+    try {
+      Curate.runIncremental(spark, s"$base/in2", s"$base/out2", s"$base/idx")
+      probe.drain(spark)
+    } finally spark.sparkContext.removeSparkListener(probe)
+    // Every action is pinned. Six SQL executions: the near-dup pairs'
+    // count and collect in duplicateGroups, the output write, the
+    // staged sets write, and the sets and bands appends. 22 jobs run
+    // outside any: schema inference over the caller's table, the
+    // leaves' shuffle stages (adaptive execution runs them when a leaf
+    // is built), and four one-job folds (id guard, stage counters,
+    // boilerplate counter, dup count). A stray action or a
+    // schema-inference job moves one of the two.
+    assert((probe.sqlExecutions, probe.otherJobs) == ((6, 22)),
+      s"a warm increment ran ${probe.sqlExecutions} SQL executions and " +
+        s"${probe.otherJobs} jobs outside one")
+    // The write runs 5 or 6 jobs: adaptive execution turns its pack
+    // join into a broadcast join at run time, and whether the stripped
+    // side's shuffle stage had started by then decides which.
+    assert(probe.jobs <= 41, s"a warm increment ran ${probe.jobs} Spark jobs")
+  }
+}
+
+/** A listener whose `drain` waits until every event posted before the
+  * call was delivered, by running one marked job and awaiting its end;
+  * subclasses see every other job through `jobStarted`. */
+private abstract class DrainedListener extends SparkListener {
+  private val marker = "graft.spec.drain"
+  @volatile private var markerJob = -1
+  private val drained = scala.concurrent.Promise[Unit]()
+
+  def drain(spark: org.apache.spark.sql.SparkSession): Unit = {
+    val sc = spark.sparkContext
+    sc.setLocalProperty(marker, "1")
+    try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(marker, null)
+    scala.concurrent.Await.result(drained.future,
+      scala.concurrent.duration.Duration(60, "s"))
+  }
+
+  protected def jobStarted(e: SparkListenerJobStart): Unit = ()
+
+  override def onJobStart(e: SparkListenerJobStart): Unit =
+    if (e.properties != null && e.properties.getProperty(marker) != null)
+      markerJob = e.jobId
+    else jobStarted(e)
+
+  override def onJobEnd(e: SparkListenerJobEnd): Unit =
+    if (e.jobId == markerJob) drained.trySuccess(())
+}
+
+/** Counts the Spark jobs started before `drain`, the drain's own
+  * aside: in all, the distinct SQL executions they ran under, and
+  * those that ran under none. */
+private final class JobCount extends DrainedListener {
+  private val executions = collection.mutable.Set.empty[String]
+  private var all = 0
+  private var outside = 0
+  def jobs: Int = synchronized(all)
+  def sqlExecutions: Int = synchronized(executions.size)
+  def otherJobs: Int = synchronized(outside)
+  override protected def jobStarted(e: SparkListenerJobStart): Unit = synchronized {
+    all += 1
+    Option(e.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id"))) match {
+      case Some(id) => executions += id
+      case None => outside += 1
+    }
+  }
 }
 
 /**
@@ -336,24 +448,12 @@ class CurateSpec extends SparkSpec {
  * dependencies, stopping at shuffle reads and at persisted RDDs an
  * earlier stage already computed.
  */
-private final class KeeperWindowStages extends SparkListener {
+private final class KeeperWindowStages extends DrainedListener {
   private val rdds = collection.mutable.Map.empty[Int, RDDInfo]
   private val computed = collection.mutable.Set.empty[Int]
   private var count = 0
-  private val marker = "graft.spec.drain"
-  @volatile private var markerJob = -1
-  private val drained = scala.concurrent.Promise[Unit]()
 
   def stages: Int = synchronized(count)
-
-  /** Waits until every event posted before this call was delivered. */
-  def drain(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val sc = spark.sparkContext
-    sc.setLocalProperty(marker, "1")
-    try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(marker, null)
-    scala.concurrent.Await.result(drained.future,
-      scala.concurrent.duration.Duration(60, "s"))
-  }
 
   /** `from` and what it reaches through `parents`, among known RDDs. */
   private def reach(from: Int, parents: RDDInfo => Seq[Int]): Set[Int] = {
@@ -373,13 +473,6 @@ private final class KeeperWindowStages extends SparkListener {
 
   private def isKeeperWindow(id: Int): Boolean =
     isWindow(id) && !(reach(id, _.parentIds) - id).exists(isWindow)
-
-  override def onJobStart(e: SparkListenerJobStart): Unit =
-    if (e.properties != null && e.properties.getProperty(marker) != null)
-      markerJob = e.jobId
-
-  override def onJobEnd(e: SparkListenerJobEnd): Unit =
-    if (e.jobId == markerJob) drained.trySuccess(())
 
   override def onStageCompleted(e: SparkListenerStageCompleted): Unit = synchronized {
     val info = e.stageInfo

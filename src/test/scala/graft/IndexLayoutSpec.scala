@@ -72,6 +72,54 @@ class IndexLayoutSpec extends SparkSpec {
     assert(!fs(base).exists(new org.apache.hadoop.fs.Path(s"$base/simhash/_band_format")))
   }
 
+  test("the pinned minhash and simhash schemas are what the builds and appends write") {
+    val base = java.nio.file.Files.createTempDirectory("graft_layout_schema").toString
+    val f = new IndexLayoutFixture(spark)
+    // each parquet file directly under `dir`, by path
+    def files(dir: String): Set[String] =
+      fs(dir).listStatus(new org.apache.hadoop.fs.Path(dir))
+        .map(_.getPath.toString).filter(_.endsWith(".parquet")).toSet
+    val pins = Seq("minhash/sets" -> Dedup.MinhashSetsSchema,
+      "minhash/bands" -> Dedup.MinhashBandsSchema,
+      "simhash/sigs" -> Dedup.SimhashSigsSchema)
+    Dedup.minhashIndex(f.corpus, s"$base/minhash")
+    Dedup.simhashIndex(f.corpus, s"$base/simhash")
+    val built = pins.map { case (sub, _) => sub -> files(s"$base/$sub") }.toMap
+    Dedup.minhashAppend(f.probes, s"$base/minhash")
+    Dedup.simhashAppend(f.probes, s"$base/simhash")
+    // every file either writer left, read back alone with its schema inferred
+    val mismatches = pins.flatMap { case (sub, pinned) =>
+      val appended = files(s"$base/$sub") -- built(sub)
+      assert(built(sub).nonEmpty && appended.nonEmpty, s"$sub: no files written")
+      (built(sub) ++ appended).toSeq.sorted.flatMap { file =>
+        val got = spark.read.parquet(file).schema
+        Option.when(got != pinned)(s"$file: $got, pinned $pinned")
+      }
+    }
+    assert(mismatches.isEmpty, mismatches.mkString("\n"))
+  }
+
+  test("a minhash append of precomputed sets lands identically to a full rebuild") {
+    val base = java.nio.file.Files.createTempDirectory("graft_layout_sets").toString
+    val f = new IndexLayoutFixture(spark)
+    Dedup.minhashIndex(f.corpus, s"$base/inc")
+    Dedup.minhashAppendSets(Dedup.minhashSets(f.probes), s"$base/inc")
+    Dedup.minhashIndex(f.corpus.unionByName(f.probes), s"$base/full")
+    def rows(path: String) = spark.read.parquet(path).collect()
+      .map(_.toSeq.map {
+        case a: scala.collection.Seq[_] => a.toList
+        case x => x
+      }).toSet
+    for (half <- Seq("sets", "bands"))
+      assert(rows(s"$base/inc/$half") == rows(s"$base/full/$half"), half)
+    def lookup(path: String) = Dedup.minhashLookupSets(spark, path,
+        Dedup.minhashSets(f.corpus.withColumn("doc_id",
+          org.apache.spark.sql.functions.col("doc_id") + 100)))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    assert(lookup(s"$base/inc").nonEmpty)
+    assert(lookup(s"$base/inc") == lookup(s"$base/full"))
+  }
+
   test("a simhash index marked only by _band_format is refused, and " +
        "simhashRebuildBands migrates it to fresh-build lookups") {
     import spark.implicits._
