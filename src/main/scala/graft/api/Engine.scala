@@ -277,17 +277,24 @@ object Engine {
    * go/.../datastore/datastore.go:298-307).
    */
   def list(points: DataFrame, req: ListRequest, nowMs: Long): DataFrame = {
-    // Same pre-keyed-input PRECONDITION as [[get]]: a caller-supplied
-    // skey must match the current name/labels columns.
-    var out = (if (points.columns.contains("skey")) points
-               else Point.withSeriesKey(points))
-      .filter(VariableMatcher.compile(req.prefix))
-      .filter(col("ts") >= nowMs - req.maxAgeMs)
-      .select(col("name"), col("labels"), col("skey"))
+    var out = listRows(points, req, nowMs)
       .dropDuplicates("skey") // distinct() rejects MAP columns; skey is injective
     req.maxVariables.foreach(cap => out = out.orderBy("skey").limit(cap))
     out.drop("skey")
   }
+
+  /** The rows [[list]] deduplicates: `(name, labels, skey)` of every
+    * point that matches the prefix within the lookback window, one row
+    * per point. The HTTP `/list` removes duplicates itself, inside each
+    * scan task, so it runs no shuffle. */
+  def listRows(points: DataFrame, req: ListRequest, nowMs: Long): DataFrame =
+    // Same pre-keyed-input PRECONDITION as [[get]]: a caller-supplied
+    // skey must match the current name/labels columns.
+    (if (points.columns.contains("skey")) points
+     else Point.withSeriesKey(points))
+      .filter(VariableMatcher.compile(req.prefix))
+      .filter(col("ts") >= nowMs - req.maxAgeMs)
+      .select(col("name"), col("labels"), col("skey"))
 
   /**
    * `/add` ingest validation + enrichment (server/store.cc:402-444):

@@ -826,17 +826,20 @@ object Dedup {
     // symmetric (union(a,b) == union(b,a)) and duplicate-tolerant, so
     // the symmetrize-Generate and the distinct's full exchange+agg —
     // needed only by the label-propagation joins below — are pure
-    // overhead here (guide §2.4: remove shuffles outright). One cache
-    // keeps the possibly-expensive `pairs` subtree single-execution
-    // across the count and the collect. Output identical: the root of
+    // overhead here (guide §2.4: remove shuffles outright). One job
+    // counts the pairs, which picks the path, and brings the driver
+    // path its pairs; the driver receives about driverLimit rows at
+    // most, whatever the count and the partitioning. One cache keeps
+    // the possibly-expensive `pairs` subtree single-execution across
+    // that job and the distributed path. Output identical: the root of
     // every component is its min id regardless of edge order or
     // multiplicity, and the node set is the same endpoints.
     val raw = pairs.select(col("id_a").as("a"), col("id_b").as("b")).cache()
-    val nRaw = raw.count()
-    if (nRaw <= driverLimit) {
+    val (nRaw, driverPairs) = graft.Collect.countedAtMost(raw, driverLimit)
+    if (driverPairs.nonEmpty) {
       val spark = pairs.sparkSession
       import spark.implicits._
-      val es = raw.as[(Long, Long)].collect()
+      val es = driverPairs.get.map(r => (r.getAs[Number](0).longValue, r.getAs[Number](1).longValue))
       raw.unpersist(false)
       val parent = scala.collection.mutable.HashMap.empty[Long, Long]
       def find(x: Long): Long = {

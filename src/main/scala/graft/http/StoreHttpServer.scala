@@ -8,9 +8,6 @@ import graft.wire.Rpc
 import java.net.InetSocketAddress
 import java.util.Base64
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.execution.SQLExecution
-import org.apache.spark.sql.functions._
 
 /**
  * HTTP + base64-protobuf RPC façade — wire-compatible with the
@@ -39,6 +36,13 @@ class StoreHttpServer(spark: SparkSession, storeDir: String, port: Int = 0,
   require(tier != "tiered" || coldDir.nonEmpty,
     "--tier=tiered requires --cold=<gorilla tier path>")
 
+  // TCP_NODELAY on every accepted socket: `sendResponseHeaders` flushes
+  // the headers alone, and with Nagle's algorithm on the kernel then
+  // holds the body until the client's delayed ACK (40 ms or more on
+  // Linux) for the headers arrives. Go's net package turns Nagle off
+  // by default. The JDK reads this property once, when the first
+  // HttpServer of the JVM is created.
+  System.setProperty("sun.net.httpserver.nodelay", "true")
   private val server = HttpServer.create(new InetSocketAddress(port), 0)
   // Off the accept/dispatch thread: a slow Spark query must not block
   // accepting other connections (/health during a long /get).
@@ -96,6 +100,16 @@ class StoreHttpServer(spark: SparkSession, storeDir: String, port: Int = 0,
       }
     }
 
+  /** `rows` when it holds at most `maxResponseValues`; otherwise a
+    * [[StoreHttpServer.ResponseTooLarge]] (HTTP 413) that says how to
+    * narrow the request. */
+  private def bounded(rows: Array[Row], endpoint: String, unit: String,
+                      narrow: String): Array[Row] =
+    if (rows.length <= maxResponseValues) rows
+    else throw new StoreHttpServer.ResponseTooLarge(
+      s"$endpoint matched more than $maxResponseValues $unit; narrow the " +
+        s"request ($narrow) or raise --max_response_values")
+
   /** Run `f`, returning (result, elapsed ms) — the Go server's
     * Timer.Stop() bookkeeping (openinstrument.go:28-45). */
   private def timed[T](f: => T): (T, Long) = {
@@ -105,41 +119,38 @@ class StoreHttpServer(spark: SparkSession, storeDir: String, port: Int = 0,
   }
 
   server.createContext("/get", handler { bytes =>
-    // The wire proto has no chaining field — the reference servers just
-    // disagree: Go pipes repeated mutations, C++ emits one stream per
-    // mutation. `cppMutationSemantics` picks which server this façade
-    // impersonates (default: Go, matching the authoritative store).
-    val req = Rpc.decodeGetRequest(bytes)
-      .copy(chainMutations = !cppMutationSemantics)
-    val df = Engine.get(points(req.minTimestamp, req.maxTimestamp), req)
-    // materialize grouped by output series, values time-ordered (the
-    // response shape of go/src/store.go:133-156). One stream per
-    // series: skey when present, else (name, labels) — a label
-    // aggregation yields one stream per distinct label value
-    // (server/store.cc:190-248), so labels MUST participate in the key.
-    // The response must not materialize the whole lake on this node:
-    // the reference server also collects its full result, but it
-    // fronts a single-node store — here the backing table is the
-    // entire corpus. EVERY /get runs through a server-side response
-    // bound (request limits alone don't bound the total: max_values
-    // is a per-series tail and max_variables caps series, so either
-    // one alone still leaves the product unbounded); crossing it
-    // rejects with 413 instead of OOMing the driver. The bound is one
-    // Spark job with no global Sort and no CollectLimit (whose
-    // scale-up runs one task, then more, as separate jobs): each task
-    // stops after cap+1 rows, so an over-cap request fails fast
-    // instead of paying a full top-K over every match. Per-stream time
-    // order (the actual wire contract, go/src/store.go:133-156 sorts
-    // within each stream) is restored driver-side below on the ≤cap
-    // in-memory rows.
-    val (rows, retrieveMs) = timed {
-      val r = StoreHttpServer.collectAtMost(df, maxResponseValues + 1)
-      if (r.length > maxResponseValues)
-        throw new StoreHttpServer.ResponseTooLarge(
-          s"/get matched more than $maxResponseValues values; narrow the " +
-            "request (max_values / max_variables / time range) or raise " +
-            "--max_response_values")
-      r
+    // "retrieve streams" runs from the request decode to the collected
+    // rows, so it also covers the store read and the Engine build
+    // (adaptive execution runs a per-series shuffle at build time).
+    val ((df, rows), retrieveMs) = timed {
+      // The wire proto has no chaining field — the reference servers just
+      // disagree: Go pipes repeated mutations, C++ emits one stream per
+      // mutation. `cppMutationSemantics` picks which server this façade
+      // impersonates (default: Go, matching the authoritative store).
+      val req = Rpc.decodeGetRequest(bytes)
+        .copy(chainMutations = !cppMutationSemantics)
+      val df = Engine.get(points(req.minTimestamp, req.maxTimestamp), req)
+      // materialize grouped by output series, values time-ordered (the
+      // response shape of go/src/store.go:133-156). One stream per
+      // series: skey when present, else (name, labels) — a label
+      // aggregation yields one stream per distinct label value
+      // (server/store.cc:190-248), so labels MUST participate in the key.
+      // The response must not materialize the whole lake on this node:
+      // the reference server also collects its full result, but it
+      // fronts a single-node store — here the backing table is the
+      // entire corpus. EVERY /get runs through a server-side response
+      // bound (request limits alone don't bound the total: max_values
+      // is a per-series tail and max_variables caps series, so either
+      // one alone still leaves the product unbounded); crossing it
+      // rejects with 413 instead of OOMing the driver. The bound is one
+      // Spark job with no global Sort and no CollectLimit: each task
+      // stops after cap+1 rows, so an over-cap request fails fast
+      // instead of paying a full top-K over every match. Per-stream time
+      // order (the actual wire contract, go/src/store.go:133-156 sorts
+      // within each stream) is restored driver-side below on the ≤cap
+      // in-memory rows.
+      (df, bounded(graft.Collect.atMost(df, maxResponseValues + 1),
+        "/get", "values", "max_values / max_variables / time range"))
     }
     val cols = df.columns.toSet
     def opt[T](r: org.apache.spark.sql.Row, name: String): Option[T] =
@@ -181,10 +192,19 @@ class StoreHttpServer(spark: SparkSession, storeDir: String, port: Int = 0,
   })
 
   server.createContext("/list", handler { bytes =>
-    val req = Rpc.decodeListRequest(bytes)
-    val now = nowMs()
-    val (rows, retrieveMs) = timed(
-      Engine.list(points(Some(now - req.maxAgeMs), None), req, now).collect())
+    val (rows, retrieveMs) = timed {
+      val req = Rpc.decodeListRequest(bytes)
+      val now = nowMs()
+      // Engine.list's rows, deduplicated inside each scan task and
+      // merged on the driver: one job, no shuffle. max_variables keeps
+      // the smallest series keys, as Engine.list's orderBy + limit
+      // does; past the response bound the request answers 413.
+      val cap = maxResponseValues + 1
+      bounded(graft.Collect.distinctAtMost(
+          Engine.listRows(points(Some(now - req.maxAgeMs), None), req, now), "skey",
+          req.maxVariables.fold(cap)(math.min(_, cap))),
+        "/list", "variables", "prefix / max_variables / max_age")
+    }
     val (vars, constructMs) = timed {
       rows.map { r =>
         Variable(r.getAs[String]("name"),
@@ -303,28 +323,12 @@ class StoreHttpServer(spark: SparkSession, storeDir: String, port: Int = 0,
   * live at /add ingest and is served back on /get_config, exactly the
   * reference server's startup contract (server/store.cc:72-95). */
 object StoreHttpServer {
-  /** Default driver-side bound for a /get with no request limits. */
+  /** Default driver-side bound: the values of a /get, the series of a /list. */
   val DefaultMaxResponseValues = 500000
 
-  /** Thrown when an unbounded /get would exceed the response cap;
+  /** Thrown when a /get or /list would exceed the response cap;
     * mapped to HTTP 413 with the reason in the wire error field. */
   final class ResponseTooLarge(msg: String) extends RuntimeException(msg)
-
-  /** At most `n` rows of `df`, in one Spark job over the plan of
-    * `df.queryExecution`: each task returns at most `n` rows, and the
-    * driver keeps rows only until it holds `n`. Which `n` rows is
-    * unspecified, as with `limit(n)`. */
-  def collectAtMost(df: DataFrame, n: Int): Array[Row] = {
-    val qe = df.queryExecution
-    val kept = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
-    SQLExecution.withNewExecutionId(qe, Some("collect")) {
-      df.sparkSession.sparkContext.runJob(qe.toRdd,
-        (it: Iterator[InternalRow]) => it.take(n).map(_.copy()).toArray,
-        (_: Int, part: Array[InternalRow]) => kept ++= part.take(n - kept.length))
-    }
-    val toRow = CatalystTypeConverters.createToScalaConverter(df.schema)
-    kept.map(toRow(_).asInstanceOf[Row]).toArray
-  }
 
   def main(args: Array[String]): Unit = {
     val opts = args.filter(_.startsWith("--"))
@@ -349,7 +353,7 @@ object StoreHttpServer {
       // --tier=tiered spans hot + --cold=<path> in one read surface
       tier = opts.getOrElse("tier", "parquet"),
       coldDir = opts.get("cold"),
-      // --max_response_values bounds an unlimited /get's driver collect
+      // --max_response_values bounds the driver collect of /get and /list
       maxResponseValues = opts.get("max_response_values").map(_.toInt)
         .getOrElse(DefaultMaxResponseValues)).start()
     println(s"LISTENING=${s.boundPort}")

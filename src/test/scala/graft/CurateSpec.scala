@@ -376,21 +376,21 @@ class CurateSpec extends SparkSpec {
       Curate.runIncremental(spark, s"$base/in2", s"$base/out2", s"$base/idx")
       probe.drain(spark)
     } finally spark.sparkContext.removeSparkListener(probe)
-    // Every action is pinned. Six SQL executions: the near-dup pairs'
-    // count and collect in duplicateGroups, the output write, the
-    // staged sets write, and the sets and bands appends. 22 jobs run
+    // Every action is pinned. Five SQL executions: the near-dup pairs'
+    // bounded collect in duplicateGroups, the output write, the staged
+    // sets write, and the sets and bands appends. 22 jobs run
     // outside any: schema inference over the caller's table, the
     // leaves' shuffle stages (adaptive execution runs them when a leaf
     // is built), and four one-job folds (id guard, stage counters,
     // boilerplate counter, dup count). A stray action or a
     // schema-inference job moves one of the two.
-    assert((probe.sqlExecutions, probe.otherJobs) == ((6, 22)),
+    assert((probe.sqlExecutions, probe.otherJobs) == ((5, 22)),
       s"a warm increment ran ${probe.sqlExecutions} SQL executions and " +
         s"${probe.otherJobs} jobs outside one")
     // The write runs 5 or 6 jobs: adaptive execution turns its pack
     // join into a broadcast join at run time, and whether the stripped
     // side's shuffle stage had started by then decides which.
-    assert(probe.jobs <= 41, s"a warm increment ran ${probe.jobs} Spark jobs")
+    assert(probe.jobs <= 40, s"a warm increment ran ${probe.jobs} Spark jobs")
   }
 }
 

@@ -1,6 +1,6 @@
 package graft
 
-import graft.api.Requests
+import graft.api.{Engine, Requests}
 import graft.http.StoreHttpServer
 import graft.model.Variable
 import graft.operators.Aggregations
@@ -118,7 +118,7 @@ class HttpSpec extends SparkSpec {
     } finally srv.stop()
   }
 
-  test("a warm one-series /get runs one Spark job, a warm /list at most two, both off the held relation") {
+  test("warm /get and /list each run one Spark job, both off the held relation") {
     val store = threeDayStore("/http/warm")
     val srv = new StoreHttpServer(spark, store, nowMs = () => 3 * Day).start()
     try {
@@ -132,10 +132,103 @@ class HttpSpec extends SparkSpec {
       val (getJobs, _) = observe(assert(values(srv.boundPort, get).length == 2))
       assert(getJobs == 1, "a warm one-series /get")
       val (listJobs, _) = observe(assert(listed() == Seq("/http/warm")))
-      assert(listJobs <= 2, "a warm /list")
+      assert(listJobs == 1, "a warm /list removes duplicates in its scan tasks")
       values(srv.boundPort, get)
       assert(relationRow(srv.boundPort)._2 >= hits + 3,
         "every warm request must hit the held store relation")
+    } finally srv.stop()
+  }
+
+  /** A store of five series, `/http/l/a..e{host=h}`, with one point on
+    * each of three UTC days, 01:00 each day, but `e` only on day 0:
+    * most series span three files, so the scan tasks see them more
+    * than once. */
+  private def listStore(): String = {
+    val store = java.nio.file.Files.createTempDirectory("graft_http_list").toString + "/s"
+    graft.sources.PointSource.write(Seq("e", "c", "a", "d", "b").map { n =>
+      series((if (n == "e") Seq(0L) else Seq(0L, 1L, 2L)).map(d => (d * Day + Hour) -> d.toDouble),
+        name = s"/http/l/$n", labels = Map("host" -> "h"))
+    }.reduce(_ unionByName _), store)
+    store
+  }
+
+  private def listed(port: Int, req: Requests.ListRequest): Seq[(String, Map[String, String])] = {
+    val (ok, vars) = Rpc.decodeListResponse(post(port, "/list", Rpc.encodeListRequest(req)))
+    assert(ok)
+    vars.map(v => (v.name, v.labels))
+  }
+
+  test("/list answers Engine.list's series, with and without max_variables") {
+    val store = listStore()
+    val now = 3 * Day
+    val srv = new StoreHttpServer(spark, store, nowMs = () => now).start()
+    try {
+      for (req <- Seq(Requests.ListRequest("/http/l/*", maxAgeMs = 3 * Day),
+                      Requests.ListRequest("/http/l/*", maxAgeMs = 2 * Day),
+                      Requests.ListRequest("/http/l/*", Some(2), 3 * Day),
+                      Requests.ListRequest("/http/l/*", Some(9), 3 * Day),
+                      Requests.ListRequest("/http/l/b*", Some(1), 3 * Day),
+                      Requests.ListRequest("/http/none/*", Some(1), 3 * Day))) {
+        val want = Engine.list(graft.sources.PointSource.read(spark, store), req, now)
+          .collect().map(r => (r.getAs[String]("name"), r.getAs[Map[String, String]]("labels")))
+        val got = listed(srv.boundPort, req)
+        assert(got.toSet == want.toSet && got.length == want.length, req)
+      }
+      // a two-day lookback drops `e`, whose only point is on day 0
+      assert(listed(srv.boundPort, Requests.ListRequest("/http/l/*", maxAgeMs = 2 * Day))
+        .map(_._1).toSet == Set("a", "b", "c", "d").map(n => s"/http/l/$n"))
+      // max_variables keeps the smallest series keys
+      assert(listed(srv.boundPort, Requests.ListRequest("/http/l/*", Some(2), 3 * Day))
+        .map(_._1) == Seq("/http/l/a", "/http/l/b"))
+    } finally srv.stop()
+  }
+
+  test("/list over the response bound answers 413; max_variables under it is served") {
+    val srv = new StoreHttpServer(spark, listStore(), nowMs = () => 3 * Day,
+      maxResponseValues = 4).start()
+    try {
+      val all = Requests.ListRequest("/http/l/*", maxAgeMs = 3 * Day)
+      val (code, bytes) = postRaw(srv.boundPort, "/list", Rpc.encodeListRequest(all))
+      assert(code == 413, s"expected 413 over-limit, got $code")
+      val (ok, err, _) = Rpc.decodeGetResponse(bytes)
+      assert(!ok && err.exists(_.contains("max_variables")), err)
+      // five series: max_variables past the bound is over it as well
+      assert(postRaw(srv.boundPort, "/list",
+        Rpc.encodeListRequest(all.copy(maxVariables = Some(5))))._1 == 413)
+      assert(listed(srv.boundPort, all.copy(maxVariables = Some(4))).length == 4)
+    } finally srv.stop()
+  }
+
+  test("Collect.distinctAtMost equals dropDuplicates + orderBy + limit, in one job") {
+    import org.apache.spark.sql.functions._
+    // 40 distinct keys over 8 partitions, every key in several of them
+    val df = spark.range(0, 400, 1, 8)
+      .select(format_string("k%02d", col("id") % 40).as("k"), col("id"))
+    for (n <- Seq(0, 1, 7, 40, 41)) {
+      val want = df.dropDuplicates("k").orderBy("k").limit(n).select("k").collect().toSeq
+      val (jobs, _) = observe(assert(
+        Collect.distinctAtMost(df, "k", n).map(r => r.getString(0)).toSeq == want.map(_.getString(0)),
+        s"n = $n"))
+      assert(jobs == 1, s"n = $n")
+    }
+  }
+
+  test("30 keep-alive /health calls answer in a median under 20 ms (no delayed-ACK stall)") {
+    val store = java.nio.file.Files.createTempDirectory("graft_http_nodelay").toString + "/s"
+    val srv = new StoreHttpServer(spark, store).start()
+    try {
+      val client = HttpClient.newBuilder().version(HttpClient.Version.HTTP_1_1).build()
+      val req = HttpRequest.newBuilder(
+        URI.create(s"http://127.0.0.1:${srv.boundPort}/health")).GET().build()
+      def call(): Double = {
+        val t0 = System.nanoTime()
+        val resp = client.send(req, HttpResponse.BodyHandlers.ofString())
+        assert(resp.statusCode() == 200 && resp.body() == "OK")
+        (System.nanoTime() - t0) / 1e6
+      }
+      (1 to 10).foreach(_ => call())
+      val ms = (1 to 30).map(_ => call()).sorted
+      assert(ms(15) < 20.0, s"/health latencies (ms): ${ms.mkString(" ")}")
     } finally srv.stop()
   }
 

@@ -1485,6 +1485,58 @@ class PipelineSpec extends SparkSpec {
     assert(viaNoisyDist == expected)
   }
 
+  test("duplicateGroups: over many partitions past driverLimit, the driver " +
+       "receives counts, not pairs") {
+    import spark.implicits._
+    // 20,000 two-node components in 40 partitions of 500 pairs; a
+    // limit of 400 leaves each task a share of 10 pairs, so every task
+    // returns its count alone (a per-task cap of 401 pairs would ship
+    // 16,040 of them)
+    val pairs = (0L until 20000L).map(i => (2 * i, 2 * i + 1, 0.9))
+      .toDF("id_a", "id_b", "jaccard").repartition(40)
+    def run(driverLimit: Long): (Map[Long, Long], Long) = {
+      val probe = new ResultBytes
+      spark.sparkContext.addSparkListener(probe)
+      try {
+        val groups = Dedup.duplicateGroups(pairs, driverLimit = driverLimit)
+        probe.drain(spark)
+        (groups.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap, probe.bytes)
+      } finally spark.sparkContext.removeSparkListener(probe)
+    }
+    // driverLimit 0 takes the same distributed path and ships no pairs
+    val (viaZero, zeroBytes) = run(0L)
+    val (viaLimit, limitBytes) = run(400L)
+    val expected = (0L until 40000L).map(d => d -> (d - d % 2)).toMap
+    assert(viaZero == expected && viaLimit == expected)
+    // (400 + 40) pairs of two longs at 48 serialized bytes each is
+    // 21,120 bytes; the task metrics in each result vary a little
+    // from run to run
+    assert(limitBytes < zeroBytes + 21120 + 16384,
+      s"the driver received $limitBytes result bytes, $zeroBytes at driverLimit 0")
+  }
+
+  test("Collect.countedAtMost: the count, and the rows when at most n, " +
+       "also when one partition holds most of them") {
+    // 900 of 1000 rows in one of 10 partitions: that task holds more
+    // than its share of n / 10, so the rows come from a second job
+    val skewed = spark.range(0, 1000)
+      .withColumn("p", when(col("id") < 900, lit(0L)).otherwise(col("id")))
+      .repartition(10, col("p"))
+    val even = spark.range(0, 1000, 1, 10).withColumn("p", col("id"))
+    for ((df, what) <- Seq(skewed -> "skewed", even -> "even")) {
+      for (n <- Seq(1000L, 5000L)) {
+        val (count, rows) = Collect.countedAtMost(df, n)
+        assert(count == 1000L, s"$what, n = $n")
+        assert(rows.map(_.map(_.getLong(0)).sorted.toSeq) == Some(0L until 1000L),
+          s"$what, n = $n")
+      }
+      assert(Collect.countedAtMost(df, 999L) == ((1000L, None)), what)
+      assert(Collect.countedAtMost(df, 0L) == ((1000L, None)), what)
+    }
+    val (count, rows) = Collect.countedAtMost(spark.range(0, 0, 1, 4).toDF(), 0L)
+    assert(count == 0L && rows.map(_.length) == Some(0))
+  }
+
   test("duplicateGroups distributed path: long chain + cycle converge and " +
        "match the driver union-find bit-for-bit") {
     import spark.implicits._
@@ -1904,4 +1956,16 @@ class PipelineSpec extends SparkSpec {
     val small = Ann.kCenter(dup, k = 5).collect()
     assert(small.map(_.getLong(1)).toSet == Set(7L, 8L))
   }
+}
+
+/** The serialized result bytes of the result tasks of every job
+  * started before `drain`. */
+private final class ResultBytes extends DrainedListener {
+  private var total = 0L
+  def bytes: Long = synchronized(total)
+  override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+    synchronized {
+      if (e.taskType == "ResultTask" && e.taskMetrics != null)
+        total += e.taskMetrics.resultSize
+    }
 }
