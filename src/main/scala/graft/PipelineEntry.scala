@@ -644,8 +644,8 @@ object PipelineEntry {
     // batch" probing the rest as the held corpus — cross pairs only,
     // linear in the probe batch (the self-pairing d_minhash_lsh cost
     // never recurs for an index refresh). The at-rest index round trip
-    // (minhashIndex -> minhashLookup bit-equality, and the streaming
-    // probe) is spec-gated in PipelineSpec.
+    // (minhashIndex -> minhashLookup bit-equality) is spec-gated in
+    // PipelineSpec.
     "d_minhash_lookup" -> ((s, dir) => {
       val d = Tables.documents(s, dir)
       Dedup.minhashCrossPairs(
@@ -662,8 +662,7 @@ object PipelineEntry {
         .select(col("id_a"), col("id_b"), col("dist").cast("long").as("dist"))),
     // SimHash sibling of d_minhash_lookup: every 5th doc probes the
     // rest as the held corpus, signature rides the band rows (no
-    // re-attach join at all). At-rest index round trip + streaming
-    // probe spec-gated in PipelineSpec.
+    // re-attach join at all).
     "d_simhash_lookup" -> ((s, dir) => {
       val d = Tables.documents(s, dir)
       Dedup.simhashCrossPairs(
@@ -762,7 +761,7 @@ object PipelineEntry {
     // Chunk-level sibling of d_minhash_lookup: every 5th doc probes
     // the rest for shared content-defined chunks (sub-document copies
     // of held docs). maxDf counts CORPUS docs only — boilerplate-ness
-    // is a property of the held side, like the at-rest cdcIndex df.
+    // is a property of the held side.
     "d_cdc_lookup" -> ((s, dir) => {
       val d = Tables.documents(s, dir)
       Dedup.cdcCrossPairs(
@@ -771,8 +770,7 @@ object PipelineEntry {
     }),
     // Winnow-fingerprint sibling of d_cdc_lookup: every 5th doc probes
     // the held corpus for shared winnowing fingerprints (local-edit-
-    // robust sub-document copies — the plagiarism-sketch detector;
-    // completes the cross/index/lookup trio for the fourth family).
+    // robust sub-document copies — the plagiarism-sketch detector).
     "t_winnow_lookup" -> ((s, dir) => {
       val d = Tables.documents(s, dir)
       Dedup.winnowCrossPairs(

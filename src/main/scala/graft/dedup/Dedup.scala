@@ -397,7 +397,7 @@ object Dedup {
     * shingle-set rows: minhash signature → `bands` md5 band keys,
     * exploded. The shared candidate generator behind
     * [[minhashLshPairs]] (self-join), the at-rest [[minhashIndex]],
-    * and the [[minhashLookup]]/[[minhashLookupStream]] probe sides. */
+    * and the [[minhashLookup]]/[[minhashFlagStream]] probe sides. */
   private def bandRows(sets: DataFrame, numHashes: Int, bands: Int,
                        carry: Seq[String] = Nil): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
@@ -449,34 +449,31 @@ object Dedup {
       minhashFormat(n, numHashes, bands), MinhashRebuildHint)
 
   /**
-   * The appendable two-level sketch layout shared by [[minhashIndex]]
-   * and [[simhashIndex]] (and their appends): `path/<keyDir>` holds the
-   * per-document key rows, `path/bands` the band rows `bandsOf` derives
-   * from the STORED key rows (read back, not recomputed from text), so
-   * the two halves cannot disagree and the corpus tokenizes exactly
-   * once. A build overwrites both halves and stamps `marker`. An
-   * append verifies `marker` first (mixed schemes corrupt recall),
-   * stages the new key rows under `path/staging-<keyDir>`, extends both
-   * halves via parquet append — only new files appear, existing data
-   * is never rewritten — and deletes the staging directory. Key rows
-   * are read back with `keySchema`, the layout's pinned schema, so no
-   * read runs a schema-inference job.
+   * The appendable two-level layout of a [[minhashIndex]]: `path/sets`
+   * holds the per-document shingle sets, `path/bands` the band rows
+   * derived from the STORED sets (read back, not recomputed from text),
+   * so the two halves cannot disagree and the corpus tokenizes exactly
+   * once. A build overwrites both halves and stamps the marker
+   * ([[minhashRebuildBands]]). An append verifies the marker first
+   * (mixed schemes corrupt recall), stages the new sets under
+   * `path/staging-sets`, extends both halves via parquet append — only
+   * new files appear, existing data is never rewritten — and deletes
+   * the staging directory. Sets are read back with
+   * [[MinhashSetsSchema]], so no read runs a schema-inference job.
    */
-  private def sketchIndex(keys: DataFrame, path: String, keyDir: String,
-                          keySchema: StructType,
-                          bandsOf: DataFrame => DataFrame, marker: String,
-                          rebuildHint: String, append: Boolean): Unit = {
-    val spark = keys.sparkSession
+  private def sketchIndex(sets: DataFrame, path: String, n: Int,
+                          numHashes: Int, bands: Int, append: Boolean): Unit = {
+    val spark = sets.sparkSession
     if (!append) {
-      keys.write.mode("overwrite").parquet(s"$path/$keyDir")
-      rebandSketch(spark, path, keyDir, keySchema, bandsOf, marker)
+      sets.write.mode("overwrite").parquet(s"$path/sets")
+      minhashRebuildBands(spark, path, n, numHashes, bands)
     } else {
-      graft.model.IndexFormat.check(spark, path, marker, rebuildHint)
-      val staged = s"$path/staging-$keyDir"
-      keys.write.mode("overwrite").parquet(staged)
-      val stored = spark.read.schema(keySchema).parquet(staged)
-      stored.write.mode("append").parquet(s"$path/$keyDir")
-      bandsOf(stored).write.mode("append").parquet(s"$path/bands")
+      minhashCheck(spark, path, n, numHashes, bands)
+      val staged = s"$path/staging-sets"
+      sets.write.mode("overwrite").parquet(staged)
+      val stored = spark.read.schema(MinhashSetsSchema).parquet(staged)
+      stored.write.mode("append").parquet(s"$path/sets")
+      bandRows(stored, numHashes, bands).write.mode("append").parquet(s"$path/bands")
       // resolve the filesystem FROM the staging path — FileSystem.get
       // returns the default FS and would miss an s3a/hdfs-resident index
       val stagedPath = new org.apache.hadoop.fs.Path(staged)
@@ -485,33 +482,19 @@ object Dedup {
     }
   }
 
-  /** (Re)generate `path/bands` from the stored key rows and stamp
-    * `marker`: the tail of a [[sketchIndex]] build and the whole of a
-    * banding migration. Key rows and bands are disjoint directories,
-    * so no staging hop is needed. */
-  private def rebandSketch(spark: org.apache.spark.sql.SparkSession,
-                           path: String, keyDir: String, keySchema: StructType,
-                           bandsOf: DataFrame => DataFrame,
-                           marker: String): Unit = {
-    bandsOf(spark.read.schema(keySchema).parquet(s"$path/$keyDir"))
-      .write.mode("overwrite").parquet(s"$path/bands")
-    graft.model.IndexFormat.write(spark, path, marker)
-  }
-
   /**
    * Materialize the at-rest MinHash/LSH near-dup index under `path`:
    * `path/sets` = (id, sh) shingle sets, `path/bands` = (id, band) LSH
    * band keys derived from the written sets ([[sketchIndex]]).
-   * [[minhashLookup]] / [[minhashLookupStream]] probe it;
+   * [[minhashLookup]] / [[minhashFlagStream]] probe it;
    * [[minhashAppend]] extends it.
    */
   def minhashIndex(df: DataFrame, path: String, n: Int = 3,
                    numHashes: Int = 16, bands: Int = 4,
                    idCol: String = "doc_id", textCol: String = "text"): Unit = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    sketchIndex(shingleSets(df, idCol, textCol, n), path, "sets",
-      MinhashSetsSchema, bandRows(_, numHashes, bands),
-      minhashFormat(n, numHashes, bands), MinhashRebuildHint, append = false)
+    sketchIndex(shingleSets(df, idCol, textCol, n), path, n, numHashes, bands,
+      append = false)
   }
 
   /** Schemas of a [[minhashIndex]]'s `path/sets` (id, sh) and
@@ -540,28 +523,29 @@ object Dedup {
 
   /** Migrate a [[minhashIndex]] to a new banding scheme: regenerate
     * `path/bands` from the stored (banding-independent) `path/sets`
-    * and restamp the marker. `n` must state the shingle size the sets
-    * were built with — it is not recoverable from the hashed shingles,
-    * and it still gates probe compatibility. One linear pass, no
-    * re-tokenize. */
+    * and restamp the marker — also the tail of every [[minhashIndex]]
+    * build. `n` must state the shingle size the sets were built with —
+    * it is not recoverable from the hashed shingles, and it still gates
+    * probe compatibility. One linear pass, no re-tokenize; sets and
+    * bands are disjoint directories, so no staging hop is needed. */
   def minhashRebuildBands(spark: org.apache.spark.sql.SparkSession,
                           path: String, n: Int = 3, numHashes: Int = 16,
                           bands: Int = 4): Unit = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    rebandSketch(spark, path, "sets", MinhashSetsSchema,
-      bandRows(_, numHashes, bands), minhashFormat(n, numHashes, bands))
+    bandRows(minhashSetsAt(spark, path), numHashes, bands)
+      .write.mode("overwrite").parquet(s"$path/bands")
+    graft.model.IndexFormat.write(spark, path, minhashFormat(n, numHashes, bands))
   }
 
   /**
    * Append new documents to a materialized [[minhashIndex]] — the
-   * incremental-crawl ingest path, the text-side twin of
-   * [[graft.similarity.Ann.ivfAppend]]. Shingle sets and band keys are
-   * pure per-document functions of the text and the fixed-seed hash
-   * family — this layout carries NO corpus statistic (contrast
-   * [[cdcIndex]]/[[winnowIndex]], whose denormalized df freezes at
-   * build and makes refresh a full rewrite) — so appended rows land
-   * exactly where a full rebuild would put them and subsequent lookups
-   * are bit-identical to a from-scratch index (DedupSpec asserts it).
+   * incremental-crawl ingest path. Shingle sets and band keys are pure
+   * per-document functions of the text and the fixed-seed hash family
+   * — this layout carries NO corpus statistic (a denormalized document
+   * frequency would freeze at build and make refresh a full rewrite) —
+   * so appended rows land exactly where a full rebuild would put them
+   * and subsequent lookups are bit-identical to a from-scratch index
+   * (IndexLayoutSpec asserts it).
    * Parameters must match the build. Staging and append mechanics:
    * [[sketchIndex]].
    */
@@ -576,9 +560,7 @@ object Dedup {
   def minhashAppendSets(sets: DataFrame, path: String, n: Int = 3,
                         numHashes: Int = 16, bands: Int = 4): Unit = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    sketchIndex(sets, path, "sets", MinhashSetsSchema,
-      bandRows(_, numHashes, bands), minhashFormat(n, numHashes, bands),
-      MinhashRebuildHint, append = true)
+    sketchIndex(sets, path, n, numHashes, bands, append = true)
   }
 
   /**
@@ -607,62 +589,18 @@ object Dedup {
   }
 
   /**
-   * Streaming probe of a [[minhashIndex]]: a document stream (idCol,
-   * textCol, `tsCol` ms) is checked live against the at-rest corpus —
-   * the near-dup half of the continuous-ingest dedup story
-   * ([[graft.streaming.StreamIngest.dedupStream]] is the exact half).
-   * Stateless per micro-batch except the final
-   * dropDuplicatesWithinWatermark (a pair re-surfacing across batches
-   * within the watermark is emitted once; state is bounded by the
-   * watermark). Index refresh = restart the query against the
-   * rewritten path.
-   */
-  def minhashLookupStream(spark: org.apache.spark.sql.SparkSession,
-                          path: String, probeStream: DataFrame, n: Int = 3,
-                          numHashes: Int = 16, bands: Int = 4,
-                          threshold: Double = 0.5, tsCol: String = "ts",
-                          watermark: String = "1 hour",
-                          idCol: String = "doc_id",
-                          textCol: String = "text"): DataFrame = {
-    minhashCheck(spark, path, n, numHashes, bands)
-    // The probe side shares [[shingleSets]] with the index build —
-    // the two MUST produce bit-identical sets or lookups silently
-    // stop matching.
-    val psets = shingleSets(
-      probeStream.withColumn("event_time", timestamp_millis(col(tsCol))),
-      idCol, textCol, n, carry = Seq("event_time"))
-    // Streaming shape: sh + event_time RIDE the probe band rows, so
-    // both joins below are stream-STATIC (bands, then corpus sets) —
-    // stateless per micro-batch. Re-attaching sh by joining back to
-    // psets (the batch shape) would be a stream-STREAM self-join:
-    // unbounded state and stale-row hazards. Likewise no mid-plan
-    // dropDuplicates (a second stateful operator): a pair surfacing
-    // via several bands just verifies redundantly (≤ bands× on
-    // identical micro-batch rows) and the ONE watermarked dedup below
-    // emits it once with watermark-bounded state.
-    val verified = lookupFromSets(
-      minhashSetsAt(spark, path), psets,
-      numHashes, bands, threshold,
-      corpusBands = Some(minhashBandsAt(spark, path)),
-      carryCols = Seq("event_time"), probeCarriesSets = true)
-    verified
-      .withWatermark("event_time", watermark)
-      .dropDuplicatesWithinWatermark("probe_id", "corpus_id")
-      .drop("event_time")
-  }
-
-  /**
    * Per-document near-dup FLAG over a watermarked stream against an
-   * at-rest [[minhashIndex]] — the decision form of
-   * [[minhashLookupStream]] (which emits the matching PAIRS): each
+   * at-rest [[minhashIndex]] — the streaming decision form of
+   * [[minhashLookup]] (which emits the matching PAIRS): each
    * arriving document resolves to one row `(idCol, carry…, near_dup)`
    * where `near_dup` = "some indexed document verifies at ≥
    * `threshold` Jaccard". This is the shape a continuous CURATION
    * pipeline needs — novel docs flow on, near-dups are gated — so the
    * carry columns (score, text, …) ride through to the sink.
    *
-   * Plan shape: shingles + carries ride the probe band rows (the
-   * [[minhashLookupStream]] trick — every join is stream-STATIC), the
+   * Plan shape: shingles + carries ride the probe band rows, so every
+   * join is stream-STATIC (re-attaching them by a join back to the
+   * probe side would be a stream-stream self-join: unbounded state), the
    * band join is LEFT OUTER so candidate-less documents survive with
    * `near_dup = false`, and the per-document verdict is a watermarked
    * event-time-window aggregation (`max(jaccard ≥ threshold)` over the
@@ -716,50 +654,30 @@ object Dedup {
   }
 
   /**
-   * The shared lookup tail. Batch shape (`probeCarriesSets = false`):
-   * probe bands × corpus bands candidate join carrying ids only (the
-   * [[minhashLshPairs]] volume argument), distinct, then exact-Jaccard
-   * verify re-attaching both shingle sets per DISTINCT pair. Streaming
-   * shape (`probeCarriesSets = true`): the probe's sh + `carryCols`
-   * ride its band rows instead — the re-attach join back to the probe
-   * side would be a stream-stream self-join (unbounded state), so the
-   * only joins are against the static corpus sides, at the cost of
-   * shingle arrays riding ≤ bands× candidate rows within a
-   * micro-batch. The corpus side arrives as at-rest (id, sh)
+   * The shared lookup tail: probe bands × corpus bands candidate join
+   * carrying ids only (the [[minhashLshPairs]] volume argument),
+   * distinct, then exact-Jaccard verify re-attaching both shingle sets
+   * per DISTINCT pair. The corpus side arrives as at-rest (id, sh)
    * [+ optional pre-built (id, band)] or is banded here.
    */
   private def lookupFromSets(corpusSets: DataFrame, probeSets: DataFrame,
                              numHashes: Int, bands: Int, threshold: Double,
-                             corpusBands: Option[DataFrame] = None,
-                             carryCols: Seq[String] = Nil,
-                             probeCarriesSets: Boolean = false): DataFrame = {
+                             corpusBands: Option[DataFrame] = None): DataFrame = {
     val cb = corpusBands.getOrElse(bandRows(corpusSets, numHashes, bands))
-    val cand =
-      if (probeCarriesSets) {
-        val pb = bandRows(probeSets, numHashes, bands, carry = "sh" +: carryCols)
-        pb.as("p").join(cb.as("c"),
-            col("p.band") === col("c.band") && col("p.id") =!= col("c.id"))
-          .select(col("p.id").as("probe_id") +: col("c.id").as("corpus_id") +:
-            col("p.sh").as("sha") +: carryCols.map(c => col("p." + c).as(c)): _*)
-      } else {
-        val pb = bandRows(probeSets.select("id", "sh"), numHashes, bands)
-        pb.as("p").join(cb.as("c"),
-            col("p.band") === col("c.band") && col("p.id") =!= col("c.id"))
-          .select(col("p.id").as("probe_id"), col("c.id").as("corpus_id"))
-          .dropDuplicates("probe_id", "corpus_id")
-          .join(probeSets.select(col("id").as("probe_id") +:
-              col("sh").as("sha") +: carryCols.map(col): _*),
-            "probe_id")
-      }
-    cand
+    val pb = bandRows(probeSets.select("id", "sh"), numHashes, bands)
+    pb.as("p").join(cb.as("c"),
+        col("p.band") === col("c.band") && col("p.id") =!= col("c.id"))
+      .select(col("p.id").as("probe_id"), col("c.id").as("corpus_id"))
+      .dropDuplicates("probe_id", "corpus_id")
+      .join(probeSets.select(col("id").as("probe_id"), col("sh").as("sha")),
+        "probe_id")
       .join(corpusSets.select(col("id").as("corpus_id"), col("sh").as("shb")),
         "corpus_id")
       .withColumn("jaccard",
         size(array_intersect(col("sha"), col("shb")))
           / size(array_union(col("sha"), col("shb"))).cast("double"))
       .filter(col("jaccard") >= threshold)
-      .select(col("probe_id") +: col("corpus_id") +:
-        round(col("jaccard"), 4).as("jaccard") +: carryCols.map(col): _*)
+      .select(col("probe_id"), col("corpus_id"), round(col("jaccard"), 4).as("jaccard"))
   }
 
   /** Token-hash array for [[simhashFromHashes]] — materialize this as
@@ -780,8 +698,7 @@ object Dedup {
 
   /** (doc_id, sig) simhash signatures with the hash pass materialized. */
   def simhashSignatures(df: DataFrame, idCol: String = "doc_id",
-                        textCol: String = "text",
-                        carry: Seq[String] = Nil): DataFrame =
+                        textCol: String = "text"): DataFrame =
     // Token-less (empty/whitespace) docs are excluded — the same
     // eligibility rule as the minhash paths' size(sh) > 0. They all
     // fold to sig 0, so keeping them would (a) claim every empty pair
@@ -790,8 +707,7 @@ object Dedup {
     // quadratic the banding exists to avoid.
     df.withColumn("__hs", tokenHashes(textCol))
       .filter(size(col("__hs")) > 0)
-      .select(col(idCol).as("id") +: simhashFromHashes("__hs").as("sig") +:
-        carry.map(col): _*)
+      .select(col(idCol).as("id"), simhashFromHashes("__hs").as("sig"))
 
   /**
    * Collapse near-duplicate clusters: connected components over a
@@ -1016,17 +932,15 @@ object Dedup {
   private val SimhashBlockCombos: Seq[(Int, Int, Int)] =
     for { i <- 0 to 5; j <- (i + 1) to 5; k <- (j + 1) to 5 } yield (i, j, k)
 
-  /** (id, sig, band[, carry…]) from (id, sig[, carry…]) signature
-    * rows — shared by [[simhashPairs]], the at-rest [[simhashIndex]]
-    * (band layout on disk follows this scheme) and its probe sides. */
-  private def simhashBandRows(sigs: DataFrame, carry: Seq[String] = Nil): DataFrame = {
+  /** (id, sig, band) from (id, sig) signature rows — shared by
+    * [[simhashPairs]] and both sides of [[simhashCrossPairs]]. */
+  private def simhashBandRows(sigs: DataFrame): DataFrame = {
     def block(b: Int) = s"((sig div shiftleft(1L, ${b * 10})) % 1024)"
     val keys = SimhashBlockCombos.map { case (i, j, k) =>
       s"concat('$i$j$k:', ${block(i)}, ':', ${block(j)}, ':', ${block(k)})"
     }
-    sigs.select(col("id") +: col("sig") +:
-      explode(expr(s"array(${keys.mkString(", ")})")).as("band") +:
-      carry.map(col): _*)
+    sigs.select(col("id"), col("sig"),
+      explode(expr(s"array(${keys.mkString(", ")})")).as("band"))
   }
 
   /**
@@ -1039,130 +953,17 @@ object Dedup {
    */
   def simhashCrossPairs(corpus: DataFrame, probes: DataFrame,
                         maxDist: Int = 3, idCol: String = "doc_id",
-                        textCol: String = "text"): DataFrame =
-    simhashLookupFromSigs(
-      simhashBandRows(simhashSignatures(corpus, idCol, textCol)),
-      simhashSignatures(probes, idCol, textCol), maxDist)
-
-  /** Persisted band-layout version of [[simhashIndex]], stamped in the
-    * index's `path/_format` marker ([[graft.model.IndexFormat]]). The
-    * band-key scheme is part of the ON-DISK contract: probing an index
-    * whose bands were exploded under a different scheme silently
-    * returns ZERO matches (the keys never collide), and appending
-    * mixed-scheme band rows corrupts recall for both generations — so
-    * every reader and appender verifies the marker and fails loudly
-    * instead. A missing marker (an index that predates the marker, or
-    * one that carries only the older `_band_format` file) is refused
-    * the same way; [[simhashRebuildBands]] migrates it.
-    * History: v1 = 4 exploded 15-bit single bands (pre-r13);
-    * v2 = 20 compound 3-of-6 10-bit-block keys ([[SimhashBlockCombos]]). */
-  val SimhashBandFormat = "simhash-bands v2 3of6-blocks"
-  /** Schema of a [[simhashIndex]]'s `path/sigs` (id, sig) as a parquet
-    * read-back reports it, the [[MinhashSetsSchema]] counterpart. */
-  val SimhashSigsSchema: StructType = StructType(Seq(
-    StructField("id", LongType), StructField("sig", LongType)))
-
-  private val SimhashRebuildHint =
-    "Run Dedup.simhashRebuildBands(spark, path) to regenerate path/bands " +
-    "from path/sigs (signatures are format-independent)."
-
-  private def simhashCheck(spark: org.apache.spark.sql.SparkSession,
-                           path: String): Unit =
-    graft.model.IndexFormat.check(spark, path, SimhashBandFormat,
-      SimhashRebuildHint)
-
-  /** Migrate / repair an at-rest simhash index: regenerate `path/bands`
-    * from the stored (format-independent) `path/sigs` under the current
-    * [[SimhashBandFormat]] and stamp the marker. One linear pass. */
-  def simhashRebuildBands(spark: org.apache.spark.sql.SparkSession,
-                          path: String): Unit =
-    rebandSketch(spark, path, "sigs", SimhashSigsSchema, simhashBandRows(_),
-      SimhashBandFormat)
-
-  /**
-   * Materialize the at-rest SimHash near-dup index under `path`:
-   * `path/sigs` = (id, sig), `path/bands` = (id, sig, band) — 8 bytes
-   * of signature per doc plus 20 compound band rows (the 3-of-6-block
-   * scheme of [[simhashBandRows]]); at any corpus scale this is the
-   * cheapest near-dup index that exists. Bands derive from the WRITTEN
-   * sigs so the halves cannot disagree ([[sketchIndex]]), and the band
-   * layout is stamped as [[SimhashBandFormat]] so a future scheme
-   * change cannot silently probe stale bands.
-   */
-  def simhashIndex(df: DataFrame, path: String, idCol: String = "doc_id",
-                   textCol: String = "text"): Unit =
-    sketchIndex(simhashSignatures(df, idCol, textCol), path, "sigs",
-      SimhashSigsSchema, simhashBandRows(_), SimhashBandFormat,
-      SimhashRebuildHint, append = false)
-
-  /** Append new documents to a materialized [[simhashIndex]] — same
-    * contract and staging shape as [[minhashAppend]]: signatures are
-    * corpus-independent, so append ≡ full rebuild for every lookup. */
-  def simhashAppend(df: DataFrame, path: String,
-                    idCol: String = "doc_id",
-                    textCol: String = "text"): Unit =
-    sketchIndex(simhashSignatures(df, idCol, textCol), path, "sigs",
-      SimhashSigsSchema, simhashBandRows(_), SimhashBandFormat,
-      SimhashRebuildHint, append = true)
-
-  /** Probe a [[simhashIndex]] with a batch of new documents:
-    * (probe_id, corpus_id, dist) per near-dup already held. */
-  def simhashLookup(spark: org.apache.spark.sql.SparkSession, path: String,
-                    probes: DataFrame, maxDist: Int = 3,
-                    idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    simhashCheck(spark, path)
-    simhashLookupFromSigs(
-      spark.read.parquet(s"$path/bands"),
-      simhashSignatures(probes, idCol, textCol), maxDist)
-  }
-
-  /**
-   * Streaming probe of a [[simhashIndex]]: live SimHash near-dup
-   * check of a document stream against the at-rest corpus. All joins
-   * are stream-static (the signature rides the probe band rows); the
-   * one stateful operator is the final watermark-bounded pair dedup —
-   * the same shape as [[minhashLookupStream]].
-   */
-  def simhashLookupStream(spark: org.apache.spark.sql.SparkSession,
-                          path: String, probeStream: DataFrame,
-                          maxDist: Int = 3, tsCol: String = "ts",
-                          watermark: String = "1 hour",
-                          idCol: String = "doc_id",
-                          textCol: String = "text"): DataFrame = {
-    simhashCheck(spark, path)
-    // shares simhashSignatures with the index build — bit-identical
-    // signatures or lookups silently stop matching
-    val sigs = simhashSignatures(
-      probeStream.withColumn("event_time", timestamp_millis(col(tsCol))),
-      idCol, textCol, carry = Seq("event_time"))
-    simhashLookupFromSigs(spark.read.parquet(s"$path/bands"), sigs, maxDist,
-        carryCols = Seq("event_time"), dedupCandidates = false)
-      .withWatermark("event_time", watermark)
-      .dropDuplicatesWithinWatermark("probe_id", "corpus_id")
-      .drop("event_time")
-  }
-
-  /** Shared SimHash lookup tail: probe bands × corpus bands on the
-    * band key (signatures riding both sides), popcount verify.
-    * `dedupCandidates = false` on streams — the final watermarked
-    * dedup absorbs band-duplicate candidates instead of a second
-    * stateful operator (the [[lookupFromSets]] rationale). */
-  private def simhashLookupFromSigs(corpusBands: DataFrame, probeSigs: DataFrame,
-                                    maxDist: Int, carryCols: Seq[String] = Nil,
-                                    dedupCandidates: Boolean = true): DataFrame = {
-    val pb = simhashBandRows(probeSigs, carry = carryCols)
-    val raw = pb.as("p").join(corpusBands.as("c"),
+                        textCol: String = "text"): DataFrame = {
+    val cb = simhashBandRows(simhashSignatures(corpus, idCol, textCol))
+    val pb = simhashBandRows(simhashSignatures(probes, idCol, textCol))
+    pb.as("p").join(cb.as("c"),
         col("p.band") === col("c.band") && col("p.id") =!= col("c.id"))
-      .select(col("p.id").as("probe_id") +: col("c.id").as("corpus_id") +:
-        col("p.sig").as("sigp") +: col("c.sig").as("sigc") +:
-        carryCols.map(c => col("p." + c).as(c)): _*)
-    val cand =
-      if (dedupCandidates) raw.dropDuplicates("probe_id", "corpus_id") else raw
-    cand
+      .select(col("p.id").as("probe_id"), col("c.id").as("corpus_id"),
+        col("p.sig").as("sigp"), col("c.sig").as("sigc"))
+      .dropDuplicates("probe_id", "corpus_id")
       .withColumn("dist", expr("bit_count(sigp ^ sigc)"))
       .filter(col("dist") <= maxDist)
-      .select(col("probe_id") +: col("corpus_id") +: col("dist") +:
-        carryCols.map(col): _*)
+      .select(col("probe_id"), col("corpus_id"), col("dist"))
   }
 
   /** Content-defined chunks of a string column (native single-pass
@@ -1202,7 +1003,7 @@ object Dedup {
   }
 
   /** Distinct (id, chunk-md5) rows — the blocking projection shared by
-    * [[cdcSharedChunkPairs]], [[cdcCrossPairs]], and [[cdcIndex]].
+    * [[cdcSharedChunkPairs]] and [[cdcCrossPairs]].
     * Explicit not-null guards stay BELOW the callers' exchanges: the
     * joins infer them on their branches, and without matching filters
     * in every branch the subtree copies differ and reuse is lost. */
@@ -1214,7 +1015,8 @@ object Dedup {
       .filter(col("id").isNotNull && col("c").isNotNull)
 
   /** The one exchange over (id, c) key rows that every consumer of a
-    * cdc/winnow corpus side reads. Without a hot guard the blocking key
+    * cdc or winnow corpus side reads ([[cdcSharedChunkPairs]],
+    * [[cdcCrossPairs]], [[winnowCrossPairs]]). Without a hot guard the blocking key
     * is the join's own clustering; with one the key set includes `id`
     * so a boilerplate key's stratum spreads across tasks and is
     * dropped ([[dropHotKeys]]) before the join's c-clustered exchange. */
@@ -1228,9 +1030,8 @@ object Dedup {
    * half of a held document still shares that half's content-defined
    * chunks verbatim. One equi-join on chunk hash, linear in the probe
    * batch. The `maxDf` hot-chunk guard counts CORPUS documents only
-   * (boilerplate-ness is a property of the held corpus — the same df
-   * the at-rest [[cdcIndex]] precomputes), so probe-side composition
-   * cannot shift which chunks block. Output: (probe_id, corpus_id,
+   * (boilerplate-ness is a property of the held corpus), so probe-side
+   * composition cannot shift which chunks block. Output: (probe_id, corpus_id,
    * shared ≥ minShared); shared ids excluded.
    */
   def cdcCrossPairs(corpus: DataFrame, probes: DataFrame, window: Int = 4,
@@ -1240,88 +1041,6 @@ object Dedup {
     sharedChunkTail(
       keyExchange(chunkRows(corpus, idCol, textCol, window, divisor), maxDf),
       chunkRows(probes, idCol, textCol, window, divisor), minShared)
-  }
-
-  /**
-   * Materialize the at-rest CDC chunk index under `path/chunks`:
-   * (id, c, df) — each document's distinct chunk hashes with the
-   * chunk's corpus document frequency DENORMALIZED onto the row, so a
-   * probe-time `maxDf` guard is a pushed parquet filter instead of an
-   * aggregation over the whole index. One chunk pass, one exchange
-   * (the df aggregation and the re-attach join share it).
-   *
-   * `maxDf` caps what the index even stores: chunks in more than
-   * `maxDf` corpus docs are dropped AT BUILD, with the (id, maxDf∨c)
-   * spread-key guard, so no single task ever holds a boilerplate
-   * chunk's whole stratum — the df re-attach join is then ≤ maxDf rows
-   * per key by construction. The default (unbounded) keeps everything
-   * but concentrates each hot chunk's rows in one join task; set
-   * `maxDf` for any corpus that can contain fleet-wide boilerplate.
-   *
-   * REFRESH IS A FULL REWRITE. df is frozen per build — appending new
-   * docs (the [[minhashIndex]] refresh note does NOT transfer) would
-   * leave stale df on existing rows, so a chunk crossing the hot
-   * threshold across appends would silently keep passing probe-time
-   * `df <=` filters.
-   */
-  def cdcIndex(df: DataFrame, path: String, window: Int = 4,
-               divisor: Int = 32, maxDf: Long = Long.MaxValue,
-               idCol: String = "doc_id", textCol: String = "text"): Unit =
-    keyIndex(chunkRows(df, idCol, textCol, window, divisor), path, "chunks",
-      maxDf, cdcFormat(window, divisor))
-
-  /** On-disk chunking contract of a [[cdcIndex]]: the Rabin window and
-    * cut-point divisor baked into the stored chunk hashes. Probing with
-    * different parameters produces chunk hashes that never collide with
-    * the stored ones — silent zero matches — so [[cdcLookup]] verifies
-    * the marker. (Build-time `maxDf` is a data prune, not a layout
-    * parameter: it is recorded in the stored `df` column and probes may
-    * tighten it freely.) A chunking change has no format-independent
-    * stored half — rebuild = re-run [[cdcIndex]] over the corpus. */
-  def cdcFormat(window: Int, divisor: Int): String =
-    s"cdc-chunks v1 window=$window divisor=$divisor"
-
-  /**
-   * Probe a [[cdcIndex]] with a batch of new documents: (probe_id,
-   * corpus_id, shared) per held document sharing ≥ `minShared`
-   * chunks. `maxDf` filters on the index's precomputed df column —
-   * plan-check: the filter reaches the parquet scan. For a LIVE
-   * probe stream, run this per micro-batch via `foreachBatch`: the
-   * per-pair shared-chunk COUNT is an aggregation, which in append
-   * streaming would wait on the watermark instead of answering now
-   * (the [[minhashLookupStream]]/[[simhashLookupStream]] per-row
-   * verifies have no such step, which is why they stream directly).
-   */
-  def cdcLookup(spark: org.apache.spark.sql.SparkSession, path: String,
-                probes: DataFrame, window: Int = 4, divisor: Int = 32,
-                minShared: Int = 2, maxDf: Long = Long.MaxValue,
-                idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    keyLookup(spark, path, "chunks", cdcFormat(window, divisor),
-      "Rebuild with Dedup.cdcIndex under the chunking parameters you probe with.",
-      chunkRows(probes, idCol, textCol, window, divisor), minShared, maxDf)
-
-  /** The df-denormalized key index shared by [[cdcIndex]] and
-    * [[winnowIndex]]: `path/<dir>` = (id, c, df), then the `marker`
-    * stamp. The df aggregation and the re-attach join share the one
-    * [[keyExchange]]. */
-  private def keyIndex(rows: DataFrame, path: String, dir: String,
-                       maxDf: Long, marker: String): Unit = {
-    val ex = keyExchange(rows, maxDf)
-    val dfc = ex.groupBy("c").agg(count(lit(1)).as("df"))
-    ex.join(dfc, "c").select("id", "c", "df")
-      .write.mode("overwrite").parquet(s"$path/$dir")
-    graft.model.IndexFormat.write(rows.sparkSession, path, marker)
-  }
-
-  /** Probe a [[keyIndex]] with (id, c) key rows; `maxDf` is a pushed
-    * parquet filter on the stored df. */
-  private def keyLookup(spark: org.apache.spark.sql.SparkSession,
-                        path: String, dir: String, marker: String,
-                        rebuildHint: String, probeRows: DataFrame,
-                        minShared: Int, maxDf: Long): DataFrame = {
-    graft.model.IndexFormat.check(spark, path, marker, rebuildHint)
-    sharedChunkTail(spark.read.parquet(s"$path/$dir").filter(col("df") <= maxDf),
-      probeRows, minShared)
   }
 
   /** Probe chunks × corpus chunks on the hash, per-pair shared count. */
@@ -1337,8 +1056,8 @@ object Dedup {
 
   /** Distinct (id, c) winnowing fingerprints — the blocking projection
     * of the winnow detector family, fingerprint column named `c` so
-    * the shared-key tail, hot-df guard, and index layout are the cdc
-    * machinery verbatim. Each array stage is materialized as its own
+    * the shared-key tail and hot-df guard are the cdc machinery
+    * verbatim. Each array stage is materialized as its own
     * column ([[graft.text.TextOps.winnowFromHashes]] perf note: a
     * nested argument re-evaluates per window — O(n²·w)). */
   private def fpRows(df: DataFrame, idCol: String, textCol: String,
@@ -1367,39 +1086,6 @@ object Dedup {
     sharedChunkTail(keyExchange(fpRows(corpus, idCol, textCol, k, w), maxDf),
       fpRows(probes, idCol, textCol, k, w), minShared)
   }
-
-  /**
-   * Materialize the at-rest winnow-fingerprint index under
-   * `path/fps`: (id, c, df) with the corpus document frequency
-   * denormalized per row — identical layout and maxDf-at-build
-   * semantics as [[cdcIndex]], including its REFRESH IS A FULL
-   * REWRITE caveat (df is frozen per build).
-   */
-  def winnowIndex(df: DataFrame, path: String, k: Int = 3, w: Int = 4,
-                  maxDf: Long = Long.MaxValue, idCol: String = "doc_id",
-                  textCol: String = "text"): Unit =
-    keyIndex(fpRows(df, idCol, textCol, k, w), path, "fps", maxDf,
-      winnowFormat(k, w))
-
-  /** On-disk fingerprint contract of a [[winnowIndex]]: shingle size
-    * and winnowing window baked into the stored fingerprints — the cdc
-    * marker rationale verbatim (maxDf likewise a probe-time prune). */
-  def winnowFormat(k: Int, w: Int): String = s"winnow-fps v1 k=$k w=$w"
-
-  /**
-   * Probe a [[winnowIndex]] with a batch of new documents:
-   * (probe_id, corpus_id, shared ≥ minShared). `maxDf` filters the
-   * index's precomputed df — a pushed parquet filter. Live probes run
-   * per micro-batch via `foreachBatch`, as with [[cdcLookup]] (the
-   * shared-count aggregation is why this one doesn't stream directly).
-   */
-  def winnowLookup(spark: org.apache.spark.sql.SparkSession, path: String,
-                   probes: DataFrame, k: Int = 3, w: Int = 4,
-                   minShared: Int = 2, maxDf: Long = Long.MaxValue,
-                   idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    keyLookup(spark, path, "fps", winnowFormat(k, w),
-      "Rebuild with Dedup.winnowIndex under the fingerprint parameters you probe with.",
-      fpRows(probes, idCol, textCol, k, w), minShared, maxDf)
 
   /**
    * Exact duplicate-substring spans: maximal runs of ≥ `l` consecutive

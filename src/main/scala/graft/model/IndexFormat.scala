@@ -3,20 +3,18 @@ package graft.model
 import org.apache.spark.sql.SparkSession
 
 /**
- * At-rest index layout markers, one `path/_format` file per
- * materialized index, shared by every index family (minhash, simhash,
- * cdc, winnow, IVF, IVF-PQ, IVF-SQ8, PQ).
+ * At-rest index layout marker: one `path/_format` file per
+ * materialized index. The one at-rest index is the minhash near-dup
+ * index ([[graft.dedup.Dedup.minhashIndex]]).
  *
- * Rationale: each index's on-disk layout bakes in parameters (LSH band
- * scheme, CDC chunking window/divisor, IVF quantizer, PQ codebooks)
- * that its probes must reproduce EXACTLY. A mismatch doesn't error —
- * band keys stop colliding (silent zero matches) or ADC distances
- * decode against the wrong codebook (silently wrong neighbors). So the
- * build stamps a one-line `path/_format` marker (Spark's parquet
- * readers ignore `_`-prefixed files, like `_SUCCESS`) and every
- * reader/appender verifies it and fails loudly on mismatch — including
- * the marker-absent case, which means a pre-marker index that cannot
- * be trusted.
+ * Rationale: the index's on-disk layout bakes in parameters (shingle
+ * size, LSH hash family and band scheme) that its probes must
+ * reproduce EXACTLY. A mismatch doesn't error — band keys stop
+ * colliding (silent zero matches). So the build stamps a one-line
+ * `path/_format` marker (Spark's parquet readers ignore `_`-prefixed
+ * files, like `_SUCCESS`) and every reader/appender verifies it and
+ * fails loudly on mismatch — including the marker-absent case, which
+ * means a pre-marker index that cannot be trusted.
  */
 object IndexFormat {
 
@@ -42,7 +40,7 @@ object IndexFormat {
    * This keeps the fail-loud default (marker-absent = refused
    * everywhere) without making a full rebuild the only recovery path
    * on upgrade. See COVERAGE.md "index format markers" for the
-   * migration recipe per index family.
+   * migration recipe.
    */
   def adopt(spark: SparkSession, path: String, marker: String): Unit = {
     read(spark, path) match {
@@ -83,28 +81,5 @@ object IndexFormat {
       s"call expects '$expected'. A layout/parameter mismatch does not " +
       s"error at query time — lookups silently return zero matches or " +
       s"wrong distances — so it is refused here instead. $rebuildHint")
-  }
-
-  /**
-   * Stable content fingerprint of quantizer matrices (IVF centroids,
-   * PQ codebooks): 16 hex chars of MD5 over the IEEE-754 bit patterns
-   * with row separators. Same doubles ⇒ same fingerprint on any JVM,
-   * so "the SAME quantizer the index was built with" becomes a
-   * checkable contract rather than a doc comment.
-   */
-  def fingerprint(matrices: Array[Array[Double]]*): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val buf = java.nio.ByteBuffer.allocate(8)
-    for (mat <- matrices) {
-      for (row <- mat) {
-        for (v <- row) {
-          buf.clear(); buf.putLong(java.lang.Double.doubleToLongBits(v))
-          md.update(buf.array(), 0, 8)
-        }
-        md.update(0x7c.toByte) // row separator
-      }
-      md.update(0x7d.toByte) // matrix separator
-    }
-    md.digest().take(8).map("%02x".format(_)).mkString
   }
 }

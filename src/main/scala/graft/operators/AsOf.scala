@@ -40,8 +40,7 @@ import org.apache.spark.sql.functions._
  * STREAMING: for a stream-static enrichment (live points against a
  * held lookup table), run this per micro-batch via `foreachBatch` with
  * the stream as `left` — the unbounded-preceding window is not
- * append-streamable directly (same composition note as
- * [[graft.dedup.Dedup.cdcLookup]]).
+ * append-streamable directly.
  */
 object AsOf {
 

@@ -909,11 +909,9 @@ object Ann {
   }
 
   /**
-   * IVF index-build statistics: corpus rows per inverted list. At scale
-   * this is the materialization step — the corpus gets written
-   * partitioned/bucketed by `list_id` so probes read only their lists —
-   * and the per-list counts are the balance check (skewed lists →
-   * retrain or split). One scan + one tiny shuffle on list_id.
+   * IVF index-build statistics: corpus rows per inverted list, the
+   * balance check (skewed lists → retrain or split). One scan + one
+   * tiny shuffle on list_id.
    */
   def ivfListStats(centroids: Array[Array[Double]],
                    corpus: DataFrame,
@@ -924,41 +922,8 @@ object Ann {
       .agg(count(lit(1)).as("n_vectors"))
   }
 
-  /** On-disk quantizer contracts of the materialized vector indexes.
-    * The stored layouts bake in the EXACT quantizer arrays used at
-    * build time: list assignments derive from the centroids, ADC
-    * distances decode against the codebooks — searching or appending
-    * with different arrays doesn't error, it silently splits lists or
-    * returns wrong neighbors. Each build stamps a `path/_format`
-    * marker carrying the layout parameters plus a content FINGERPRINT
-    * of the quantizer ([[graft.model.IndexFormat.fingerprint]]: MD5
-    * over the IEEE bit patterns), and every search/append verifies it
-    * — "pass the SAME centroids" is a checked contract, not a doc
-    * comment. */
-  def ivfFormat(centroids: Array[Array[Double]]): String =
-    s"ivf v1 nlist=${centroids.length} dim=${centroids.head.length} " +
-      s"quantizer=${graft.model.IndexFormat.fingerprint(centroids)}"
-  def ivfPqFormat(centroids: Array[Array[Double]],
-                  codebooks: Array[Array[Array[Double]]]): String =
-    s"ivf-pq v1 nlist=${centroids.length} m=${codebooks.length} " +
-      s"ksub=${codebooks.head.length} " +
-      s"quantizer=${graft.model.IndexFormat.fingerprint(centroids)} " +
-      s"codebooks=${graft.model.IndexFormat.fingerprint(codebooks: _*)}"
-  def ivfSq8Format(centroids: Array[Array[Double]]): String =
-    s"ivf-sq8 v1 nlist=${centroids.length} dim=${centroids.head.length} " +
-      s"quantizer=${graft.model.IndexFormat.fingerprint(centroids)}"
-  def pqFormat(codebooks: Array[Array[Array[Double]]]): String =
-    s"pq v1 m=${codebooks.length} ksub=${codebooks.head.length} " +
-      s"codebooks=${graft.model.IndexFormat.fingerprint(codebooks: _*)}"
-  private def checkFormat(spark: org.apache.spark.sql.SparkSession,
-                          path: String, expected: String, builder: String): Unit =
-    graft.model.IndexFormat.check(spark, path, expected,
-      s"Re-materialize with Ann.$builder under the quantizer you search " +
-        "with, or load the quantizer this index was built with (persist " +
-        "centroids/codebooks alongside the index).")
-
   /** Nearest-centroid inverted-list id of a vector column — the list
-    * assignment every IVF layout and in-memory search shares. */
+    * assignment every IVF search shares. */
   private def listOf(centroids: Array[Array[Double]], vec: Column): Column =
     graft.functions.VectorOps.topCentroids(vec, centroids, 1).getItem(0)
 
@@ -969,148 +934,12 @@ object Ann {
     explode(graft.functions.VectorOps.topCentroids(vec, centroids, nprobe))
       .as("list_id")
 
-  /** The list-partitioned at-rest write shared by every IVF layout:
-    * rows carrying `list_id`, clustered by list so each `list_id=<n>/`
-    * directory gets one file set. A build overwrites and stamps
-    * `marker`; an append verifies `marker` first and only adds files to
-    * the touched list directories. */
-  private def writeLists(rows: DataFrame, path: String, marker: String,
-                         builder: String, append: Boolean = false): Unit = {
-    val spark = rows.sparkSession
-    if (append) checkFormat(spark, path, marker, builder)
-    rows.repartition(col("list_id"))
-      .write.partitionBy("list_id").mode(if (append) "append" else "overwrite")
-      .parquet(path)
-    if (!append) graft.model.IndexFormat.write(spark, path, marker)
-  }
-
-  /** The probed lists of a list-partitioned index: verifies `marker`,
-    * collects the distinct `list_id`s of `probeLists` (bounded by
-    * queries × nprobe — the same small-query contract as the
-    * [[bruteTopK]] broadcast) and reads only those `list_id=`
-    * directories, as literal partition filters. */
-  private def readLists(spark: org.apache.spark.sql.SparkSession, path: String,
-                        marker: String, builder: String,
-                        probeLists: DataFrame): DataFrame = {
-    checkFormat(spark, path, marker, builder)
-    val probed = probeLists.select("list_id").distinct()
-      .collect().map(_.getInt(0)).toSeq
-    spark.read.parquet(path).filter(col("list_id").isin(probed: _*))
-  }
-
-  /**
-   * Materialize the IVF index: the corpus written partitioned by
-   * inverted list (`list_id=<n>/` directories). This is the scale
-   * counterpart of [[ivfListStats]]'s balance check — after this,
-   * probes are PARTITION FILTERS: a query touching `nprobe` of `nlist`
-   * lists reads nprobe/nlist of the data from disk, before any task
-   * is scheduled.
-   */
-  def ivfMaterialize(centroids: Array[Array[Double]], corpus: DataFrame,
-                     path: String,
-                     idCol: String = "vec_id",
-                     vecCol: String = "embedding"): Unit =
-    writeLists(corpus.select(col(idCol), col(vecCol),
-        listOf(centroids, col(vecCol)).as("list_id")),
-      path, ivfFormat(centroids), "ivfMaterialize")
-
-  /**
-   * Append new vectors to a materialized IVF index — the incremental
-   * ingest path. List assignment is a pure function of the FROZEN
-   * quantizer, so appended rows land in exactly the partitions a full
-   * rebuild would put them in and searches stay bit-identical to a
-   * from-scratch build; this index family has no per-row corpus
-   * statistic that can go stale (unlike [[graft.dedup.Dedup.cdcIndex]]'s
-   * denormalized df, whose refresh must be a full rewrite). Pass the
-   * SAME centroids the index was built with — mixing quantizers
-   * silently splits lists (callers should persist centroids alongside
-   * the index).
-   *
-   * Append-mode partitioned write: only the touched `list_id=`
-   * directories gain files; existing data is never rewritten. The
-   * per-list balance check ([[ivfListStats]]) is the signal for when
-   * accumulated appends warrant retraining.
-   */
-  def ivfAppend(centroids: Array[Array[Double]], newVectors: DataFrame,
-                path: String,
-                idCol: String = "vec_id",
-                vecCol: String = "embedding"): Unit =
-    // the marker check refuses a different quantizer, which would
-    // silently split lists
-    writeLists(newVectors.select(col(idCol), col(vecCol),
-        listOf(centroids, col(vecCol)).as("list_id")),
-      path, ivfFormat(centroids), "ivfMaterialize", append = true)
-
-  /**
-   * Search a materialized IVF index ([[ivfMaterialize]] layout). Only
-   * the probed `list_id=` directories are ever read ([[readLists]]);
-   * the query side ([[ivfQueries]]) and the scoring tail are those of
-   * [[ivfTopKWith]], so results are identical for the same quantizer.
-   */
-  def ivfSearchIndexed(spark: org.apache.spark.sql.SparkSession, path: String,
-                       centroids: Array[Array[Double]],
-                       queries: DataFrame, k: Int, nprobe: Int = 4,
-                       idCol: String = "vec_id",
-                       vecCol: String = "embedding"): DataFrame = {
-    val q = ivfQueries(centroids, queries, nprobe, idCol, vecCol)
-    val c = readLists(spark, path, ivfFormat(centroids), "ivfMaterialize", q)
-      .select(col(idCol).as("nid"), col(vecCol).as("nvec"),
-        norm(col(vecCol)).as("nn"), col("list_id"))
-    cosScoreTail(c.join(q, "list_id"), k)
-  }
-
-  /** IVF query side shared by [[ivfTopKWith]] and [[ivfSearchIndexed]]:
-    * (qid, qvec, qn, list_id), one row per probed list. */
-  private def ivfQueries(centroids: Array[Array[Double]], queries: DataFrame,
-                         nprobe: Int, idCol: String, vecCol: String): DataFrame =
-    queries.select(col(idCol).as("qid"), col(vecCol).as("qvec"),
-      norm(col(vecCol)).as("qn"), probedLists(centroids, col(vecCol), nprobe))
-
-  /**
-   * Materialize the IVF-PQ index: (id, m codes) partitioned by
-   * inverted list — the at-rest production layout. A probe reads
-   * (nprobe/nlist) of the directories and m bytes per vector within
-   * them: the [[ivfMaterialize]] partition pruning and the
-   * [[pqMaterialize]] scan-volume compression composed.
-   */
-  def ivfPqMaterialize(centroids: Array[Array[Double]],
-                       codebooks: Array[Array[Array[Double]]],
-                       corpus: DataFrame, path: String,
-                       idCol: String = "vec_id",
-                       vecCol: String = "embedding"): Unit =
-    writeLists(ivfPqEncode(centroids, codebooks, corpus, idCol, vecCol),
-      path, ivfPqFormat(centroids, codebooks), "ivfPqMaterialize")
-
-  /** The IVF-PQ index rows — (nid, m codes, list_id) — shared by the
-    * in-memory search and the materialized layout so both score the
-    * identical encoding by construction. */
-  private def ivfPqEncode(centroids: Array[Array[Double]],
-                          codebooks: Array[Array[Array[Double]]],
-                          df: DataFrame,
-                          idCol: String, vecCol: String): DataFrame =
-    df.select(col(idCol).as("nid"),
-      pqCodeExpr(codebooks, col(vecCol)).as("code"),
-      listOf(centroids, col(vecCol)).as("list_id"))
-
-  /** Shared IVF-PQ scoring tail: candidates = encoded rows × each
-    * query's probe lists (a (qid, list_id) broadcast — one row per
-    * probe), then ONE copy of each query's ADC table joins back by
-    * qid and the [[adcRank]] adist/rank/round expressions run
-    * verbatim. Both [[ivfPqTopK]] and [[ivfPqSearchIndexed]] end here,
-    * which is what makes their bit-equality contract structural. */
-  private def adcRankByList(enc: DataFrame, probeLists: DataFrame,
-                            tables: DataFrame, k: Int): DataFrame =
-    adcScoreTail(
-      enc.join(broadcast(probeLists), "list_id")
-        .join(broadcast(tables), "qid"), k)
-
   /** THE ADC scoring tail — adist via single-reference zip_with +
     * aggregate (subspace order identical to the oracle's
     * `list(d ORDER BY s)`), self-pair filter, per-query rank,
-    * round(4). Every ADC path ([[adcRank]], [[adcRankByList]],
+    * round(4). Every ADC path ([[pqTopK]], [[ivfPqTopK]],
     * [[ivfPqResidualTopK]]) ends here, so the rank/tie/rounding
-    * convention — the bit-equality contract between in-memory and
-    * indexed searches — lives in exactly one place. Input must carry
+    * convention lives in exactly one place. Input must carry
     * (qid, nid, code, dt). */
   private def adcScoreTail(candidates: DataFrame, k: Int): DataFrame = {
     // single reference to `code`: an element_at-per-subspace chain
@@ -1130,13 +959,6 @@ object Ann {
       .select(col("qid"), col("nid"), round(col("adist"), 4).as("adist"),
         col("rank"))
   }
-
-  /** Each query's `nprobe` coarse lists: (qid, list_id), one row per
-    * probe. */
-  private def probeListsOf(centroids: Array[Array[Double]],
-                           queries: DataFrame, nprobe: Int,
-                           idCol: String, vecCol: String): DataFrame =
-    queries.select(col(idCol).as("qid"), probedLists(centroids, col(vecCol), nprobe))
 
   /**
    * Residual PQ codebooks (the faiss-IVFPQ convention): codewords are
@@ -1181,7 +1003,7 @@ object Ann {
    * broadcast query side is O(queries·nprobe) tables of m·ksub doubles
    * — still bounded by the small-query contract; candidates meet once
    * per pair (one list per corpus row), scoring runs the
-   * [[adcRankByList]] expressions verbatim with the per-list table
+   * [[adcScoreTail]] expressions verbatim with the per-list table
    * joined on (list_id, qid).
    */
   def ivfPqResidualTopK(centroids: Array[Array[Double]],
@@ -1259,30 +1081,6 @@ object Ann {
     qRows.toDF("list_id", "qid", "dt")
   }
 
-  /**
-   * ADC search over a materialized IVF-PQ index ([[ivfPqMaterialize]]
-   * layout): probe lists become literal partition filters, scoring is
-   * identical to [[ivfPqTopK]] — same quantizers ⇒ bit-identical
-   * results — but only the probed `list_id=` directories' (nid, code)
-   * columns are ever read; raw vectors are never opened.
-   */
-  def ivfPqSearchIndexed(spark: org.apache.spark.sql.SparkSession,
-                         path: String,
-                         centroids: Array[Array[Double]],
-                         codebooks: Array[Array[Array[Double]]],
-                         queries: DataFrame, k: Int, nprobe: Int = 4,
-                         idCol: String = "vec_id",
-                         vecCol: String = "embedding"): DataFrame = {
-    val probeLists = probeListsOf(centroids, queries, nprobe, idCol, vecCol)
-    // list discovery collects the slim pre-join probe projection — no
-    // ADC tables involved yet
-    val enc = readLists(spark, path, ivfPqFormat(centroids, codebooks),
-        "ivfPqMaterialize", probeLists)
-      .select(col("nid"), col("code"), col("list_id"))
-    adcRankByList(enc, probeLists,
-      adcTables(spark, codebooks, queries, idCol, vecCol), k)
-  }
-
   /** IVF search against caller-provided centroids — assignment and
     * probing identical to [[ivfTopK]]. */
   def ivfTopKWith(centroids: Array[Array[Double]],
@@ -1291,8 +1089,9 @@ object Ann {
                   idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val c = corpus.select(col(idCol).as("nid"), col(vecCol).as("nvec"),
       norm(col(vecCol)).as("nn"), listOf(centroids, col(vecCol)).as("list_id"))
-    cosScoreTail(c.join(ivfQueries(centroids, queries, nprobe, idCol, vecCol),
-      "list_id"), k)
+    val q = queries.select(col(idCol).as("qid"), col(vecCol).as("qvec"),
+      norm(col(vecCol)).as("qn"), probedLists(centroids, col(vecCol), nprobe))
+    cosScoreTail(c.join(q, "list_id"), k)
   }
 
   /**
@@ -1314,57 +1113,15 @@ object Ann {
         codesD(sq8CodeExpr(col(vecCol))).as("nvec"),
         listOf(centroids, col(vecCol)).as("list_id"))
       .withColumn("nn", norm(col("nvec")))
-    cosScoreTail(c.join(ivfSq8Queries(centroids, queries, nprobe, idCol, vecCol),
-      "list_id"), k)
+    val q = queries.select(col(idCol).as("qid"),
+        codesD(sq8CodeExpr(col(vecCol))).as("qvec"),
+        probedLists(centroids, col(vecCol), nprobe))
+      .withColumn("qn", norm(col("qvec")))
+    cosScoreTail(c.join(q, "list_id"), k)
   }
 
   /** SQ8 codes widened to doubles for the scale-free quantized cosine. */
   private def codesD(codes: Column): Column = transform(codes, x => x.cast("double"))
-
-  /** IVF-SQ8 query side shared by [[ivfSq8TopK]] and
-    * [[ivfSq8SearchIndexed]]: (qid, qvec = SQ8 codes as doubles,
-    * list_id, qn), one row per probed list. */
-  private def ivfSq8Queries(centroids: Array[Array[Double]], queries: DataFrame,
-                            nprobe: Int, idCol: String, vecCol: String): DataFrame =
-    queries.select(col(idCol).as("qid"),
-        codesD(sq8CodeExpr(col(vecCol))).as("qvec"),
-        probedLists(centroids, col(vecCol), nprobe))
-      .withColumn("qn", norm(col("qvec")))
-
-  /**
-   * Materialize the IVF-SQ8 index: (nid, int8 codes) partitioned by
-   * inverted list — the at-rest layout. A probe prunes to
-   * nprobe/nlist `list_id=` directories before any task is scheduled
-   * and reads 1 byte/dim within them; the raw float vectors are never
-   * opened at search time.
-   */
-  def ivfSq8Materialize(centroids: Array[Array[Double]], corpus: DataFrame,
-                        path: String, idCol: String = "vec_id",
-                        vecCol: String = "embedding"): Unit =
-    writeLists(corpus.select(col(idCol).as("nid"),
-        sq8CodeExpr(col(vecCol)).as("codes"),
-        listOf(centroids, col(vecCol)).as("list_id")),
-      path, ivfSq8Format(centroids), "ivfSq8Materialize")
-
-  /**
-   * Search a materialized IVF-SQ8 index ([[ivfSq8Materialize]]
-   * layout): only the probed `list_id=` directories are read
-   * ([[readLists]]); the query side ([[ivfSq8Queries]]) and scoring
-   * are those of [[ivfSq8TopK]] — bit-identical results for the same
-   * quantizer (PipelineSpec).
-   */
-  def ivfSq8SearchIndexed(spark: org.apache.spark.sql.SparkSession,
-                          path: String,
-                          centroids: Array[Array[Double]],
-                          queries: DataFrame, k: Int, nprobe: Int = 4,
-                          idCol: String = "vec_id",
-                          vecCol: String = "embedding"): DataFrame = {
-    val q = ivfSq8Queries(centroids, queries, nprobe, idCol, vecCol)
-    val c = readLists(spark, path, ivfSq8Format(centroids), "ivfSq8Materialize", q)
-      .select(col("nid"), codesD(col("codes")).as("nvec"), col("list_id"))
-      .withColumn("nn", norm(col("nvec")))
-    cosScoreTail(c.join(q, "list_id"), k)
-  }
 
   /**
    * Dominant principal direction of the (optionally mean-centered)
@@ -1472,8 +1229,8 @@ object Ann {
              corpus: DataFrame, queries: DataFrame, k: Int,
              idCol: String = "vec_id",
              vecCol: String = "embedding"): DataFrame =
-    adcRank(pqEncode(codebooks, corpus, idCol, vecCol),
-      adcTables(corpus.sparkSession, codebooks, queries, idCol, vecCol), k)
+    adcScoreTail(pqEncode(codebooks, corpus, idCol, vecCol).crossJoin(broadcast(
+      adcTables(corpus.sparkSession, codebooks, queries, idCol, vecCol))), k)
 
   /**
    * IVF-PQ: the production ANN index shape — the coarse quantizer
@@ -1501,11 +1258,19 @@ object Ann {
                 corpus: DataFrame, queries: DataFrame, k: Int,
                 nprobe: Int = 4,
                 idCol: String = "vec_id",
-                vecCol: String = "embedding"): DataFrame =
-    adcRankByList(
-      ivfPqEncode(centroids, codebooks, corpus, idCol, vecCol),
-      probeListsOf(centroids, queries, nprobe, idCol, vecCol),
-      adcTables(corpus.sparkSession, codebooks, queries, idCol, vecCol), k)
+                vecCol: String = "embedding"): DataFrame = {
+    val enc = corpus.select(col(idCol).as("nid"),
+      pqCodeExpr(codebooks, col(vecCol)).as("code"),
+      listOf(centroids, col(vecCol)).as("list_id"))
+    val probeLists = queries.select(col(idCol).as("qid"),
+      probedLists(centroids, col(vecCol), nprobe))
+    val tables = adcTables(corpus.sparkSession, codebooks, queries, idCol, vecCol)
+    // candidates = encoded rows × each query's probe lists (a (qid,
+    // list_id) broadcast — one row per probe), then ONE copy of each
+    // query's ADC table joins back by qid
+    adcScoreTail(enc.join(broadcast(probeLists), "list_id")
+      .join(broadcast(tables), "qid"), k)
+  }
 
   /** Per-query ADC distance tables: dt(s)(c) = Σ_i (q_s(i) −
     * codeword(i))², in element order (bit-identical to the oracle's
@@ -1535,46 +1300,6 @@ object Ann {
     }.toSeq
     import spark.implicits._
     qRows.toDF("qid", "dt")
-  }
-
-  /** ADC scoring over an encoded corpus (nid, code): m table lookups
-    * summed in subspace order, per-partition rank pruning before the
-    * final k-merge. */
-  private def adcRank(encoded: DataFrame, q: DataFrame, k: Int): DataFrame =
-    adcScoreTail(encoded.crossJoin(broadcast(q)), k)
-
-  /**
-   * Materialize the PQ index: the [[pqEncode]]d corpus — (nid, `m`
-   * small codes) — written as parquet. The at-rest counterpart of
-   * [[ivfMaterialize]]: ADC search over the index reads `m` bytes per
-   * vector from disk (ksub ≤ 256) instead of the raw vectors — at
-   * dim=64 float32 a 32× scan-volume reduction, which is what makes a
-   * 100 TB corpus ADC-searchable from storage.
-   */
-  def pqMaterialize(codebooks: Array[Array[Array[Double]]],
-                    corpus: DataFrame, path: String,
-                    idCol: String = "vec_id",
-                    vecCol: String = "embedding"): Unit = {
-    pqEncode(codebooks, corpus, idCol, vecCol)
-      .write.mode("overwrite").parquet(path)
-    graft.model.IndexFormat.write(corpus.sparkSession, path,
-      pqFormat(codebooks))
-  }
-
-  /**
-   * ADC search over a materialized PQ index ([[pqMaterialize]] layout):
-   * scoring identical to [[pqTopK]] — same codebooks ⇒ bit-identical
-   * results — but the corpus side is the codes parquet, so the scan
-   * touches (nid, code) only; the raw embedding table is never opened.
-   */
-  def pqSearchIndexed(spark: org.apache.spark.sql.SparkSession, path: String,
-                      codebooks: Array[Array[Array[Double]]],
-                      queries: DataFrame, k: Int,
-                      idCol: String = "vec_id",
-                      vecCol: String = "embedding"): DataFrame = {
-    checkFormat(spark, path, pqFormat(codebooks), "pqMaterialize")
-    adcRank(spark.read.parquet(path),
-      adcTables(spark, codebooks, queries, idCol, vecCol), k)
   }
 
   /**

@@ -176,45 +176,6 @@ object PointSource {
       .partitionBy("date")
 
   /**
-   * Bucketed at-rest layout — the shuffle-paid-once story for 100 TB.
-   * The series key is materialized and hash-bucketed into `nBuckets`
-   * files at write time (`bucketBy` + `sortBy`), registered as `table`
-   * with data under `path`. Every per-series operator that would
-   * shuffle on the series key — groupBy aggregations, lag/window rate,
-   * series self-joins, joins between two stores bucketed alike — then
-   * starts from a bucket-aligned scan and skips its Exchange entirely:
-   * the biggest shuffle of every per-series query is paid once, at
-   * ingest. `nBuckets` sizes to cluster width (buckets ≳ executor
-   * cores; 32 matches the local harness).
-   *
-   * Bucket metadata lives in the catalog — in-memory per session here,
-   * a persistent metastore in production (the parquet files alone
-   * carry no bucket contract; reference analog: the hash-ring routing
-   * SURVEY §4 maps to partitioning).
-   */
-  def writeBucketed(df: DataFrame, table: String, path: String,
-                    nBuckets: Int = 32): Unit =
-    // Pre-repartition on skey with numPartitions = nBuckets: Spark's
-    // repartition hash and the bucket-id hash are the same
-    // murmur3-mod-n, so each task holds exactly one bucket's rows →
-    // ONE file per bucket. Without it every input task writes its own
-    // file per bucket (P×nBuckets small files at ingest width), and a
-    // multi-file bucket forfeits the sorted-scan path sortBy buys
-    // (per-file order only).
-    Point.withSeriesKey(df)
-      .repartition(nBuckets, col("skey"))
-      .write.bucketBy(nBuckets, "skey").sortBy("skey", "ts")
-      .option("path", path)
-      .option("parquet.bloom.filter.enabled#name", "true")
-      .format("parquet").mode("overwrite").saveAsTable(table)
-
-  /** Reads a [[writeBucketed]] store; the scan reports its bucket
-    * hash-partitioning on `skey`, which is what lets the planner drop
-    * per-series exchanges (asserted in StoreSpec). */
-  def readBucketed(spark: SparkSession, table: String): DataFrame =
-    spark.table(table)
-
-  /**
    * Gorilla value-block tier — the cold-storage layout for NUMERIC
    * series (the reference's encoded value stream analog,
    * lib/protobuf.cc EncodeValueStream; here the VLDB'15 XOR format via

@@ -229,4 +229,178 @@ class BenchSpec extends AnyFunSuite {
       "graft/cli/Cli.scala", "graft/cli/Curate.scala",
       "graft/http/StoreHttpServer.scala"), mains.mkString("\n"))
   }
+
+  test("every public def that only specs reach is on the keep-list, with its reason") {
+    val found = SpecOnlyApi.scan(new java.io.File("src/main/scala"),
+      new java.io.File("perfbench/src"))
+    val kept = SpecOnlyApi.Kept.map { case (f, n, _) => (f, n) }.toSet
+    assert(kept.size == SpecOnlyApi.Kept.size, "keep-list lists an entry twice")
+    val unlisted = (found -- kept).toSeq.sorted
+    val stale = (kept -- found).toSeq.sorted
+    assert(unlisted.isEmpty && stale.isEmpty,
+      s"public defs that no src/main or perfbench code names must be on " +
+        s"SpecOnlyApi.Kept with a reason, or be deleted with their spec:\n" +
+        unlisted.map { case (f, n) => s"  unlisted: $f $n" }.mkString("\n") + "\n" +
+        stale.map { case (f, n) => s"  stale (now reached, or gone): $f $n" }
+          .mkString("\n"))
+  }
+}
+
+/**
+ * The public library is what a surface reaches (ROADMAP item 5). A
+ * public `def` in `src/main` that no `src/main` or `perfbench/src` code
+ * names is reached only from specs; each one stays only for a reason
+ * listed here, and new spec-only API adds its line.
+ */
+object SpecOnlyApi {
+  private val Item3 = "ROADMAP item 3: stream twin, to fold into Engine.get"
+  private val Item7 = "ROADMAP item 7: Instrument self-observation"
+  private val Collectors = "SURVEY §2.4 collectors row"
+  private val Recovery = "minhash index recovery path"
+  private val Open = "ROADMAP item 5, open: engine extension with no gate yet"
+
+  /** (file under src/main/scala, def name, reason). */
+  val Kept: Seq[(String, String, String)] = Seq(
+    ("graft/client/Instrument.scala", "addExportCallback", Item7),
+    ("graft/client/Instrument.scala", "clearExportLabel", Item7),
+    ("graft/client/Instrument.scala", "exportToString", Item7),
+    ("graft/client/Instrument.scala", "failure", Item7),
+    ("graft/client/Instrument.scala", "overallSum", Item7),
+    ("graft/client/Instrument.scala", "setExportLabel", Item7),
+    ("graft/client/Instrument.scala", "startExportThread", Item7),
+    ("graft/client/Instrument.scala", "stopExportThread", Item7),
+    ("graft/client/Instrument.scala", "totalCount", Item7),
+    ("graft/client/Instrument.scala", "unregister", Item7),
+    ("graft/client/ServiceStats.scala", "apacheStats", Collectors),
+    ("graft/client/ServiceStats.scala", "apcStats", Collectors),
+    ("graft/client/ServiceStats.scala", "mysqlStats", Collectors),
+    ("graft/client/ServiceStats.scala", "varnishStats", Collectors),
+    ("graft/client/SystemStats.scala", "dfInodeStats", Collectors),
+    ("graft/client/SystemStats.scala", "dfStats", Collectors),
+    ("graft/client/SystemStats.scala", "ntpStats", Collectors),
+    ("graft/dedup/Dedup.scala", "cutSpans", Open),
+    ("graft/model/IndexFormat.scala", "adopt", Recovery),
+    ("graft/model/Variable.scala", "isValidName",
+      "SURVEY §2.3 ingest validation row"),
+    ("graft/multimodal/Multimodal.scala", "frameDims", Open),
+    ("graft/multimodal/Multimodal.scala", "imageNearDupPairs", Open),
+    ("graft/similarity/Ann.scala", "cosine", Open),
+    ("graft/similarity/Ann.scala", "kmeansObjective", Open),
+    ("graft/similarity/Ann.scala", "lshPairs", Open),
+    ("graft/similarity/Ann.scala", "lshTopK", Open),
+    ("graft/similarity/Ann.scala", "powerIteration", Open),
+    ("graft/sketch/CountMin.scala", "cells", Open),
+    ("graft/sources/PointSource.scala", "ageIntoGorilla",
+      "SURVEY §2.4 indexed store file row: writes the tier --tier reads"),
+    ("graft/sources/PointSource.scala", "compact", "SURVEY §2.3 compaction row"),
+    ("graft/sources/PointSource.scala", "writeGorilla",
+      "SURVEY §2.4 indexed store file row: writes the tier --tier reads"),
+    ("graft/streaming/StreamIngest.scala", "alertStream", Item3),
+    ("graft/streaming/StreamIngest.scala", "anomalyStream", Item3),
+    ("graft/streaming/StreamIngest.scala", "dedupStream", Item3),
+    ("graft/streaming/StreamIngest.scala", "lttbStream", Item3),
+    ("graft/streaming/StreamIngest.scala", "rateStream", Item3),
+    ("graft/streaming/StreamIngest.scala", "uniformResampleStream", Item3),
+    ("graft/streaming/StreamIngest.scala", "windowedAggByLabel", Item3),
+    ("graft/streaming/StreamIngest.scala", "windowedMeanByName", Item3),
+    ("graft/streaming/StreamIngest.scala", "windowedMedianByName", Item3),
+    ("graft/streaming/StreamIngest.scala", "windowedSlidingMeanByName", Item3),
+    ("graft/text/TextOps.scala", "winnow", Open),
+    ("graft/wire/Rpc.scala", "decodeStoreConfig",
+      "SURVEY §2.4 HTTP RPC row: the client half of /get_config"))
+
+  private def scalaFiles(f: java.io.File): Seq[java.io.File] =
+    if (f.isDirectory) f.listFiles().toSeq.flatMap(scalaFiles)
+    else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+
+  private val Def = """(?m)^[ \t]*((?:final|implicit|inline|override|private(?:\[\w+\])?|protected(?:\[\w+\])?)\s+)*def\s+([A-Za-z_]\w*)""".r
+  private val Hidden = """\b(private|protected|override)\b""".r
+  private val Ident = """[A-Za-z_]\w*""".r
+
+  /** (file relative to `main`, name) of each public, non-override def
+    * in `main` whose name appears nowhere in the code of `main` and
+    * `others` besides its own definitions. Names are matched as words
+    * across all files, so a name two objects share counts as reached
+    * once either is called. */
+  def scan(main: java.io.File, others: java.io.File*): Set[(String, String)] = {
+    def code(f: java.io.File) =
+      codeOnly(new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
+    val mainCode = scalaFiles(main).map(f => main.toPath.relativize(f.toPath).toString -> code(f))
+    val all = mainCode.map(_._2) ++ others.flatMap(scalaFiles).map(code)
+    val uses = all.flatMap(Ident.findAllIn).groupBy(identity).view.mapValues(_.size).toMap
+    val defs = mainCode.flatMap { case (f, text) =>
+      Def.findAllMatchIn(text).map(m => (f, m.group(2), Hidden.findFirstIn(m.matched).isDefined)) }
+    val defined = defs.groupBy(_._2).view.mapValues(_.size).toMap
+    defs.collect { case (f, n, false)
+        if n != "main" && uses.getOrElse(n, 0) <= defined(n) => (f, n) }.toSet
+  }
+
+  /** `src` without comments and with every string literal emptied; the
+    * code of an interpolated string's `${...}` and `$name` parts stays. */
+  def codeOnly(src: String): String = {
+    val out = new StringBuilder
+    val n = src.length
+    // Emits code from `start`; with `nested`, stops after the `}` that
+    // closes an interpolation and returns the index past it.
+    def code(start: Int, nested: Boolean): Int = {
+      var i = start
+      var depth = 0
+      while (i < n) {
+        val c = src(i)
+        if (src.startsWith("//", i)) {
+          val j = src.indexOf('\n', i)
+          i = if (j < 0) n else j
+        } else if (src.startsWith("/*", i)) {
+          var d = 0
+          var open = true
+          while (open && i < n) {
+            if (src.startsWith("/*", i)) { d += 1; i += 2 }
+            else if (src.startsWith("*/", i)) { d -= 1; i += 2; open = d > 0 }
+            else i += 1
+          }
+          out += ' '
+        } else if (c == '"') {
+          i = string(i, i > 0 && (src(i - 1).isLetterOrDigit || src(i - 1) == '_'))
+        } else if (c == '\'' && i + 2 < n && src(i + 1) != '\\' && src(i + 2) == '\'') {
+          out ++= "' '"; i += 3
+        } else if (c == '\'' && i + 3 < n && src(i + 1) == '\\') {
+          out ++= "' '"; i = src.indexOf('\'', i + 3) + 1
+        } else {
+          if (c == '{') depth += 1
+          if (c == '}') {
+            if (nested && depth == 0) return i + 1
+            depth -= 1
+          }
+          out += c; i += 1
+        }
+      }
+      i
+    }
+    def string(start: Int, interpolated: Boolean): Int = {
+      val triple = src.startsWith("\"\"\"", start)
+      var i = start + (if (triple) 3 else 1)
+      out += '"'
+      var open = true
+      while (open) {
+        if (triple && src.startsWith("\"\"\"", i)) {
+          i += 3
+          while (i < n && src(i) == '"') i += 1
+          open = false
+        } else if (!triple && src(i) == '"') { i += 1; open = false }
+        else if (!triple && src(i) == '\\') i += 2
+        else if (interpolated && src.startsWith("$$", i)) i += 2
+        else if (interpolated && src.startsWith("${", i)) {
+          out += ' '; i = code(i + 2, nested = true); out += ' '
+        } else if (interpolated && src(i) == '$') {
+          val name = Ident.findPrefixOf(src.substring(i + 1, math.min(n, i + 200)))
+          name.foreach(s => out ++= s" $s ")
+          i += 1 + name.fold(0)(_.length)
+        } else i += 1
+      }
+      out += '"'
+      i
+    }
+    code(0, nested = false)
+    out.result()
+  }
 }

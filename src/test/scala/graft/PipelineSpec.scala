@@ -114,63 +114,6 @@ class PipelineSpec extends SparkSpec {
     assert(!pairs.exists { case (a, b) => a == 3L || b == 3L })
   }
 
-  test("at-rest cdc index: lookup matches in-memory cross pairs, df filter pushes to scan") {
-    val shared = (1 to 12).map(i =>
-      s"Sentence number $i talks about topic-$i with detail level ${i * 7}. ").mkString
-    val corpus = docs(
-      (1L, shared + "unique suffix one two three"),
-      (3L, "nothing in common with the others at all, not one phrase."))
-    val probes = docs(
-      (2L, "a completely different prefix here. " + shared),
-      (4L, "likewise fully distinct probe content, no overlap anywhere."))
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val expected = rows(Dedup.cdcCrossPairs(corpus, probes, 4, 32, minShared = 2))
-    assert(expected.map(p => (p._1, p._2)) == Set((2L, 1L)), s"got $expected")
-    val path = java.nio.file.Files.createTempDirectory("graft_cdc_idx").toString + "/idx"
-    Dedup.cdcIndex(corpus, path, 4, 32)
-    val looked = Dedup.cdcLookup(spark, path, probes, 4, 32, minShared = 2,
-      maxDf = 100L)
-    assert(rows(looked) == expected)
-    // the precomputed-df hot guard is a pushed parquet filter, not an
-    // aggregation over the index
-    val plan = looked.queryExecution.executedPlan.toString
-    assert(plan.contains("LessThanOrEqual(df,100)"),
-      s"df guard must reach the index scan:\n${plan.take(1200)}")
-    // build-time cap: chunks in more than maxDf corpus docs never
-    // reach the index (hot-safe spread-key build); corpus doc 1's
-    // chunks are unique to it (df=1), so a cap of 0 empties the index
-    val path2 = java.nio.file.Files.createTempDirectory("graft_cdc_idx2").toString + "/idx"
-    Dedup.cdcIndex(corpus, path2, 4, 32, maxDf = 0L)
-    assert(Dedup.cdcLookup(spark, path2, probes, 4, 32, minShared = 1).count() == 0)
-  }
-
-  test("at-rest winnow index: lookup matches in-memory cross pairs, df filter pushes") {
-    val shared = (1 to 12).map(i =>
-      s"sentence number $i talks about topic-$i with detail level ${i * 7}").mkString(" ")
-    val corpus = docs(
-      (1L, shared + " unique suffix one two three"),
-      (3L, "nothing in common with the others at all not one phrase here"))
-    val probes = docs(
-      (2L, "a completely different prefix here " + shared),
-      (4L, "likewise fully distinct probe content no overlap anywhere truly"))
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val expected = rows(Dedup.winnowCrossPairs(corpus, probes, minShared = 2))
-    assert(expected.map(p => (p._1, p._2)) == Set((2L, 1L)), s"got $expected")
-    val path = java.nio.file.Files.createTempDirectory("graft_win_idx").toString + "/idx"
-    Dedup.winnowIndex(corpus, path)
-    val looked = Dedup.winnowLookup(spark, path, probes, minShared = 2,
-      maxDf = 100L)
-    assert(rows(looked) == expected)
-    val plan = looked.queryExecution.executedPlan.toString
-    assert(plan.contains("LessThanOrEqual(df,100)"),
-      s"df guard must reach the index scan:\n${plan.take(1200)}")
-    val path2 = java.nio.file.Files.createTempDirectory("graft_win_idx2").toString + "/idx"
-    Dedup.winnowIndex(corpus, path2, maxDf = 0L)
-    assert(Dedup.winnowLookup(spark, path2, probes, minShared = 1).count() == 0)
-  }
-
   test("exact dedup collapses identical texts, keeps min id") {
     val df = docs((3L, "same text"), (1L, "same text"), (2L, "other"))
     val out = Dedup.exact(df).collect().map(r => (r.getLong(1), r.getLong(2))).toSet
@@ -280,7 +223,7 @@ class PipelineSpec extends SparkSpec {
     assert(out == Set((2L, 1L), (4L, 1L)), s"got $out")
   }
 
-  test("index append lands identically to a full rebuild (minhash + simhash)") {
+  test("minhash index append lands identically to a full rebuild") {
     val a = docs(
       (1L, "the quick brown fox jumps over the lazy dog today"),
       (3L, "completely different words here entirely my friend"))
@@ -299,13 +242,6 @@ class PipelineSpec extends SparkSpec {
     assert(mh(s"$base/mh_inc") == mh(s"$base/mh_full"))
     // the appended near-dup is actually findable through the index
     assert(mh(s"$base/mh_inc").map(_._2).contains(5L))
-    Dedup.simhashIndex(a, s"$base/sh_inc")
-    Dedup.simhashAppend(b, s"$base/sh_inc")
-    Dedup.simhashIndex(a.unionByName(b), s"$base/sh_full")
-    def sh(p: String) = Dedup.simhashLookup(spark, p, probes, maxDist = 12)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.get(2).toString)).toSet
-    assert(sh(s"$base/sh_inc") == sh(s"$base/sh_full"))
-    assert(sh(s"$base/sh_inc").map(_._2).contains(5L))
   }
 
   test("at-rest minhash index: lookup and stream probe match the in-memory cross pairs") {
@@ -325,14 +261,18 @@ class PipelineSpec extends SparkSpec {
     assert(expected.map(p => (p._1, p._2)) == Set((2L, 1L)))
     assert(rows(Dedup.minhashLookup(spark, path, probes,
       n = 3, numHashes = 16, bands = 16, threshold = 0.5)) == expected)
-    // streaming probe: same docs arrive as a timestamped stream
+    // streaming probe: the same docs arrive as a watermarked stream and
+    // each resolves to one near-dup flag (minhashFlagStream, the probe
+    // Curate's follow mode runs)
     implicit val sqlCtx = spark.sqlContext
     val mem = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, String, Long)]
-    val streamDf = Dedup.minhashLookupStream(spark, path,
-      mem.toDF().toDF("doc_id", "text", "ts"),
-      n = 3, numHashes = 16, bands = 16, threshold = 0.5,
-      watermark = "10 minutes")
+    val docStream = mem.toDF().toDF("doc_id", "text", "ts")
+      .withColumn("event_time",
+        org.apache.spark.sql.functions.timestamp_millis(col("ts")))
+      .withWatermark("event_time", "0 seconds")
+    val streamDf = Dedup.minhashFlagStream(spark, path, docStream,
+      n = 3, numHashes = 16, bands = 16, threshold = 0.5)
     // every join must be stream-STATIC: a stream-stream join (e.g.
     // re-attaching shingles by joining back to the probe side) keeps
     // unbounded state and can pair stale probe rows across batches
@@ -340,26 +280,29 @@ class PipelineSpec extends SparkSpec {
       case j: org.apache.spark.sql.catalyst.plans.logical.Join
           if j.left.isStreaming && j.right.isStreaming => j
     }
-    assert(ssJoins.isEmpty, "minhashLookupStream plans a stream-stream join")
+    assert(ssJoins.isEmpty, "minhashFlagStream plans a stream-stream join")
     val q = streamDf
-      .writeStream.format("memory").queryName("mh_lookup_out")
+      .writeStream.format("memory").queryName("mh_flag_out")
       .outputMode("append").start()
     mem.addData((2L, "the quick brown fox jumps over the lazy dog tonight", 1000L),
       (4L, "unrelated filler text with nothing shared at all", 2000L))
     q.processAllAvailable()
-    // the same probe re-sent within the watermark emits nothing new
-    mem.addData((2L, "the quick brown fox jumps over the lazy dog tonight", 3000L))
+    // a later document moves the watermark past the first window,
+    // which closes it and emits its verdicts
+    mem.addData((6L, "late filler words far ahead in time", 600000L))
     q.processAllAvailable()
-    val streamed = rows(spark.table("mh_lookup_out"))
+    val flags = spark.table("mh_flag_out").collect()
+      .map(r => r.getLong(0) -> r.getBoolean(1)).toMap
     q.stop()
-    assert(streamed == expected)
+    assert(flags == Map(2L -> true, 4L -> false), s"got $flags")
+    assert(flags.filter(_._2).keySet == expected.map(_._1))
   }
 
   test("cdc probe via foreachBatch: 3 micro-batches match the one-shot lookup, zero stream state") {
-    // cdcLookup cannot stream directly (its per-pair shared-chunk
+    // cdcCrossPairs cannot stream directly (its per-pair shared-chunk
     // COUNT is an aggregation that append streaming would hold for the
-    // watermark) — the documented live pattern is foreachBatch, where
-    // each batch runs the STATIC lookup plan. This pins that pattern's
+    // watermark) — the live pattern is foreachBatch, where each batch
+    // runs the STATIC lookup plan against the held corpus. This pins that pattern's
     // two contracts across ≥3 micro-batches: (1) correctness — the
     // union of per-batch outputs equals the one-shot batch lookup, and
     // each batch emits only its own probes (nothing leaks across
@@ -370,13 +313,11 @@ class PipelineSpec extends SparkSpec {
     val dup1 = "the quick brown fox jumps over the lazy dog every single day"
     val dup3 = "pack my box with five dozen liquor jugs again and once more"
     val corpus = docs((1L, dup1), (3L, dup3))
-    val path = java.nio.file.Files.createTempDirectory("graft_cdc_fb").toString + "/idx"
-    Dedup.cdcIndex(corpus, path)
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val probesAll = docs((2L, dup1), (4L, "unrelated filler text with nothing shared"),
       (6L, dup3))
-    val expected = rows(Dedup.cdcLookup(spark, path, probesAll))
+    val expected = rows(Dedup.cdcCrossPairs(corpus, probesAll))
     assert(expected.map(p => (p._1, p._2)) == Set((2L, 1L), (6L, 3L)),
       s"one-shot lookup sanity: $expected")
     implicit val sqlCtx = spark.sqlContext
@@ -385,7 +326,7 @@ class PipelineSpec extends SparkSpec {
     val perBatch = scala.collection.mutable.Map[Long, Set[(Long, Long, Long)]]()
     val q = mem.toDF().toDF("doc_id", "text").writeStream
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-        val out = rows(Dedup.cdcLookup(spark, path, batch))
+        val out = rows(Dedup.cdcCrossPairs(corpus, batch))
         perBatch.synchronized { perBatch(id) = out }
         ()
       }.start()
@@ -404,62 +345,12 @@ class PipelineSpec extends SparkSpec {
       s"a batch emitted another batch's probes: $perBatch")
   }
 
-  test("simhash index band-format marker: stale or missing layout fails loudly, rebuild migrates") {
-    import spark.implicits._
-    val corpus = docs((1L, "alpha beta gamma delta epsilon zeta eta theta"))
-    val probes = docs((2L, "alpha beta gamma delta epsilon zeta eta theta"))
-    val path = java.nio.file.Files.createTempDirectory("graft_sh_fmt").toString + "/idx"
-    Dedup.simhashIndex(corpus, path)
-    assert(Dedup.simhashLookup(spark, path, probes).count() == 1)
-    // stamp a v1-era marker (through hadoop FS so the checksum shadow
-    // file stays consistent) -> every reader/appender must refuse:
-    // old-format bands never collide with new-format probe keys, so
-    // proceeding would silently return zero matches. The stamp is an
-    // OUT-OF-BAND change; the next check sees the changed file.
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new org.apache.hadoop.fs.Path(s"$path/_format")
-    def stamp(s: String): Unit = {
-      val out = fs.create(marker, true)
-      out.write(s.getBytes("UTF-8")); out.close()
-    }
-    stamp("simhash-bands v1 4x15-bit\n")
-    val e = intercept[IllegalStateException] {
-      Dedup.simhashLookup(spark, path, probes)
-    }
-    assert(e.getMessage.contains("simhash-bands v1"), e.getMessage)
-    intercept[IllegalStateException] {
-      Dedup.simhashAppend(docs((9L, "more words here entirely")), path)
-    }
-    intercept[IllegalStateException] {
-      Dedup.simhashLookupStream(spark, path,
-        probes.withColumn("ts", org.apache.spark.sql.functions.lit(1000L)))
-    }
-    // a pre-marker index (marker absent) is treated as v1, not trusted
-    fs.delete(marker, false)
-    intercept[IllegalStateException] {
-      Dedup.simhashLookup(spark, path, probes)
-    }
-    // migration path: bands regenerated from the format-independent
-    // sigs, marker restamped, lookups identical to a fresh build
-    Dedup.simhashRebuildBands(spark, path)
-    val got = Dedup.simhashLookup(spark, path, probes).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    assert(got == Set((2L, 1L, 0)), s"got $got")
-    Dedup.simhashAppend(docs((9L, "more words here entirely")), path)
-    assert(Dedup.simhashLookup(spark, path, probes).count() == 1)
-  }
-
   test("index format markers: every at-rest family fails loudly on parameter drift") {
-    // One path/_format marker per at-rest family (r13 verdict #5):
-    // each family's layout bakes in parameters its probes must
-    // reproduce exactly; a mismatch silently returns zero matches
-    // (LSH/CDC/winnow band keys never collide) or wrong neighbors
-    // (IVF list splits, ADC against the wrong codebook). Build stamps
+    // One path/_format marker per at-rest index: its layout bakes in
+    // parameters its probes must reproduce exactly; a mismatch silently
+    // returns zero matches (LSH band keys never collide). Build stamps
     // path/_format, every reader/appender verifies, marker-absent
     // (pre-marker index) refuses too.
-    import spark.implicits._
-    import graft.similarity.Ann
     val base = java.nio.file.Files.createTempDirectory("graft_fmt").toString
     val corpus = docs(
       (1L, "the quick brown fox jumps over the lazy dog today"),
@@ -489,56 +380,6 @@ class PipelineSpec extends SparkSpec {
     Dedup.minhashRebuildBands(spark, s"$base/mh", n = 3, numHashes = 16, bands = 16)
     assert(Dedup.minhashLookup(spark, s"$base/mh", probes,
       n = 3, numHashes = 16, bands = 16, threshold = 0.3).count() >= 1)
-
-    // cdc: chunking params are the layout; probe-side maxDf is not
-    Dedup.cdcIndex(corpus, s"$base/cdc", window = 4, divisor = 32)
-    assert(Dedup.cdcLookup(spark, s"$base/cdc", probes, 4, 32,
-      minShared = 1).count() >= 1)
-    assert(Dedup.cdcLookup(spark, s"$base/cdc", probes, 4, 32,
-      minShared = 1, maxDf = 1L).count() >= 0) // tightened prune: allowed
-    assert(refused(Dedup.cdcLookup(spark, s"$base/cdc", probes,
-      window = 8, divisor = 32)).contains("cdc-chunks"))
-
-    // winnow
-    Dedup.winnowIndex(corpus, s"$base/win", k = 3, w = 4)
-    assert(refused(Dedup.winnowLookup(spark, s"$base/win", probes,
-      k = 5, w = 4)).contains("winnow-fps"))
-
-    // vector families: the FINGERPRINT catches a different quantizer
-    // with identical shape — the silent-wrong-distance case
-    val rnd = new scala.util.Random(31)
-    val emb = (0L until 60L).map(i => (i, Array.fill(8)(rnd.nextGaussian().toFloat)))
-      .toDF("vec_id", "embedding")
-    val queries = emb.filter($"vec_id" < 3)
-    val cents = Ann.pinnedCentroids(emb, nlist = 4)
-    val cents2 = cents.map(_.map(_ + 0.25)) // same nlist/dim, other quantizer
-    Ann.ivfMaterialize(cents, emb, s"$base/ivf")
-    assert(Ann.ivfSearchIndexed(spark, s"$base/ivf", cents, queries,
-      k = 2, nprobe = 2).count() > 0)
-    assert(refused(Ann.ivfSearchIndexed(spark, s"$base/ivf", cents2,
-      queries, k = 2, nprobe = 2)).contains("quantizer="))
-    assert(refused(Ann.ivfAppend(cents2, emb.limit(5), s"$base/ivf"))
-      .contains("quantizer="))
-
-    val books = Ann.pinnedCodebooks(emb, m = 4, ksub = 8, dim = 8)
-    val books2 = books.map(_.map(_.map(_ + 0.25)))
-    Ann.pqMaterialize(books, emb, s"$base/pq")
-    assert(Ann.pqSearchIndexed(spark, s"$base/pq", books, queries, k = 2)
-      .count() > 0)
-    assert(refused(Ann.pqSearchIndexed(spark, s"$base/pq", books2,
-      queries, k = 2)).contains("codebooks="))
-
-    Ann.ivfPqMaterialize(cents, books, emb, s"$base/ivfpq")
-    assert(Ann.ivfPqSearchIndexed(spark, s"$base/ivfpq", cents, books,
-      queries, k = 2, nprobe = 2).count() > 0)
-    refused(Ann.ivfPqSearchIndexed(spark, s"$base/ivfpq", cents, books2,
-      queries, k = 2, nprobe = 2))
-
-    Ann.ivfSq8Materialize(cents, emb, s"$base/sq8")
-    assert(Ann.ivfSq8SearchIndexed(spark, s"$base/sq8", cents, queries,
-      k = 2, nprobe = 2).count() > 0)
-    refused(Ann.ivfSq8SearchIndexed(spark, s"$base/sq8", cents2, queries,
-      k = 2, nprobe = 2))
   }
 
   test("format marker: verified once per session (zero re-reads), adopt migrates pre-marker indexes") {
@@ -594,47 +435,6 @@ class PipelineSpec extends SparkSpec {
       Dedup.minhashFormat(n = 3, numHashes = 16, bands = 16))
     assert(Dedup.minhashLookup(spark, s"$base/mh", probes,
       n = 3, numHashes = 16, bands = 16, threshold = 0.3).count() >= 1)
-  }
-
-  test("at-rest simhash index: lookup and stream probe match the in-memory cross pairs") {
-    import spark.implicits._
-    val corpus = docs(
-      (1L, "alpha beta gamma delta epsilon zeta eta theta"),
-      (3L, "completely different words here entirely my friend"))
-    val probes = docs(
-      (2L, "alpha beta gamma delta epsilon zeta eta theta"),
-      (4L, "unrelated filler text with nothing shared at all"))
-    val path = java.nio.file.Files.createTempDirectory("graft_sh_idx").toString + "/idx"
-    Dedup.simhashIndex(corpus, path)
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    val expected = rows(Dedup.simhashCrossPairs(corpus, probes, maxDist = 3))
-    // doc 2 is doc 1 verbatim -> dist 0; the within-probe and
-    // within-corpus pairs never surface
-    assert(expected == Set((2L, 1L, 0)), s"got $expected")
-    assert(rows(Dedup.simhashLookup(spark, path, probes, maxDist = 3)) == expected)
-    implicit val sqlCtx = spark.sqlContext
-    val mem = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, String, Long)]
-    val streamDf = Dedup.simhashLookupStream(spark, path,
-      mem.toDF().toDF("doc_id", "text", "ts"), maxDist = 3,
-      watermark = "10 minutes")
-    val ssJoins = streamDf.queryExecution.analyzed.collect {
-      case j: org.apache.spark.sql.catalyst.plans.logical.Join
-          if j.left.isStreaming && j.right.isStreaming => j
-    }
-    assert(ssJoins.isEmpty, "simhashLookupStream plans a stream-stream join")
-    val q = streamDf
-      .writeStream.format("memory").queryName("sh_lookup_out")
-      .outputMode("append").start()
-    mem.addData((2L, "alpha beta gamma delta epsilon zeta eta theta", 1000L),
-      (4L, "unrelated filler text with nothing shared at all", 2000L))
-    q.processAllAvailable()
-    mem.addData((2L, "alpha beta gamma delta epsilon zeta eta theta", 3000L))
-    q.processAllAvailable()
-    val streamed = rows(spark.table("sh_lookup_out"))
-    q.stop()
-    assert(streamed == expected)
   }
 
   test("simhash: identical docs equal, near-dups within small hamming distance") {
@@ -715,25 +515,6 @@ class PipelineSpec extends SparkSpec {
     // the quantized ranking must match the flat SQ8 search exactly
     assert(rows(Ann.ivfSq8TopK(cents, emb, q, k = 5, nprobe = 4))
       == rows(Ann.sq8TopK(emb, q, k = 5)))
-  }
-
-  test("materialized IVF-SQ8 search is bit-identical to the in-memory path") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(25)
-    val emb = (0L until 48L).map(i => (i, Array.fill(8)(rnd.nextGaussian().toFloat)))
-      .toDF("vec_id", "embedding")
-    val q = emb.filter($"vec_id" < 4)
-    val cents = Ann.pinnedCentroids(emb, nlist = 4)
-    val dir = java.nio.file.Files.createTempDirectory("ivfsq8").toString
-    Ann.ivfSq8Materialize(cents, emb, dir)
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
-    val indexed = Ann.ivfSq8SearchIndexed(spark, dir, cents, q, k = 5, nprobe = 2)
-    // the scan must carry the probe lists as partition filters
-    val scan = indexed.queryExecution.executedPlan.toString
-    assert(scan.contains("PartitionFilters") && scan.contains("list_id"),
-      s"indexed IVF-SQ8 scan is not partition-pruned:\n${scan.take(1200)}")
-    assert(rows(indexed) == rows(Ann.ivfSq8TopK(cents, emb, q, k = 5, nprobe = 2)))
   }
 
   test("powerIteration recovers a planted dominant direction") {
@@ -1598,72 +1379,6 @@ class PipelineSpec extends SparkSpec {
     assert(recall >= 0.9, s"recall $recall")
   }
 
-  test("materialized IVF index: probes become partition filters, same results") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(13)
-    val emb = (0L until 90L).map(i => (i, Array.fill(8)(rnd.nextGaussian().toFloat)))
-      .toDF("vec_id", "embedding")
-    val queries = emb.filter($"vec_id" < 4)
-    val cents = Ann.pinnedCentroids(emb, nlist = 6)
-    val path = java.nio.file.Files.createTempDirectory("graft_ivf").toString + "/idx"
-    Ann.ivfMaterialize(cents, emb, path)
-    val indexed = Ann.ivfSearchIndexed(spark, path, cents, queries,
-      k = 3, nprobe = 2)
-    // partition pruning: the probed list_ids appear as PartitionFilters
-    val plan = indexed.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters: [list_id"),
-      s"probes must prune list_id partitions:\n${plan.take(1500)}")
-    // results identical to the unmaterialized path on the same quantizer
-    val direct = Ann.ivfTopKWith(cents, emb, queries, k = 3, nprobe = 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
-    val got = indexed
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
-    assert(got == direct)
-  }
-
-  test("IVF append: incremental build searches bit-identical to a full rebuild") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(17)
-    val emb = (0L until 90L).map(i => (i, Array.fill(8)(rnd.nextGaussian().toFloat)))
-      .toDF("vec_id", "embedding")
-    val queries = emb.filter($"vec_id" < 4)
-    val cents = Ann.pinnedCentroids(emb, nlist = 6)
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
-    // full build
-    val full = java.nio.file.Files.createTempDirectory("graft_ivf_f").toString + "/idx"
-    Ann.ivfMaterialize(cents, emb, full)
-    // half build + append of the other half, same frozen quantizer
-    val inc = java.nio.file.Files.createTempDirectory("graft_ivf_i").toString + "/idx"
-    Ann.ivfMaterialize(cents, emb.filter($"vec_id" < 45), inc)
-    Ann.ivfAppend(cents, emb.filter($"vec_id" >= 45), inc)
-    val a = rows(Ann.ivfSearchIndexed(spark, full, cents, queries, k = 3, nprobe = 2))
-    val b = rows(Ann.ivfSearchIndexed(spark, inc, cents, queries, k = 3, nprobe = 2))
-    assert(a == b && a.nonEmpty)
-  }
-
-  test("materialized PQ index: codes-only scan, bit-identical to in-memory ADC") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(29)
-    val emb = (0L until 80L).map(i => (i, Array.fill(8)(rnd.nextGaussian().toFloat)))
-      .toDF("vec_id", "embedding")
-    val queries = emb.filter($"vec_id" < 4)
-    val books = Ann.pinnedCodebooks(emb, m = 4, ksub = 8, dim = 8)
-    val path = java.nio.file.Files.createTempDirectory("graft_pq").toString + "/idx"
-    Ann.pqMaterialize(books, emb, path)
-    val indexed = Ann.pqSearchIndexed(spark, path, books, queries, k = 3)
-    // the index scan reads codes only — the embedding column never
-    // appears in the parquet read schema
-    val plan = indexed.queryExecution.executedPlan.toString
-    assert(plan.contains("ReadSchema: struct<nid:bigint,code:array<int>>"),
-      s"ADC over the index must scan (nid, code) only:\n${plan.take(1500)}")
-    val direct = Ann.pqTopK(books, emb, queries, k = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
-    val got = indexed
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
-    assert(got == direct)
-  }
-
   test("residual IVF-PQ: corpus-sized codebook makes ADC distances exact L2") {
     import spark.implicits._
     val rnd = new scala.util.Random(37)
@@ -1691,34 +1406,7 @@ class PipelineSpec extends SparkSpec {
     assert(got.nonEmpty)
   }
 
-  test("materialized IVF-PQ index: pruned codes-only scan, bit-identical to in-memory") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(31)
-    val emb = (0L until 80L).map(i => (i, Array.fill(8)(rnd.nextGaussian().toFloat)))
-      .toDF("vec_id", "embedding")
-    val queries = emb.filter($"vec_id" < 4)
-    val cents = Ann.pinnedCentroids(emb, nlist = 8)
-    val books = Ann.pinnedCodebooks(emb, m = 4, ksub = 8, dim = 8)
-    val path = java.nio.file.Files.createTempDirectory("graft_ivfpq").toString + "/idx"
-    Ann.ivfPqMaterialize(cents, books, emb, path)
-    val indexed = Ann.ivfPqSearchIndexed(spark, path, cents, books,
-      queries, k = 3, nprobe = 2)
-    val plan = indexed.queryExecution.executedPlan.toString
-    // probed lists are literal partition filters; the scan reads codes
-    // only — raw vectors never open
-    assert(plan.contains("PartitionFilters: [list_id#") ||
-      plan.contains("list_id IN"),
-      s"probe lists must prune partitions:\n${plan.take(1500)}")
-    assert(plan.contains("ReadSchema: struct<nid:bigint,code:array<int>>"),
-      s"ADC over the index must scan (nid, code) only:\n${plan.take(1500)}")
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1),
-        r.getDouble(2), r.getInt(3))).toSet
-    assert(rows(indexed) ==
-      rows(Ann.ivfPqTopK(cents, books, emb, queries, k = 3, nprobe = 2)))
-  }
-
-  test("production search composition: at-rest IVF-PQ index -> exact refine") {
+  test("production search composition: IVF-PQ candidates -> exact refine") {
     import spark.implicits._
     val rnd = new scala.util.Random(41)
     val emb = (0L until 80L).map(i => (i, Array.fill(8)(rnd.nextGaussian().toFloat)))
@@ -1726,13 +1414,10 @@ class PipelineSpec extends SparkSpec {
     val queries = emb.filter($"vec_id" < 4)
     val cents = Ann.pinnedCentroids(emb, nlist = 8)
     val books = Ann.pinnedCodebooks(emb, m = 4, ksub = 8, dim = 8)
-    val path = java.nio.file.Files.createTempDirectory("graft_ivfpq_rf").toString + "/idx"
-    Ann.ivfPqMaterialize(cents, books, emb, path)
-    // the full 100 TB read path: candidates come off the pruned
-    // codes-only index scan; the raw vectors open ONLY for the
-    // refine join over the deduped candidate ids
-    val cand = Ann.ivfPqSearchIndexed(spark, path, cents, books,
-      queries, k = 30, nprobe = 8)
+    // candidates come off the ADC scoring of the PQ codes; the raw
+    // vectors are scored exactly ONLY in the refine join over the
+    // deduped candidate ids
+    val cand = Ann.ivfPqTopK(cents, books, emb, queries, k = 30, nprobe = 8)
     val refined = Ann.refineTopK(cand, emb, queries, k = 3)
     // nprobe = nlist probes every list and the 30-of-79 over-fetch
     // absorbs this codebook's quantization error (k = 12 measurably
