@@ -1,5 +1,6 @@
 package graft.api
 
+import graft.functions.ParseVariable
 import graft.model.Point
 import graft.operators.{Aggregations, Mutations}
 import graft.pattern.VariableMatcher
@@ -142,17 +143,27 @@ object Engine {
    * → Parquet pushdown), optional series cap, mutation chain folded in
    * order (go/src/store.go:101-131), then the optional aggregation.
    * Output: per-series points (skey,…) or aggregated series.
+   *
+   * Series identity: a series IS its key. A mutation that drops
+   * `name`/`labels` has them rebuilt from `skey` by the key's exact
+   * inverse ([[graft.model.Point.unkeyRow]]), so an aggregation sees
+   * the name and the key's own label entries. The key leaves out
+   * null-valued label entries, so series whose label maps differ only
+   * in null-valued entries are one series, and come back with the
+   * non-null entries only — deterministically; a series with an empty
+   * or null label map comes back with an empty map.
    */
   def get(points: DataFrame, req: GetRequest): DataFrame = {
-    // A caller-supplied series key is honored (the contract is
-    // injectivity; adapters can build a domain-specific key far more
-    // cheaply than the generic escape+sort — see
-    // [[graft.sources.PointSource.eventsKeyed]]).
-    // PRECONDITION on a pre-keyed input: `skey` must be consistent
-    // with the CURRENT name/labels columns — a caller that mutates
-    // name or labels after keying (the agg_preserve withSite pattern)
-    // must re-key (drop the column or call Point.withSeriesKey again),
-    // or series silently mis-group on the stale key. Enforced by
+    // A caller-supplied series key is honored: adapters can build the
+    // key far more cheaply than the generic escape+sort on a domain
+    // where the two agree byte for byte — see
+    // [[graft.sources.PointSource.eventsKeyed]].
+    // PRECONDITION on a pre-keyed input: `skey` must be the bytes
+    // Point.seriesKey gives for the CURRENT name/labels columns — a
+    // caller that mutates name or labels after keying (the
+    // agg_preserve withSite pattern) must re-key (drop the column or
+    // call Point.withSeriesKey again), or series silently mis-group on
+    // the stale key and come back under its identity. Enforced by
     // convention; SeriesKeyContractSpec pins the one adapter key.
     var df = (if (points.columns.contains("skey")) points
               else Point.withSeriesKey(points))
@@ -170,13 +181,6 @@ object Engine {
         .orderBy("skey").limit(cap)
       df = df.join(keep, "skey")
     }
-    // One row per series: the exact (name, labels) for each skey —
-    // re-attached after mutations that reduce to (skey, ts, dval).
-    // A join rather than parsing skey back: the key's escaping makes
-    // string re-parsing lossy. Un-hinted — O(#series) rows is not
-    // broadcast-safe at fleet scale; AQE broadcasts when it is small.
-    val seriesDim = df.select(col("skey"), col("name"), col("labels"))
-      .dropDuplicates("skey")
     // value_type-aware auto-rating (opt-in; see GetRequest.autoRate):
     // only the RATE-tagged partition pays the window shuffle.
     if (req.autoRate)
@@ -230,15 +234,19 @@ object Engine {
     // each computed over the same post-mutation input — the C++ server's
     // `for (auto &agg : req.aggregation())` loop (server/store.cc:164-252).
     if (req.aggregations.nonEmpty) {
-      // Re-attach series identity when a mutation dropped it — or when
-      // the independent union half-filled it with nulls (a grid
-      // mutation's output lacks name/labels, so the unioned column
-      // exists but is null for those rows).
+      // Rebuild series identity from the key when a mutation dropped
+      // it — or when the independent union half-filled it with nulls
+      // (a grid mutation's output lacks name/labels, so the unioned
+      // column exists but is null for those rows). The key's exact
+      // inverse does it row by row: no second scan, no join.
       if (!df.columns.contains("name") || independent ||
           (req.aggregations.exists(_.labels.nonEmpty) &&
-            !df.columns.contains("labels")))
+            !df.columns.contains("labels"))) {
+        val id = ParseVariable.parseVariable(col("skey"))
         df = df.drop("name", "labels")
-          .join(seriesDim, "skey")
+          .withColumn("name", id.getField("name"))
+          .withColumn("labels", id.getField("labels"))
+      }
       val base = df
       df = req.aggregations.map { spec =>
         spec.labels match {

@@ -69,6 +69,13 @@ object GraftFunctions {
         require(children.length == 1,
           "parse_variable(skey) takes 1 argument")
         ParseVariable(children.head)
+      }),
+    (FunctionIdentifier("series_key"),
+      new ExpressionInfo(classOf[SeriesKey].getName, "series_key"),
+      (children: Seq[Expression]) => {
+        require(children.length == 2,
+          "series_key(name, labels) takes 2 arguments")
+        SeriesKey(children(0), children(1))
       }))
 
   private def foldableInt(e: Expression, name: String): Int = {

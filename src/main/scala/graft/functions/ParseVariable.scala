@@ -1,24 +1,23 @@
 package graft.functions
 
-import graft.model.Variable
+import graft.model.Point
 import org.apache.spark.sql.{Column, GraftBridge}
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
- * Parses the canonical series-key text form `/name{k=v,…}` (the
- * reference's Variable.ToString, lib/variable.cc:47-69) back into
- * (name, labels) — the inverse of [[graft.model.Point.seriesKey]],
- * sharing [[graft.model.Variable.parse]] verbatim so escape handling
- * (`\,` `\=` `\{` `\}` `\\`) can never drift between the column
- * expression and the engine's request parser. A native expression
- * rather than a Scala UDF: codegen is one static call, no closure
- * serialization, exact null semantics.
+ * Parses a series key (`skey`, built by [[graft.model.Point.seriesKey]])
+ * back into (name, labels) through its exact inverse,
+ * [[graft.model.Point.unkeyRow]]: escapes (`\\` `\,` `\=` `\{` `\}`)
+ * lose one backslash, entries split on an unescaped `,` and key from
+ * value on the first unescaped `=`. Not the reference's quoted text
+ * form: [[graft.model.Variable.parse]] reads that one and would keep
+ * the escapes in the name. A native expression rather than a Scala
+ * UDF: codegen is one static call, no closure serialization, exact
+ * null semantics.
  */
 case class ParseVariable(child: Expression) extends UnaryExpression {
 
@@ -33,11 +32,11 @@ case class ParseVariable(child: Expression) extends UnaryExpression {
   override def prettyName: String = "parse_variable"
 
   override protected def nullSafeEval(input: Any): Any =
-    ParseVariable.parseToRow(input.asInstanceOf[UTF8String])
+    Point.unkeyRow(input.asInstanceOf[UTF8String])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, in =>
-      s"${ev.value} = graft.functions.ParseVariable.parseToRow($in);")
+      s"${ev.value} = graft.model.Point.unkeyRow($in);")
 
   override protected def withNewChildInternal(newChild: Expression): ParseVariable =
     copy(child = newChild)
@@ -48,15 +47,6 @@ object ParseVariable {
   val outType: StructType = StructType(Seq(
     StructField("name", StringType, nullable = false),
     StructField("labels", MapType(StringType, StringType), nullable = false)))
-
-  /** Static hook for both eval and generated code. */
-  def parseToRow(s: UTF8String): InternalRow = {
-    val v = Variable.parse(s.toString)
-    val ks = v.labels.keys.toArray.map(UTF8String.fromString(_): Any)
-    val vs = v.labels.values.toArray.map(UTF8String.fromString(_): Any)
-    InternalRow(UTF8String.fromString(v.name),
-      new ArrayBasedMapData(new GenericArrayData(ks), new GenericArrayData(vs)))
-  }
 
   def parseVariable(skey: Column): Column =
     GraftBridge.toColumn(ParseVariable(GraftBridge.toExpression(skey)))

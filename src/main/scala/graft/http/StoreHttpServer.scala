@@ -157,13 +157,13 @@ class StoreHttpServer(spark: SparkSession, storeDir: String, port: Int = 0,
       if (cols.contains(name) && !r.isNullAt(r.fieldIndex(name)))
         Some(r.getAs[T](name))
       else None
-    def variableOf(r: org.apache.spark.sql.Row): Variable =
-      Variable(
-        opt[String](r, "name").getOrElse(
-          Variable.parse(opt[String](r, "skey").getOrElse("")).name),
-        opt[Map[String, String]](r, "labels").getOrElse(
-          opt[String](r, "skey").map(Variable.parse(_).labels)
-            .getOrElse(Map.empty)))
+    // a per-series mutation that dropped name/labels leaves the key,
+    // which its exact inverse reads back
+    def variableOf(r: org.apache.spark.sql.Row): Variable = {
+      lazy val id = graft.model.Point.unkey(opt[String](r, "skey").getOrElse(""))
+      Variable(opt[String](r, "name").getOrElse(id._1),
+        opt[Map[String, String]](r, "labels").getOrElse(id._2))
+    }
     val (streams, constructMs) = timed {
       // one wire stream per series — and per mutation, when independent
       // mutations tagged the rows (C++'s stream-per-mutation response

@@ -59,9 +59,9 @@ object Variable {
     c.isLetterOrDigit && c < 128 ||
       c == '_' || c == '-' || c == '.' || c == ' ' || c == '*' || c == '/'
 
-  private[model] def needsQuoting(v: String): Boolean = !v.forall(isValueChar)
+  private[graft] def needsQuoting(v: String): Boolean = !v.forall(isValueChar)
 
-  private[model] def quote(v: String): String =
+  private[graft] def quote(v: String): String =
     v.flatMap {
       // backslash must be escaped first-class: a value ending in '\'
       // would otherwise escape the closing quote and corrupt the

@@ -161,9 +161,9 @@ object Aggregations {
    * other labels that are constant within the group are preserved, varying
    * ones dropped (server/store.cc:204-226).
    *
-   * Constant-label preservation is a second aggregation over exploded
-   * label entries: a label survives iff it has exactly one distinct value
-   * within its (name, groupLabel) group.
+   * Constant-label preservation is one more aggregation per (name,
+   * groupLabel) group: the set of its distinct label-entry arrays,
+   * reduced by [[constantLabels]].
    */
   def byLabel(df: DataFrame, label: String, agg: AggType,
               intervalMs: Long = DefaultIntervalMs,
@@ -186,19 +186,13 @@ object Aggregations {
     } else {
       // labels constant across every stream of the (name, gval) group
       val constLabels = grouped
-        .select(col("name"), col("gval"), explode(col("labels")).as(Seq("k", "v")))
-        .distinct()
-        .groupBy(col("name"), col("gval"), col("k"))
-        .agg(count(lit(1)).as("n"), first(col("v")).as("v"))
-        .filter(col("n") === 1 && col("k") =!= label)
         .groupBy(col("name"), col("gval"))
-        .agg(map_from_entries(collect_list(struct(col("k"), col("v")))).as("extra"))
+        .agg(constantLabels(collect_set(map_entries(col("labels"))), label).as("extra"))
       // un-hinted: constLabels is one row per OUTPUT (name, gval)
       // group — series-cardinality, not schema-bounded. At fleet label
       // cardinality (millions of series) a forced broadcast would be a
       // driver/executor hazard; AQE broadcasts it at runtime when it
-      // is actually small, and both sides already shuffle on
-      // (name, gval) so a sort-merge join adds no extra exchange.
+      // is actually small.
       series.join(constLabels, Seq("name", "gval"), "left")
         .select(col("name"),
           map_concat(
@@ -206,6 +200,30 @@ object Aggregations {
             map(lit(label), col("gval"))).as("labels"),
           col("bucket_ts").as("ts"), col("dval"))
     }
+  }
+
+  /**
+   * The constant-label rule of batch [[byLabel]] and of the streaming
+   * [[graft.streaming.StreamIngest.windowedAggByLabel]]: from a group's
+   * collected label-entry arrays (`collect_set(map_entries(labels))`),
+   * the map of entries whose key has exactly one distinct value in the
+   * group (null counts as a value; absence from some streams does not
+   * count), the grouping `label` left out. Closed form, linear in the
+   * group's distinct entries: sorted, an entry is constant when neither
+   * sorted neighbour has its key.
+   */
+  def constantLabels(entrySets: Column, label: String): Column = {
+    val entries = sort_array(array_distinct(flatten(entrySets)))
+    val keys = entries.getField("key")
+    val none = array(lit(null).cast("string"))
+    // field "0" is entry i, "1" the key before it, "2" the key after
+    // it (null past either end; the padding row's entry is null)
+    val beside = arrays_zip(entries, concat(none, keys),
+      slice(concat(keys, none), lit(2), size(keys)))
+    map_from_entries(filter(beside, z => {
+      val key = z.getField("0").getField("key")
+      key =!= lit(label) && !(z.getField("1") <=> key) && !(z.getField("2") <=> key)
+    }).getField("0"))
   }
 
   /** Incremental per-bucket aggregate state for [[greedyExact]]. */

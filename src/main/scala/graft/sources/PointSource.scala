@@ -13,15 +13,14 @@ import org.apache.spark.sql.types.DateType
  *
  * The hot layout is Parquet partitioned by `date` (the day of `ts` in
  * the session time zone, [[dayOf]]), sorted by (date, name, ts) within
- * each file, with the bloom option on `name` — the Spark-native
- * replacement for the reference's indexed store files (header index →
- * footer stats; per-file time pruning → row-group min/max; see
- * reference go/.../store_manager/indexed_store_file.go:110-146). `date`
- * leads the sort because a partitioned write needs its input ordered by
- * `date`: the planner replaces any sort not starting with it, and the
- * files come out unsorted. Parquet writes no bloom filter for a
- * dictionary-encoded chunk, which `name` usually is, so series lookups
- * prune on the sorted row groups' min/max.
+ * each file — the Spark-native replacement for the reference's indexed
+ * store files (header index → footer stats; per-file time pruning →
+ * row-group min/max; see reference
+ * go/.../store_manager/indexed_store_file.go:110-146). `date` leads the
+ * sort because a partitioned write needs its input ordered by `date`:
+ * the planner replaces any sort not starting with it, and the files
+ * come out unsorted. Series lookups prune on the sorted row groups'
+ * min/max; no column carries a bloom filter.
  */
 object PointSource {
 
@@ -151,7 +150,6 @@ object PointSource {
       .repartition(col("date"), col("name"))
       .sortWithinPartitions("date", "name", "ts")
       .write
-      .option("parquet.bloom.filter.enabled#name", "true")
       .partitionBy("date")
       .mode(mode)
       .parquet(path)
@@ -228,8 +226,9 @@ object PointSource {
   /**
    * Reconstructs CANONICAL points from a [[writeGorilla]] tier, so the
    * whole Engine/HTTP query surface runs unchanged against the cold
-   * tier: `skey` is the reference's text form (`/name{k=v,…}`) and
-   * parses back losslessly via [[graft.model.Variable.parse]];
+   * tier: `skey` is [[graft.model.Point.seriesKey]]'s form
+   * (`/name{k=v,…}`) and parses back exactly through its inverse
+   * ([[graft.functions.ParseVariable]]);
    * `sval`/`end_ts` are null by tier contract (numeric blocks only)
    * and `value_type` reports GAUGE.
    */

@@ -152,30 +152,17 @@ object StreamIngest {
     else {
       // Constant-label preservation (server/store.cc:204-226), live:
       // the ONE windowed aggregation also collects the group's
-      // distinct label maps, and the constant entries are derived
-      // from that summary as a closed-form expression — no second
-      // stateful operator, no stream-stream join. Semantics follow
-      // the batch rule (a label survives iff it is single-valued
-      // among the rows that carry it, k ≠ the grouping label) but
-      // scoped PER WINDOW — a stream cannot see the whole history,
-      // so windows are the natural constancy scope; on inputs whose
-      // label constancy is globally uniform the result equals the
-      // batch byLabel (proven in RetentionStreamingSpec). State adds
-      // the distinct label-map set per (name, gval, window) — the
-      // same output-series-bounded argument as the batch constLabels
-      // side (label maps per series group are construction-bounded,
-      // not corpus-bounded).
-      // collect_set cannot take MAP input — collect the entry arrays
-      // (array<struct<key,value>>, orderable) and intersect on those:
-      // an entry survives when no collected map carries its key with a
-      // DIFFERENT value (absence is fine, matching the batch rule)
-      val lsets = col("lsets")
-      val allEntries = array_distinct(flatten(lsets))
-      val extra = map_from_entries(filter(allEntries, e =>
-        e.getField("key") =!= lit(label) &&
-          forall(lsets, m => forall(m, p =>
-            p.getField("key") =!= e.getField("key") ||
-              (p.getField("value") <=> e.getField("value"))))))
+      // distinct label-entry arrays, and the constant entries come
+      // from that summary by the batch rule
+      // ([[graft.operators.Aggregations.constantLabels]]) — no second
+      // stateful operator, no stream-stream join — but scoped PER
+      // WINDOW: a stream cannot see the whole history, so windows are
+      // the natural constancy scope; on inputs whose label constancy
+      // is globally uniform the result equals the batch byLabel
+      // (proven in RetentionStreamingSpec). State adds the distinct
+      // label-map set per (name, gval, window) — the same
+      // output-series-bounded argument as the batch constLabels side.
+      val extra = graft.operators.Aggregations.constantLabels(col("lsets"), label)
       grouped.agg(agg.fn(col("dval")).as("dval"),
           collect_set(map_entries(col("labels"))).as("lsets"))
         .select(col("name"),

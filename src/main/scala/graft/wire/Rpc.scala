@@ -186,11 +186,18 @@ object Rpc {
   }
 
   /** Pattern string for VariableMatcher.compile — keeps empty-valued
-    * labels (k= means must-not-exist), unlike Variable.canonical. */
+    * labels (k= means must-not-exist), unlike Variable.canonical. A
+    * value outside the plain value charset is quoted the way
+    * Variable.parse reads it back, so `,` `=` `{` `}` inside a value
+    * stay in the value; `*`, the empty value and a plain `/re/` need
+    * no quotes and keep their matcher meaning. */
   def patternString(v: Variable): String =
     if (v.labels.isEmpty) v.name
     else v.labels.toSeq.sortBy(_._1)
-      .map { case (k, value) => s"$k=$value" }
+      .map { case (k, value) =>
+        if (Variable.needsQuoting(value)) s"""$k="${Variable.quote(value)}""""
+        else s"$k=$value"
+      }
       .mkString(v.name + "{", ",", "}")
 
   def encodeGetRequest(req: Requests.GetRequest): Array[Byte] = {

@@ -50,6 +50,32 @@ class AggregationsSpec extends SparkSpec {
     "max" -> (_.max),
     "median" -> (b => b.sorted.apply(b.size / 2)))
 
+  test("byLabel keeps a label single-valued among the streams that carry it, null included") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    val pts = Seq(
+        ("a", "r1", "e0", "x", null, null),
+        ("a", "r1", "e1", null, null, "n"),
+        ("b", "r1", "e0", "x", "1", null),
+        ("b", "r2", "e0", "y", "1", null))
+      .toDF("host", "rack", "iface", "opt", "nul", "solo")
+      .select(lit("/m").as("name"),
+        map_filter(map(lit("host"), col("host"), lit("rack"), col("rack"),
+            lit("iface"), col("iface"), lit("opt"), col("opt"), lit("nul"), col("nul"),
+            lit("solo"), col("solo")),
+          (k, v) => v.isNotNull || k === "nul").as("labels"),
+        lit(0L).as("ts"), lit(1.0).as("dval"))
+    val got = Aggregations.byLabel(pts, "host", Aggregations.Sum, 1000L)
+      .select("labels").collect().map(_.getMap[String, String](0).toMap)
+      .sortBy(_("host")).toSeq
+    // a: rack constant, iface varies, opt only on one stream (kept),
+    // nul null on both (kept as null), solo only on one (kept);
+    // b: rack varies, opt varies, nul constant "1"
+    assert(got == Seq(
+      Map("host" -> "a", "rack" -> "r1", "opt" -> "x", "nul" -> null, "solo" -> "n"),
+      Map("host" -> "b", "iface" -> "e0", "nul" -> "1")))
+  }
+
   test("median emits a null row for all-null buckets, like other aggregators") {
     import org.apache.spark.sql.functions._
     import spark.implicits._

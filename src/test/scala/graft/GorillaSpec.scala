@@ -85,4 +85,21 @@ class GorillaSpec extends SparkSpec {
     assert(back === Seq(0L -> 1.0, 60000L -> 2.0, 120000L -> 2.0,
       86400000L -> 5.0, 86460000L -> 6.0))
   }
+
+  test("a cold tier gives back names holding , and { and label keys holding = exactly") {
+    import org.apache.spark.sql.functions.col
+    val ids = Seq(
+      ("/a,b", Map("host" -> "h")),
+      ("/a{c}", Map("k=1" -> "v")),
+      ("/a\\d", Map("v" -> "p,q=r", "x{y}" -> "z")))
+    val pts = ids.map { case (n, l) => series(Seq(0L -> 1.0, 60000L -> 2.0), name = n, labels = l) }
+      .reduce(_ unionByName _)
+    val dir = java.nio.file.Files.createTempDirectory("graft_gor_escapes").toString + "/g"
+    graft.sources.PointSource.writeGorilla(
+      Point.withSeriesKey(pts).select(col("skey"), col("ts"), col("dval")), dir)
+    val back = graft.sources.PointSource.readGorillaPoints(spark, dir)
+      .select("name", "labels", "ts", "dval").collect()
+      .map(r => (r.getString(0), r.getMap[String, String](1).toMap, r.getLong(2), r.getDouble(3)))
+    assert(back.toSet == ids.flatMap { case (n, l) => Seq((n, l, 0L, 1.0), (n, l, 60000L, 2.0)) }.toSet)
+  }
 }

@@ -584,6 +584,68 @@ class HttpSpec extends SparkSpec {
     } finally srv.stop()
   }
 
+  test("rate -> mean=5m -> average-by-host /get: its job count, one stream per host, constant labels kept") {
+    val store = java.nio.file.Files.createTempDirectory("graft_http_rate_agg").toString + "/s"
+    // two hosts of one rack, two interfaces each: counters rising by
+    // (host, iface)-specific steps every minute for an hour
+    val step = Map(("h1", "e0") -> 1.0, ("h1", "e1") -> 3.0, ("h2", "e0") -> 5.0, ("h2", "e1") -> 7.0)
+    graft.sources.PointSource.write(step.map { case ((h, i), d) =>
+      series((0 until 60).map(k => (k * 60000L) -> k * d * 60),
+        name = "/net/bytes", labels = Map("host" -> h, "iface" -> i, "rack" -> "r1"))
+    }.reduce(_ unionByName _), store)
+    val srv = new StoreHttpServer(spark, store, nowMs = () => Hour).start()
+    try {
+      val req = Requests.GetRequest("/net/bytes{host=/h.*/}", Some(0L), Some(Hour),
+        mutations = Seq(Requests.Rate(), Requests.Mean(300000L)),
+        aggregations = Seq(Requests.AggregationSpec(Aggregations.Average, Seq("host"))))
+      def streams() = {
+        val (ok, err, ss) = Rpc.decodeGetResponse(post(srv.boundPort, "/get", Rpc.encodeGetRequest(req)))
+        assert(ok, err.toString)
+        ss
+      }
+      streams() // cold: builds the relation
+      var got = Seq.empty[Rpc.Stream]
+      val (jobs, _) = observe { got = streams() }
+      assert(got.map(_.variable.labels) ==
+        Seq(Map("host" -> "h1", "rack" -> "r1"), Map("host" -> "h2", "rack" -> "r1")))
+      // per-second rates: (1 + 3) / 2 and (5 + 7) / 2 per minute-step
+      assert(got.map(_.values.map(_._2.get).distinct) == Seq(Seq(2.0), Seq(6.0)))
+      assert(got.forall(_.values.length == 12))
+      // rebuilding identity by a second scan and a join, and finding
+      // constant labels in three exchanges, ran 10
+      assert(jobs == 6, s"a warm rate-aggregate /get ran $jobs Spark jobs")
+    } finally srv.stop()
+  }
+
+  test("names holding , and { and label keys holding = come back exactly; a value holding , and = matches") {
+    val store = java.nio.file.Files.createTempDirectory("graft_http_escapes").toString + "/s"
+    val ids = Seq(
+      ("/a,b", Map("host" -> "h")),
+      ("/a{c}", Map("k=1" -> "v")),
+      ("/a\\d", Map("v" -> "p,q=r", "x{y}" -> "z")))
+    graft.sources.PointSource.write(ids.map { case (n, l) =>
+      series(Seq(0L -> 1.0, Hour -> 2.0), name = n, labels = l)
+    }.reduce(_ unionByName _), store)
+    val srv = new StoreHttpServer(spark, store, nowMs = () => 2 * Hour).start()
+    try {
+      def get(req: Requests.GetRequest) = {
+        val (ok, err, ss) = Rpc.decodeGetResponse(post(srv.boundPort, "/get", Rpc.encodeGetRequest(req)))
+        assert(ok, err.toString)
+        ss.map(st => (st.variable.name, st.variable.labels) -> st.values.map(v => (v._1, v._2.get)))
+      }
+      val want = ids.map(_ -> Seq(0L -> 1.0, Hour -> 2.0))
+      // raw rows carry name and labels; interpolate drops them and the
+      // server reads them back from the series key
+      assert(get(Requests.GetRequest("/a*")).toSet == want.toSet)
+      assert(get(Requests.GetRequest("/a*", mutations = Seq(Requests.Interpolate(Hour)))).toSet ==
+        want.toSet)
+      // the wire pattern keeps a value holding , and = whole
+      val pattern = Rpc.patternString(Variable("/a*", Map("v" -> "p,q=r")))
+      assert(get(Requests.GetRequest(pattern)) == Seq(want.last))
+      assert(listed(srv.boundPort, Requests.ListRequest(pattern)) == Seq(ids.last))
+    } finally srv.stop()
+  }
+
   test("malformed request returns a decodable error response, not a hang") {
     val store = java.nio.file.Files.createTempDirectory("graft_http2").toString + "/s"
     val srv = new StoreHttpServer(spark, store).start()

@@ -410,6 +410,45 @@ class PlanAuditSpec extends SparkSpec {
         s"leaf, got $nEx/$nSort:\n${p.take(1500)}")
   }
 
+  test("the generic series key is derived inside a codegen stage, never through a lambda") {
+    import graft.api.{Engine, Requests}
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.{col, lit, map}
+    /** The executed final plan's lines that derive or read the key. */
+    def keyLines(df: DataFrame): Seq[String] = {
+      df.collect()
+      val p = df.queryExecution.executedPlan.toString
+        .split("== Initial Plan ==").head.split("\n").toSeq
+      p.filter(l => l.contains("series_key(") || l.contains(" AS skey#"))
+    }
+    val store = java.nio.file.Files.createTempDirectory("graft_plan_key").toString + "/s"
+    graft.sources.PointSource.write(series(Seq(0L -> 1.0, 60000L -> 3.0),
+      name = "/plan/key", labels = Map("host" -> "a", "rack" -> "r")), store)
+    val pts = graft.sources.PointSource.read(spark, store)
+    // agg_preserve keys its points with Point.withSeriesKey; byLabel
+    // reads no key, so column pruning may drop it, but where it stays
+    // it obeys the same rule
+    val preserve = keyLines(SparkEntry.queries("agg_preserve")(spark, sf))
+    assert(preserve.forall(l => !l.contains("lambdafunction") && !l.contains("regexp_replace(")),
+      preserve.mkString("\n"))
+    val cases = Seq(
+      "Engine.get raw" -> Engine.get(pts, Requests.GetRequest("/plan/*{host=a}")),
+      "Engine.get rate/mean/by-host" -> Engine.get(pts, Requests.GetRequest("/plan/*",
+        mutations = Seq(Requests.Rate(), Requests.Mean(300000L)),
+        aggregations = Seq(Requests.AggregationSpec(graft.operators.Aggregations.Average,
+          Seq("host"))))),
+      "Engine.list" -> Engine.list(pts, Requests.ListRequest("/plan/*"), 60000L))
+    cases.foreach { case (what, df) =>
+      val lines = keyLines(df)
+      assert(lines.exists(_.contains("series_key(")), s"$what derives no generic key:\n${lines.mkString("\n")}")
+      lines.filter(_.contains("series_key(")).foreach { l =>
+        assert(!l.contains("lambdafunction"), s"$what: $l")
+        assert("^[\\s+:|-]*\\*\\(\\d+\\) ".r.findFirstIn(l).nonEmpty,
+          s"$what derives the key outside whole-stage codegen: $l")
+      }
+    }
+  }
+
   test("no query plan pins an InMemoryRelation (library-level .cache() leak)") {
     // A .cache() inside a queries() builder pins partitions for the
     // session's lifetime with no unpersist hook, and quietly flatters

@@ -190,4 +190,30 @@ class PointLayoutSpec extends SparkSpec {
     }
     assert(outside.isEmpty, outside.mkString("\n"))
   }
+
+  test("no name column chunk written by PointSource.write carries a bloom filter") {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import scala.jdk.CollectionConverters._
+    val store = tmpDir("graft_point_bloom") + "/s"
+    // without dictionary encoding parquet writes a bloom filter for any
+    // column the write enables one on, so the check cannot pass by
+    // way of the dictionary
+    spark.conf.set("parquet.enable.dictionary", "false")
+    try PointSource.write(shuffled(), store)
+    finally spark.conf.unset("parquet.enable.dictionary")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val files = fs(store).listFiles(new Path(store), true)
+    val data = Iterator.continually(files).takeWhile(_.hasNext).map(_.next().getPath)
+      .filter(_.getName.endsWith(".parquet")).toSeq
+    assert(data.nonEmpty)
+    val chunks = data.flatMap { f =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+      try r.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala)
+        .filter(_.getPath.toDotString == "name").map(f -> _.getBloomFilterOffset)
+      finally r.close()
+    }
+    assert(chunks.nonEmpty)
+    assert(chunks.forall(_._2 < 0), chunks.filter(_._2 >= 0).mkString("\n"))
+  }
 }

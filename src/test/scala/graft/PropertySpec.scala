@@ -500,6 +500,9 @@ class PropertySpec extends SparkSpec {
       """SELECT parse_variable('/sys/cpu{a=1\\,b\\=2,host=h1}')""").head().getStruct(0)
     assert(v.getString(0) == "/sys/cpu")
     assert(v.getMap[String, String](1) == Map("a" -> "1,b=2", "host" -> "h1"))
+    val k = spark.sql("SELECT series_key('/sys/cpu', map('host', 'h1', 'a', '1,b=2'))")
+      .head().getString(0)
+    assert(k == "/sys/cpu{a=1\\,b\\=2,host=h1}")
   }
 
   test("parse_variable is the exact inverse of Point.seriesKey") {
@@ -508,7 +511,10 @@ class PropertySpec extends SparkSpec {
     val rows = Seq(
       ("/plain", Map.empty[String, String]),
       ("/sys/cpu", Map("host" -> "h1", "job" -> "j")),
-      ("/tricky", Map("k" -> "a,b=c{d}e\\f", "z," -> "v")))
+      ("/tricky", Map("k" -> "a,b=c{d}e\\f", "z," -> "v")),
+      ("/n\\a,m=e{x}", Map("k=1" -> "v", "{k}" -> "a=b", "e" -> "")),
+      ("/a,b", Map.empty[String, String]),
+      ("/a{c}", Map("host" -> "h")))
     rows.foreach { case (name, labels) =>
       val labelExpr =
         if (labels.isEmpty) map().cast("map<string,string>")

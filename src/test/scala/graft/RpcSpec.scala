@@ -19,6 +19,21 @@ class RpcSpec extends AnyFunSuite {
     assert(back.aggregations == req.aggregations)
   }
 
+  test("pattern label values holding , = { } \" \\ survive the wire; * and the empty value keep their meaning") {
+    import graft.model.Variable
+    val v = Variable("/sys/*", Map("a" -> "p,q=r", "b" -> "x{y}", "c" -> "q\"t\\",
+      "d" -> "*", "e" -> "", "f" -> "/r1,r2/", "g" -> "/rn.*/", "h" -> "plain"))
+    val pattern = Rpc.patternString(v)
+    assert(Variable.parse(pattern) == v, pattern)
+    // unquoted where no quoting is needed: matcher syntax stays as is
+    assert(pattern.contains("d=*") && pattern.contains("e=,") &&
+      pattern.contains("g=/rn.*/") && pattern.contains("h=plain"), pattern)
+    val get = Rpc.decodeGetRequest(Rpc.encodeGetRequest(Requests.GetRequest(pattern)))
+    assert(Variable.parse(get.variable) == v, get.variable)
+    val list = Rpc.decodeListRequest(Rpc.encodeListRequest(Requests.ListRequest(pattern)))
+    assert(Variable.parse(list.prefix) == v, list.prefix)
+  }
+
   test("engine-extension mutations fail encode loudly, not as MatchError") {
     val req = Requests.GetRequest(
       variable = "/sys/cpu",

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /**
@@ -79,6 +80,66 @@ class SeriesKeyContractSpec extends SparkSpec {
       .head()
     assert(generic == "m{}")
     assert(cheap.isNullAt(0)) // the no-null-user envelope pin keeps this out of the data
+  }
+
+  /** The key as built-in functions composed it before the native
+    * expression: the reference the native key must match byte for
+    * byte. */
+  private def lambdaKey(name: Column, labels: Column): Column = {
+    def esc(c: Column): Column =
+      regexp_replace(c, "([\\\\,={}])", "\\\\$1")
+    concat(
+      esc(name),
+      when(size(labels) > 0,
+        concat(
+          lit("{"),
+          concat_ws(",",
+            transform(
+              array_sort(map_entries(labels)),
+              e => concat(esc(e.getField("key")), lit("="), esc(e.getField("value"))))),
+          lit("}"))).otherwise(lit("")))
+  }
+
+  test("property: the native key equals the lambda form, and its inverse returns name and non-null entries") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(1606)
+    val alphabet = "ab\\,={}/ é漢"
+    def text(max: Int) =
+      Seq.fill(rnd.nextInt(max + 1))(alphabet(rnd.nextInt(alphabet.length))).mkString
+    val rows = (0 until 400).map { i =>
+      val labels = rnd.nextInt(6) match {
+        case 0 => None
+        case 1 => Some(Map.empty[String, String])
+        case _ => Some((0 until 1 + rnd.nextInt(4)).map { _ =>
+          text(4) -> (if (rnd.nextInt(5) == 0) null else text(5))
+        }.toMap)
+      }
+      (i, if (i % 50 == 0) null else text(8), labels)
+    }
+    val local = rows.toDF("id", "name", "labels")
+    // a parquet round trip puts the key in generated code; the local
+    // relation evaluates it on the driver
+    val dir = java.nio.file.Files.createTempDirectory("graft_skey_prop").toString + "/p"
+    local.write.parquet(dir)
+    val want = rows.map { case (i, n, l) =>
+      i -> (n, l.getOrElse(Map.empty).filter(_._2 != null)) }.toMap
+    for (df <- Seq(local, spark.read.parquet(dir))) {
+      val got = df
+        .select(col("id"),
+          graft.model.Point.seriesKey(col("name"), col("labels")).as("k"),
+          lambdaKey(col("name"), col("labels")).as("ref"))
+        .withColumn("v", graft.functions.ParseVariable.parseVariable(col("k")))
+        .select(col("id"), col("k"), col("ref"), col("v.name"), col("v.labels"))
+        .collect()
+      assert(got.length == rows.length)
+      got.foreach { r =>
+        val id = r.getInt(0)
+        assert(r.getString(1) == r.getString(2), s"row $id: ${rows(id)}")
+        if (rows(id)._2 == null) assert(r.isNullAt(1), s"row $id: a null name keys as null")
+        else assert((r.getString(3), r.getMap[String, String](4).toMap) == want(id),
+          s"row $id: key ${r.getString(1)}")
+      }
+    }
   }
 
   test("unkey gives usr \"\" for an skey without {user=, and splits the engine shape") {
